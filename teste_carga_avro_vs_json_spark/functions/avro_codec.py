@@ -14,11 +14,13 @@ src/main/resources/avro/MensagemCarga.avsc:1-30):
 - array:    one block (varint count, items...) + 0x00 terminator
 - record:   fields concatenated in schema order (encoding is positional)
 
-Exposed to Spark as **Arrow-batched pandas UDFs** (never row-at-a-time
-Python UDFs — SURVEY.md §7, VERDICT round 1 scale warning): one Python
-invocation per Arrow batch (~10k rows), with the per-row work in tight
-loops over plain dict/bytes. On a cluster the UDF runs on executors;
-the driver never sees payloads.
+The scalar ``encode_mensagem``/``decode_mensagem`` functions here are
+the reference implementation and property-test oracle. Spark sees one
+codec: ``to_avro``/``from_avro``/``roundtrip_avro`` are ``arrow_udf``
+wrappers (pyspark >= 4.1) over the numpy/pyarrow batch codec in
+``avro_vec.py`` — one Python invocation per Arrow batch, never
+row-at-a-time. On a cluster the UDF runs on executors; the driver never
+sees payloads.
 
 Confluent wire framing (magic 0x00 + 4-byte big-endian schema id,
 ConfiguracaoKafka.java:150-156) is provided as cheap JVM-side
@@ -29,10 +31,8 @@ from __future__ import annotations
 
 import struct
 
-import pandas as pd
 from pyspark.sql import Column
 import pyspark.sql.functions as F
-from pyspark.sql.functions import pandas_udf
 
 from teste_carga_avro_vs_json_spark.schemas import MENSAGEM_CARGA
 
@@ -161,38 +161,10 @@ def decode_mensagem_at(data: bytes, pos: int) -> tuple[dict, int]:
 
 
 # ------------------------------------------------------------ Spark UDFs
-# Built lazily: pandas_udf needs an active SparkSession, which doesn't
-# exist at import time (tests import the codec without Spark).
+# Built lazily and cached: the arrow_udf wrappers pull in avro_vec
+# (numpy/pyarrow) only when a Spark plan first needs them, so importing
+# this module for the scalar reference codec stays light.
 _UDF_CACHE: dict[str, object] = {}
-
-
-def _vectorized() -> bool:
-    """Arrow-native codec (avro_vec) is the DEFAULT; opt OUT via
-    SPARK_GRAFT_AVRO_SCALAR=1.
-
-    The default flipped in r6 on committed evidence: after the r5
-    tall-message decode dispatch (avro_vec.py — decode falls back to
-    the scalar parser above ~32 KB/msg, which was the pathology behind
-    the early 2 MB-shape straggler laps), the Arrow lane WINS the
-    ~1 KB/5-registro bench shape (contended driver window 1.71 vs
-    2.10 s; quiet bench_runs/r5_run1.json 1.136 vs 1.161 s) and ties
-    the 2 MB/10486-registro shape. bench.py still times BOTH lanes
-    every round so a runtime/shape change that flips the winner is
-    visible in one JSON line. SPARK_GRAFT_AVRO_SCALAR=1 forces the
-    scalar pandas codec (wins over SPARK_GRAFT_AVRO_ARROW=1, which is
-    now a no-op kept for back-compat); the Arrow path also silently
-    degrades to scalar when arrow_udf is unavailable."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_AVRO_SCALAR") == "1":
-        return False
-    try:
-        from pyspark.sql.functions import arrow_udf  # noqa: F401
-
-        from teste_carga_avro_vs_json_spark.functions import avro_vec  # noqa: F401
-    except ImportError:
-        return False
-    return True
 
 
 def _encode_arrow_udf():
@@ -263,74 +235,15 @@ def roundtrip_avro(msg_struct: Column) -> Column:
     return _roundtrip_arrow_udf()(msg_struct)
 
 
-def _encode_udf():
-    if "enc" not in _UDF_CACHE:
-        from pyspark.sql.types import BinaryType
-
-        @pandas_udf(BinaryType())
-        def avro_encode_udf(msg: pd.DataFrame) -> pd.Series:
-            """struct<MENSAGEM_CARGA> -> binary, one Arrow batch per call.
-
-            Columns are pulled out once and zipped — DataFrame.apply
-            (row-Series per record) costs more than the codec itself.
-            """
-            cols = (
-                msg["id"].tolist(),
-                msg["timestamp"].tolist(),
-                msg["sequencia"].tolist(),
-                msg["dados"].tolist(),
-                msg["versao"].tolist(),
-            )
-            out = [
-                encode_mensagem(
-                    {
-                        "id": i,
-                        "timestamp": t,
-                        "sequencia": s,
-                        "dados": d,
-                        "versao": v,
-                    }
-                )
-                for i, t, s, d, v in zip(*cols)
-            ]
-            return pd.Series(out)
-
-        _UDF_CACHE["enc"] = avro_encode_udf
-    return _UDF_CACHE["enc"]
-
-
-def _decode_udf():
-    if "dec" not in _UDF_CACHE:
-
-        @pandas_udf(MENSAGEM_CARGA)
-        def avro_decode_udf(data: pd.Series) -> pd.DataFrame:
-            """binary -> struct<MENSAGEM_CARGA> (column-wise construction
-            — one dict per row then dict-of-lists beats a row-wise
-            DataFrame build)."""
-            recs = [decode_mensagem(b) for b in data]
-            return pd.DataFrame(
-                {k: [r[k] for r in recs] for k in
-                 ("id", "timestamp", "sequencia", "dados", "versao")}
-            )
-
-        _UDF_CACHE["dec"] = avro_decode_udf
-    return _UDF_CACHE["dec"]
-
-
-def to_avro(msg_struct: Column, vectorized: bool | None = None) -> Column:
+def to_avro(msg_struct: Column) -> Column:
     """Engine twin of pyspark.sql.avro.functions.to_avro for the
-    MensagemCarga schema. ``vectorized`` pins the codec path explicitly
-    (the bench A/B lanes use this); None defers to the env-driven
-    default in :func:`_vectorized`."""
-    use_vec = _vectorized() if vectorized is None else vectorized
-    return (_encode_arrow_udf() if use_vec else _encode_udf())(msg_struct)
+    MensagemCarga schema (Arrow-native codec, see avro_vec)."""
+    return _encode_arrow_udf()(msg_struct)
 
 
-def from_avro(data: Column, vectorized: bool | None = None) -> Column:
-    """Engine twin of from_avro for the MensagemCarga schema (same
-    codec-path pinning contract as :func:`to_avro`)."""
-    use_vec = _vectorized() if vectorized is None else vectorized
-    return (_decode_arrow_udf() if use_vec else _decode_udf())(data)
+def from_avro(data: Column) -> Column:
+    """Engine twin of from_avro for the MensagemCarga schema."""
+    return _decode_arrow_udf()(data)
 
 
 # ----------------------------------------------- Confluent wire framing

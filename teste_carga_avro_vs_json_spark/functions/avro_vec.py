@@ -8,9 +8,13 @@ is assembled with vectorized scatter/gather.
 
 Why this exists: profiling showed the *pandas* conversion around the
 scalar codec — every ``dados`` element became a Python dict — cost ~9×
-the actual byte-twiddling. This module is the Arrow-native fast path
-used by ``arrow_udf`` (Spark 4.1); the scalar codec remains the
-reference implementation, the property-test oracle, and the fallback.
+the actual byte-twiddling. This module is the only Spark-facing Avro
+codec for MensagemCarga, called from the ``arrow_udf`` wrappers in
+``avro_codec.py`` (pyspark >= 4.1). The scalar codec is not a
+fallback: it is the reference implementation and property-test oracle,
+and :func:`decode_batch` hands it tall-message batches (> 32 KB per
+message), where a row-serial byte walk beats the vectorized state
+machine.
 
 Techniques (all O(batch) numpy, no per-row Python):
 

@@ -7,8 +7,9 @@ ConfiguracaoKafka.java:150-158). Spark-first mapping:
 - JSON: ``to_json(struct(*))`` / ``from_json`` — pure JVM built-ins,
   whole-stage-codegen eligible, zero Python. Field order is the struct
   order (deterministic — a strengthening over the reference's HashMap).
-- Avro: Arrow-batched pandas UDFs over the pure-Python binary codec
-  (functions/avro_codec.py) because the JVM spark-avro module is absent.
+- Avro: ``arrow_udf`` wrappers over the numpy/pyarrow binary codec
+  (functions/avro_codec.py, functions/avro_vec.py) because the JVM
+  spark-avro module is absent.
 
 Scale: both paths are embarrassingly parallel projections — no shuffle,
 no driver involvement; the Avro path pays one Python hop per Arrow
@@ -24,7 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
-from teste_carga_avro_vs_json_spark.functions.avro_codec import from_avro, to_avro
+from teste_carga_avro_vs_json_spark.functions.avro_codec import (
+    from_avro,
+    roundtrip_avro,
+    to_avro,
+)
 from teste_carga_avro_vs_json_spark.schemas import MENSAGEM_CARGA
 
 _MSG_COLS = ["id", "timestamp", "sequencia", "dados", "versao"]
@@ -60,40 +65,30 @@ def json_roundtrip(msgs: DataFrame) -> DataFrame:
 
 
 # ------------------------------------------------------------- Avro path
-def avro_encode(msgs: DataFrame, vectorized: bool | None = None) -> DataFrame:
-    """O3: message columns -> Avro binary column ``valor_avro``.
-    ``vectorized`` pins the codec path (None = env-driven default)."""
+def avro_encode(msgs: DataFrame) -> DataFrame:
+    """O3: message columns -> Avro binary column ``valor_avro``."""
     return msgs.select(
         F.col("sequencia"),
-        to_avro(_msg_struct(), vectorized).alias("valor_avro"),
+        to_avro(_msg_struct()).alias("valor_avro"),
     )
 
 
-def avro_decode(
-    encoded: DataFrame,
-    value_col: str = "valor_avro",
-    vectorized: bool | None = None,
-) -> DataFrame:
+def avro_decode(encoded: DataFrame, value_col: str = "valor_avro") -> DataFrame:
     """O4: Avro binary -> typed message struct."""
     return encoded.select(
-        from_avro(F.col(value_col), vectorized).alias("msg")
+        from_avro(F.col(value_col)).alias("msg")
     ).select("msg.*")
 
 
-def avro_roundtrip(msgs: DataFrame, vectorized: bool | None = None) -> DataFrame:
-    from teste_carga_avro_vs_json_spark.functions import avro_codec
-
-    use_vec = avro_codec._vectorized() if vectorized is None else vectorized
-    if use_vec:
-        # Fused encode->decode (r14): one udf invocation instead of the
-        # chained two-step eval (Spark already merged the pair into one
-        # ArrowEvalPython node, but materialized the intermediate binary
-        # as Arrow between the chained udfs). ~13% on the e2e lane;
-        # values = the exact composition of the two arrow_udfs.
-        return msgs.select(
-            avro_codec.roundtrip_avro(_msg_struct()).alias("msg")
-        ).select("msg.*")
-    return avro_decode(avro_encode(msgs, vectorized), vectorized=vectorized)
+def avro_roundtrip(msgs: DataFrame) -> DataFrame:
+    """encode→decode fused into one udf invocation (r14): Spark already
+    merges a chained to_avro→from_avro pair into one ArrowEvalPython
+    node, but materializes the intermediate binary as Arrow between the
+    two udfs. ~13% on the e2e lane; values = the exact composition of
+    :func:`avro_encode` and :func:`avro_decode`."""
+    return msgs.select(
+        roundtrip_avro(_msg_struct()).alias("msg")
+    ).select("msg.*")
 
 
 # ----------------------------------------------------- transport lengths

@@ -266,32 +266,23 @@ def cosine_topk_np(
         vn[vn == 0.0] = 1.0
         return np.round((M / vn[:, None]) @ Qn, 9)  # (n, m)
 
-    try:
-        import pyarrow as pa
-        from pyspark.sql.functions import arrow_udf
-        from pyspark.sql.types import ArrayType, DoubleType
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import ArrayType, DoubleType
 
-        @arrow_udf(ArrayType(DoubleType()))
-        def _scores(col):
-            arr = (
-                col.combine_chunks()
-                if isinstance(col, pa.ChunkedArray)
-                else col
-            )
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            s = _score_mat(flat.reshape(len(arr), dim))
-            offsets = pa.array(
-                np.arange(0, (len(arr) + 1) * len(qids), len(qids), dtype=np.int32)
-            )
-            return pa.ListArray.from_arrays(offsets, pa.array(s.ravel()))
-
-    except ImportError:  # pragma: no cover - Spark < 4.1 fallback
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<double>")
-        def _scores(col: pd.Series) -> pd.Series:
-            s = _score_mat(np.vstack(col.to_numpy()))
-            return pd.Series(list(map(list, s)))
+    @arrow_udf(ArrayType(DoubleType()))
+    def _scores(col):
+        arr = (
+            col.combine_chunks()
+            if isinstance(col, pa.ChunkedArray)
+            else col
+        )
+        flat = arr.flatten().to_numpy(zero_copy_only=False)
+        s = _score_mat(flat.reshape(len(arr), dim))
+        offsets = pa.array(
+            np.arange(0, (len(arr) + 1) * len(qids), len(qids), dtype=np.int32)
+        )
+        return pa.ListArray.from_arrays(offsets, pa.array(s.ravel()))
 
     # ONE parsed bigint-array literal (r14; the unrolled F.lit form cost
     # ~2 py4j round trips per query id — see _lit_mat). F.lit(int) maps
@@ -449,77 +440,83 @@ def ivf_centroids(
     partial-order-dependent: same repo determinism rule as the exact
     long-derived metrics in operators/metrics.py.)
     """
+    if n_centroids < 1:
+        raise ValueError(
+            f"ivf_centroids requires n_centroids >= 1, got {n_centroids}"
+        )
     # Persisted for the duration of training (iterations re-read the
-    # same frame; unpersisted before returning — see multi_kmeans).
+    # same frame; unpersisted on every exit path — see multi_kmeans).
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     ).persist()
-    # Seeds = first n_centroids DISTINCT vectors among the oversampled
-    # lowest-id rows (see INIT_OVERSAMPLE). The sample is a
-    # TakeOrderedAndProject (per-partition top-k + driver merge, never a
-    # global single-partition sort); dedup happens driver-side on the
-    # tiny sample. If the corpus is so duplicate-heavy that fewer than
-    # n_centroids distinct vectors exist in the sample, k degrades
-    # gracefully to what was found.
-    sample = (
-        v.orderBy("vec_id").limit(INIT_OVERSAMPLE * n_centroids).collect()
-    )
-    seen: set[tuple[float, ...]] = set()
-    centroids: list[tuple[int, list[float]]] = []
-    for r in sample:
-        key = tuple(r.vec)
-        if key not in seen:
-            seen.add(key)
-            centroids.append((len(centroids), list(r.vec)))
-            if len(centroids) == n_centroids:
-                break
-    # Mean update stays the posexplode -> groupBy(cluster, dim) shape.
-    # r8 A/B'd the "one hash agg with 2x dim long-buffer columns"
-    # alternative (no explode, n_clusters x 128 longs out instead of
-    # rows x dim through the shuffle) and it was 2x SLOWER at sf0.1
-    # (ivf min 1.59-1.62 s vs 0.72-0.75 s, interleaved quiet-window
-    # runs, bench_runs/r8_ab_centroid_agg.json): 128 aggregate columns
-    # exceed spark.sql.codegen.maxFields (100), demoting the whole
-    # aggregate out of whole-stage codegen — the explode's extra rows
-    # are cheaper than losing codegen. Keep the explode.
-    dim = len(centroids[0][1]) if centroids else 0
-    for _ in range(iters):
-        if vectorized:
-            # fused assignment + in-UDF partial sums (r14, shared with
-            # multi_kmeans — see _update_sums_np); the expression path
-            # below stays the untouched reference this is pinned against
-            means = (
-                _update_sums_np(v, [(len(centroids), 0, dim)], [centroids])
-                .groupBy("cluster", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-        else:
-            assigned = v.withColumn(
-                "cluster", _nearest(F.col("vec"), centroids)
-            )
-            means = (
-                assigned.select(
-                    "cluster", F.posexplode("vec").alias("dim", "x")
+    try:
+        # Seeds = first n_centroids DISTINCT vectors among the oversampled
+        # lowest-id rows (see INIT_OVERSAMPLE). The sample is a
+        # TakeOrderedAndProject (per-partition top-k + driver merge, never a
+        # global single-partition sort); dedup happens driver-side on the
+        # tiny sample. If the corpus is so duplicate-heavy that fewer than
+        # n_centroids distinct vectors exist in the sample, k degrades
+        # gracefully to what was found.
+        sample = (
+            v.orderBy("vec_id").limit(INIT_OVERSAMPLE * n_centroids).collect()
+        )
+        seen: set[tuple[float, ...]] = set()
+        centroids: list[tuple[int, list[float]]] = []
+        for r in sample:
+            key = tuple(r.vec)
+            if key not in seen:
+                seen.add(key)
+                centroids.append((len(centroids), list(r.vec)))
+                if len(centroids) == n_centroids:
+                    break
+        # Mean update stays the posexplode -> groupBy(cluster, dim) shape.
+        # r8 A/B'd the "one hash agg with 2x dim long-buffer columns"
+        # alternative (no explode, n_clusters x 128 longs out instead of
+        # rows x dim through the shuffle) and it was 2x SLOWER at sf0.1
+        # (ivf min 1.59-1.62 s vs 0.72-0.75 s, interleaved quiet-window
+        # runs, bench_runs/r8_ab_centroid_agg.json): 128 aggregate columns
+        # exceed spark.sql.codegen.maxFields (100), demoting the whole
+        # aggregate out of whole-stage codegen — the explode's extra rows
+        # are cheaper than losing codegen. Keep the explode.
+        dim = len(centroids[0][1]) if centroids else 0
+        for _ in range(iters):
+            if vectorized:
+                # fused assignment + in-UDF partial sums (r14, shared with
+                # multi_kmeans — see _update_sums_np); the expression path
+                # below stays the untouched reference this is pinned against
+                means = (
+                    _update_sums_np(v, [(len(centroids), 0, dim)], [centroids])
+                    .groupBy("cluster", "dim")
+                    .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                    .collect()
                 )
-                .groupBy("cluster", "dim")
-                .agg(
-                    F.sum(
-                        F.floor(F.col("x") * 1000 + F.lit(0.5)).cast("long")
-                    ).alias("s"),
-                    F.count(F.lit(1)).alias("n"),
+            else:
+                assigned = v.withColumn(
+                    "cluster", _nearest(F.col("vec"), centroids)
                 )
-                .collect()
-            )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(r.cluster, {})[r.dim] = (r.s / r.n) / 1000.0
-        centroids = [
-            (c, [dims[d] for d in sorted(dims)])
-            for c, dims in sorted(by_cluster.items())
-        ]
-    v.unpersist()
-    return centroids
+                means = (
+                    assigned.select(
+                        "cluster", F.posexplode("vec").alias("dim", "x")
+                    )
+                    .groupBy("cluster", "dim")
+                    .agg(
+                        F.sum(
+                            F.floor(F.col("x") * 1000 + F.lit(0.5)).cast("long")
+                        ).alias("s"),
+                        F.count(F.lit(1)).alias("n"),
+                    )
+                    .collect()
+                )
+            by_cluster: dict[int, dict[int, float]] = {}
+            for r in means:
+                by_cluster.setdefault(r.cluster, {})[r.dim] = (r.s / r.n) / 1000.0
+            centroids = [
+                (c, [dims[d] for d in sorted(dims)])
+                for c, dims in sorted(by_cluster.items())
+            ]
+        return centroids
+    finally:
+        v.unpersist()
 
 
 def _scored_structs(
@@ -734,84 +731,91 @@ def multi_kmeans(
       ``floor(x·1000+0.5)`` longs (order-free integer sums), and the
       means collect is one job per iteration instead of N.
     """
+    bad = [k for k, _s, _l in spaces if k < 1]
+    if bad:
+        raise ValueError(
+            f"multi_kmeans requires at least one centroid per space, got k={bad}"
+        )
     # Lloyd re-reads the same frame once per iteration (plus the seed
     # sample): persist it for the duration of training so iterations
     # 2..n skip the scan+exchange — the standard Spark k-means input
-    # contract (MLlib warns when its input is uncached). Unpersisted
-    # before returning: only the training JOBS touch the cache, the
+    # contract (MLlib warns when its input is uncached). Unpersisted on
+    # every exit path: only the training JOBS touch the cache, the
     # caller's final query plan never references it (r14, guide §5).
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     ).persist()
-    max_k = max(k for k, _s, _l in spaces)
-    sample = v.orderBy("vec_id").limit(INIT_OVERSAMPLE * max_k).collect()
-    dim = len(sample[0].vec) if sample else 0
-    resolved = [
-        (k, start, (dim - start) if length is None else length)
-        for k, start, length in spaces
-    ]
-    all_cents: list[list[tuple[int, list[float]]]] = []
-    for k, start, length in resolved:
-        seen: set[tuple[float, ...]] = set()
-        cents: list[tuple[int, list[float]]] = []
-        for r in sample[: INIT_OVERSAMPLE * k]:
-            key = tuple(r.vec[start : start + length])
-            if key not in seen:
-                seen.add(key)
-                cents.append((len(cents), list(key)))
-                if len(cents) == k:
-                    break
-        all_cents.append(cents)
-    # The per-space explode expression depends only on the space
-    # layout, not the centroids — build it ONCE, as one parsed SQL
-    # fragment (r14): the Column-API form (9 transform+slice+struct
-    # trees, rebuilt every iteration) cost ~1 s of py4j round trips
-    # PER Lloyd iteration, measured — the r13 `_sx` lesson applied to
-    # the trainer. Same expressions: 0-based `asg[s]`/lambda index,
-    # `floor(x*1000.0D + 0.5D)` is the exact quantization the Column
-    # form computed (int 1000 promoted to double either way).
-    explode_sx = "explode(flatten(array(" + ", ".join(
-        f"transform(slice(vec, {start + 1}, {length}), (x, i) -> "
-        f"named_struct('sp', {s_idx}, 'cluster', asg[{s_idx}], 'dim', i,"
-        f" 'sx', CAST(floor(x * 1000.0D + 0.5D) AS BIGINT)))"
-        for s_idx, (_k, start, length) in enumerate(resolved)
-    ) + ")))"
-    for _ in range(iters):
-        if vectorized:
-            # fused assignment + map-side partial sums inside the UDF
-            # (r14, see _update_sums_np) — one Arrow pass over vec only
-            means = (
-                _update_sums_np(v, resolved, all_cents)
-                .groupBy("sp", "cluster", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-        else:
-            assigned = _assign_multi(v, resolved, all_cents, False)
-            means = (
-                assigned.select(F.expr(explode_sx).alias("e"))
-                .groupBy(
-                    F.col("e.sp").alias("sp"),
-                    F.col("e.cluster").alias("cluster"),
-                    F.col("e.dim").alias("dim"),
-                )
-                .agg(F.sum("e.sx").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-        by_space: dict[int, dict[int, dict[int, float]]] = {}
-        for r in means:
-            by_space.setdefault(r.sp, {}).setdefault(r.cluster, {})[r.dim] = (
-                r.s / r.n
-            ) / 1000.0
-        all_cents = [
-            [
-                (c, [dims[d] for d in sorted(dims)])
-                for c, dims in sorted(by_space.get(s_idx, {}).items())
-            ]
-            for s_idx in range(len(resolved))
+    try:
+        max_k = max(k for k, _s, _l in spaces)
+        sample = v.orderBy("vec_id").limit(INIT_OVERSAMPLE * max_k).collect()
+        dim = len(sample[0].vec) if sample else 0
+        resolved = [
+            (k, start, (dim - start) if length is None else length)
+            for k, start, length in spaces
         ]
-    v.unpersist()
-    return all_cents
+        all_cents: list[list[tuple[int, list[float]]]] = []
+        for k, start, length in resolved:
+            seen: set[tuple[float, ...]] = set()
+            cents: list[tuple[int, list[float]]] = []
+            for r in sample[: INIT_OVERSAMPLE * k]:
+                key = tuple(r.vec[start : start + length])
+                if key not in seen:
+                    seen.add(key)
+                    cents.append((len(cents), list(key)))
+                    if len(cents) == k:
+                        break
+            all_cents.append(cents)
+        # The per-space explode expression depends only on the space
+        # layout, not the centroids — build it ONCE, as one parsed SQL
+        # fragment (r14): the Column-API form (9 transform+slice+struct
+        # trees, rebuilt every iteration) cost ~1 s of py4j round trips
+        # PER Lloyd iteration, measured — the r13 `_sx` lesson applied to
+        # the trainer. Same expressions: 0-based `asg[s]`/lambda index,
+        # `floor(x*1000.0D + 0.5D)` is the exact quantization the Column
+        # form computed (int 1000 promoted to double either way).
+        explode_sx = "explode(flatten(array(" + ", ".join(
+            f"transform(slice(vec, {start + 1}, {length}), (x, i) -> "
+            f"named_struct('sp', {s_idx}, 'cluster', asg[{s_idx}], 'dim', i,"
+            f" 'sx', CAST(floor(x * 1000.0D + 0.5D) AS BIGINT)))"
+            for s_idx, (_k, start, length) in enumerate(resolved)
+        ) + ")))"
+        for _ in range(iters):
+            if vectorized:
+                # fused assignment + map-side partial sums inside the UDF
+                # (r14, see _update_sums_np) — one Arrow pass over vec only
+                means = (
+                    _update_sums_np(v, resolved, all_cents)
+                    .groupBy("sp", "cluster", "dim")
+                    .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                    .collect()
+                )
+            else:
+                assigned = _assign_multi(v, resolved, all_cents, False)
+                means = (
+                    assigned.select(F.expr(explode_sx).alias("e"))
+                    .groupBy(
+                        F.col("e.sp").alias("sp"),
+                        F.col("e.cluster").alias("cluster"),
+                        F.col("e.dim").alias("dim"),
+                    )
+                    .agg(F.sum("e.sx").alias("s"), F.count(F.lit(1)).alias("n"))
+                    .collect()
+                )
+            by_space: dict[int, dict[int, dict[int, float]]] = {}
+            for r in means:
+                by_space.setdefault(r.sp, {}).setdefault(r.cluster, {})[r.dim] = (
+                    r.s / r.n
+                ) / 1000.0
+            all_cents = [
+                [
+                    (c, [dims[d] for d in sorted(dims)])
+                    for c, dims in sorted(by_space.get(s_idx, {}).items())
+                ]
+                for s_idx in range(len(resolved))
+            ]
+        return all_cents
+    finally:
+        v.unpersist()
 
 
 def ivf_topk(
@@ -827,7 +831,12 @@ def ivf_topk(
     candidates form via an equi-join on the list id. The inverted-list
     join is the structure that survives when both sides are large —
     cost O(rows × n_probe / n_centroids) per query list, never a full
-    scan per query (contrast :func:`cosine_topk`)."""
+    scan per query (contrast :func:`cosine_topk`).
+
+    Precondition: ``vec_id`` is unique in ``emb``. The candidate join
+    emits each (query_id, vec_id) pair once only under that key, so
+    duplicate ids would yield duplicate pairs and inflated ranks. It is
+    not checked at run time (that would cost a distinct-count job)."""
     cents = ivf_centroids(emb, n_centroids, iters)
     # coalesce(-1) marks the assignment non-nullable (it never IS null:
     # argmin over a non-empty literal centroid array). Without it the
@@ -1184,7 +1193,11 @@ def ivf_pq_topk(
     Scoring is O(m) per candidate via a per-query ADC lookup table
     (:func:`_pq_lut`) carried on the broadcast probe side — m×ksub
     longs ≈ 1 KB per query at m=8/ksub=16; the r12 form re-ran O(d)
-    folds per candidate row (VERDICT r12 #1)."""
+    folds per candidate row (VERDICT r12 #1).
+
+    Precondition: ``vec_id`` is unique in ``emb`` (same unchecked
+    contract as :func:`ivf_topk`: the candidate join has no pair
+    dedup)."""
     if n_centroids is None:
         # ONE metadata job for (n, dim) — the count must scan anyway,
         # so the dim probe rides it for free (r14: was a separate
@@ -1690,33 +1703,24 @@ def lsh_bucket_np(
         # (n, L) bucket-id strings, fully vectorized (no per-row Python)
         return np.char.add(prefixes, sigs.astype(f"U{sig_width}"))
 
-    try:
-        # Arrow-native: numpy in, pa.ListArray out — zero pandas-object
-        # materialization (the old path built a Python list-of-strings
-        # per row, the one avoidable object build left in a hot path).
-        import pyarrow as pa
-        from pyspark.sql.functions import arrow_udf
-        from pyspark.sql.types import ArrayType, StringType
+    # Arrow-native: numpy in, pa.ListArray out — zero pandas-object
+    # materialization (a pandas_udf would build a Python list-of-strings
+    # per row).
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import ArrayType, StringType
 
-        @arrow_udf(ArrayType(StringType()))
-        def _sig(v):
-            arr = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
-            flat = arr.flatten().to_numpy(zero_copy_only=False)
-            strs = _bucket_mat(flat.reshape(len(arr), dim))
-            offsets = pa.array(
-                np.arange(
-                    0, (len(arr) + 1) * n_tables, n_tables, dtype=np.int32
-                )
+    @arrow_udf(ArrayType(StringType()))
+    def _sig(v):
+        arr = v.combine_chunks() if isinstance(v, pa.ChunkedArray) else v
+        flat = arr.flatten().to_numpy(zero_copy_only=False)
+        strs = _bucket_mat(flat.reshape(len(arr), dim))
+        offsets = pa.array(
+            np.arange(
+                0, (len(arr) + 1) * n_tables, n_tables, dtype=np.int32
             )
-            return pa.ListArray.from_arrays(offsets, pa.array(strs.ravel()))
-
-    except ImportError:  # pragma: no cover - Spark < 4.1 fallback
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("array<string>")
-        def _sig(v: pd.Series) -> pd.Series:
-            strs = _bucket_mat(np.vstack(v.to_numpy()))
-            return pd.Series(list(map(list, strs)))
+        )
+        return pa.ListArray.from_arrays(offsets, pa.array(strs.ravel()))
 
     return emb.withColumn(
         "bucket", F.explode(_sig(F.col("embedding").cast("array<double>")))

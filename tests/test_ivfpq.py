@@ -11,6 +11,7 @@ join, refine fetches ids-first via broadcast."""
 import re
 
 import numpy as np
+from pyspark import StorageLevel
 import pyspark.sql.functions as F
 import pytest
 
@@ -292,3 +293,64 @@ def test_multi_kmeans_fused_equals_sequential(spark, emb):
     assert fused == seq
     # the pure-expression assignment path folds to the same centroids
     assert similarity.multi_kmeans(emb, spaces, iters=2, vectorized=False) == seq
+
+
+@pytest.fixture
+def persisted(spark, monkeypatch):
+    """Every frame persisted during the test (DataFrame.persist spy)."""
+    frames = []
+    cls = type(spark.range(1))  # the concrete (classic) DataFrame class
+    real = cls.persist
+
+    def spy(self, *args, **kwargs):
+        frames.append(self)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    return frames
+
+
+@pytest.mark.parametrize(
+    "train",
+    [
+        lambda e: similarity.ivf_centroids(e, n_centroids=2, iters=1),
+        lambda e: similarity.multi_kmeans(e, [(2, 0, None)], iters=1),
+    ],
+    ids=["ivf_centroids", "multi_kmeans"],
+)
+def test_kmeans_unpersists_training_frame_when_a_job_fails(spark, persisted, train):
+    """The training frame is persisted before the first Lloyd job; a job
+    that then fails must not leave it cached for the rest of the
+    session."""
+    failing = spark.range(8).select(
+        F.col("id").alias("vec_id"),
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("boom")))
+        .otherwise(F.array(F.lit(1.0)))
+        .alias("embedding"),
+    )
+    with pytest.raises(Exception, match="boom"):
+        train(failing)
+    assert persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
+@pytest.mark.parametrize(
+    "train",
+    [
+        lambda e: similarity.ivf_centroids(e, n_centroids=0),
+        lambda e: similarity.multi_kmeans(e, [(4, 0, None), (0, 0, 4)]),
+        lambda e: similarity.ivf_pq_topk(e, n_centroids=4, m=2, ksub=0),
+    ],
+    ids=["ivf_centroids", "multi_kmeans", "ivf_pq_topk"],
+)
+def test_kmeans_rejects_empty_space_on_driver(spark, persisted, train):
+    """k < 1 in any space is a driver-side ValueError raised before the
+    training frame is persisted, not an IndexError inside the executor
+    UDF."""
+    tiny = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(8)]) for i in range(8)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="at least one centroid|>= 1"):
+        train(tiny)
+    assert not persisted

@@ -7,6 +7,7 @@ path stays inside whole-stage codegen. A regression here is a silent
 """
 
 import pyspark.sql.functions as F
+import pytest
 
 from teste_carga_avro_vs_json_spark.session import load_table
 
@@ -46,6 +47,29 @@ def test_json_serde_is_jvm_only(spark):
     plan = _plan(rt)
     assert "Exchange" not in plan
     assert "EvalPython" not in plan  # pure to_json/from_json
+
+
+@pytest.mark.parametrize(
+    "build",
+    [
+        serde.avro_encode,
+        lambda m: serde.avro_decode(serde.avro_encode(m)),
+        serde.avro_roundtrip,
+        serde.payload_sizes,
+    ],
+    ids=["encode", "decode_of_encode", "roundtrip", "payload_sizes"],
+)
+def test_avro_serde_is_one_arrow_udf_node(spark, build):
+    """The Avro path is the arrow_udf codec only: one ArrowEvalPython
+    node per plan (Spark merges a chained encode->decode into one), no
+    row-at-a-time BatchEvalPython, no shuffle."""
+    msgs = generator.mensagens(spark, 1000, tamanho_kb=1)
+    plan = _plan(build(msgs))
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+    assert "Exchange" not in plan
+    if build is serde.avro_roundtrip:
+        assert "avro_roundtrip_vec" in plan
 
 
 def test_tail_n_join_is_broadcast(spark):

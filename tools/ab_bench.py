@@ -72,9 +72,9 @@ def main() -> None:
 
     n_msgs = 100_000
 
-    def _avro(vectorized):
+    def w_avro():
         msgs = generator.mensagens(spark, n_msgs, tamanho_kb=1)
-        dec = serde.avro_roundtrip(msgs, vectorized=vectorized)
+        dec = serde.avro_roundtrip(msgs)
         sized = routing.size_estimate(routing.route(dec, 18))
         run(
             sized.agg(
@@ -90,8 +90,7 @@ def main() -> None:
         "minhash_lsh": lambda: run(
             dedup.minhash_lsh_candidates_scale(docs_df())
         ),
-        "avro_e2e": lambda: _avro(True),  # Arrow-native = default since r6
-        "avro_e2e_scalar": lambda: _avro(False),
+        "avro_e2e": w_avro,
     }
     wanted = sys.argv[1:] or list(lanes)
     picked = {name: lanes[name] for name in wanted}

@@ -81,8 +81,7 @@ def main() -> None:
         "avro_e2e": lambda: routing.size_estimate(
             routing.route(
                 serde.avro_roundtrip(
-                    generator.mensagens(spark, n_msgs, tamanho_kb=1),
-                    vectorized=True,
+                    generator.mensagens(spark, n_msgs, tamanho_kb=1)
                 ),
                 18,
             )
