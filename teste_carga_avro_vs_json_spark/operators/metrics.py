@@ -54,21 +54,21 @@ def registrar(
 
 
 # ------------------------------------------------------------- O13 (agg)
-def _counters() -> list[Column]:
-    # registrarMensagem (MetricasDesempenho.java:29-39): bytes only
-    # counted when > 0; erro rows contribute 0 bytes. (Built lazily:
-    # Column construction needs an active session.)
-    return [
-        F.count(F.lit(1)).alias("total_mensagens"),
-        F.coalesce(
-            F.sum(
-                F.when(F.col("tamanho_bytes") > 0, F.col("tamanho_bytes")).otherwise(0)
-            ),
-            F.lit(0),
-        ).cast("long").alias("total_bytes"),
-        F.count_if(F.col("sucesso")).alias("mensagens_sucesso"),
-        F.count_if(~F.col("sucesso")).alias("mensagens_erro"),
-    ]
+# The report is built from parsed SQL fragments (the discipline of
+# generator._registro_sx): one selectExpr parses a whole projection or
+# aggregate in a few py4j calls, where the Column API pays calls per
+# node. Double literals carry the ``D`` suffix — Spark SQL parses a bare
+# ``1000.0`` as DECIMAL.
+
+# registrarMensagem (MetricasDesempenho.java:29-39): bytes only counted
+# when > 0; erro rows contribute 0 bytes.
+_COUNTERS_SX = [
+    "count(1) AS total_mensagens",
+    "CAST(coalesce(sum(CASE WHEN tamanho_bytes > 0 THEN tamanho_bytes"
+    " ELSE 0 END), 0) AS BIGINT) AS total_bytes",
+    "count_if(sucesso) AS mensagens_sucesso",
+    "count_if(NOT sucesso) AS mensagens_erro",
+]
 
 _COUNTERS_SQL = """
         COUNT(*) AS total_mensagens,
@@ -82,31 +82,20 @@ def _derived(df: DataFrame) -> DataFrame:
     """Derived rates from exact counters — the getter formulas of
     MetricasDesempenho.java:45-72, evaluated post-agg so every double
     is one fixed sequence of IEEE-754 ops (oracle-stable)."""
-    dur_ms = F.col("fim_ms") - F.col("inicio_ms")
-    dur_s = dur_ms / F.lit(1000.0)
-    total = F.col("total_mensagens")
-    return (
-        df.withColumn("duracao_ms", dur_ms.cast("long"))
-        .withColumn(
-            "throughput_msgs_s",
-            F.when(dur_s > 0, total / dur_s).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "throughput_mb_s",
-            F.when(
-                dur_s > 0,
-                (F.col("total_bytes") / F.lit(1024.0 * 1024.0)) / dur_s,
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "tempo_por_msg_ms",
-            F.when(total > 0, dur_ms.cast("double") / total).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "taxa_sucesso",
-            F.when(total > 0, (F.col("mensagens_sucesso") * F.lit(100.0)) / total)
-            .otherwise(F.lit(0.0)),
-        )
+    dur_ms = "(fim_ms - inicio_ms)"
+    dur_s = f"({dur_ms} / 1000.0D)"
+    return df.selectExpr(
+        "*",
+        f"CAST({dur_ms} AS BIGINT) AS duracao_ms",
+        f"CASE WHEN {dur_s} > 0 THEN total_mensagens / {dur_s}"
+        " ELSE 0.0D END AS throughput_msgs_s",
+        f"CASE WHEN {dur_s} > 0 THEN (total_bytes / 1048576.0D) / {dur_s}"
+        " ELSE 0.0D END AS throughput_mb_s",
+        f"CASE WHEN total_mensagens > 0 THEN CAST({dur_ms} AS DOUBLE)"
+        " / total_mensagens ELSE 0.0D END AS tempo_por_msg_ms",
+        "CASE WHEN total_mensagens > 0"
+        " THEN (mensagens_sucesso * 100.0D) / total_mensagens"
+        " ELSE 0.0D END AS taxa_sucesso",
     )
 
 
@@ -133,10 +122,8 @@ def metricas_agg(df: DataFrame) -> DataFrame:
     wall-clock (MetricasDesempenho.java:22,41-43) — deterministic, and
     reports the data's own span rather than the harness's.
     """
-    agg = df.agg(
-        *_counters(),
-        F.min("ts_ms").alias("inicio_ms"),
-        F.max("ts_ms").alias("fim_ms"),
+    agg = df.selectExpr(
+        *_COUNTERS_SX, "min(ts_ms) AS inicio_ms", "max(ts_ms) AS fim_ms"
     )
     return _derived(agg)
 
@@ -198,43 +185,26 @@ def metricas_merge_sql(runs_sql: str, group_cols: list[str] | None = None) -> st
 
 
 # ---------------------------------------------------------- O15 (report)
-_REPORT_FIELDS = [
-    # gerarRelatorio() string fields use %.2f (MetricasDesempenho.java:80-86).
-    ("total_mb", "total_bytes / (1024.0 * 1024.0)"),
-    ("duracao_segundos", "duracao_ms / 1000.0"),
-    ("throughput_msgs_s_fmt", None),
-    ("throughput_mb_s_fmt", None),
-    ("tempo_por_msg_ms_fmt", None),
-    ("taxa_sucesso_fmt", None),
-]
-
-
 def relatorio(met: DataFrame) -> DataFrame:
     """Fixed-decimal report row (gerarRelatorio(),
-    MetricasDesempenho.java:74-105): counters verbatim + '%.2f' strings.
+    MetricasDesempenho.java:74-105): counters verbatim + '%.2f' strings
+    (MetricasDesempenho.java:80-86).
     """
-    return met.select(
-        F.col("total_mensagens"),
-        F.col("mensagens_sucesso"),
-        F.col("mensagens_erro"),
-        F.col("total_bytes"),
-        F.format_string("%.2f", F.col("total_bytes") / F.lit(1024.0 * 1024.0)).alias(
-            "total_mb"
-        ),
-        F.col("duracao_ms"),
-        F.format_string("%.2f", F.col("duracao_ms") / F.lit(1000.0)).alias(
-            "duracao_segundos"
-        ),
-        F.format_string("%.2f", F.col("throughput_msgs_s")).alias(
-            "throughput_mensagens_por_segundo"
-        ),
-        F.format_string("%.2f", F.col("throughput_mb_s")).alias(
-            "throughput_mb_por_segundo"
-        ),
-        F.format_string("%.2f", F.col("tempo_por_msg_ms")).alias("tempo_por_mensagem_ms"),
-        F.format_string("%.2f", F.col("taxa_sucesso")).alias("taxa_sucesso_porcentagem"),
-        F.col("inicio_ms").alias("timestamp_inicio"),
-        F.col("fim_ms").alias("timestamp_fim"),
+    return met.selectExpr(
+        "total_mensagens",
+        "mensagens_sucesso",
+        "mensagens_erro",
+        "total_bytes",
+        "format_string('%.2f', total_bytes / 1048576.0D) AS total_mb",
+        "duracao_ms",
+        "format_string('%.2f', duracao_ms / 1000.0D) AS duracao_segundos",
+        "format_string('%.2f', throughput_msgs_s)"
+        " AS throughput_mensagens_por_segundo",
+        "format_string('%.2f', throughput_mb_s) AS throughput_mb_por_segundo",
+        "format_string('%.2f', tempo_por_msg_ms) AS tempo_por_mensagem_ms",
+        "format_string('%.2f', taxa_sucesso) AS taxa_sucesso_porcentagem",
+        "inicio_ms AS timestamp_inicio",
+        "fim_ms AS timestamp_fim",
     )
 
 
@@ -253,7 +223,7 @@ def metricas_por_janela(df: DataFrame, janela_ms: int = 60_000) -> DataFrame:
     )
     return (
         df.groupBy(bucket)
-        .agg(*_counters())
+        .agg(*map(F.expr, _COUNTERS_SX))
         .orderBy("janela_inicio_ms")
     )
 

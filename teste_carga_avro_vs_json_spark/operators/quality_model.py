@@ -22,7 +22,8 @@ Spark-first training, deterministic to the bit:
   back onto the feature table, per-idx exact-long sums. Only the
   (n_features+1) gradient row set ever reaches the driver.
 - **Quantized-exact arithmetic end to end** (the repo determinism
-  rule, same as ``ivf_centroids``): per-term products are floored to
+  rule, same as the k-means trainer ``similarity.multi_kmeans``):
+  per-term products are floored to
   1e-9 longs before summing (partial-agg order cannot perturb exact
   integer sums), sigmoid outputs are floored to 1e-6 longs, and every
   gradient is then INTEGER arithmetic ``(p_q − y·1e6)·cnt`` until the

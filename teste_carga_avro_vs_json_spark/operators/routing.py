@@ -26,11 +26,10 @@ from pyspark.sql.window import Window
 def route(msgs: DataFrame, num_particoes: int = 18) -> DataFrame:
     """O7 routing arithmetic: chave + particao columns
     (ProdutorAvro.java:67-70)."""
-    return msgs.withColumn(
-        "chave", F.expr("concat('msg-', CAST(sequencia AS STRING))")
-    ).withColumn(
-        "particao",
-        F.expr(f"CAST(pmod(sequencia - 1, {num_particoes}) AS INT)"),
+    return msgs.selectExpr(
+        "*",
+        "concat('msg-', CAST(sequencia AS STRING)) AS chave",
+        f"CAST(pmod(sequencia - 1, {num_particoes}) AS INT) AS particao",
     )
 
 

@@ -350,6 +350,60 @@ def embedding_neardup_sql(
 
 
 # ----------------------------------------------------------- IVF ANN path
+def _argmin_kernel(
+    resolved: list[tuple[int, int, int | None]],
+    all_cents: list[list[tuple[int, list[float]]]],
+):
+    """The one numpy argmin kernel behind :func:`assign_np`,
+    :func:`_assign_multi` and :func:`_update_sums_np`. ``resolved`` =
+    [(k, start0, length)] per space (``length=None``: to the end of the
+    vector), ``all_cents`` the centroids of each space. Returns
+    ``(chunks, ids)``: ``chunks(vals)`` walks an object array of vectors
+    and yields ``(rows, M, loc)`` per chunk — ``rows`` the positions of
+    the non-null vectors, ``M`` those vectors stacked as float64, ``loc``
+    (rows × spaces) the argmin POSITION in each centroid list, so
+    ``ids[s][loc[:, s]]`` are the centroid ids.
+
+    The distances are BIT-IDENTICAL to the :func:`_nearest` expression
+    fold: per-dim squared differences accumulated by ``cumsum`` along
+    the dim axis — cumsum is exactly the fold's left-to-right add order
+    (and 0.0 + x0 == x0) — and ``argmin`` picks the first minimum
+    exactly like ``array_min`` over (dist, idx) structs. A null vector
+    is skipped: callers give it the first centroid id (what
+    ``_nearest`` returns when every distance is null) and no sums.
+    Chunks keep the (chunk × k × d) intermediate ~tens of MB whatever
+    the Arrow batch size; results do not depend on the chunking.
+
+    ``chunks`` is a closure, so cloudpickle ships it by value and the
+    Python workers never import the package."""
+    import numpy as np
+
+    Cs = [
+        np.asarray([c for _, c in cents], dtype=np.float64)
+        for cents in all_cents
+    ]
+    ids = [np.asarray([i for i, _ in cents], dtype=np.int64) for cents in all_cents]
+    cuts = [
+        slice(start, None if length is None else start + length)
+        for _k, start, length in resolved
+    ]
+    chunk = max(1, 32 * 1024 * 1024 // max(1, 8 * max(C.size for C in Cs)))
+
+    def chunks(vals):
+        for lo in range(0, len(vals), chunk):
+            rows = lo + np.flatnonzero([x is not None for x in vals[lo : lo + chunk]])
+            M = np.asarray([np.asarray(vals[i], dtype=np.float64) for i in rows])
+            if M.size == 0:
+                continue
+            loc = np.empty((len(rows), len(Cs)), dtype=np.int64)
+            for s, cut in enumerate(cuts):
+                diffs = (M[:, None, cut] - Cs[s][None, :, :]) ** 2
+                loc[:, s] = diffs.cumsum(axis=2)[:, :, -1].argmin(axis=1)
+            yield rows, M, loc
+
+    return chunks, ids
+
+
 def assign_np(
     v: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -357,48 +411,28 @@ def assign_np(
     out_col: str = "cluster",
 ) -> DataFrame:
     """Vectorized centroid assignment, BIT-IDENTICAL to
-    ``withColumn(out_col, _nearest(vec, centroids))``.
+    ``withColumn(out_col, _nearest(vec, centroids))``, null vectors
+    included (see :func:`_argmin_kernel`).
 
     The expression form evaluates an interpreted HOF fold per (row,
     centroid) — O(n·k·d) interpreter steps, which dies as the centroid
     count grows with the corpus (measured: 100 s for 60k vecs × 60
-    centroids at 30× stress, vs ~1 s here). This twin computes the same
-    distances in numpy with the SAME IEEE-754 result: per-dim squared
-    differences accumulated by ``cumsum`` along the dim axis — cumsum
-    is exactly the fold's left-to-right add order (and 0.0 + x0 == x0),
-    so every distance is bit-equal to the expression fold's, and
-    ``argmin`` picks the first minimum exactly like ``array_min`` over
-    (dist, idx) structs. That bit-identity is what lets the Lloyd loop
-    and the scale paths use this while the DuckDB oracles keep
-    replaying the expression semantics (pytest pins the equality).
-
-    Batches are chunked so the (chunk × k × d) intermediate stays
-    ~tens of MB regardless of Arrow batch size."""
+    centroids at 30× stress, vs ~1 s here). The bit-identity (pytest
+    pins it) is what lets the scale paths use this while the DuckDB
+    oracles keep replaying the expression semantics."""
     import numpy as np
 
     if not centroids:
         raise ValueError("assign_np requires at least one centroid")
-    C = np.asarray([c for _, c in centroids], dtype=np.float64)
-    idxs = np.asarray([i for i, _ in centroids], dtype=np.int64)
+    chunks, ids = _argmin_kernel([(len(centroids), 0, None)], [centroids])
 
     @F.pandas_udf(T.IntegerType())
     def nearest(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        chunk = max(1, 32 * 1024 * 1024 // max(1, C.shape[0] * C.shape[1] * 8))
         for batch in batches:
             vals = batch.to_numpy()
-            # Pre-fill with the first centroid id so zero-dim embedding
-            # chunks (M.size == 0 below) get a defined assignment instead
-            # of uninitialized memory.
-            out = np.full(len(vals), idxs[0] if len(idxs) else -1, dtype=np.int32)
-            for lo in range(0, len(vals), chunk):
-                M = np.asarray(
-                    [np.asarray(x, dtype=np.float64) for x in vals[lo : lo + chunk]]
-                )
-                if M.size == 0:
-                    continue
-                diffs = (M[:, None, :] - C[None, :, :]) ** 2
-                dists = diffs.cumsum(axis=2)[:, :, -1]
-                out[lo : lo + chunk] = idxs[dists.argmin(axis=1)]
+            out = np.full(len(vals), ids[0][0], dtype=np.int32)
+            for rows, _M, loc in chunks(vals):
+                out[rows] = ids[0][loc[:, 0]]
             yield pd.Series(out)
 
     return v.withColumn(out_col, nearest(F.col(vec_col)))
@@ -418,105 +452,12 @@ def ivf_centroids(
     emb: DataFrame,
     n_centroids: int = 16,
     iters: int = 2,
-    vectorized: bool = True,
 ) -> list[tuple[int, list[float]]]:
-    """Coarse quantizer: k-means with deterministic init (the
-    ``n_centroids`` lowest vec_ids) and ``iters`` Lloyd steps.
-
-    The iterative part is the textbook Spark k-means shape: assignment
-    is evaluated against broadcast centroids (``assign_np`` by default
-    — bit-identical to the `_nearest` expression, see its docstring;
-    pass ``vectorized=False`` for the pure-expression form); the update
-    is ``posexplode`` → groupBy(cluster, dim) — only (n_centroids ×
-    dim) tiny rows ever reach the driver per iteration.
-
-    Centroid means are **quantized-exact**: each component is summed as
-    ``floor(x·1000 + 0.5)`` longs (an exact integer aggregation, so
-    partial-agg order cannot perturb it) and divided back as the fixed
-    double sequence ``(s / n) / 1000.0``. That makes the whole k-means
-    bit-reproducible across engines — which is what lets
-    :func:`ivf_topk_sql` replay it in DuckDB as an unrolled CTE chain
-    and oracle-check the ANN output exactly. (Float ``avg`` would be
-    partial-order-dependent: same repo determinism rule as the exact
-    long-derived metrics in operators/metrics.py.)
-    """
-    if n_centroids < 1:
-        raise ValueError(
-            f"ivf_centroids requires n_centroids >= 1, got {n_centroids}"
-        )
-    # Persisted for the duration of training (iterations re-read the
-    # same frame; unpersisted on every exit path — see multi_kmeans).
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    ).persist()
-    try:
-        # Seeds = first n_centroids DISTINCT vectors among the oversampled
-        # lowest-id rows (see INIT_OVERSAMPLE). The sample is a
-        # TakeOrderedAndProject (per-partition top-k + driver merge, never a
-        # global single-partition sort); dedup happens driver-side on the
-        # tiny sample. If the corpus is so duplicate-heavy that fewer than
-        # n_centroids distinct vectors exist in the sample, k degrades
-        # gracefully to what was found.
-        sample = (
-            v.orderBy("vec_id").limit(INIT_OVERSAMPLE * n_centroids).collect()
-        )
-        seen: set[tuple[float, ...]] = set()
-        centroids: list[tuple[int, list[float]]] = []
-        for r in sample:
-            key = tuple(r.vec)
-            if key not in seen:
-                seen.add(key)
-                centroids.append((len(centroids), list(r.vec)))
-                if len(centroids) == n_centroids:
-                    break
-        # Mean update stays the posexplode -> groupBy(cluster, dim) shape.
-        # r8 A/B'd the "one hash agg with 2x dim long-buffer columns"
-        # alternative (no explode, n_clusters x 128 longs out instead of
-        # rows x dim through the shuffle) and it was 2x SLOWER at sf0.1
-        # (ivf min 1.59-1.62 s vs 0.72-0.75 s, interleaved quiet-window
-        # runs, bench_runs/r8_ab_centroid_agg.json): 128 aggregate columns
-        # exceed spark.sql.codegen.maxFields (100), demoting the whole
-        # aggregate out of whole-stage codegen — the explode's extra rows
-        # are cheaper than losing codegen. Keep the explode.
-        dim = len(centroids[0][1]) if centroids else 0
-        for _ in range(iters):
-            if vectorized:
-                # fused assignment + in-UDF partial sums (r14, shared with
-                # multi_kmeans — see _update_sums_np); the expression path
-                # below stays the untouched reference this is pinned against
-                means = (
-                    _update_sums_np(v, [(len(centroids), 0, dim)], [centroids])
-                    .groupBy("cluster", "dim")
-                    .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                    .collect()
-                )
-            else:
-                assigned = v.withColumn(
-                    "cluster", _nearest(F.col("vec"), centroids)
-                )
-                means = (
-                    assigned.select(
-                        "cluster", F.posexplode("vec").alias("dim", "x")
-                    )
-                    .groupBy("cluster", "dim")
-                    .agg(
-                        F.sum(
-                            F.floor(F.col("x") * 1000 + F.lit(0.5)).cast("long")
-                        ).alias("s"),
-                        F.count(F.lit(1)).alias("n"),
-                    )
-                    .collect()
-                )
-            by_cluster: dict[int, dict[int, float]] = {}
-            for r in means:
-                by_cluster.setdefault(r.cluster, {})[r.dim] = (r.s / r.n) / 1000.0
-            centroids = [
-                (c, [dims[d] for d in sorted(dims)])
-                for c, dims in sorted(by_cluster.items())
-            ]
-        return centroids
-    finally:
-        v.unpersist()
+    """Coarse quantizer: the deterministic k-means of
+    :func:`multi_kmeans` over the whole vector (init = the first
+    ``n_centroids`` distinct lowest-vec_id vectors, ``iters`` Lloyd
+    steps, quantized-exact means)."""
+    return multi_kmeans(emb, [(n_centroids, 0, None)], iters)[0]
 
 
 def _scored_structs(
@@ -558,62 +499,30 @@ def _nearest(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
 
 
 def _assign_multi(
-    v: DataFrame,
-    resolved: list[tuple[int, int, int]],
+    vec: Column,
+    resolved: list[tuple[int, int, int | None]],
     all_cents: list[list[tuple[int, list[float]]]],
-    vectorized: bool,
-) -> DataFrame:
-    """Add ``asg`` (array<int>: one cluster id per space) in ONE pass.
-    Each space's assignment is bit-identical to :func:`assign_np` /
-    :func:`_nearest` on the sliced frame — same float64 values, same
-    per-dim cumsum (= the fold's left-to-right add order), same
-    first-min tie-break."""
-    if not vectorized:
-        cols = []
-        for s_idx, (_k, start, length) in enumerate(resolved):
-            sub = F.slice(F.col("vec"), start + 1, length)
-            cols.append(_nearest(sub, all_cents[s_idx]))
-        return v.withColumn("asg", F.array(*cols))
-
+) -> Column:
+    """array<int>, one cluster id per space, in ONE Arrow pass over
+    ``vec``. Each space's id is what :func:`assign_np` /
+    :func:`_nearest` give on the sliced vector (the same
+    :func:`_argmin_kernel`)."""
     import numpy as np
 
-    Cs = [
-        np.asarray([c for _, c in cents], dtype=np.float64)
-        for cents in all_cents
-    ]
-    idxs = [
-        np.asarray([i for i, _ in cents], dtype=np.int64)
-        for cents in all_cents
-    ]
-    slices = [(start, length) for _k, start, length in resolved]
-    worst = max(C.shape[0] * max(1, C.shape[1] if C.ndim > 1 else 1) for C in Cs)
+    chunks, ids = _argmin_kernel(resolved, all_cents)
+    first = np.asarray([i[0] for i in ids], dtype=np.int32)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def nearest_multi(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        chunk = max(1, 32 * 1024 * 1024 // max(1, worst * 8))
         for batch in batches:
             vals = batch.to_numpy()
-            n = len(vals)
-            out = np.empty((n, len(Cs)), dtype=np.int32)
-            for s in range(len(Cs)):
-                out[:, s] = idxs[s][0] if len(idxs[s]) else -1
-            for lo in range(0, n, chunk):
-                M = np.asarray(
-                    [
-                        np.asarray(x, dtype=np.float64)
-                        for x in vals[lo : lo + chunk]
-                    ]
-                )
-                if M.size == 0:
-                    continue
-                for s, (start, length) in enumerate(slices):
-                    Ms = M[:, start : start + length]
-                    diffs = (Ms[:, None, :] - Cs[s][None, :, :]) ** 2
-                    dists = diffs.cumsum(axis=2)[:, :, -1]
-                    out[lo : lo + chunk, s] = idxs[s][dists.argmin(axis=1)]
+            out = np.tile(first, (len(vals), 1))
+            for rows, _M, loc in chunks(vals):
+                for s, idx in enumerate(ids):
+                    out[rows, s] = idx[loc[:, s]]
             yield pd.Series(list(out))
 
-    return v.withColumn("asg", nearest_multi(F.col("vec")))
+    return nearest_multi(vec)
 
 
 def _update_sums_np(
@@ -624,34 +533,18 @@ def _update_sums_np(
     """Fused Lloyd update (r14): assignment AND per-(space, cluster,
     dim) quantized partial sums in ONE Arrow-batched pass over just the
     ``vec`` column — guide §2.3 (aggregate before you shuffle, in the
-    UDF itself) + §4.2 (whole-batch numpy). The explode→groupBy form
-    shipped vec+asg back to the JVM and generated n·d·coverage struct
-    rows per iteration; this emits at most Σ(kₛ·dsubₛ) partial rows per
-    batch and the final groupBy sums exact int64s (order-free — the
-    same discipline as the explode form's map-side partial agg).
+    UDF itself) + §4.2 (whole-batch numpy). It emits at most
+    Σ(kₛ·dsubₛ) partial rows per batch and the final groupBy sums exact
+    int64s (order-free).
 
-    Bit-exactness: assignment is the assign_np computation verbatim
-    (same chunking-independent cumsum distances, same first-min
-    tie-break); the quantization ``floor(x·1000.0 + 0.5)`` is the same
-    IEEE-754 op sequence the SQL fragment evaluates per element; int64
-    sums regrouped by identical keys are exact. Pinned transitively by
-    test_multi_kmeans_fused_equals_sequential and
-    test_ivf_centroids_vectorized_matches_expression (both compare
-    against the untouched expression/explode reference paths)."""
+    Bit-exactness: assignment is :func:`_argmin_kernel`; the
+    quantization ``floor(x·1000.0 + 0.5)`` is the IEEE-754 op sequence
+    the DuckDB replay evaluates per element; int64 sums regrouped by
+    identical keys are exact. A null vector adds nothing. Pinned by
+    test_multi_kmeans_equals_duckdb_lloyd_replay."""
     import numpy as np
 
-    Cs = [
-        np.asarray([c for _, c in cents], dtype=np.float64)
-        for cents in all_cents
-    ]
-    idxs = [
-        np.asarray([i for i, _ in cents], dtype=np.int64)
-        for cents in all_cents
-    ]
-    slices = [(start, length) for _k, start, length in resolved]
-    worst = max(
-        C.shape[0] * max(1, C.shape[1] if C.ndim > 1 else 1) for C in Cs
-    )
+    chunks, ids = _argmin_kernel(resolved, all_cents)
     schema = T.StructType(
         [
             T.StructField("sp", T.IntegerType()),
@@ -663,31 +556,19 @@ def _update_sums_np(
     )
 
     def partial_sums(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        chunk = max(1, 32 * 1024 * 1024 // max(1, worst * 8))
         for pdf in pdfs:
-            vals = pdf["vec"].to_numpy()
-            if not len(vals):
-                continue
             cols: dict[str, list] = {k: [] for k in ("sp", "cluster", "dim", "s", "n")}
-            for lo in range(0, len(vals), chunk):
-                M = np.asarray(
-                    [np.asarray(x, dtype=np.float64) for x in vals[lo : lo + chunk]]
-                )
-                if M.size == 0:
-                    continue
+            for _rows, M, loc in chunks(pdf["vec"].to_numpy()):
                 Q = np.floor(M * 1000.0 + 0.5).astype(np.int64)
-                for s, (start, length) in enumerate(slices):
-                    Ms = M[:, start : start + length]
-                    diffs = (Ms[:, None, :] - Cs[s][None, :, :]) ** 2
-                    loc = diffs.cumsum(axis=2)[:, :, -1].argmin(axis=1)
-                    k = Cs[s].shape[0]
+                for s, (_k, start, length) in enumerate(resolved):
+                    k = len(ids[s])
                     acc = np.zeros((k, length), dtype=np.int64)
-                    np.add.at(acc, loc, Q[:, start : start + length])
-                    cnt = np.bincount(loc, minlength=k).astype(np.int64)
+                    np.add.at(acc, loc[:, s], Q[:, start : start + length])
+                    cnt = np.bincount(loc[:, s], minlength=k)
                     for c in np.nonzero(cnt)[0]:
                         cols["sp"].append(np.full(length, s, dtype=np.int32))
                         cols["cluster"].append(
-                            np.full(length, idxs[s][c], dtype=np.int32)
+                            np.full(length, ids[s][c], dtype=np.int32)
                         )
                         cols["dim"].append(np.arange(length, dtype=np.int32))
                         cols["s"].append(acc[c])
@@ -704,32 +585,38 @@ def multi_kmeans(
     emb: DataFrame,
     spaces: list[tuple[int, int, int | None]],
     iters: int = 2,
-    vectorized: bool = True,
 ) -> list[list[tuple[int, list[float]]]]:
-    """Fused deterministic k-means over several SLICES ("spaces") of the
-    embedding, sharing every Spark job (optimization guide §1.2 step 1 /
-    §2.4: remove redundant passes — IVF-PQ previously trained 1 coarse +
-    m=8 subspace quantizers as 9 independent :func:`ivf_centroids` runs
-    = 9 sample-collects + 9 jobs PER Lloyd iteration; at 100 TB that is
-    9 corpus passes per iteration where 1 suffices, and locally it was
-    the dominant cost of q_ivf_pq_topk — 28 sequential driver jobs,
-    25.3 s at sf0.01, OPTIMIZATION_r13.md #1).
+    """Deterministic k-means over one or more SLICES ("spaces") of the
+    embedding, sharing every Spark job — the only Lloyd loop in this
+    module: :func:`ivf_centroids` is its one-space case, and IVF-PQ
+    trains its coarse quantizer and m codebooks in one call (trained
+    one by one they cost 9 sample-collects + 9 jobs PER Lloyd
+    iteration — 28 sequential driver jobs, 25.3 s at sf0.01,
+    OPTIMIZATION_r13.md #1).
 
     ``spaces`` = [(k, start0, length)] element slices; ``length=None``
-    means the full vector. Per-space semantics are EXACTLY
-    :func:`ivf_centroids` on the sliced frame — pytest pins the fused
-    output bit-equal to the sequential reference, and every k-means
-    oracle (the DuckDB ``_kmeans_assign_ctes`` replay) stays green:
+    means the full vector. Per space:
 
-    - seeds: first k DISTINCT sub-vectors within that space's
+    - seeds: first k DISTINCT non-null sub-vectors within that space's
       ``INIT_OVERSAMPLE × k`` lowest-vec_id window — each window is a
-      prefix of ONE shared vec_id-ordered sample (one collect total);
-    - assignment: one Arrow-batched projection computes every space's
-      argmin per row (:func:`_assign_multi`, bit-identical numpy);
-    - update: each element feeds its covering spaces through ONE
-      ``groupBy(space, cluster, dim)`` shuffle of exact
-      ``floor(x·1000+0.5)`` longs (order-free integer sums), and the
-      means collect is one job per iteration instead of N.
+      prefix of ONE shared vec_id-ordered sample (one collect total; a
+      TakeOrderedAndProject, never a global sort). If a window holds
+      fewer than k distinct vectors, k degrades to what was found;
+    - each Lloyd iteration is ONE Arrow pass computing every space's
+      argmin and quantized partial sums (:func:`_update_sums_np`) and
+      ONE ``groupBy(space, cluster, dim)`` collect; a null vector
+      neither seeds nor moves a centroid.
+
+    Centroid means are **quantized-exact**: each component is summed as
+    ``floor(x·1000 + 0.5)`` longs (an exact integer aggregation, so
+    partial-agg order cannot perturb it) and divided back as the fixed
+    double sequence ``(s / n) / 1000.0``. That makes the whole k-means
+    bit-reproducible across engines — which is what lets the DuckDB
+    oracles replay it as an unrolled CTE chain
+    (:func:`_kmeans_assign_ctes`; pytest pins the equality for a
+    full-vector space and a PQ subspace). (Float ``avg`` would be
+    partial-order-dependent: same repo determinism rule as the exact
+    long-derived metrics in operators/metrics.py.)
     """
     bad = [k for k, _s, _l in spaces if k < 1]
     if bad:
@@ -747,7 +634,12 @@ def multi_kmeans(
     ).persist()
     try:
         max_k = max(k for k, _s, _l in spaces)
-        sample = v.orderBy("vec_id").limit(INIT_OVERSAMPLE * max_k).collect()
+        sample = (
+            v.filter(F.col("vec").isNotNull())
+            .orderBy("vec_id")
+            .limit(INIT_OVERSAMPLE * max_k)
+            .collect()
+        )
         dim = len(sample[0].vec) if sample else 0
         resolved = [
             (k, start, (dim - start) if length is None else length)
@@ -765,42 +657,13 @@ def multi_kmeans(
                     if len(cents) == k:
                         break
             all_cents.append(cents)
-        # The per-space explode expression depends only on the space
-        # layout, not the centroids — build it ONCE, as one parsed SQL
-        # fragment (r14): the Column-API form (9 transform+slice+struct
-        # trees, rebuilt every iteration) cost ~1 s of py4j round trips
-        # PER Lloyd iteration, measured — the r13 `_sx` lesson applied to
-        # the trainer. Same expressions: 0-based `asg[s]`/lambda index,
-        # `floor(x*1000.0D + 0.5D)` is the exact quantization the Column
-        # form computed (int 1000 promoted to double either way).
-        explode_sx = "explode(flatten(array(" + ", ".join(
-            f"transform(slice(vec, {start + 1}, {length}), (x, i) -> "
-            f"named_struct('sp', {s_idx}, 'cluster', asg[{s_idx}], 'dim', i,"
-            f" 'sx', CAST(floor(x * 1000.0D + 0.5D) AS BIGINT)))"
-            for s_idx, (_k, start, length) in enumerate(resolved)
-        ) + ")))"
         for _ in range(iters):
-            if vectorized:
-                # fused assignment + map-side partial sums inside the UDF
-                # (r14, see _update_sums_np) — one Arrow pass over vec only
-                means = (
-                    _update_sums_np(v, resolved, all_cents)
-                    .groupBy("sp", "cluster", "dim")
-                    .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                    .collect()
-                )
-            else:
-                assigned = _assign_multi(v, resolved, all_cents, False)
-                means = (
-                    assigned.select(F.expr(explode_sx).alias("e"))
-                    .groupBy(
-                        F.col("e.sp").alias("sp"),
-                        F.col("e.cluster").alias("cluster"),
-                        F.col("e.dim").alias("dim"),
-                    )
-                    .agg(F.sum("e.sx").alias("s"), F.count(F.lit(1)).alias("n"))
-                    .collect()
-                )
+            means = (
+                _update_sums_np(v, resolved, all_cents)
+                .groupBy("sp", "cluster", "dim")
+                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
+                .collect()
+            )
             by_space: dict[int, dict[int, dict[int, float]]] = {}
             for r in means:
                 by_space.setdefault(r.sp, {}).setdefault(r.cluster, {})[r.dim] = (
@@ -905,10 +768,12 @@ def _kmeans_assign_ctes(
     prefix: str = "",
 ) -> tuple[list[str], str]:
     """The deterministic-k-means replay shared by every oracle that
-    depends on :func:`ivf_centroids`' cluster assignment
-    (:func:`ivf_topk_sql`, :func:`semantic_dedup_sql`): the Lloyd loop
-    is deterministic (init = lowest vec_ids, quantized-exact centroid
-    means), so the ``iters`` iterations unroll into a CTE chain —
+    depends on :func:`multi_kmeans`' centroids and cluster assignment
+    (:func:`ivf_topk_sql`, :func:`ivf_pq_topk_sql`,
+    :func:`semantic_dedup_sql`, :func:`cluster_sample_sql`): the Lloyd
+    loop is deterministic (init = lowest vec_ids, quantized-exact
+    centroid means), so the ``iters`` iterations unroll into a CTE
+    chain —
     assignment is an argmin window over the (corpus × centroids) cross
     join (fine at oracle scale; the Spark side instead evaluates
     broadcast centroid literals in a projection), the update replays
@@ -1025,19 +890,16 @@ def pq_codebooks(
     m: int = 8,
     ksub: int = 16,
     iters: int = 2,
-    vectorized: bool = True,
 ) -> list[list[tuple[int, list[float]]]]:
     """Product-quantization codebooks (Jégou, Douze, Schmid 2011,
     "Product Quantization for Nearest Neighbor Search"): the embedding
     is split into ``m`` contiguous subspaces of d/m dims and each gets
-    an INDEPENDENT deterministic k-means with ``ksub`` codewords —
-    semantically :func:`ivf_centroids` run on the sliced frame
-    (pytest pins the equality), so every determinism property
-    (lowest-id dedup'd init, quantized-exact means) carries over and
-    the DuckDB oracle replays each codebook with the same shared CTE
-    chain. Since r13-opt the m trainings run FUSED
-    (:func:`multi_kmeans`): one sample collect + one job per Lloyd
-    iteration instead of m of each."""
+    an INDEPENDENT deterministic k-means with ``ksub`` codewords — one
+    space of :func:`multi_kmeans` each, all m trained in one call (one
+    sample collect + one job per Lloyd iteration), so every determinism
+    property (lowest-id dedup'd init, quantized-exact means) carries
+    over and the DuckDB oracle replays each codebook with the same
+    shared CTE chain."""
     dim = len(emb.select("embedding").first()[0])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -1046,7 +908,6 @@ def pq_codebooks(
         emb,
         [(ksub, j * dsub, dsub) for j in range(m)],
         iters,
-        vectorized=vectorized,
     )
 
 
@@ -1058,24 +919,23 @@ def pq_encode(
 ) -> DataFrame:
     """Add ``codes`` (array<int>, one codeword id per subspace) — the
     d/8-bytes-per-vector representation that rides the candidate join
-    instead of the raw d×8-byte vector. ``vectorized=True`` routes
-    each subspace argmin through :func:`assign_np` (bit-identical, the
-    scale path — the expression form is an interpreted HOF fold, the
-    known k-means assignment hazard); the default expression form
-    keeps registry plans Python-free."""
+    instead of the raw d×8-byte vector. ``vectorized=True`` computes
+    all m subspace argmins in ONE Arrow pass (:func:`_assign_multi`,
+    bit-identical, the scale path — the expression form is an
+    interpreted HOF fold, the known k-means assignment hazard); the
+    default expression form keeps registry plans Python-free."""
     dsub = len(books[0][0][1])
-    sub_cols = []
-    for j, cb in enumerate(books):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        if vectorized:
-            v = v.withColumn(f"_sub{j}", sub)
-            v = assign_np(v, cb, vec_col=f"_sub{j}", out_col=f"_code{j}")
-            sub_cols.append(F.col(f"_code{j}"))
-        else:
-            sub_cols.append(_nearest(sub, cb))
-    out = v.withColumn("codes", F.array(*sub_cols))
-    return out.drop(*[c for j in range(len(books))
-                      for c in (f"_sub{j}", f"_code{j}")])
+    if vectorized:
+        spaces = [(len(cb), j * dsub, dsub) for j, cb in enumerate(books)]
+        codes = _assign_multi(F.col(vec_col), spaces, books)
+    else:
+        codes = F.array(
+            *[
+                _nearest(F.slice(F.col(vec_col), j * dsub + 1, dsub), cb)
+                for j, cb in enumerate(books)
+            ]
+        )
+    return v.withColumn("codes", codes)
 
 
 def _pq_lut(
@@ -1216,8 +1076,8 @@ def ivf_pq_topk(
     # Coarse quantizer + all m PQ codebooks train FUSED (r13-opt,
     # OPTIMIZATION_r13.md #1): one shared sample collect + one job per
     # Lloyd iteration for all 9 spaces — bit-identical to the
-    # sequential ivf_centroids/pq_codebooks runs (pytest-pinned; the
-    # DuckDB oracle's per-space CTE replay is unchanged and green).
+    # one-space ivf_centroids/pq_codebooks runs (pytest-pinned, as is
+    # the DuckDB oracle's per-space CTE replay).
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
     dsub = dim // m
@@ -1233,14 +1093,16 @@ def ivf_pq_topk(
     )
     if vectorized_encode:
         # Scale path (r14): coarse assignment + all m PQ codes in ONE
-        # Arrow-batched pass (the same _assign_multi the fused trainer
-        # uses — per-space outputs bit-identical to _nearest/assign_np,
+        # Arrow-batched pass (_assign_multi — the trainer's argmin
+        # kernel; per-space outputs bit-identical to _nearest/assign_np,
         # pytest-pinned). The r13 form paid one interpreted O(k·d) HOF
         # fold for the coarse argmin plus m separate assign_np columns.
         resolved = [(n_centroids, 0, dim)] + [
             (ksub, j * dsub, dsub) for j in range(m)
         ]
-        va = _assign_multi(base, resolved, [cents] + list(books), True)
+        va = base.withColumn(
+            "asg", _assign_multi(F.col("vec"), resolved, [cents] + list(books))
+        )
         v = va.select(
             "vec_id",
             # coalesce marks the join key non-nullable (see ivf_topk)

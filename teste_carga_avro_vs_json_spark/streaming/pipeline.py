@@ -97,13 +97,13 @@ def metricas_stream_janela(
     closed windows is dropped); complete mode for bounded drains where
     every window must emit.
     """
-    from teste_carga_avro_vs_json_spark.operators.metrics import _counters
+    from teste_carga_avro_vs_json_spark.operators.metrics import _COUNTERS_SX
 
     with_ts = src.withColumn("_ts", F.timestamp_millis(F.col("ts_ms")))
     if watermark_s is not None:
         with_ts = with_ts.withWatermark("_ts", f"{watermark_s} seconds")
     agg = with_ts.groupBy(F.window("_ts", f"{janela_s} seconds").alias("_w")).agg(
-        *_counters()
+        *map(F.expr, _COUNTERS_SX)
     )
     return agg.select(
         F.unix_millis(F.col("_w.start")).alias("janela_inicio_ms"),

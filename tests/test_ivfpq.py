@@ -274,7 +274,7 @@ def test_multi_kmeans_fused_equals_sequential(spark, emb):
     one job per Lloyd iteration for every space) is bit-identical to
     the sequential reference — ivf_centroids run per sliced frame —
     for the exact space layout ivf_pq_topk trains (1 coarse + m
-    subspaces), on both assignment paths."""
+    subspaces)."""
     dim = len(emb.select("embedding").first()[0])
     m, ksub, dsub = 8, 16, dim // 8
     spaces = [(16, 0, None)] + [(ksub, j * dsub, dsub) for j in range(m)]
@@ -291,8 +291,90 @@ def test_multi_kmeans_fused_equals_sequential(spark, emb):
         )
         seq.append(similarity.ivf_centroids(sub, ksub, 2))
     assert fused == seq
-    # the pure-expression assignment path folds to the same centroids
-    assert similarity.multi_kmeans(emb, spaces, iters=2, vectorized=False) == seq
+
+
+@pytest.mark.parametrize(
+    "space, vec_expr",
+    [
+        ((6, 0, None), "embedding::DOUBLE[]"),
+        ((16, 8, 8), "(embedding::DOUBLE[])[9:16]"),
+    ],
+    ids=["full_k6", "pq_subspace_k16"],
+)
+def test_multi_kmeans_equals_duckdb_lloyd_replay(spark, emb, sf_dir, space, vec_expr):
+    """The Lloyd loop's centroids equal the final-centroid CTE of the
+    DuckDB replay (_kmeans_assign_ctes) that grades q_ivf_pq_topk,
+    q_semantic_dedup and q_cluster_sample — for a full-vector space and
+    for a PQ subspace slice (elements 9-16)."""
+    import duckdb
+
+    k = space[0]
+    got = similarity.multi_kmeans(emb, [space], iters=2)[0]
+    ctes, cfin = similarity._kmeans_assign_ctes(
+        "embeddings", k, 2, vec_expr=vec_expr
+    )
+    d = duckdb.connect()
+    d.execute(
+        "CREATE VIEW embeddings AS "
+        f"SELECT * FROM '{sf_dir}/embeddings.parquet'"
+    )
+    want = [
+        (c, list(v))
+        for c, v in d.execute(
+            f"WITH {', '.join(ctes)} SELECT cluster, cvec FROM {cfin} "
+            "ORDER BY cluster"
+        ).fetchall()
+    ]
+    assert len(got) == k
+    assert got == want
+
+
+@pytest.fixture(scope="module")
+def emb_nulls(spark, emb):
+    """The fixture corpus plus null-embedding rows at the lowest and the
+    highest vec_id."""
+    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
+    nulls = spark.createDataFrame(
+        [(lo - 1, None), (hi + 1, None)], emb.select("vec_id", "embedding").schema
+    )
+    return emb.select("vec_id", "embedding").unionByName(nulls)
+
+
+def test_null_embedding_assigns_like_the_expression(spark, emb, emb_nulls):
+    """A null vector gets the first centroid id on the numpy paths, as
+    `_nearest` gives it (every distance is null, array_min breaks the
+    tie by the lowest index) — row for row, nulls included."""
+    cents = similarity.ivf_centroids(emb, n_centroids=8, iters=1)
+    books = similarity.pq_codebooks(emb, m=8, ksub=16, iters=1)
+    v = emb_nulls.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
+    )
+    expr = {
+        r.vec_id: (r.cluster, r.codes)
+        for r in similarity.pq_encode(
+            v.withColumn("cluster", similarity._nearest(F.col("vec"), cents)),
+            books,
+        ).collect()
+    }
+    vec = {
+        r.vec_id: (r.cluster, r.codes)
+        for r in similarity.pq_encode(
+            similarity.assign_np(v, cents), books, vectorized=True
+        ).collect()
+    }
+    assert len(vec) == 502
+    assert vec == expr
+    lo = min(vec)
+    assert vec[lo] == (cents[0][0], [cb[0][0] for cb in books])
+
+
+def test_null_embedding_adds_nothing_to_kmeans(spark, emb, emb_nulls):
+    """Null rows neither seed nor move a centroid: training on the frame
+    with null rows equals training without them."""
+    spaces = [(6, 0, None), (16, 8, 8)]
+    assert similarity.multi_kmeans(emb_nulls, spaces, iters=2) == (
+        similarity.multi_kmeans(emb, spaces, iters=2)
+    )
 
 
 @pytest.fixture

@@ -250,16 +250,6 @@ def test_assign_np_bit_identical_to_expression(spark, sf_dir):
     assert vec == expr
 
 
-def test_ivf_centroids_vectorized_matches_expression(spark, sf_dir):
-    """The Lloyd loop must learn the SAME centroids whichever
-    assignment engine runs (bit-identical assignment => identical
-    quantized-exact means)."""
-    emb = _emb(spark, sf_dir)
-    a = similarity.ivf_centroids(emb, n_centroids=6, iters=2, vectorized=True)
-    b = similarity.ivf_centroids(emb, n_centroids=6, iters=2, vectorized=False)
-    assert a == b
-
-
 def test_semantic_dedup_np_equals_join_form(spark, sf_dir):
     """The per-cluster matmul scale twin must emit exactly the join
     form's (vec_id, cluster, kept) rows on the fixture corpus."""
