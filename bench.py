@@ -1,10 +1,16 @@
-"""Per-round benchmark harness (driver contract).
+"""Benchmark harness: times the headline workloads, one JSON line out.
 
-Runs the headline workloads at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
-JSON line::
+    python bench.py                      # every lane
+    python bench.py json_e2e avro_e2e    # only the named lanes (A/B: run
+                                         # the same lanes in two checkouts)
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Runs at ``$SPARK_GRAFT_SF_DIR`` (default the sf0.1 test data) on a
+session sized from the host (``perfbench.host.start_session``:
+``local[nproc]``, driver memory 30 % of RAM capped at 8 g) and prints
+ONE JSON line::
+
+    {"metric": "headline_total_sec", "value": N, "unit": "sec",
+     "queries": {...}, "samples": {...}, "sf": ..., ...}
 
 Headline set mirrors the reference's own benchmark (BASELINE.md: 100k
 messages of ~1 KB through encode→decode→aggregate — README.md:155-172
@@ -12,18 +18,44 @@ of the reference) scaled to the sf dir's events count, plus the
 LLM-pipeline extension operators at corpus scale. Every workload is
 executed to completion with the noop sink (full plan runs, nothing is
 collected to the driver).
+
+Estimator: one untimed warm lap over the selected lanes, then per lane
+one untimed warm rep and the MIN of ``REPS`` timed reps (host contention
+only ever adds time). Raw per-rep walls are emitted as ``samples``.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
+
+REPS = 5
+
+# Diagnostic lanes are timed and reported but EXCLUDED from
+# headline_total so round-over-round totals stay comparable to
+# BENCH_BASELINE.
+DIAGNOSTIC = frozenset({
+    "avro_generic_e2e",
+    "decontaminate",
+    "pack_windows",
+    "repetition_profile",
+    "semantic_dedup",
+    "exact_substring",
+    "bm25_topk",
+    "phash_neardup",
+    "warc_ingest",
+    "pdf_ingest",
+    "url_dedup",
+    "ivf_pq_topk",
+})
 
 
 def _sf_of(sf_dir: str) -> float:
@@ -34,330 +66,15 @@ def _sf_of(sf_dir: str) -> float:
         return -1.0
 
 
-def _steal_ticks() -> int:
-    """Cumulative hypervisor steal ticks (8th field of /proc/stat cpu
-    line). The box shows double-digit-% steal in some windows — whole
-    bench runs inflate 25-80% uniformly when the host is busy — so each
-    run records its own steal delta to make that visible."""
-    try:
-        with open("/proc/stat") as f:
-            return int(f.readline().split()[8])
-    except (OSError, IndexError, ValueError):
-        return -1
+def _n_msgs(spark, sf_dir: str) -> int:
+    from teste_carga_avro_vs_json_spark.session import load_table
+
+    return load_table(spark, sf_dir, "events").count()  # 100k at sf0.1
 
 
-def _effective_cpus() -> float:
-    """CPU budget for the steal_pct denominator: the cgroup v2 cpu quota
-    when this container is cpu-limited (cpu.max = "<quota> <period>"),
-    else the host CPU count. /proc/stat steal is host-wide, so dividing
-    by host CPUs when the run's real budget is a smaller quota would
-    understate contention relative to the run."""
-    try:
-        with open("/sys/fs/cgroup/cpu.max") as f:
-            quota, period = f.read().split()
-        if quota != "max":
-            return int(quota) / int(period)
-    except (OSError, ValueError):
-        pass
-    return float(os.cpu_count() or 1)
-
-
-def _steal_pct_window(seconds: float = 2.0) -> float | None:
-    """Instantaneous steal%, measured over a short sleep."""
-    s0, t0 = _steal_ticks(), time.perf_counter()
-    time.sleep(seconds)
-    s1, t1 = _steal_ticks(), time.perf_counter()
-    if s0 < 0 or s1 < 0:
-        return None
-    budget = (t1 - t0) * 100.0 * _effective_cpus()
-    return min(100.0, 100.0 * (s1 - s0) / budget)
-
-
-def _await_quiet_window(
-    max_wait_sec: float, load_cap: float = 3.0, steal_cap: float = 0.4
-) -> dict:
-    """Contention gate (r8 VERDICT order #2): BENCH_r08.json was
-    captured in a steal-2.83%/loadavg-17.7 window that inflated every
-    lane 10-44% while nine committed raw runs disproved the regression.
-    Rather than publish artifacts the raw runs have to defend, wait
-    (bounded) for loadavg_1m <= ~3 and steal <= ~1% before timing, and
-    stamp the chosen window in the JSON. If the host never quiets down
-    within the budget, run anyway but mark ``contended_fallback: true``
-    so the verdict can discount the numbers without side evidence.
-
-    The PRE-run loadavg is the one loadavg reading that measures pure
-    FOREIGN load (we haven't started yet). r10 tightened the cap from
-    8.0 to 3.0 on the r9 evidence: the official r9 capture released at
-    loadavg 5.8 — six foreign runnable threads — and its transport
-    lane came out +43.7% vs four quiet runs; this box idles below 1.
-    END-of-run loadavg, by contrast, cannot discriminate at all: the
-    bench's own local[32] stage load pushes it to 10-20 on QUIET runs
-    (r9_run4 9.8 .. r9_run5 20.2, vs contended r9_run1 17.9) — so it
-    is recorded as telemetry but deliberately NOT folded into the
-    contended flag; run-window steal (hypervisor theft) is."""
-    waited = 0.0
-    samples = []
-    while True:
-        try:
-            load = os.getloadavg()[0]
-        except OSError:
-            load = 0.0
-        steal = _steal_pct_window(2.0)
-        waited += 2.0
-        samples.append(
-            {
-                "loadavg_1m": round(load, 1),
-                "steal_pct": None if steal is None else round(steal, 2),
-            }
-        )
-        if load <= load_cap and (steal is None or steal <= steal_cap):
-            return {
-                "waited_sec": round(waited),
-                "samples": samples,
-                "contended_fallback": False,
-            }
-        if waited >= max_wait_sec:
-            return {
-                "waited_sec": round(waited),
-                "samples": samples,
-                "contended_fallback": True,
-            }
-        sleep = min(28.0, max(0.0, max_wait_sec - waited))
-        time.sleep(sleep)
-        waited += sleep
-
-
-def _floor_tripwire(
-    deltas: dict[str, float], min_lanes: int = 3, pct: float = 40.0
-) -> tuple[int, str | None]:
-    """(n deviating lanes, reason) from per-lane %-over-floor deltas.
-    Thresholds from the committed r10 spread: quiet runs (steal
-    0.05-0.39%) show ZERO lanes >40% over BENCH_BASELINE floors (max
-    ~30%); every damaged run shows >=5. avro_e2e_arrow aliases
-    avro_e2e and would double-count."""
-    devs = sorted(
-        (d, n) for n, d in deltas.items()
-        if n != "avro_e2e_arrow" and d > pct
-    )
-    if len(devs) < min_lanes:
-        return len(devs), None
-    worst = ", ".join(
-        f"{n} +{d}%" for d, n in sorted(devs, reverse=True)[:5]
-    )
-    return len(devs), (
-        f"floor deviation: {len(devs)} lanes >{pct:g}% over "
-        f"frozen floors ({worst})"
-    )
-
-
-def _git_identity() -> tuple[str | None, bool]:
-    """(code id, dirty?) — the code-identity stamp that makes bench
-    runs composable: per-lane bests may only be merged across runs
-    that measured EXACTLY the same code (r13, VERDICT order #4).
-
-    Scoped to what the measurement depends on — ``bench.py`` and the
-    package tree — NOT the whole HEAD: committing run artifacts, docs
-    or test changes between captures must not break composability
-    (the driver's own official run lands after the session's raw runs
-    are committed), while any source change rightly does. The dirty
-    check is scoped the same way."""
-    import subprocess
-
-    try:
-        shas = []
-        for path in ("bench.py", "teste_carga_avro_vs_json_spark"):
-            r = subprocess.run(
-                ["git", "rev-parse", f"HEAD:{path}"],
-                cwd=_REPO, capture_output=True, text=True, timeout=10,
-            )
-            if r.returncode or not r.stdout.strip():
-                return None, True
-            shas.append(r.stdout.strip())
-        dirty = bool(
-            subprocess.run(
-                ["git", "status", "--porcelain", "--",
-                 "bench.py", "teste_carga_avro_vs_json_spark"],
-                cwd=_REPO, capture_output=True, text=True, timeout=10,
-            ).stdout.strip()
-        )
-        import hashlib
-
-        code_id = hashlib.sha256(
-            "\n".join(shas).encode()
-        ).hexdigest()[:16]
-        return code_id, dirty
-    except Exception:  # noqa: BLE001 - no git: run still valid alone
-        return None, True
-
-
-def _composite_best_of_runs(
-    out: dict, diagnostic: set, runs_dir: str, min_runs: int
-) -> dict | None:
-    """Per-lane BEST across this run + committed same-code runs under
-    ``runs_dir`` (r13, VERDICT order #4): the same min estimator the
-    bench already applies WITHIN a run, applied across runs — the r12
-    evidence showed steal bursts outlast per-lane retries on a few
-    lanes per run, but the per-lane best across 6 runs sat under the
-    tripwire on every lane. A candidate run must carry the same
-    ``git_head`` (clean tree), sf, cpus and reps; each composite lane
-    is stamped with the steal of the window that produced it and the
-    composite is contended only if some WINNING window was dirty
-    (>0.4%)."""
-    import glob
-
-    if out.get("git_head") is None or out.get("git_dirty"):
-        return None
-    candidates = [("<this run>", out)]
-    for path in sorted(glob.glob(os.path.join(runs_dir, "*.json"))):
-        try:
-            with open(path) as f:
-                lines = f.read().splitlines()
-        except OSError:
-            continue
-        # a run file may hold several JSON lines (bench retry emits a
-        # second full capture): every full-run line is a candidate
-        for i, line in enumerate(l for l in lines if l.startswith("{")):
-            try:
-                run = json.loads(line)
-            except ValueError:
-                continue
-            if run.get("compact"):
-                continue
-            if (
-                run.get("git_head") != out["git_head"]
-                or run.get("git_dirty")
-                or run.get("sf") != out["sf"]
-                or run.get("cpus") != out["cpus"]
-                or run.get("reps") != out["reps"]
-                or not isinstance(run.get("queries"), dict)
-                or not isinstance(run.get("lane_steal_pct"), dict)
-            ):
-                continue
-            tag = os.path.basename(path) + ("" if i == 0 else f"#{i}")
-            candidates.append((tag, run))
-    if len(candidates) < min_runs:
-        return None
-    lanes = set(out["queries"]) - {"avro_e2e_arrow"}
-    best: dict[str, float] = {}
-    src: dict[str, str] = {}
-    steal: dict[str, float] = {}
-    for name, run in candidates:
-        for lane in lanes:
-            t = run["queries"].get(lane)
-            if t is None:
-                continue
-            if lane not in best or t < best[lane]:
-                best[lane] = t
-                src[lane] = name
-                steal[lane] = run["lane_steal_pct"].get(lane, -1.0)
-    total = round(
-        sum(t for lane, t in best.items() if lane not in diagnostic), 3
-    )
-    dirty_lanes = sorted(
-        lane for lane, p in steal.items() if p is None or p > 0.4 or p < 0
-    )
-    comp = {
-        "n_runs": len(candidates),
-        "runs": [name for name, _ in candidates],
-        "git_head": out["git_head"],
-        "headline_total_sec": total,
-        "queries": {k: best[k] for k in sorted(best)},
-        "lane_source": {k: src[k] for k in sorted(src)},
-        "lane_steal_pct": {k: steal[k] for k in sorted(steal)},
-        "dirty_lanes": dirty_lanes,
-        "contended_fallback": bool(dirty_lanes),
-    }
-    # floor tripwire over the composite (same thresholds)
-    try:
-        with open(os.path.join(_REPO, "BENCH_BASELINE.json")) as f:
-            base = json.load(f)
-        if base.get("sf") == out["sf"] and base.get("cpus") == out["cpus"]:
-            deltas = {
-                n: round(
-                    100.0 * (t - base["queries"][n]) / base["queries"][n], 1
-                )
-                for n, t in best.items()
-                if n in base["queries"]
-            }
-            comp["delta_pct_vs_baseline"] = deltas
-            n_dev, dev_reason = _floor_tripwire(deltas)
-            comp["floor_deviation_lanes"] = n_dev
-            if dev_reason is not None:
-                comp["contended_fallback"] = True
-                comp["contended_reason"] = dev_reason
-    except (OSError, ValueError, KeyError):
-        pass
-    return comp
-
-
-def _cpu_probe_ms() -> float | None:
-    """Wall time (ms) for a FIXED compute kernel — 8x 384x384 float64
-    GEMM (memory-bandwidth + FPU) plus a pure-Python arithmetic loop
-    (interpreter/frequency) — the channel neither the steal stamp nor
-    the io probe can see (r12): vCPU frequency scaling and
-    noisy-neighbor memory pressure inflate every lane's wall time
-    while /proc/stat steal reads 0. Run once before and once after the
-    measured laps; the PAIR plus the committed history is the
-    evidence. Deterministic inputs (no RNG state)."""
-    try:
-        import numpy as np
-
-        a = np.fromfunction(
-            lambda i, j: ((i * 31 + j * 17) % 101) / 101.0, (384, 384)
-        )
-        t0 = time.perf_counter()
-        acc = a
-        for _ in range(8):
-            acc = acc @ a
-            acc = acc / (abs(acc).max() + 1.0)
-        x = 0
-        for i in range(1_000_000):
-            x = (x + i * i) % 1_000_003
-        _sink = (float(acc[0, 0]), x)
-        return round((time.perf_counter() - t0) * 1000.0, 1)
-    except Exception:  # noqa: BLE001 - numpy absent/broken: no probe
-        return None
-
-
-def _io_probe_ms(size_mb: int = 32) -> float | None:
-    """Wall time (ms) for a fixed tmpfile write + fsync + read-back —
-    a direct sample of the disk channel the steal stamp cannot see.
-    BENCH_r10 passed the 0.4% steal stamp while the two file-roundtrip
-    lanes sat at 2-2.7x their floors: the damage channel was disk I/O.
-    Run once before and once after the measured laps; the PAIR is
-    evidence (a quiet-disk run shows both probes near each other and
-    near historical values), not a gate by itself."""
-    import tempfile
-
-    try:
-        payload = b"\xa5" * (1 << 20)
-        t0 = time.perf_counter()
-        with tempfile.NamedTemporaryFile(dir="/tmp") as f:
-            for _ in range(size_mb):
-                f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-            f.seek(0)
-            while f.read(1 << 22):
-                pass
-        return round((time.perf_counter() - t0) * 1000.0, 1)
-    except OSError:
-        return None
-
-
-def main() -> bool:
-    """One full bench capture. Returns True when the run-window
-    contention check tripped (the caller may retry once)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    gate = _await_quiet_window(
-        float(os.environ.get("SPARK_GRAFT_BENCH_QUIET_WAIT", "600"))
-    )
-    io_probe_pre = _io_probe_ms()
-    cpu_probe_pre = _cpu_probe_ms()
-    steal0, wall0 = _steal_ticks(), time.perf_counter()
-
-    from pyspark.sql import SparkSession
+def lanes(spark, sf_dir: str, cpus: int) -> dict:
+    """The lane table: name -> zero-arg callable that runs one lane to
+    completion. ``cpus`` sizes the corpus repartition and WARC shards."""
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark import registry
@@ -369,21 +86,10 @@ def main() -> bool:
         similarity,
         text,
     )
-    from teste_carga_avro_vs_json_spark.session import configure, load_table
+    from teste_carga_avro_vs_json_spark.session import load_table
     from teste_carga_avro_vs_json_spark.sources import generator
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    configure(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    n_msgs = load_table(spark, sf_dir, "events").count()  # 100k at sf0.1
+    n_msgs = _n_msgs(spark, sf_dir)
 
     def run(df):
         df.write.format("noop").mode("overwrite").save()
@@ -639,9 +345,6 @@ def main() -> bool:
         # (OPTIMIZATION_r13.md #1) is tracked round over round.
         run(similarity.ivf_pq_topk(emb_df(), vectorized_encode=True))
 
-    import shutil
-    import tempfile
-
     from teste_carga_avro_vs_json_spark.sources import io_files
 
     def _file_roundtrip(fmt):
@@ -663,24 +366,7 @@ def main() -> bool:
         finally:
             shutil.rmtree(path, ignore_errors=True)
 
-    # Diagnostic lanes are timed and reported but EXCLUDED from
-    # headline_total so round-over-round totals stay comparable to
-    # BENCH_BASELINE.
-    diagnostic = {
-        "avro_generic_e2e",
-        "decontaminate",
-        "pack_windows",
-        "repetition_profile",
-        "semantic_dedup",
-        "exact_substring",
-        "bm25_topk",
-        "phash_neardup",
-        "warc_ingest",
-        "pdf_ingest",
-        "url_dedup",
-        "ivf_pq_topk",
-    }
-    workloads = {
+    return {
         "json_e2e": w_json_e2e,
         "avro_e2e": w_avro_e2e,
         "avro_generic_e2e": w_avro_generic,
@@ -710,280 +396,74 @@ def main() -> bool:
         "ivf_pq_topk": w_ivf_pq,
     }
 
-    # Warm-up lap (untimed): JIT compilation, codegen, Python UDF worker
-    # spin-up — the reference excludes warm-up messages from its metrics
-    # the same way (WARMUP_MENSAGENS, ConfiguracaoKafka.java:120-124).
-    warmup_laps = int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1"))
-    for _ in range(warmup_laps):
+
+def main(selected: list[str]) -> None:
+    from perfbench.host import start_session, stop_session
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    local_dir = tempfile.mkdtemp(prefix="bench_")
+    spark, stamp = start_session(local_dir)
+    try:
+        cpus = stamp["cores"]
+        table = lanes(spark, sf_dir, cpus)
+        unknown = [name for name in selected if name not in table]
+        if unknown:
+            raise SystemExit(f"unknown lane(s) {unknown}; one of {sorted(table)}")
+        workloads = {name: table[name] for name in selected or table}
+
+        # Warm-up lap (untimed): JIT compilation, codegen, Python UDF worker
+        # spin-up — the reference excludes warm-up messages from its metrics
+        # the same way (WARMUP_MENSAGENS, ConfiguracaoKafka.java:120-124).
         for fn in workloads.values():
             fn()
 
-    # Per-lane MIN of N measured laps. Single-shot numbers jitter
-    # 30-50% on a shared box and median-of-3 cannot reject a window
-    # where hypervisor steal runs 5%+ for the whole run (that is
-    # exactly how the r5 official artifact recorded a 2.10 s avro_e2e
-    # for code measuring 1.16-1.38 s in five committed raw runs). Min
-    # is the standard noise-rejecting estimator for wall-clock — host
-    # contention only ever ADDS time — so reps default to 5 and each
-    # lane reports its fastest lap. Raw per-lap samples are emitted
-    # alongside so the spread stays auditable.
-    #
-    # r9 (VERDICT order #4): laps are PER-LANE BLOCKS — one untimed
-    # warm call immediately before each lane's timed reps — instead of
-    # interleaved whole-bench laps. With interleaving, ~24 other lanes
-    # ran between a lane's warm-up and its first timed lap, and the
-    # Python-worker-heavy diagnostic lanes (bm25_topk 4.42 vs 2.14,
-    # phash_neardup 2.91 vs 0.74, warc_ingest 4.47 vs 1.60 in the r8
-    # samples) re-paid worker spin-up on lap 1, making the min depend
-    # on lap count. Block mode keeps each lane's reps in one short
-    # window; the global warm lap above still covers session-wide
-    # state (JIT, codegen, the shared n_msgs scan).
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5"))
-    # Per-lane QUIET GATING (r12): nine consecutive capture attempts
-    # across r11/r12 were steal-damaged because hypervisor theft on
-    # this box flutters at MINUTE granularity — a 7-11 min global run
-    # never stays clean end to end, but each lane's timed block only
-    # needs seconds. Before each lane's reps, wait (bounded) for an
-    # instantaneously quiet window; stamp the steal measured ACROSS
-    # exactly that lane's reps, and re-run the lane once if its window
-    # was dirty, keeping the quieter attempt. The per-lane stamps are
-    # the honest contention measure for what actually touched each
-    # timing — the global run-window stamp stays in the artifact for
-    # continuity. SPARK_GRAFT_BENCH_LANE_GATE=0 disables (old shape).
-    lane_gate = float(os.environ.get("SPARK_GRAFT_BENCH_LANE_GATE", "45"))
-    # extra attempts for a lane whose window stayed dirty (r12 run6:
-    # 18/26 lanes found a clean window on attempt 1, the rest need to
-    # OUTLAST a minutes-long burst — only dirty lanes pay for retries)
-    lane_retries = int(os.environ.get("SPARK_GRAFT_BENCH_LANE_RETRIES", "1"))
-
-    def _lane_quiet_wait(budget_sec: float) -> float:
-        waited = 0.0
-        while waited < budget_sec:
-            s = _steal_pct_window(1.0)
-            waited += 1.0
-            if s is None or s <= 0.4:
-                return waited
-            time.sleep(2.0)
-            waited += 2.0
-        return waited
-
-    samples: dict[str, list[float]] = {name: [] for name in workloads}
-    lane_steal: dict[str, float] = {}
-    for name, fn in workloads.items():
-        fn()  # per-lane warm rep, untimed
-        best_laps: list[float] | None = None
-        best_pct = float("inf")
-        for _attempt in range(1 + lane_retries if lane_gate > 0 else 1):
-            if lane_gate > 0:
-                _lane_quiet_wait(lane_gate)
-            s_a, w_a = _steal_ticks(), time.perf_counter()
+        # Per-lane blocks: one untimed warm rep right before each lane's
+        # timed reps, so Python-worker spin-up is never paid on rep 1 and
+        # the min does not depend on what ran in between.
+        samples: dict[str, list[float]] = {}
+        for name, fn in workloads.items():
+            fn()
             laps = []
-            for _ in range(reps):
+            for _ in range(REPS):
                 t0 = time.perf_counter()
                 fn()
                 laps.append(time.perf_counter() - t0)
-            s_b, w_b = _steal_ticks(), time.perf_counter()
-            if s_a >= 0 and s_b >= 0 and w_b > w_a:
-                pct = min(
-                    100.0,
-                    100.0 * (s_b - s_a)
-                    / ((w_b - w_a) * 100.0 * _effective_cpus()),
-                )
-            else:  # pragma: no cover - /proc/stat unavailable
-                pct = 0.0
-            if pct < best_pct:
-                best_pct, best_laps = pct, laps
-            if pct <= 0.4:
-                break  # clean window: no retry needed
-        samples[name] = best_laps or []
-        lane_steal[name] = round(best_pct, 2)
+            samples[name] = laps
 
-    timings = {name: round(min(xs), 3) for name, xs in samples.items()}
-    # avro_e2e_arrow aliases the avro_e2e number (the Arrow codec is the
-    # only Avro path): BENCH_BASELINE.json and bench_runs/ carry the key.
-    timings["avro_e2e_arrow"] = timings["avro_e2e"]
-    diagnostic.add("avro_e2e_arrow")
-    total = round(
-        sum(t for name, t in timings.items() if name not in diagnostic), 3
-    )
-    # per-query regression tracking vs the committed baseline
-    # (BENCH_BASELINE.json = r7 re-baseline: the mid of the five r6 raw
-    # min-of-5 runs, same estimator as this bench); deltas are only
-    # meaningful at the same sf/cpu configuration.
-    deltas = {}
-    try:
+        timings = {name: round(min(xs), 3) for name, xs in samples.items()}
+        total = round(
+            sum(t for name, t in timings.items() if name not in DIAGNOSTIC), 3
+        )
+        out = {
+            "metric": "headline_total_sec",
+            "value": total,
+            "unit": "sec",
+            "queries": timings,
+            "samples": {
+                name: [round(x, 3) for x in xs] for name, xs in samples.items()
+            },
+            "sf": _sf_of(sf_dir),
+            "n_msgs": _n_msgs(spark, sf_dir),
+            "cpus": cpus,
+            "driver_mem_mb": stamp["driver_mem_mb"],
+            "estimator": "min",
+            "reps": REPS,
+        }
+        # per-lane deltas vs the committed floor, only at its sf/cpu shape
         with open(os.path.join(_REPO, "BENCH_BASELINE.json")) as f:
             base = json.load(f)
-        if base.get("sf") == _sf_of(sf_dir) and base.get("cpus") == cpus:
-            deltas = {
-                name: round(100.0 * (t - base["queries"][name]) / base["queries"][name], 1)
+        if base["sf"] == out["sf"] and base["cpus"] == cpus:
+            out["delta_pct_vs_baseline"] = {
+                name: round(100.0 * (t - base["queries"][name])
+                            / base["queries"][name], 1)
                 for name, t in timings.items()
                 if name in base["queries"]
             }
-    except (OSError, ValueError, KeyError):
-        pass
-    out = {
-        "metric": "headline_total_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": _sf_of(sf_dir),
-        "n_msgs": n_msgs,
-        "msgs_per_sec_json_e2e": round(n_msgs / timings["json_e2e"], 1),
-        "msgs_per_sec_avro_e2e": round(n_msgs / timings["avro_e2e"], 1),
-        "cpus": cpus,
-        "estimator": "min",
-        "reps": reps,
-        # raw per-lap walls so a reviewer can see the spread the min
-        # rejected (contended laps show up here, not in the headline)
-        "samples": {name: [round(x, 3) for x in xs] for name, xs in samples.items()},
-    }
-    # Host-contention evidence: % of this run's cpu-time budget stolen
-    # by the hypervisor (100 Hz ticks), plus 1-min load at exit. A
-    # steal_pct in the double digits means every timing above is
-    # inflated by host noise, not engine cost.
-    steal1, wall1 = _steal_ticks(), time.perf_counter()
-    if steal0 >= 0 and steal1 >= 0:
-        # /proc/stat aggregates steal over ALL host vCPUs; the tick
-        # budget uses the cgroup cpu quota when one is set (else host
-        # CPUs), never the Spark-sizing knob. When quota << host CPUs
-        # this OVERSTATES contention (steal accrued on CPUs outside the
-        # quota slice still lands in the numerator, so the ratio can
-        # exceed 100%) — conservative for quiet-window gating, but cap
-        # it at 100 so the artifact stays interpretable as a percent.
-        budget_ticks = (wall1 - wall0) * 100.0 * _effective_cpus()
-        out["steal_pct"] = min(
-            100.0, round(100.0 * (steal1 - steal0) / budget_ticks, 2)
-        )
-    try:
-        out["loadavg_1m"] = round(os.getloadavg()[0], 1)
-    except OSError:
-        pass
-    out["contention_gate"] = gate
-    # the pre-run gate cannot see contention that ARRIVES mid-run
-    # (r9_run1: gate-quiet start, steal 3.98% over the run) — fold the
-    # measured window into the flag so the artifact's own verdict
-    # field stays trustworthy either way
-    # r10-late evidence (bench_runs/r10_run6..9, r10_ab_avro_*): the
-    # quiet committed runs sit at 0.05-0.26% steal while every damaged
-    # run this session measured >= 0.53% (median lanes x1.2-1.5, the
-    # Arrow avro lane up to x16) — the old 1.0% threshold caught NONE
-    # of them. 0.4% separates the two populations with margin.
-    #
-    # r12: with per-lane gating active, the honest contention measure
-    # is each lane's OWN window stamp — the global run-window steal
-    # includes gate waits and warm laps that never touched a timing
-    # (dodging bursts there is the instrument working, not dirt). A
-    # dirty LANE (still >0.4% after its retry) trips; a clean lane set
-    # doesn't, whatever the global stamp says. The floor-deviation
-    # tripwire below stays the independent backstop either way.
-    out["lane_steal_pct"] = lane_steal
-    dirty_lanes = sorted(n for n, p in lane_steal.items() if p > 0.4)
-    if dirty_lanes:
-        gate["contended_fallback"] = True
-        gate["reason"] = (
-            f"lane-window steal >0.4% on {len(dirty_lanes)} lane(s) "
-            f"after retry: {dirty_lanes[:5]}"
-        )
-    elif lane_gate <= 0 and (out.get("steal_pct") or 0) > 0.4:
-        gate["contended_fallback"] = True
-        gate["reason"] = f"run-window steal {out['steal_pct']}%"
-    out["io_probe_ms"] = {"pre": io_probe_pre, "post": _io_probe_ms()}
-    out["cpu_probe_ms"] = {"pre": cpu_probe_pre, "post": _cpu_probe_ms()}
-    # r11 (VERDICT order #1): floor-deviation tripwire. BENCH_r10
-    # passed the tightened steal stamp (0.03%) while file_avro sat at
-    # 2.7x its frozen floor — the damage channel was disk I/O, which
-    # no CPU stamp measures. The committed r10 spread separates the
-    # populations cleanly: the three quiet runs (steal 0.05-0.39%)
-    # have ZERO lanes >40% over their BENCH_BASELINE floors (max
-    # ~30%), while every damaged run has >=5. So: >=3 lanes more than
-    # 40% over floor => the window was dirty regardless of what the
-    # CPU stamps say => contended_fallback + the one-retry path. A
-    # genuine >=3-lane code regression also trips this — which is the
-    # right failure mode: the reason names the lanes, and a regression
-    # that big should stop the release either way.
-    n_dev, dev_reason = _floor_tripwire(deltas)
-    if dev_reason is not None:
-        gate["contended_fallback"] = True
-        extra = "" if gate.get("reason") is None else (
-            gate["reason"] + "; "
-        )
-        gate["reason"] = extra + dev_reason
-    out["floor_deviation_lanes"] = n_dev
-    # End-of-run loadavg is recorded above but NOT folded: the bench's
-    # own local[32] load pushes it to 10-20 on QUIET runs (r9_run5
-    # ended at 20.2), so it cannot separate self-load from foreign
-    # competition. The r9 failure mode (gate released at foreign
-    # loadavg 5.8 → transport +43.7%) is closed at the PRE-run gate
-    # instead, where loadavg is purely foreign — cap tightened to 3.0.
-    if deltas:
-        out["delta_pct_vs_baseline"] = deltas
-    # r13 (VERDICT order #4): code-identity stamp + per-lane composite
-    # across committed same-code runs. The graded number keys on
-    # per-lane evidence when >= SPARK_GRAFT_BENCH_COMPOSITE_MIN
-    # same-identity runs exist under bench_runs/ (raw runs + the probe
-    # trail stay committed alongside); the single-run total is always
-    # retained as single_run_total_sec.
-    out["git_head"], out["git_dirty"] = _git_identity()
-    comp = _composite_best_of_runs(
-        out,
-        diagnostic,
-        os.environ.get(
-            "SPARK_GRAFT_BENCH_RUNS_DIR", os.path.join(_REPO, "bench_runs")
-        ),
-        int(os.environ.get("SPARK_GRAFT_BENCH_COMPOSITE_MIN", "3")),
-    )
-    if comp is not None:
-        out["composite_best_of_runs"] = comp
-        out["single_run_total_sec"] = out["value"]
-        out["value"] = comp["headline_total_sec"]
-        out["value_source"] = "composite_best_of_runs"
-    print(json.dumps(out))
-    # The driver's tail capture clipped the FRONT of the (very long)
-    # full line in r7 and lost the headline field. Emit a second,
-    # compact line AFTER it — headline + per-lane mins only, no raw
-    # samples — so the tail of any capture always holds parseable JSON.
-    print(json.dumps({
-        "metric": "headline_total_sec",
-        "value": out["value"],
-        "single_run_total_sec": total,
-        "composite": None if comp is None else {
-            "n_runs": comp["n_runs"],
-            "headline_total_sec": comp["headline_total_sec"],
-            "contended_fallback": comp["contended_fallback"],
-            "dirty_lanes": comp["dirty_lanes"],
-            "floor_deviation_lanes": comp.get("floor_deviation_lanes"),
-        },
-        "unit": "sec",
-        "queries": timings,
-        "sf": out["sf"],
-        "cpus": cpus,
-        "estimator": "min",
-        "compact": True,
-        "lane_steal_max": max(lane_steal.values()) if lane_steal else None,
-        "steal_pct": out.get("steal_pct"),
-        "loadavg_1m": out.get("loadavg_1m"),
-        "contended_fallback": gate["contended_fallback"],
-        "contended_reason": gate.get("reason"),
-        "floor_deviation_lanes": out["floor_deviation_lanes"],
-        "io_probe_ms": out["io_probe_ms"],
-        "cpu_probe_ms": out["cpu_probe_ms"],
-        "gate_waited_sec": gate["waited_sec"],
-    }), flush=True)
-    spark.stop()
-    return bool(gate["contended_fallback"])
+        print(json.dumps(out), flush=True)
+    finally:
+        stop_session(spark)
+        shutil.rmtree(local_dir, ignore_errors=True)
 
 
 if __name__ == "__main__":
-    # A tripped run-window (contention that ARRIVED mid-run, past the
-    # pre-run gate) gets ONE retry: both captures' JSON lines are
-    # emitted, so any tail capture holds the retry — which re-waits
-    # for a quiet window at its own gate. SPARK_GRAFT_BENCH_RETRY=0
-    # opts out (A/B rigs that manage their own windows).
-    tripped = main()
-    if tripped and os.environ.get("SPARK_GRAFT_BENCH_RETRY", "1") != "0":
-        print(
-            json.dumps({"bench_retry": "run window contended; retrying once"}),
-            flush=True,
-        )
-        main()
+    main(sys.argv[1:])

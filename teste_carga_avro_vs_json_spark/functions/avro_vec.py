@@ -164,14 +164,6 @@ def _mk_string(
     )
 
 
-def _group_sums(flat: np.ndarray, offs: np.ndarray) -> np.ndarray:
-    """Sum of flat[] within each [offs[i], offs[i+1]) group (handles
-    empty groups, unlike np.add.reduceat)."""
-    c = np.zeros(len(flat) + 1, dtype=np.int64)
-    np.cumsum(flat, out=c[1:])
-    return c[offs[1:]] - c[offs[:-1]]
-
-
 # ----------------------------------------------------------------- encode
 
 

@@ -5,9 +5,10 @@ so required session confs are applied exactly once, including when the
 harness hands us an already-built session (the driver does this).
 
 Scale notes (100 TB): AQE is on for runtime shuffle coalescing and
-skew-join splitting; shuffle partitions default to 2x cores locally but
-should be ~2-3x total executor cores on a real cluster (or left to AQE
-with `spark.sql.adaptive.coalescePartitions.initialPartitionNum`).
+skew-join splitting; shuffle partitions default to 32
+(``$SPARK_SHUFFLE_PARTITIONS``) whatever the core count, and should be
+~2-3x total executor cores on a real cluster (or left to AQE with
+`spark.sql.adaptive.coalescePartitions.initialPartitionNum`).
 """
 
 from __future__ import annotations

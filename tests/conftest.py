@@ -53,6 +53,7 @@ _SLOW_MODULES = {
     "test_kafka_rebalance",
     "test_snapshot_source",
     "test_archive",
+    "test_bench_lanes",
 }
 
 
