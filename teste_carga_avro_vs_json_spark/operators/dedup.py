@@ -327,9 +327,7 @@ def _banded_jaccard(
     # Explicit numPartitions keeps the cached partitioning a plain
     # hashpartitioning the join requirement can match (AQE won't
     # renumber a REPARTITION_BY_NUM exchange).
-    n_part = int(
-        base.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_part = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     base = base.repartition(n_part, "doc_id").persist()
     band_keys = ",".join(
         "concat_ws(':', '" + str(b) + "', "

@@ -315,7 +315,7 @@ def hamming_neardup(
     """
     n_bands = max_hamming + 1
     spark = hashes.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     hashes = hashes.repartition(n_part, "doc_id")
     banded = hashes.select(

@@ -787,7 +787,10 @@ def _kmeans_assign_ctes(
     chain (``s0v, s0c0, … s0assign``)."""
     p = prefix
     # c0 mirrors the duplicate-robust init: first n_centroids DISTINCT
-    # vectors (by min vec_id) within the oversampled lowest-id window.
+    # non-null vectors (by min vec_id) within the oversampled lowest-id
+    # window. A null vector neither seeds nor moves a centroid (as in
+    # multi_kmeans): the update unnests no dims for it, and the final
+    # assign gives it the first centroid.
     ctes = [
         f"{p}v AS (SELECT vec_id, {vec_expr} AS vec FROM {table})",
         f"""{p}c0 AS (
@@ -795,7 +798,7 @@ def _kmeans_assign_ctes(
                    vec AS cvec
             FROM (
                 SELECT vec, MIN(vec_id) AS mid FROM (
-                    SELECT vec_id, vec FROM {p}v
+                    SELECT vec_id, vec FROM {p}v WHERE vec IS NOT NULL
                     ORDER BY vec_id LIMIT {INIT_OVERSAMPLE * n_centroids}
                 ) GROUP BY vec ORDER BY mid LIMIT {n_centroids}
             )

@@ -4,16 +4,19 @@ Every entry point funnels through :func:`get_spark` / :func:`configure`
 so required session confs are applied exactly once, including when the
 harness hands us an already-built session (the driver does this).
 
+:func:`get_spark` is the one session builder: the CLI, the tools and
+the pytest fixture all take their session from it. It sizes nothing
+from the environment — ``local[*]`` (the host's cores) unless a master
+is passed, 32 shuffle partitions and an 8g driver.
+
 Scale notes (100 TB): AQE is on for runtime shuffle coalescing and
-skew-join splitting; shuffle partitions default to 32
-(``$SPARK_SHUFFLE_PARTITIONS``) whatever the core count, and should be
-~2-3x total executor cores on a real cluster (or left to AQE with
-`spark.sql.adaptive.coalescePartitions.initialPartitionNum`).
+skew-join splitting; shuffle partitions are 32 whatever the core count,
+and should be ~2-3x total executor cores on a real cluster (or left to
+AQE with `spark.sql.adaptive.coalescePartitions.initialPartitionNum`).
 """
 
 from __future__ import annotations
 
-import os
 import warnings
 
 from pyspark.sql import SparkSession
@@ -44,13 +47,14 @@ _BUILD_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.shuffle.partitions": "32",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # local[*] runs the executors in the driver JVM: the 1g default is
-    # far too small for 32 task threads + broadcast builds + caches
+    # far too small for the task threads + broadcast builds + caches
     # (observed OOMs at 10x corpus stress). Only applies when THIS
     # builder creates the JVM; pre-existing sessions keep theirs.
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    "spark.driver.memory": "8g",
 }
 
 
@@ -93,18 +97,9 @@ def configure(spark: SparkSession) -> SparkSession:
 
 
 def get_spark(app_name: str = "teste-carga-spark", master: str | None = None) -> SparkSession:
-    """Build (or fetch) the engine session.
-
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default all cores),
-    mirroring the reference's CONSUMER_THREADS knob
-    (/root/reference/src/main/java/.../ConfiguracaoKafka.java:85-96).
-    """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
-    )
-    shuffle = os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32")
-    builder = builder.config("spark.sql.shuffle.partitions", shuffle)
+    """Build (or fetch) the engine session on ``master`` (default
+    ``local[*]``, one task thread per host core)."""
+    builder = SparkSession.builder.appName(app_name).master(master or "local[*]")
     for k, v in _BUILD_CONFS.items():
         builder = builder.config(k, v)
     for k, v in _RUNTIME_CONFS.items():

@@ -301,32 +301,42 @@ def test_multi_kmeans_fused_equals_sequential(spark, emb):
     ],
     ids=["full_k6", "pq_subspace_k16"],
 )
-def test_multi_kmeans_equals_duckdb_lloyd_replay(spark, emb, sf_dir, space, vec_expr):
+def test_multi_kmeans_equals_duckdb_lloyd_replay(
+    spark, emb, emb_nulls, sf_dir, space, vec_expr
+):
     """The Lloyd loop's centroids equal the final-centroid CTE of the
     DuckDB replay (_kmeans_assign_ctes) that grades q_ivf_pq_topk,
     q_semantic_dedup and q_cluster_sample — for a full-vector space and
-    for a PQ subspace slice (elements 9-16)."""
+    for a PQ subspace slice (elements 9-16), on the fixture corpus and
+    on the corpus with the two null-embedding rows of ``emb_nulls``."""
     import duckdb
 
     k = space[0]
-    got = similarity.multi_kmeans(emb, [space], iters=2)[0]
     ctes, cfin = similarity._kmeans_assign_ctes(
         "embeddings", k, 2, vec_expr=vec_expr
     )
-    d = duckdb.connect()
-    d.execute(
-        "CREATE VIEW embeddings AS "
-        f"SELECT * FROM '{sf_dir}/embeddings.parquet'"
-    )
-    want = [
-        (c, list(v))
-        for c, v in d.execute(
-            f"WITH {', '.join(ctes)} SELECT cluster, cvec FROM {cfin} "
-            "ORDER BY cluster"
-        ).fetchall()
-    ]
-    assert len(got) == k
-    assert got == want
+    lo, hi = emb.agg(F.min("vec_id"), F.max("vec_id")).first()
+    base = f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet'"
+    for frame, view in [
+        (emb, base),
+        (
+            emb_nulls,
+            f"{base} UNION ALL SELECT * FROM (VALUES "
+            f"({lo - 1}, NULL), ({hi + 1}, NULL)) t(vec_id, embedding)",
+        ),
+    ]:
+        got = similarity.multi_kmeans(frame, [space], iters=2)[0]
+        d = duckdb.connect()
+        d.execute(f"CREATE VIEW embeddings AS {view}")
+        want = [
+            (c, list(v))
+            for c, v in d.execute(
+                f"WITH {', '.join(ctes)} SELECT cluster, cvec FROM {cfin} "
+                "ORDER BY cluster"
+            ).fetchall()
+        ]
+        assert len(got) == k
+        assert got == want
 
 
 @pytest.fixture(scope="module")

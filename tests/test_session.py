@@ -146,3 +146,28 @@ def test_configure_warns_once_per_session_on_static_conf():
             "fresh session must warn afresh even on id reuse",
             id(fake2) == old_id,
         )
+
+
+def test_one_session_builder():
+    """``get_spark`` is the only session builder in the package, the
+    tools, ``bench.py`` and the driver entry (``bench.py`` takes the
+    benchmark harness's host-sized session), and no session size is read
+    from the environment."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    files = [
+        *sorted((repo / "teste_carga_avro_vs_json_spark").rglob("*.py")),
+        *sorted((repo / "tools").rglob("*.py")),
+        repo / "bench.py",
+        repo / "__spark_entry__.py",
+    ]
+    knobs = ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM", "SPARK_SHUFFLE_PARTITIONS")
+    builders, reads = [], []
+    for f in files:
+        text = f.read_text()
+        name = str(f.relative_to(repo))
+        builders += [name] * text.count("SparkSession.builder")
+        reads += [(name, k) for k in knobs if k in text]
+    assert builders == ["teste_carga_avro_vs_json_spark/session.py"]
+    assert reads == []

@@ -9,7 +9,6 @@ sustain bench-scale volume. (The production data path at cluster scale
 remains the JVM connector — SCALE.md.)
 
 Usage: python tools/soak_kafka_wire.py [n_msgs]  (default 100_000)
-Knobs: SPARK_GRAFT_CPUS
 """
 
 from __future__ import annotations
@@ -26,15 +25,13 @@ if _REPO not in sys.path:
 
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     parts = 18  # the reference's partition count
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark.functions.avro_codec import to_avro
     from teste_carga_avro_vs_json_spark.operators import serde
-    from teste_carga_avro_vs_json_spark.session import configure
+    from teste_carga_avro_vs_json_spark.session import get_spark
     from teste_carga_avro_vs_json_spark.sources import (
         generator,
         io_kafka,
@@ -42,19 +39,15 @@ def main() -> None:
     )
     from teste_carga_avro_vs_json_spark.sources.kafka_wire import StubBroker
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("soak-kafka-wire")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    configure(spark)
+    spark = get_spark("soak-kafka-wire")
     spark.sparkContext.setLogLevel("ERROR")
     kafka_wire_source.register(spark)
 
-    out: dict = {"n_msgs": n_msgs, "cpus": cpus, "partitions": parts}
+    out: dict = {
+        "n_msgs": n_msgs,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "partitions": parts,
+    }
     with StubBroker(num_partitions=parts) as broker:
         bootstrap = f"{broker.addr[0]}:{broker.addr[1]}"
         msgs = generator.mensagens(spark, n_msgs, tamanho_kb=1)

@@ -19,9 +19,9 @@ array-carrying LSH variant measured executor-OOM on exactly this
 corpus); timings + output sizes are the SCALE.md table rows.
 
 Usage: python tools/stress10x.py [replicas]  (default 10; r6 graduates
-the heavy lanes to 30 per VERDICT item 4). Knobs: SPARK_GRAFT_SF_DIR,
-SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM (the 30x run pins 8g to answer
-whether the engine's default driver sizing holds at that scale).
+the heavy lanes to 30 per VERDICT item 4). Knob: SPARK_GRAFT_SF_DIR.
+The session is ``get_spark``'s (host cores, 8g driver), so every run
+answers whether the engine's default driver sizing holds at that scale.
 
 Shuffle evidence: the Spark UI REST API is scraped at the end for the
 peak per-stage shuffle write and the run total — committed artifacts
@@ -59,26 +59,16 @@ def _shuffle_stats(ui_url: str) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark.operators import corpus, dedup
-    from teste_carga_avro_vs_json_spark.session import configure, load_table
+    from teste_carga_avro_vs_json_spark.session import get_spark, load_table
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress10x")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "0")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .getOrCreate()
-    )
-    configure(spark)
+    spark = get_spark("stress10x")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     docs = load_table(spark, sf_dir, "documents")
     # 10 near-identical replicas per doc: replica r keeps the text and

@@ -8,7 +8,7 @@ r{N}_pipeline_sf01.json).
 Usage: python tools/stress_pipeline.py [replicas]   (default 1 = the
 plain sf table; N>1 replicates every doc with near-identical variants
 — the stress10x convention — so the dedup stages have real work).
-Knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM.
+Knob: SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
@@ -25,27 +25,16 @@ if _REPO not in sys.path:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 1
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark import pipelines
-    from teste_carga_avro_vs_json_spark.session import configure, load_table
+    from teste_carga_avro_vs_json_spark.session import get_spark, load_table
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress-pipeline")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
-    )
-    configure(spark)
+    spark = get_spark("stress-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if replicas > 1:

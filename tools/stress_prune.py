@@ -25,23 +25,16 @@ if _REPO not in sys.path:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 20
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark.operators import maintenance as mt
-    from teste_carga_avro_vs_json_spark.session import configure, load_table
+    from teste_carga_avro_vs_json_spark.session import get_spark, load_table
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress-prune")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .getOrCreate()
-    )
-    configure(spark)
+    spark = get_spark("stress-prune")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "text"

@@ -32,7 +32,7 @@ semantics — is published as the documented negative control
 Prints one JSON line (bench_runs/r{N}_stress_streaming.json is the
 committed artifact). Usage:
     python tools/stress_streaming.py [replicas]   (default 30)
-Knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM.
+Knob: SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
@@ -92,13 +92,10 @@ def _drain(sdf, name: str, mode: str, timeout_s: int = 600):
 def main() -> None:
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 30
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
-    from teste_carga_avro_vs_json_spark.session import configure, load_table
+    from teste_carga_avro_vs_json_spark.session import get_spark, load_table
     from teste_carga_avro_vs_json_spark.streaming import (
         stream_dedup,
         stream_stream_join,
@@ -107,22 +104,14 @@ def main() -> None:
         auditoria_sequencia,
     )
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress-streaming")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", driver_mem)
-        .getOrCreate()
-    )
-    configure(spark)
+    spark = get_spark("stress-streaming")
     spark.sparkContext.setLogLevel("ERROR")
 
     out: dict = {
         "replicas": replicas,
         "sf_dir": sf_dir,
-        "cpus": cpus,
-        "driver_mem": driver_mem,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "driver_mem": spark.conf.get("spark.driver.memory"),
     }
     base = tempfile.mkdtemp(prefix="stress_streaming_")
     rep = spark.range(replicas).select(F.col("id").alias("replica"))

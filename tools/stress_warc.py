@@ -23,28 +23,17 @@ if _REPO not in sys.path:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     replicas = int(sys.argv[1]) if len(sys.argv) > 1 else 10
 
-    from pyspark.sql import SparkSession
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark.operators import crawl, html_extract
-    from teste_carga_avro_vs_json_spark.session import configure, load_table
+    from teste_carga_avro_vs_json_spark.session import get_spark, load_table
     from teste_carga_avro_vs_json_spark.sources import warc
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("stress-warc")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
-        .getOrCreate()
-    )
-    configure(spark)
+    spark = get_spark("stress-warc")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
 
     docs = load_table(spark, sf_dir, "documents")
     corpus = (
