@@ -9,10 +9,8 @@ binary codec used where the JVM spark-avro module is unavailable.
 from teste_carga_avro_vs_json_spark.functions.portable import (  # noqa: F401
     hex32,
     hex32_sql,
-    pseudo_uuid,
     pseudo_uuid_sql,
     rand_text,
     rand_text_sql,
-    pseudo_double,
     pseudo_double_sql,
 )

@@ -9,8 +9,9 @@ arithmetic that evaluates identically in Spark SQL and DuckDB SQL:
 - hex -> bigint: Spark ``conv(h,16,10)`` == DuckDB ``('0x'||h)::BIGINT``
 - base64(md5-bytes) -> same standard alphabet in both engines
 
-Every builder here returns a *pair of dialects*: ``f(col)`` gives the
-Spark Column, ``f_sql(expr)`` the DuckDB SQL fragment. Keeping them
+Every builder here returns a *pair of dialects*: ``f_sx(expr)`` gives the
+Spark SQL fragment (``hex32`` and ``rand_text`` also keep a Column
+form), ``f_sql(expr)`` the DuckDB SQL fragment. Keeping them
 adjacent in one module is what keeps the two dialects in lockstep.
 
 All md5-derived integers are taken from the first 8 hex chars, i.e.
@@ -50,23 +51,11 @@ def hex32_sx(expr: str) -> str:
 
 
 # ----------------------------------------------------------- pseudo uuid
-def pseudo_uuid(key: Column | str) -> Column:
-    """36-char uuid-shaped string from md5 (replaces UUID.randomUUID(),
-    ProdutorAvro.java:60 / GeradorCargaEstruturada.java:25)."""
-    m = F.md5(_as_col(key))
-    return F.concat_ws(
-        "-",
-        F.substring(m, 1, 8),
-        F.substring(m, 9, 4),
-        F.substring(m, 13, 4),
-        F.substring(m, 17, 4),
-        F.substring(m, 21, 12),
-    )
-
-
 def pseudo_uuid_sx(expr: str) -> str:
-    """SPARK-SQL fragment twin of :func:`pseudo_uuid` (r13-opt, one
-    py4j parse — see operators/text.py tokens_sx note)."""
+    """36-char uuid-shaped string from md5 (replaces UUID.randomUUID(),
+    ProdutorAvro.java:60 / GeradorCargaEstruturada.java:25), as a
+    Spark SQL fragment (one py4j parse — see operators/text.py
+    tokens_sx note)."""
     m = f"md5({expr})"
     return (
         f"concat_ws('-', substring({m}, 1, 8), substring({m}, 9, 4), "
@@ -110,20 +99,13 @@ def rand_text_sql(expr: str, length: int = 100) -> str:
 
 
 # ---------------------------------------------------------- pseudo double
-def pseudo_double(key: Column | str, scale: float = 1000.0) -> Column:
-    """Deterministic uniform double in [0, scale) with 3 decimal digits
-    (replaces random.nextDouble()*1000, GeradorCargaEstruturada.java:23).
-
-    Exact cross-engine: integer in [0, 1e6) divided by 1000.0 — the same
-    IEEE-754 division in both engines.
-    """
-    return (hex32(key) % F.lit(1_000_000)) / F.lit(1_000_000.0 / scale)
-
-
 def pseudo_double_sx(expr: str, scale: float = 1000.0) -> str:
-    """SPARK-SQL fragment twin of :func:`pseudo_double` — the divisor
-    is emitted via repr + D suffix (exact double round-trip, the
-    similarity._dlit discipline)."""
+    """Deterministic uniform double in [0, scale) with 3 decimal digits
+    (replaces random.nextDouble()*1000, GeradorCargaEstruturada.java:23),
+    as a Spark SQL fragment. Exact cross-engine: integer in [0, 1e6)
+    divided by 1000.0 — the same IEEE-754 division in both engines; the
+    divisor is emitted via repr + D suffix (exact double round-trip,
+    the similarity._dlit discipline)."""
     return (
         f"(({hex32_sx(expr)} % 1000000) / {1_000_000.0 / scale!r}D)"
     )

@@ -987,65 +987,6 @@ def line_dedup_sql(table: str = "documents", max_df: int = 1) -> str:
     """
 
 
-def line_dedup_stream(
-    docs: DataFrame,
-    reference: DataFrame,
-    max_df: int = 1,
-    text_col: str = "text",
-) -> DataFrame:
-    """Stateless streaming twin of :func:`line_dedup`: strip known
-    boilerplate lines from an UNBOUNDED doc stream against a STATIC
-    reference corpus (the deployment shape: dup lines are discovered
-    on yesterday's corpus, applied to today's firehose — exactly how
-    the other learned gates stream, ``decontaminate_stream`` /
-    ``perplexity_stream``).
-
-    The reference reduces to ONE row holding the dup-key array
-    (computed distributed, ``collect_set`` of md5 keys with corpus
-    df > ``max_df``); the stream side cross-joins that single
-    broadcast row and filters lines row-locally. Zero streaming state,
-    no watermark — a pure projection per micro-batch. A TRUE
-    corpus-wide streaming df count would need stateful aggregation
-    over all history; that is deliberately out of scope (same honesty
-    note as the batch operator's docstring: df is a corpus property).
-
-    Memory bound: the dup-key array is (boilerplate lines × 32-char
-    md5) — the stop-list contract, held once per executor.
-    pytest pins stream == batch equality on a shared corpus."""
-    ref_lines = reference.select(
-        F.explode_outer(F.split(F.col(text_col), "\n")).alias("line")
-    ).filter(F.col("line").isNotNull())
-    dup_row = (
-        ref_lines.select(F.md5("line").alias("k"))
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .agg(F.collect_set("k").alias("dup_keys"))
-    )
-    staged = docs.select(
-        "doc_id", F.split(F.col(text_col), "\n").alias("lines")
-    )
-    gated = staged.crossJoin(F.broadcast(dup_row)).select(
-        "doc_id",
-        F.size("lines").cast("long").alias("n_lines"),
-        F.filter(
-            "lines",
-            lambda ln: ~F.array_contains(
-                F.coalesce(
-                    F.col("dup_keys"), F.array().cast("array<string>")
-                ),
-                F.md5(ln),
-            ),
-        ).alias("kept"),
-    )
-    return gated.select(
-        "doc_id",
-        "n_lines",
-        F.size("kept").cast("long").alias("n_kept"),
-        F.concat_ws("\n", "kept").alias("clean_text"),
-    )
-
-
 #: Default page-level blocklist: a deterministic stand-in inventory
 #: (real deployments load the published wordlists; the OPERATOR —
 #: broadcast multi-pattern scan + page gate — is what scales).

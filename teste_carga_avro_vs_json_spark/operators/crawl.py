@@ -33,9 +33,6 @@ under Java regex (Spark) and RE2 (DuckDB).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
@@ -266,30 +263,6 @@ def url_dedup_sql(table: str = "documents") -> str:
     """
 
 
-def url_dedup_stream(
-    urls: DataFrame,
-    url_col: str = "url",
-    event_time_col: str = "ev",
-    delay: str = "30 days",
-) -> DataFrame:
-    """Streaming twin of :func:`url_dedup`: emit the FIRST-seen doc per
-    canonical URL from an unbounded crawl firehose, with state bounded
-    by the watermark horizon (``streaming.stream_dedup`` semantics —
-    state per key is key+timestamp, evicted once the watermark passes;
-    the r8 eviction discipline). The batch operator's representative is
-    the corpus MIN doc_id; the stream keeps arrival-order firsts — the
-    standard batch-vs-stream difference, deterministic when duplicate
-    arrivals carry identical payloads (re-crawls do).
-
-    Canonicalization stays the same JVM expression chain, evaluated
-    per micro-batch before the stateful dedup, so the state key is the
-    ~60-byte canonical string, never the document."""
-    from teste_carga_avro_vs_json_spark.streaming import stream_dedup
-
-    canon = urls.withColumn("canon_url", F.expr(canon_url_sx(url_col)))
-    return stream_dedup(canon, ["canon_url"], event_time_col, delay)
-
-
 # ----------------------------------------------------------- domains
 
 
@@ -357,119 +330,6 @@ def domain_profile_sql(table: str = "documents") -> str:
 
 
 # ----------------------------------------------------- crawl politeness
-
-
-def robots_filter(
-    urls: DataFrame,
-    robots: DataFrame,
-    agent: str = "*",
-    url_col: str = "url",
-) -> DataFrame:
-    """Robots-exclusion gate — the crawl-politeness stage every
-    responsible pipeline runs before fetching: join each URL's host to
-    that host's ``robots.txt`` body and decide fetchability with the
-    STDLIB ``urllib.robotparser`` — an independent reference
-    implementation, not a regex approximation. Semantics are exactly
-    the stdlib's (agent-group selection; rule lines applied in FILE
-    ORDER per the original 1994 draft — google-style longest-match
-    would need a custom parser; pinned in tests against direct
-    robotparser calls so the gate can never drift from its
-    reference).
-
-    ``robots``: (host, robots_txt). Output adds (host, fetch_ok);
-    hosts with NO robots row default to fetchable (the RFC rule for a
-    missing file). Engine shape: hosts come from :func:`canon_url`
-    JVM-side; the per-row parse is an Arrow-batched pandas UDF with a
-    per-batch parser memo — one parser per distinct (host, agent) per
-    batch, not per URL. The robots table is corpus-tiny (one row per
-    host) and broadcasts."""
-    hosted = urls.withColumn(
-        "host",
-        F.expr(
-            f"regexp_extract({canon_url_sx(url_col)}, '^[a-z]+://([^/:]+)', 1)"
-        ),
-    )
-    joined = hosted.join(F.broadcast(robots), "host", "left")
-
-    @F.pandas_udf("boolean")
-    def _ok(
-        cols: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        import urllib.robotparser
-
-        for url_batch, txt_batch in cols:
-            memo: dict[str, object] = {}
-            out = []
-            for url, txt in zip(url_batch, txt_batch):
-                if txt is None:
-                    out.append(True)  # no robots.txt → fetchable
-                    continue
-                rp = memo.get(txt)
-                if rp is None:
-                    rp = urllib.robotparser.RobotFileParser()
-                    rp.parse(txt.splitlines())
-                    memo[txt] = rp
-                out.append(bool(rp.can_fetch(agent, url)))
-            yield pd.Series(out, dtype="bool")
-
-    return joined.withColumn(
-        "fetch_ok", _ok(F.col(url_col), F.col("robots_txt"))
-    ).drop("robots_txt")
-
-
-def parse_sitemap(xml: str) -> list[dict]:
-    """One sitemap (or sitemap-index) document → url entries
-    [{loc, lastmod, priority, is_index}] via stdlib ElementTree —
-    namespace-tolerant (matches on local tag names, as real-world
-    sitemaps mix default and prefixed namespaces)."""
-    import xml.etree.ElementTree as ET
-
-    try:
-        root = ET.fromstring(xml or "")
-    except ET.ParseError:
-        return []
-    local = root.tag.rsplit("}", 1)[-1]
-    is_index = local == "sitemapindex"
-    out = []
-    for entry in root:
-        if entry.tag.rsplit("}", 1)[-1] not in ("url", "sitemap"):
-            continue
-        rec = {"loc": None, "lastmod": None, "priority": None,
-               "is_index": is_index}
-        for field in entry:
-            name = field.tag.rsplit("}", 1)[-1]
-            if name in ("loc", "lastmod", "priority"):
-                rec[name] = (field.text or "").strip() or None
-        if rec["loc"]:
-            out.append(rec)
-    return out
-
-
-def sitemap_urls(sitemaps: DataFrame, xml_col: str = "xml") -> DataFrame:
-    """(host, xml) sitemap table → one row per listed URL:
-    (host, loc, lastmod, priority, is_index). mapInPandas so one
-    sitemap row fans out to many URL rows; parse stays payload-local
-    (the WARC-reader shape). Malformed XML yields zero rows for that
-    document, never a stage failure."""
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for host, xml in zip(pdf["host"], pdf[xml_col]):
-                for rec in parse_sitemap(xml):
-                    rows.append(
-                        (host, rec["loc"], rec["lastmod"],
-                         rec["priority"], rec["is_index"])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["host", "loc", "lastmod", "priority", "is_index"],
-            )
-
-    return sitemaps.select("host", xml_col).mapInPandas(
-        _parse,
-        "host string, loc string, lastmod string, priority string,"
-        " is_index boolean",
-    )
 
 
 def domain_cap(

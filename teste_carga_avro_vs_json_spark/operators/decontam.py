@@ -100,48 +100,6 @@ def decontaminate(
     )
 
 
-def decontaminate_stream(
-    docs: DataFrame, test: DataFrame, n: int = 13
-) -> DataFrame:
-    """Stateless streaming decontamination gate: same per-doc stats as
-    :func:`decontaminate`, computable on an unbounded stream of
-    incoming train docs against a STATIC test set.
-
-    The test set reduces to ONE row holding its distinct-gram array
-    (``collect_set`` — still computed distributed, never on the
-    driver); the stream side cross-joins that single broadcast row and
-    scores each doc row-locally with ``array_intersect``. Zero
-    streaming state, no watermark, no aggregation — the gate is a pure
-    projection per micro-batch, so it composes with any ingest
-    pipeline (``docs`` may be a streaming frame; stream–static
-    broadcast joins are supported by Structured Streaming).
-
-    Memory bound: the single-row gram array is the broadcast-sized
-    test-set contract of :func:`decontaminate` (an eval suite), held
-    once per executor. For a test side beyond broadcast size use the
-    batch operator's ``broadcast_test=False`` shuffle path on bounded
-    ingest windows instead. pytest pins stream == batch equality.
-    """
-    tg_row = (
-        dedup._shingled(test, n, nonempty=False)
-        .select(F.explode_outer("sh").alias("gram"))
-        .filter(F.col("gram").isNotNull())
-        .agg(F.collect_set("gram").alias("tgrams"))
-    )
-    base = dedup._shingled(docs, n, nonempty=False)
-    return (
-        base.crossJoin(F.broadcast(tg_row))
-        .select(
-            "doc_id",
-            F.size("sh").cast("long").alias("n_grams"),
-            F.size(F.array_intersect("sh", "tgrams")).cast("long").alias(
-                "n_hits"
-            ),
-        )
-        .withColumn("contaminated", F.col("n_hits") > 0)
-    )
-
-
 def decontaminate_sql(
     table: str = "documents", n: int = 13, test_modulus: int = 17
 ) -> str:

@@ -171,9 +171,9 @@ def shingles_sql(expr: str, k: int = 3) -> str:
 
 
 def _jaccard_sx(a: str, b: str) -> str:
-    """Spark-SQL fragment twin of :func:`_jaccard` (r13-opt, see
-    text.tokens_sx note) — repeated fragments mirror the repeated
-    Column subtrees; codegen subexpression elimination applies."""
+    """Jaccard of two arrays as a Spark-SQL fragment (0.0 on an empty
+    union) — the repeated fragments are folded by codegen subexpression
+    elimination."""
     inter = f"CAST(size(array_intersect({a}, {b})) AS BIGINT)"
     union = (
         f"CAST(size({a}) AS BIGINT) + CAST(size({b}) AS BIGINT) - {inter}"
@@ -181,12 +181,6 @@ def _jaccard_sx(a: str, b: str) -> str:
     return (
         f"CASE WHEN ({union}) > 0 THEN {inter} / ({union}) ELSE 0.0D END"
     )
-
-
-def _jaccard(a: Column, b: Column) -> Column:
-    inter = F.size(F.array_intersect(a, b)).cast("long")
-    union = F.size(a).cast("long") + F.size(b).cast("long") - inter
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
 # -------------------------------------------------------- n-gram Jaccard
@@ -239,20 +233,10 @@ def ngram_jaccard_sql(
 
 
 # ---------------------------------------------------------- MinHash + LSH
-def _seeded_hash(i: int):
-    """Unary lambda factory: a default-arg lambda would be mistaken by
-    PySpark's HOF binding for an (element, index) binary lambda."""
-    prefix = f"{i}|"
-
-    def fn(s: Column) -> Column:
-        return hex32(F.concat(F.lit(prefix), s))
-
-    return fn
-
-
 def minhash_signature_sx(sh: str, num_hashes: int = 12) -> str:
-    """Spark-SQL fragment twin of :func:`minhash_signature` over a
-    named shingle column (r13-opt, see text.tokens_sx note)."""
+    """Array of ``num_hashes`` min-hashes over a named shingle column,
+    as a Spark-SQL fragment. Seeded via the portable hex32 (md5) so the
+    DuckDB twin matches bit-exactly."""
     mins = ",".join(
         f"array_min(transform({sh}, s -> "
         + hex32_sx(f"concat('{i}|', s)")
@@ -260,18 +244,6 @@ def minhash_signature_sx(sh: str, num_hashes: int = 12) -> str:
         for i in range(num_hashes)
     )
     return f"array({mins})"
-
-
-def minhash_signature(sh: Column, num_hashes: int = 12) -> Column:
-    """Array of ``num_hashes`` min-hashes over the shingle set. Seeded
-    via the portable hex32 (md5) so the DuckDB twin matches bit-exactly;
-    the 100 TB path swaps hex32 for xxhash64(seed, shingle)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(sh, _seeded_hash(i))).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
-    )
 
 
 def _banded_jaccard(
@@ -800,7 +772,7 @@ def bloom_dedup(
     text_col: str = "text",
 ) -> DataFrame:
     """Gate an ingest batch (or unbounded stream — the projection is
-    stateless, the ``decontaminate_stream`` convention) against a
+    stateless) against a
     built filter: adds ``probably_seen``; callers keep the False rows.
     NO false negatives: every text inserted by ``bloom_build`` tests
     True here (same md5 halves, same stride). One Arrow-batched

@@ -39,13 +39,6 @@ threshold on the rounded score so it stays hash-stable.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-# Module-level so pandas_udf type-hint inference can resolve the
-# string annotations (PEP 563 defers them; function-locals are
-# invisible to the resolver — same note as operators/similarity.py).
-import pandas as pd
-
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
@@ -252,10 +245,10 @@ def perplexity_score(
 def nll_cutoff(scored: DataFrame, keep_frac: float) -> float:
     """The absolute avg_nll cutoff the quantile gate implies —
     PERCENTILE_DISC(keep_frac): the largest avg_nll any kept doc has.
-    Compute this ONCE batch-side and freeze it into the streaming gate
-    (:func:`perplexity_stream` ``keep_nll=``): a stateless stream
-    cannot see the corpus distribution, which is exactly how CCNet
-    deploys its bucketing (thresholds come from a reference corpus).
+    Compute this ONCE batch-side and freeze it into a stateless gate
+    (``avg_nll <= cut``): a stream cannot see the corpus distribution,
+    which is exactly how CCNet deploys its bucketing (thresholds come
+    from a reference corpus).
     Bounded driver collect: one scalar."""
     w = Window.orderBy("avg_nll")
     row = (
@@ -387,114 +380,6 @@ def perplexity_score_sql(
         FROM base
         ''' if keep_frac is not None else ""}
     """
-
-
-def collect_model(
-    bigrams: DataFrame, contexts: DataFrame, vocab: int
-) -> dict:
-    """Materialize the count tables as plain dicts — the in-memory
-    model artifact for row-local (and streaming) scoring. Size contract:
-    vocabulary²-bounded, NOT corpus-bounded — the same "LM fits in
-    executor memory" assumption KenLM-style perplexity filters make in
-    production (CCNet ships ~few-GB models per language). For a model
-    that genuinely exceeds memory, score with the join form
-    (:func:`perplexity_score`) on bounded batches instead."""
-    return {
-        "bigrams": {(r.w1, r.w2): r.c2 for r in bigrams.collect()},
-        "contexts": {r.w1: r.c1 for r in contexts.collect()},
-        "vocab": vocab,
-    }
-
-
-def perplexity_stream(
-    docs: DataFrame, model: dict, text_col: str = "text",
-    keep_nll: float = 3.4,
-    smoothing: str = "addone",
-    discount: float = 0.75,
-) -> DataFrame:
-    """Stateless streaming twin of :func:`perplexity_score`: score an
-    UNBOUNDED stream of docs against a STATIC pre-trained model
-    (:func:`collect_model`) — a pure Arrow-batched projection per
-    micro-batch: no state, no watermark, no stream aggregation, so it
-    composes with any ingest pipeline (same pattern as
-    ``decontam.decontaminate_stream``).
-
-    Bit-compatibility with the batch scorer: the UDF replays the exact
-    quantization pipeline (one double division, ``-ln``, floor to 1e-9
-    longs, exact integer sum, the same fixed final division sequence).
-    The only engine-boundary term is ``ln`` itself (libm here vs Java
-    ``Math.log`` in the join form) — 1-ulp differences flip a quantized
-    value only at a 0.5e-9 boundary; pytest pins stream == batch
-    equality on the fixture corpus."""
-    import math
-    import re as _re
-
-    bigrams = model["bigrams"]
-    contexts = model["contexts"]
-    vocab = model["vocab"]
-    if smoothing == "kn":
-        # KN statistics derive entirely from the collected bigram dict
-        # (distinct-successor T, distinct-predecessor N1+, Dt) — the
-        # model artifact needs no new fields.
-        t_succ: dict = {}
-        n1p: dict = {}
-        for (w1, w2) in bigrams:
-            t_succ[w1] = t_succ.get(w1, 0) + 1
-            n1p[w2] = n1p.get(w2, 0) + 1
-        dtv = len(bigrams) + vocab
-    elif smoothing != "addone":
-        raise ValueError(f"unknown smoothing: {smoothing!r}")
-
-    @F.pandas_udf("struct<n_scored: bigint, qsum: bigint>")
-    def score(texts: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # Java's \s is ASCII-only ([ \t\n\x0B\f\r]); Python's str \s is
-        # unicode-aware — spell out the Java class so the stream
-        # tokenizer matches operators.text.tokens byte-for-byte
-        ws = _re.compile(r"[ \t\n\x0b\f\r]+")
-
-        def prob(prev: str, w2: str) -> float:
-            if smoothing == "addone":
-                return (bigrams.get((prev, w2), 0) + 1) / (
-                    contexts.get(prev, 0) + vocab
-                )
-            c1 = contexts.get(prev, 0)
-            pc = (n1p.get(w2, 0) + 1) / dtv
-            if c1 == 0:
-                return pc
-            return (
-                max(bigrams.get((prev, w2), 0) - discount, 0.0) / c1
-                + ((discount * t_succ.get(prev, 0)) / c1) * pc
-            )
-
-        def one(text: str):
-            toks = [t for t in ws.split(text or "") if t != ""]
-            if not toks:
-                return {"n_scored": 0, "qsum": 0}
-            qsum = 0
-            prev = BOS
-            for w2 in toks:
-                p = prob(prev, w2)
-                qsum += math.floor(-math.log(p) * 10**9 + 0.5)
-                prev = w2
-            return {"n_scored": len(toks), "qsum": qsum}
-
-        for batch in texts:
-            yield pd.DataFrame([one(t) for t in batch])
-
-    scored = docs.select(
-        "doc_id", score(F.col(text_col)).alias("s")
-    ).select(
-        "doc_id",
-        F.col("s.n_scored").alias("n_scored"),
-        F.round(
-            F.when(
-                F.col("s.n_scored") > 0,
-                (F.col("s.qsum") / F.lit(1e9)) / F.col("s.n_scored"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("avg_nll"),
-    )
-    return scored.withColumn("keep", F.col("avg_nll") <= F.lit(keep_nll))
 
 
 def dsir_select(

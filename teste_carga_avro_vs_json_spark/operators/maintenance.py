@@ -2094,66 +2094,6 @@ def snapshot_delete(
     }
 
 
-def snapshot_diff(
-    table_dir: str, from_version: int, to_version: int | None = None
-) -> dict:
-    """File-level delta between two committed versions (``from_version
-    = 0`` means the empty table). The manifest file lists are the
-    entire truth, so this touches NO data files — the primitive behind
-    incremental consumption: an append-only history's ``files_added``
-    contain exactly the rows added, with per-file ``rows`` counts
-    already recorded. ``append_only`` is True when every INTERMEDIATE
-    commit still present in the log is an append; copy-on-write ops
-    (merge/delete/overwrite/compact) rewrite surviving rows into new
-    files, so their file diff over-counts row changes — consumers must
-    decide replay vs skip (see ``format("snapshot")``'s
-    ``on_rewrite``)."""
-    versions = snapshot_versions(table_dir)
-    if to_version is None:
-        if not versions:
-            raise ValueError(f"no committed snapshots under {table_dir}")
-        to_version = versions[-1]
-    if from_version != 0 and from_version not in versions:
-        raise ValueError(f"version {from_version} not in {versions}")
-    if to_version not in versions:
-        raise ValueError(f"version {to_version} not in {versions}")
-    base = (
-        {}
-        if from_version == 0
-        else {
-            f["path"]: f
-            for f in _read_manifest(table_dir, from_version)["files"]
-        }
-    )
-    head = {
-        f["path"]: f
-        for f in _read_manifest(table_dir, to_version)["files"]
-    }
-    added = [f for p, f in sorted(head.items()) if p not in base]
-    removed = [f for p, f in sorted(base.items()) if p not in head]
-    ops = [
-        _read_manifest(table_dir, v)["op"]
-        for v in versions
-        if from_version < v <= to_version
-    ]
-    return {
-        "from_version": from_version,
-        "to_version": to_version,
-        "ops": ops,
-        "files_added": added,
-        "files_removed": removed,
-        "append_only": all(op == "append" for op in ops)
-        and not removed,
-        "rows_added": sum(f.get("rows", 0) for f in added),
-        "bytes_added": sum(f["bytes"] for f in added),
-        # merge-on-read deletions accumulated across the range (0 when
-        # neither endpoint carries DVs); negative after a compaction
-        # folded DVs away
-        "dv_rows_delta": _dv_rows(table_dir, to_version)
-        - (0 if from_version == 0 else _dv_rows(table_dir, from_version)),
-    }
-
-
 def snapshot_changes(
     spark: SparkSession,
     table_dir: str,
@@ -2632,166 +2572,6 @@ def _apply_net(
         upserts, dst_dir, keys, ts=ts, extra=extra, delete_keys=deletes
     )
     return res["version"], res
-
-
-def snapshot_replicate_stream(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    keys: list[str],
-    checkpoint: str,
-    ts: int = SNAP_EPOCH,
-    on_rewrite: str = "fail",
-    block: bool = True,
-    timeout_sec: float = 300.0,
-):
-    """Continuous CDC (r11, VERDICT order #5): the streaming twin of
-    :func:`snapshot_replicate`, composed from the existing pieces —
-    the ``format("snapshot")`` change-feed stream source
-    (``read_changes``) driving ``foreachBatch``, each micro-batch
-    reduced to its net outcome and landed as ONE destination merge.
-
-    Exactly-once across restarts by the ``SnapshotStreamWriter`` epoch
-    mechanism: every applied batch's destination commit carries
-    ``(replicate_stream, replicate_stream_batch)`` in its manifest
-    extra; when Structured Streaming replays a batch whose commit
-    already landed (crash between commit and checkpoint ack), the
-    apply detects the marker and folds to a no-op. Each commit also
-    records ``replicate_src_version`` (the batch's max source commit),
-    so batch-mode :func:`snapshot_replicate` can take over from where
-    the stream stopped and vice versa — one high-water protocol.
-
-    With ``block=True`` (default) runs an ``availableNow`` drain and
-    returns ``{batches_applied, version}``; with ``block=False``
-    returns the started StreamingQuery (continuous mode — the caller
-    owns its lifecycle). A destination racing another writer raises
-    through the merge and fails the stream; restarting replays the
-    batch (exactly-once holds — the failed attempt committed
-    nothing)."""
-    from teste_carga_avro_vs_json_spark.sources import snapshot_source as ss
-
-    ss.register(spark)
-    src_id = os.path.abspath(src_dir)
-    stream_id = f"cdc:{src_id}"
-    applied = {"n": 0, "version": None}
-
-    def apply_batch(batch_df, batch_id: int) -> None:
-        for v in reversed(snapshot_versions(dst_dir)):
-            ex = _read_manifest(dst_dir, v).get("extra") or {}
-            if ex.get("replicate_stream") == stream_id:
-                if int(ex.get("replicate_stream_batch", -1)) >= batch_id:
-                    return  # replayed epoch: already applied
-                break
-            if (
-                "replicate_src" in ex
-                and ex["replicate_src"] != src_id
-            ):
-                raise ValueError(
-                    f"{dst_dir!r} replicates {ex['replicate_src']!r}, "
-                    f"not {src_id!r} — one source feed per destination"
-                )
-        upserts, deletes = _net_outcome(batch_df, keys)
-        n_up, n_del = upserts.count(), deletes.count()
-        if not n_up and not n_del:
-            return  # reorg/skip-only batch
-        hw = batch_df.agg(
-            F.max(COMMIT_VERSION_COL).cast("long")
-        ).collect()[0][0]
-        version, _merge_res = _apply_net(
-            upserts,
-            deletes if n_del else None,
-            dst_dir,
-            keys,
-            ts,
-            {
-                "replicate_src": src_id,
-                "replicate_src_version": int(hw),
-                "replicate_stream": stream_id,
-                "replicate_stream_batch": int(batch_id),
-            },
-        )
-        applied["n"] += 1
-        applied["version"] = version
-
-    reader = (
-        spark.readStream.format("snapshot")
-        .option("read_changes", "true")
-        .option("on_rewrite", on_rewrite)
-    )
-    writer = (
-        reader.load(src_dir)
-        .writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-    )
-    if not block:
-        return writer.start()
-    q = writer.trigger(availableNow=True).start()
-    if not q.awaitTermination(timeout_sec):
-        # the availableNow drain is STILL RUNNING: returning partial
-        # counts would look complete and leak the query — stop it and
-        # raise instead (ADVICE r11)
-        q.stop()
-        raise TimeoutError(
-            f"snapshot_replicate_stream drain exceeded {timeout_sec}s "
-            f"({applied['n']} batch(es) applied before the stop)"
-        )
-    return {"batches_applied": applied["n"], "version": applied["version"]}
-
-
-def _dv_rows(table_dir: str, version: int) -> int:
-    return (
-        _read_manifest(table_dir, version).get("dv") or {}
-    ).get("n_rows", 0)
-
-
-def snapshot_history(table_dir: str) -> list[dict]:
-    """Per-version audit log from the manifests alone (the Delta
-    DESCRIBE HISTORY shape): version, op, ts, file/byte/row counts,
-    accumulated merge-on-read deletions, and the commit's application
-    ``extra`` metadata. Touches NO data files."""
-    out = []
-    for v in snapshot_versions(table_dir):
-        m = _read_manifest(table_dir, v)
-        out.append(
-            {
-                "version": v,
-                "op": m["op"],
-                "ts": m["ts"],
-                "n_files": m["n_files"],
-                "n_bytes": m["n_bytes"],
-                "n_rows": sum(f.get("rows", 0) for f in m["files"]),
-                "dv_rows": (m.get("dv") or {}).get("n_rows", 0),
-                "cdf_rows": (m.get("cdf") or {}).get("n_rows", 0),
-                "extra": m.get("extra") or {},
-            }
-        )
-    return out
-
-
-def snapshot_restore(
-    table_dir: str, version: int, ts: int = SNAP_EPOCH
-) -> int:
-    """RESTORE: make an older version the new head by publishing its
-    file list (and delete vectors) as a NEW commit — history moves
-    only forward, so the bad versions stay inspectable and a
-    concurrent writer races the same create-exclusive publish as every
-    other commit (lost race raises; re-run after reviewing the new
-    head). Manifest-only: no data file is read, written or moved —
-    the O(1)-data rollback a 100 TB table needs. The restored version
-    must still exist (not vacuumed)."""
-    versions = snapshot_versions(table_dir)
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions}")
-    src = _read_manifest(table_dir, version)
-    return _publish_cow_manifest(
-        table_dir,
-        versions[-1],
-        src["files"],
-        "restore",
-        ts,
-        {"restored_version": version},
-        dv=src.get("dv"),
-    )
 
 
 def snapshot_maintain(

@@ -147,7 +147,9 @@ def metricas_agg_sql(source_sql: str) -> str:
 
 # ----------------------------------------------------------- O14 (merge)
 def metricas_merge(runs: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Combine per-shard metric rows (METRICAS_RUN shape) — merge()
+    """Combine per-shard metric rows (FIXTURES.md F4: one row per
+    (aplicacao, shard) with the MetricasDesempenho.java:12-27 counters
+    and the inicio_ms/fim_ms clock pair) — merge()
     adds counters (MetricasDesempenho.java:112-117); the clock pair
     widens to the envelope. This is literally Spark's partial→final
     combine expressed over materialized partials: union + re-agg.

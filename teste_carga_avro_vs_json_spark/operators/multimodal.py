@@ -45,12 +45,6 @@ except Exception:  # noqa: BLE001
 
 _FORMATS = ["png", "jpeg", "webp"]
 
-MEDIA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("payload", StringType(), False),  # binary below
-    ]
-)
 
 FEATURES = StructType(
     [
@@ -1631,9 +1625,6 @@ def decode_avi_mjpeg(payload: bytes) -> tuple[int, int, list[bytes]]:
 # a metadata filter. The box walk is pure stdlib struct; H.264/H.265/
 # AAC payload decode stays the documented PyAV boundary.
 
-_MP4_CONTAINERS = {
-    b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts", b"udta",
-}
 _MAX_MP4_BOXES = 10_000
 
 

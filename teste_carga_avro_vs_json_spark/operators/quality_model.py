@@ -41,13 +41,6 @@ Scoring (``score_with_model``) is one broadcast join + one keyed agg.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-# Module-level so pandas_udf type-hint inference can resolve the
-# string annotations (PEP 563 defers them; function-locals are
-# invisible to the resolver — same note as operators/similarity.py).
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
@@ -218,65 +211,4 @@ def score_with_model(
          if threshold == 0.5
          else (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin")))
                >= F.lit(threshold))).alias("keep"),
-    )
-
-
-def score_stream(
-    docs: DataFrame,
-    weights: list[float],
-    text_col: str = "text",
-) -> DataFrame:
-    """Stateless streaming twin of :func:`score_with_model`: score an
-    UNBOUNDED doc stream against a trained model — a pure Arrow-batched
-    projection per micro-batch (no state, no watermark; same pattern as
-    ``lm.perplexity_stream`` / ``decontam.decontaminate_stream``). The
-    weight vector rides the UDF closure — (n_features+1) doubles per
-    executor.
-
-    The margin replays the batch scorer's exact arithmetic (md5 feature
-    hash, per-feature ``floor(w·cnt·1e9 + 0.5)`` longs, exact integer
-    sum, fixed final division) — bit-identical to the join form, pinned
-    by pytest. ``prob`` is the only transcendental (exp); ``keep`` is
-    derived from the exact margin, so gating decisions agree with batch
-    always."""
-    import hashlib
-    import math
-    import re as _re
-
-    n_features = len(weights) - 1
-    bias = weights[-1]
-    w = weights[:n_features]
-
-    @F.pandas_udf("double")
-    def margin_of(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        ws = _re.compile(r"[ \t\n\x0b\f\r]+")
-
-        def one(text: str) -> float:
-            qsum = 0
-            counts: dict[int, int] = {}
-            for t in ws.split(text or ""):
-                if t == "":
-                    continue
-                idx = (
-                    int(
-                        hashlib.md5(t.lower().encode()).hexdigest()[:8], 16
-                    )
-                    % n_features
-                )
-                counts[idx] = counts.get(idx, 0) + 1
-            for idx, cnt in counts.items():
-                qsum += math.floor(w[idx] * cnt * Q_TERM + 0.5)
-            return bias + qsum / float(Q_TERM)
-
-        for batch in texts:
-            yield batch.map(one)
-
-    return docs.select(
-        "doc_id",
-        margin_of(F.col(text_col)).alias("margin"),
-    ).select(
-        "doc_id",
-        "margin",
-        (F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin")))).alias("prob"),
-        (F.col("margin") >= F.lit(0.0)).alias("keep"),
     )

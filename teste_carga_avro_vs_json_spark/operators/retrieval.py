@@ -46,13 +46,6 @@ The ranking key is the raw long sum, never the rounded double.
 
 from __future__ import annotations
 
-import math
-from typing import Iterator
-
-# Module-level so pandas_udf type-hint inference can resolve the
-# string annotations (same note as operators/lm.py).
-import pandas as pd
-
 from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
@@ -398,124 +391,3 @@ def hard_negatives_sql(
                ROUND(qsum / 1000000000.0, 6) AS score
         FROM ranked WHERE rnk <= {k}
     """
-
-
-def collect_bm25_model(
-    docs: DataFrame,
-    queries: list[tuple[int, str]] | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-) -> dict:
-    """Freeze the corpus-dependent BM25 statistics (per-term quantized
-    idf, avgdl, k1/b) into a tiny broadcastable dict — the same
-    freeze-from-a-reference-corpus pattern as :func:`lm.nll_cutoff`:
-    a stateless stream cannot see corpus-wide document frequencies.
-    Bounded driver collect: #query-terms rows + two scalars."""
-    if queries is None:
-        queries = DEFAULT_QUERIES
-    spark = docs.sparkSession
-    staged = docs.select("doc_id", tokens(text_col).alias("toks"))
-    row = staged.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.size("toks").cast("long")).alias("sdl"),
-    ).first()
-    n_docs, sdl = int(row["n"] or 0), int(row["sdl"] or 0)
-    qt = spark.createDataFrame(_query_terms(queries), "q_id long, term string")
-    terms = qt.select("term").distinct()
-    tok = (
-        staged.select("doc_id", F.explode_outer("toks").alias("tok"))
-        .filter(F.col("tok").isNotNull())
-    )
-    dfs = (
-        tok.join(F.broadcast(terms), tok["tok"] == terms["term"], "inner")
-        .select("doc_id", "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("df"))
-    )
-    idf = {
-        r.term: math.floor(
-            math.log(((n_docs - r.df) + 0.5) / (r.df + 0.5) + 1.0) * 10**9
-            + 0.5
-        )
-        for r in dfs.collect()
-    }
-    return {
-        "queries": _query_terms(queries),
-        "idf_q": idf,
-        "avgdl": (float(sdl) / n_docs) if n_docs else 0.0,
-        "k1": k1,
-        "b": b,
-    }
-
-
-def bm25_score_stream(
-    docs: DataFrame, model: dict, text_col: str = "text"
-) -> DataFrame:
-    """Stateless streaming scorer: per incoming doc, the BM25 score
-    against EVERY query of the frozen model (:func:`collect_bm25_model`)
-    — one Arrow-batched projection per micro-batch, no state, no
-    watermark (the ``decontaminate_stream`` pattern). Global top-k is
-    NOT stateless — emit scores and rank downstream in batch.
-
-    Bit-compatibility: replays the batch contribution arithmetic
-    exactly (quantized idf longs, the same fixed per-term double
-    sequence, exact integer sums), so for a doc whose tf/dl match the
-    reference corpus the scores equal :func:`bm25_topk`'s. Output:
-    (doc_id, q_id, n_terms, score) for docs matching >= 1 term."""
-    import re as _re
-
-    qterms = model["queries"]
-    idf_q = model["idf_q"]
-    avgdl = model["avgdl"]
-    k1, b = model["k1"], model["b"]
-
-    @F.pandas_udf(
-        "array<struct<q_id: bigint, n_terms: bigint, score: double>>"
-    )
-    def score(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        ws = _re.compile(r"[ \t\n\x0b\f\r]+")
-        by_query: dict = {}
-        for q_id, term in qterms:
-            by_query.setdefault(q_id, []).append(term)
-
-        def one(text: str):
-            toks = [t for t in ws.split(text or "") if t != ""]
-            dl = len(toks)
-            if dl == 0 or avgdl == 0.0:
-                return []
-            counts: dict = {}
-            for t in toks:
-                counts[t] = counts.get(t, 0) + 1
-            out = []
-            for q_id, terms in by_query.items():
-                qsum = 0
-                n_terms = 0
-                for t in terms:
-                    tf = counts.get(t, 0)
-                    if tf == 0 or t not in idf_q:
-                        continue
-                    frac = (tf * (k1 + 1.0)) / (
-                        tf + k1 * ((1.0 - b) + b * (dl / avgdl))
-                    )
-                    qsum += math.floor(idf_q[t] * frac + 0.5)
-                    n_terms += 1
-                if n_terms:
-                    out.append(
-                        {
-                            "q_id": q_id,
-                            "n_terms": n_terms,
-                            "score": round(qsum / 1e9, 6),
-                        }
-                    )
-            return out
-
-        for batch in texts:
-            yield pd.Series([one(t) for t in batch])
-
-    return (
-        docs.select("doc_id", score(F.col(text_col)).alias("s"))
-        .select("doc_id", F.explode("s").alias("e"))
-        .select("doc_id", "e.q_id", "e.n_terms", "e.score")
-    )

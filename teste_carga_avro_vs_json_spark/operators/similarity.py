@@ -44,11 +44,14 @@ def _dlit(x: float) -> str:
 
 def _lit_mat(mat: list[list[float]]) -> Column:
     """Nested double-array literal via ONE ``F.expr`` parse (r13-opt).
-    ``F.lit`` converts element-by-element over py4j — measured 0.97 s
-    for a 16×64 centroid matrix vs 4 ms for the parsed form; building
-    the old fully unrolled per-element trees was the dominant cost of
-    q_ivf_pq_topk (OPTIMIZATION_r13.md #1). Values are bit-identical
-    either way, so every k-means/ANN oracle is unchanged."""
+    ``F.lit`` converts element-by-element over py4j (0.97 s for a 16×64
+    centroid matrix), and building the old fully unrolled per-element
+    trees was the dominant cost of q_ivf_pq_topk (OPTIMIZATION_r13.md
+    #1). The parse is not free either: Spark's SQL lexer re-simulates
+    every decimal token, so the 45×64 matrix ``ivf_pq_topk`` builds at
+    2,000 vectors took 0.33-0.69 s warm and 1.3-2.0 s on first use (4
+    vCPUs, Spark 4.1.2). Values are bit-identical either way, so every
+    k-means/ANN oracle is unchanged."""
     return F.expr(
         "array("
         + ",".join(
@@ -1310,183 +1313,6 @@ def ivf_pq_topk_sql(
         SELECT query_id, vec_id, dist, rank FROM ranked
         WHERE rank <= {k}
     """
-
-
-def collect_ivf_pq_index(
-    emb: DataFrame,
-    n_centroids: int | None = None,
-    m: int = 8,
-    ksub: int = 16,
-    iters: int = 2,
-    with_vectors: bool = False,
-) -> dict:
-    """Freeze an IVF-PQ index driver-side for the stateless streaming
-    scorer (:func:`ivf_pq_score_stream`) — the broadcast-model pattern
-    every learned filter here follows (perplexity_stream,
-    bm25_score_stream, decontaminate_stream). The payload is the coarse
-    centroids + per-subspace codebooks + the CODED corpus: 8 bytes per
-    vector at m=8 (measured 3.4 % of raw parquet), so 100 M vectors
-    broadcast ~800 MB — the PQ memory story is exactly what makes a
-    broadcast ANN index feasible where raw vectors (256 B each) are
-    not. ``with_vectors=True`` additionally collects the raw vectors
-    for IVFADC-R refine (d×8 B each — budget accordingly or leave the
-    stream at ADC ranking)."""
-    if n_centroids is None:
-        n_centroids = auto_n_centroids(emb.count())
-    # fused coarse + codebook training (see ivf_pq_topk)
-    dim = len(emb.select("embedding").first()[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
-    dsub = dim // m
-    fused = multi_kmeans(
-        emb,
-        [(n_centroids, 0, None)]
-        + [(ksub, j * dsub, dsub) for j in range(m)],
-        iters,
-    )
-    cents, books = fused[0], fused[1:]
-    v = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    ).withColumn(
-        "cluster", F.coalesce(_nearest(F.col("vec"), cents), F.lit(-1))
-    )
-    coded = pq_encode(v, books, vectorized=True).select(
-        "vec_id", "cluster", "codes"
-    )
-    rows = coded.collect()
-    index = {
-        "cents": cents,
-        "books": books,
-        "m": m,
-        "ids": [r.vec_id for r in rows],
-        "clusters": [r.cluster for r in rows],
-        "codes": [list(r.codes) for r in rows],
-    }
-    if with_vectors:
-        vr = emb.select("vec_id", "embedding").collect()
-        index["vectors"] = {
-            r.vec_id: list(r.embedding) for r in vr
-        }
-    return index
-
-
-def ivf_pq_score_stream(
-    queries: DataFrame,
-    index: dict,
-    k: int = 10,
-    n_probe: int | None = None,
-    refine: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Stateless streaming ANN: incoming query vectors scored against
-    the frozen :func:`collect_ivf_pq_index` — one Arrow-batched
-    projection per micro-batch, no state, no watermark (the
-    ``bm25_score_stream`` pattern). Output (query_id, vec_id, dist,
-    rank) matches :func:`ivf_pq_topk` BIT-EXACTLY for queries drawn
-    from the indexed corpus (pytest-pinned): probe selection replays
-    the (dist, idx) struct sort, LUT entries replay the per-dimension
-    left-fold IEEE-754 sequence (the assign_np discipline), the ADC
-    total is the same exact integer sum, ties break on vec_id.
-    ``refine`` needs an index built ``with_vectors=True``."""
-    import numpy as np
-
-    cents = index["cents"]
-    books = index["books"]
-    m = index["m"]
-    dsub = len(books[0][0][1])
-    cent_ids = np.array([i for i, _ in cents], dtype=np.int64)
-    cent_mat = np.array([v for _, v in cents], dtype=np.float64)
-    corp_ids = np.array(index["ids"], dtype=np.int64)
-    corp_clusters = np.array(index["clusters"], dtype=np.int64)
-    corp_codes = np.array(index["codes"], dtype=np.int64)
-    if n_probe is None:
-        n_probe = max(4, len(cents) // 4)
-    if refine is not None and "vectors" not in index:
-        raise ValueError(
-            "refine needs collect_ivf_pq_index(with_vectors=True)"
-        )
-    vecs = index.get("vectors")
-    # codeword matrix per subspace, positioned by codeword id (gap
-    # slots hold zeros — no code references them)
-    cw = []
-    for cb in books:
-        by_idx = {i: v for i, v in cb}
-        mat = np.zeros((max(by_idx) + 1, dsub), dtype=np.float64)
-        for i, v in by_idx.items():
-            mat[i] = v
-        cw.append(mat)
-
-    def _fold_l2(q: "np.ndarray", mat: "np.ndarray") -> "np.ndarray":
-        # the expression fold's exact IEEE add order: acc += (a-b)^2
-        # one DIMENSION at a time (vectorized across rows of mat)
-        acc = np.zeros(mat.shape[0], dtype=np.float64)
-        for d in range(mat.shape[1]):
-            diff = q[d] - mat[:, d]
-            acc = acc + diff * diff
-        return acc
-
-    out_schema = (
-        "query_id long, vec_id long, dist long, rank int"
-    )
-
-    def score(batches):
-        for pdf in batches:
-            rows = []
-            for qid, qvec in zip(pdf[id_col], pdf[vec_col]):
-                q = np.asarray(qvec, dtype=np.float64)
-                cd = _fold_l2(q, cent_mat)
-                order = np.lexsort((cent_ids, cd))[:n_probe]
-                probed = set(cent_ids[order].tolist())
-                mask = np.isin(corp_clusters, list(probed)) & (
-                    corp_ids != qid
-                )
-                c_ids = corp_ids[mask]
-                if not len(c_ids):
-                    continue
-                c_codes = corp_codes[mask]
-                # Lloyd can drop clusters per subspace, so slot counts
-                # differ; unused (gap) slots are never referenced
-                n_slots = max(c.shape[0] for c in cw)
-                lut = np.zeros((m, n_slots), dtype=np.int64)
-                for j in range(m):
-                    d = _fold_l2(q[j * dsub:(j + 1) * dsub], cw[j])
-                    lut[j, : len(d)] = np.floor(
-                        d * 1e9 + 0.5
-                    ).astype(np.int64)
-                adc = np.zeros(len(c_ids), dtype=np.int64)
-                for j in range(m):
-                    adc = adc + lut[j, c_codes[:, j]]
-                if refine is None:
-                    pick = np.lexsort((c_ids, adc))[:k]
-                    for rk, ix in enumerate(pick, start=1):
-                        rows.append(
-                            (int(qid), int(c_ids[ix]),
-                             int(adc[ix]), rk)
-                        )
-                    continue
-                short = np.lexsort((c_ids, adc))[:refine]
-                s_ids = c_ids[short]
-                ex = np.empty(len(s_ids), dtype=np.int64)
-                for i, sid in enumerate(s_ids):
-                    cv = np.asarray(vecs[int(sid)], dtype=np.float64)
-                    acc = 0.0
-                    for d in range(len(q)):
-                        diff = q[d] - cv[d]
-                        acc = acc + diff * diff
-                    ex[i] = int(np.floor(acc * 1e9 + 0.5))
-                pick = np.lexsort((s_ids, ex))[:k]
-                for rk, ix in enumerate(pick, start=1):
-                    rows.append(
-                        (int(qid), int(s_ids[ix]), int(ex[ix]), rk)
-                    )
-            yield pd.DataFrame(
-                rows, columns=["query_id", "vec_id", "dist", "rank"]
-            )
-
-    return queries.select(id_col, vec_col).mapInPandas(
-        score, schema=out_schema
-    )
 
 
 # ----------------------------------------------------------- LSH ANN path

@@ -202,26 +202,18 @@ _BEST_SX = "greatest(" + ", ".join(f"s_{lang}" for lang in _MARKERS) + ")"
 
 
 def _lang_pred_sx(best: str = _BEST_SX) -> str:
-    """Spark-SQL twin of :func:`_lang_pred` over the s_* columns."""
+    """Argmax language from the ``s_{lang}`` columns as Spark SQL: 'und'
+    on zero evidence, alphabetical tiebreak (first max wins) — fully
+    deterministic for the oracle."""
     case = f"CASE WHEN {best} <= 0 THEN 'und' "
     for lang in sorted(_MARKERS):
         case += f"WHEN s_{lang} = {best} THEN '{lang}' "
     return case + "END"
 
 
-def _lang_pred(best: Column) -> Column:
-    """Argmax language from the ``s_{lang}`` columns: 'und' on zero
-    evidence, alphabetical tiebreak (first max wins) — fully
-    deterministic for the oracle."""
-    pred = F.when(best <= 0, F.lit("und"))
-    for lang in sorted(_MARKERS):
-        pred = pred.when(F.col(f"s_{lang}") == best, F.lit(lang))
-    return pred
-
-
 def lang_id(docs: DataFrame) -> DataFrame:
     """Predict language as argmax of stopword-marker hits (see
-    :func:`_lang_pred` for the tie/zero-evidence rules)."""
+    :func:`_lang_pred_sx` for the tie/zero-evidence rules)."""
     staged = docs.select("doc_id", "lang", tokens("text").alias("toks"))
     scored = staged.select("doc_id", "lang", *_marker_score_cols())
     return scored.select(

@@ -30,7 +30,7 @@ over a word table; here each phase is one distributed pass:
   (per-word Viterbi against the BROADCAST piece table — row-local,
   zero shuffle) followed by one hash agg of piece counts. Piece
   scores live driver-side between iterations: vocab-bounded, the same
-  "model fits in executor memory" contract as ``lm.collect_model``.
+  "model fits in executor memory" contract as KenLM-style LM filters.
 
 Determinism (what lets pytest pin Spark == pure-Python reference
 EXACTLY): piece counts are exact integers everywhere (hash-agg sums);

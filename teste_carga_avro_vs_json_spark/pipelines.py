@@ -13,11 +13,9 @@ and the no-silent-caps ledger (rows in/out + wall per stage — a
 corpus build that can't say where documents died is undebuggable at
 100 TB).
 
-Engine shape: stages communicate through (doc_id, text) frames.
-``measure=True`` (the report mode) materializes each stage once to
-count rows — the honest way to get a ledger, costing one action per
-stage. ``measure=False`` defers everything to the final action (stage
-boundaries stay lazy checkpoints). Either way every stage boundary
+Engine shape: stages communicate through (doc_id, text) frames. Each
+stage is materialized once to count its rows — the honest way to get a
+ledger, costing one action per stage — and every stage boundary
 TRUNCATES LINEAGE — see _Ledger for why that is load-bearing.
 """
 
@@ -40,26 +38,26 @@ from teste_carga_avro_vs_json_spark.operators import (
 
 class _Ledger:
     """Per-stage accounting with LINEAGE-TRUNCATING stage boundaries:
-    every stage output is ``localCheckpoint``ed (eager in measure
-    mode, lazy otherwise), so downstream operators see a leaf instead
-    of the whole composed plan. This is not an optimization nicety —
-    it is the difference between the pipeline working and not:
+    every stage output is ``localCheckpoint``ed, so downstream operators
+    see a leaf instead of the whole composed plan. This is not an
+    optimization nicety — it is the difference between the pipeline
+    working and not:
     measured on sf0.1, the SAME neardup stage costs 3.4 s behind a
     checkpoint boundary and 51 s behind five nested cached joins
     (Catalyst/AQE re-planning grows ~3-4x per extra join in the
     lineage of a composite operator; see SCALE.md). On a real cluster
     prefer ``checkpoint`` to a DFS dir for fault tolerance — same
-    note as the label-propagation loop in dedup.neardup_clusters."""
+    note as the label-propagation loop in dedup.neardup_clusters.
 
-    def __init__(self, measure: bool) -> None:
-        self.measure = measure
+    The checkpoint is lazy and the row count is the action that fills
+    it — one job per stage, the pattern neardup_clusters uses (an eager
+    checkpoint followed by a count runs two)."""
+
+    def __init__(self) -> None:
         self.stats: list[dict] = []
 
     def stage(self, name: str, frame: DataFrame, t0: float) -> DataFrame:
-        frame = frame.localCheckpoint(eager=self.measure)
-        if not self.measure:
-            self.stats.append({"stage": name, "rows": None, "sec": None})
-            return frame
+        frame = frame.localCheckpoint(eager=False)
         n = frame.count()
         prev_rows = next(
             (s["rows"] for s in reversed(self.stats)
@@ -96,7 +94,6 @@ def build_training_corpus(
     min_quality: float = 0.0,
     exact_substr_min_len: int = 20,
     line_filter: bool = True,
-    measure: bool = True,
 ) -> tuple[DataFrame, list[dict]]:
     """(doc_id, text) corpus → (packed-sequence plan, stage ledger).
 
@@ -105,7 +102,7 @@ def build_training_corpus(
     as such, never silently). Returns :func:`corpus.pack_sequences`'s
     packing plan over the surviving cleaned text plus the per-stage
     ledger [{stage, rows, sec}, ...]."""
-    led = _Ledger(measure)
+    led = _Ledger()
     cur = _clean_stages(
         docs,
         test,
@@ -270,7 +267,6 @@ def build_corpus_incremental(
     min_quality: float = 0.0,
     exact_substr_min_len: int = 20,
     line_filter: bool = True,
-    measure: bool = True,
     bloom_fpp: float = 0.01,
     mode: str = "append",
 ) -> dict:
@@ -382,7 +378,7 @@ def build_corpus_incremental(
         report["n_bloom_dropped"] = 0
 
     # ---- the shared cleaning recipe (stages 1-9, no packing)
-    led = _Ledger(measure)
+    led = _Ledger()
     cleaned = _clean_stages(
         fresh,
         test,

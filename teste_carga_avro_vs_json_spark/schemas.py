@@ -16,7 +16,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -83,21 +82,5 @@ TRANSPORTE = StructType(
         StructField("chave", StringType(), False),
         StructField("valor", BinaryType(), False),
         StructField("tamanho_bytes", LongType(), False),
-    ]
-)
-
-# Per-run metric counters (MetricasDesempenho.java:12-27); one row per
-# (aplicacao, shard) — the merge fixture F4 in FIXTURES.md.
-METRICAS_RUN = StructType(
-    [
-        StructField("aplicacao", StringType(), False),
-        StructField("shard", IntegerType(), False),
-        StructField("total_mensagens", LongType(), False),
-        StructField("mensagens_sucesso", LongType(), False),
-        StructField("mensagens_erro", LongType(), False),
-        StructField("total_bytes", LongType(), False),
-        StructField("inicio_ms", LongType(), False),
-        StructField("fim_ms", LongType(), False),
-        StructField("sucesso", BooleanType(), False),
     ]
 )

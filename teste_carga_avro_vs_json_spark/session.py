@@ -55,6 +55,8 @@ _BUILD_CONFS = {
     # (observed OOMs at 10x corpus stress). Only applies when THIS
     # builder creates the JVM; pre-existing sessions keep theirs.
     "spark.driver.memory": "8g",
+    # the [Stage N:==>] bars overwrite the result lines the tools print
+    "spark.ui.showConsoleProgress": "false",
 }
 
 

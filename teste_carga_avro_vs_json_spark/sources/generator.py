@@ -9,8 +9,12 @@ declarative plan:
     spark.range(1, N+1)                         -- distributed rows
       .withColumn(dados, transform(sequence(0, k-1), build_registro))
 
-so generation runs on executors, entirely inside whole-stage codegen —
-no Python, no driver loop, no shuffle. At 100 TB this scales linearly
+so generation runs on executors — no Python, no driver loop, no shuffle.
+It is not fully compiled: ``transform`` (``ArrayTransform``, like
+``ArrayAggregate``) is ``CodegenFallback`` in Spark 4.1.2, so the
+registro lambda is interpreted per element, and ``pseudo_uuid_sx``
+evaluates ``md5`` five times per registro (once per substring). At
+100 TB this scales linearly
 with executors: `spark.range` splits into `numPartitions` evenly sized
 partitions and every derived column is computed where the row lives.
 
@@ -21,19 +25,16 @@ logical clock ``EPOCH0 + sequencia`` (FIXTURES.md F1/F2).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark.config import n_registros
 from teste_carga_avro_vs_json_spark.functions.portable import (
     hex32_sql,
-    pseudo_double,
     pseudo_double_sql,
     pseudo_double_sx,
-    pseudo_uuid,
     pseudo_uuid_sql,
     pseudo_uuid_sx,
-    rand_text,
     rand_text_sql,
     rand_text_sx,
 )
@@ -45,23 +46,11 @@ EPOCH0 = 1_700_000_000_000
 TEXT_LEN = 100  # GeradorCargaEstruturada.java:22
 
 
-def _registro(seq: Column, idx: Column) -> Column:
-    """One nested Registro struct (MensagemCarga.avsc:17-23)."""
-    rk = F.concat(seq.cast("string"), F.lit("-"), idx.cast("string"))
-    return F.struct(
-        idx.cast("int").alias("indice"),
-        rand_text(F.concat(rk, F.lit("-t")), TEXT_LEN).alias("texto"),
-        pseudo_double(F.concat(rk, F.lit("-n"))).alias("numero"),
-        (F.lit(EPOCH0) + seq).cast("long").alias("timestamp"),
-        pseudo_uuid(F.concat(rk, F.lit("-u"))).alias("uuid"),
-    )
-
-
 def _registro_sx(seq: str, idx: str) -> str:
-    """SPARK-SQL fragment twin of :func:`_registro` (r13-opt: the whole
-    message projection parses in a handful of py4j calls — this builder
-    runs per bench rep in every generator-fed lane; see
-    operators/text.py tokens_sx note)."""
+    """One nested Registro struct (MensagemCarga.avsc:17-23) as a Spark
+    SQL fragment: the whole message projection parses in a handful of
+    py4j calls (this builder runs per bench rep in every generator-fed
+    lane; see operators/text.py tokens_sx note)."""
     rk = f"concat(CAST({seq} AS STRING), '-', CAST({idx} AS STRING))"
     key_t = f"concat({rk}, '-t')"
     key_n = f"concat({rk}, '-n')"

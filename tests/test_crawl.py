@@ -110,46 +110,6 @@ def test_url_dedup_plan_shape(spark, sf_dir):
     assert "SortAggregate" not in plan  # long-only buffers, no demotion
 
 
-def test_url_dedup_stream_matches_batch_families(spark, sf_dir, tmp_path):
-    """Streaming twin: the firehose carries every doc's messy URL
-    TWICE (at-least-once crawl source); the watermarked canon-key
-    dedup must emit exactly one row per canonical family — the same
-    family set the batch operator produces."""
-    import pyspark.sql.functions as F  # noqa: F811
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    urls = crawl.synth_urls(docs)
-    wire = urls.select(F.to_json(F.struct("doc_id", "url")).alias("value"))
-    path = str(tmp_path / "urlstream")
-    wire.unionByName(wire).write.mode("overwrite").format("text").save(path)
-
-    stream = (
-        spark.readStream.schema("doc_id long, url string")
-        .json(path)
-        .withColumn(
-            "ev", F.timestamp_seconds(F.lit(1704067200) + F.col("doc_id"))
-        )
-    )
-    out_path = str(tmp_path / "urlout")
-    q = (
-        crawl.url_dedup_stream(stream, delay="30 days")
-        .select("canon_url", "doc_id")
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", str(tmp_path / "urlchk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out_path)
-    batch_fams = {
-        r["canon_url"]
-        for r in crawl.url_dedup(urls).select("canon_url").collect()
-    }
-    assert got.count() == len(batch_fams)  # one first per family
-    assert {r["canon_url"] for r in got.collect()} == batch_fams
-
-
 def test_domain_profile_oracle_and_shape(spark, sf_dir):
     """7 host shards, exact-integer shares, Spark == DuckDB, and the
     window total rides the tiny aggregated frame (bounded by domain
@@ -175,100 +135,6 @@ def test_domain_profile_oracle_and_shape(spark, sf_dir):
     want = {r[0]: tuple(r[1:]) for r in
             con.execute(crawl.domain_profile_sql()).fetchall()}
     assert rows == want
-
-
-def test_robots_filter_matches_stdlib_reference(spark):
-    """The gate must agree with DIRECT urllib.robotparser calls on
-    every row (the reference-implementation pin), plus hard cases:
-    missing robots.txt defaults to fetchable, named-agent groups win
-    for that agent, in-file rule order decides (stdlib 1994-draft
-    semantics — Allow after Disallow does NOT override for '*')."""
-    import urllib.robotparser
-    robots = spark.createDataFrame(
-        [
-            (
-                "a.example.com",
-                "User-agent: *\nDisallow: /private/\nAllow: /private/ok\n",
-            ),
-            (
-                "b.example.com",
-                "User-agent: fetchbot\nDisallow: /\n"
-                "User-agent: *\nDisallow:\n",
-            ),
-        ],
-        "host string, robots_txt string",
-    )
-    urls = spark.createDataFrame(
-        [
-            (1, "https://a.example.com/public/x"),
-            (2, "https://a.example.com/private/secret"),
-            (3, "https://a.example.com/private/ok"),
-            (4, "https://b.example.com/anything"),
-            (5, "https://c.example.com/no-robots-here"),
-        ],
-        "doc_id long, url string",
-    )
-    bodies = {r["host"]: r["robots_txt"] for r in robots.collect()}
-
-    def want(agent):
-        out = {}
-        for did, url in [(r["doc_id"], r["url"]) for r in urls.collect()]:
-            host = url.split("/")[2]
-            if host not in bodies:
-                out[did] = True
-                continue
-            rp = urllib.robotparser.RobotFileParser()
-            rp.parse(bodies[host].splitlines())
-            out[did] = bool(rp.can_fetch(agent, url))
-        return out
-
-    for agent in ("*", "fetchbot"):
-        got = {r["doc_id"]: r["fetch_ok"]
-               for r in crawl.robots_filter(urls, robots,
-                                            agent=agent).collect()}
-        assert got == want(agent), agent
-    star = want("*")
-    bot = want("fetchbot")
-    # hard cases: stdlib in-order rules disallow /private/ok for '*'
-    assert star == {1: True, 2: False, 3: False, 4: True, 5: True}
-    assert bot[4] is False  # the named-agent group wins for fetchbot
-    assert bot[5] is True   # no robots.txt -> fetchable
-
-
-def test_sitemap_parse_and_fanout(spark):
-    ns = 'xmlns="http://www.sitemaps.org/schemas/sitemap/0.9"'
-    urlset = (
-        f'<urlset {ns}><url><loc>https://e/a</loc>'
-        "<lastmod>2026-01-02</lastmod><priority>0.8</priority></url>"
-        "<url><loc>https://e/b</loc></url></urlset>"
-    )
-    index = (
-        f'<sitemapindex {ns}><sitemap>'
-        "<loc>https://e/sitemap1.xml</loc></sitemap></sitemapindex>"
-    )
-    rows = crawl.parse_sitemap(urlset)
-    assert rows == [
-        {"loc": "https://e/a", "lastmod": "2026-01-02",
-         "priority": "0.8", "is_index": False},
-        {"loc": "https://e/b", "lastmod": None, "priority": None,
-         "is_index": False},
-    ]
-    assert crawl.parse_sitemap(index)[0]["is_index"] is True
-    assert crawl.parse_sitemap("<garbage") == []
-    assert crawl.parse_sitemap("") == []
-
-    frames = spark.createDataFrame(
-        [("e", urlset), ("f", index), ("g", "<broken")],
-        "host string, xml string",
-    )
-    got = crawl.sitemap_urls(frames).collect()
-    by_host = {}
-    for r in got:
-        by_host.setdefault(r["host"], []).append(r["loc"])
-    assert by_host == {
-        "e": ["https://e/a", "https://e/b"],
-        "f": ["https://e/sitemap1.xml"],
-    }
 
 
 def test_domain_cap_gate_and_determinism(spark, sf_dir):

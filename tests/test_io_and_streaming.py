@@ -442,6 +442,23 @@ def test_read_kafka_reaches_connector_boundary(spark):
     assert "refused" in str(ei.value).lower() or "Connection" in str(ei.value)
 
 
+def test_read_kafka_stream_reaches_connector_boundary(spark):
+    """Streaming-read twin of the write boundary test: the consume side
+    of the paper's flow (options from kafka_stream_read_options ->
+    readStream.format("kafka").load()) gets as far as Spark's
+    data-source resolution and fails there with the missing-connector
+    error, not an options error."""
+    from teste_carga_avro_vs_json_spark.sources import io_kafka
+
+    with pytest.raises(Exception) as ei:
+        io_kafka.read_kafka_stream(
+            spark, "broker:9092", "t", max_offsets_per_trigger=1000
+        )
+    msg = str(ei.value)
+    assert "kafka" in msg.lower()
+    assert "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg
+
+
 def test_compact_parquet_bounds_file_counts(spark, tmp_path):
     """Compaction must collapse a fragmented partitioned dataset to one
     writer per partition dir (bounded by maxRecordsPerFile), preserving

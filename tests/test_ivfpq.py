@@ -171,6 +171,30 @@ def test_ivf_pq_candidates_unique(spark, emb):
     assert dup == 0
 
 
+def test_duplicated_vec_id_repeats_in_the_top_k(spark, emb):
+    """What the unchecked ``vec_id``-uniqueness precondition of
+    ivf_topk / ivf_pq_topk does when broken: a corpus id stored twice
+    comes back as repeated (query_id, vec_id) pairs at consecutive
+    ranks, pushing true neighbours out of the top k. ivf_topk emits the
+    pair once per copy (2); ivf_pq_topk twice more, because the refine
+    fetch joins the shortlisted id back onto both copies (2 x 2)."""
+    for topk, copies in ((similarity.ivf_topk, 2),
+                         (lambda e: similarity.ivf_pq_topk(e, n_centroids=16), 4)):
+        clean = topk(emb).collect()
+        # a non-query id that is some query's nearest neighbour
+        q, dup = min((r.query_id, r.vec_id) for r in clean
+                     if r["rank"] == 1 and r.vec_id % 50 != 0)
+        twice = emb.unionByName(emb.filter(F.col("vec_id") == dup))
+        got = [r.vec_id for r in
+               topk(twice).filter(F.col("query_id") == q).orderBy("rank").collect()]
+        assert len(got) == 10
+        assert got[:copies] == [dup] * copies and dup not in got[copies:]
+        if copies == 2:
+            want = [r.vec_id for r in sorted(
+                (r for r in clean if r.query_id == q), key=lambda r: r["rank"])]
+            assert got[copies:] == want[1:-1]
+
+
 def test_ivf_pq_code_size_is_d_over_8(spark, emb, tmp_path):
     """The PQ memory claim, measured: the (vec_id, cluster, codes)
     frame written to parquet is a fraction of the raw-vector frame —
@@ -199,74 +223,6 @@ def test_ivf_pq_code_size_is_d_over_8(spark, emb, tmp_path):
     n = emb.count()
     # raw float32[64] ≈ 256 B/vector payload; codes ≈ 8 B/vector
     assert pq_b < raw_b / 4, (raw_b, pq_b, n)
-
-
-def test_ivf_pq_score_stream_matches_batch_exactly(spark, emb):
-    """r13: the frozen-index streaming scorer (broadcast-model
-    pattern) reproduces ivf_pq_topk BIT-EXACTLY for queries drawn from
-    the indexed corpus — probe sort, LUT folds, integer ADC sums and
-    tie-breaks all replayed — for both the ADC-only and the IVFADC-R
-    refined rankings."""
-    idx = similarity.collect_ivf_pq_index(
-        emb, n_centroids=16, with_vectors=True
-    )
-    queries = emb.filter(F.col("vec_id") % 50 == 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-
-    def rows(df):
-        return sorted(
-            (r.query_id, r.vec_id, r.dist, r.rank) for r in df.collect()
-        )
-
-    batch_adc = rows(
-        similarity.ivf_pq_topk(emb, n_centroids=16, refine=None)
-    )
-    stream_adc = rows(
-        similarity.ivf_pq_score_stream(queries, idx, refine=None)
-    )
-    assert stream_adc == batch_adc
-
-    batch_ref = rows(similarity.ivf_pq_topk(emb, n_centroids=16))
-    stream_ref = rows(
-        similarity.ivf_pq_score_stream(queries, idx, refine=60)
-    )
-    assert stream_ref == batch_ref
-
-
-def test_ivf_pq_score_stream_micro_batch(spark, emb, tmp_path):
-    """The scorer runs as an actual Structured Streaming projection
-    (stateless: no watermark, no state store) and a micro-batch yields
-    the same rows as the batch call on the same queries."""
-    idx = similarity.collect_ivf_pq_index(emb, n_centroids=16)
-    queries = emb.filter(F.col("vec_id") % 100 == 0).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    src = str(tmp_path / "qsrc")
-    queries.write.parquet(src)
-    stream_q = spark.readStream.schema(queries.schema).parquet(src)
-    out = similarity.ivf_pq_score_stream(stream_q, idx, refine=None)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ivfpq_stream")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.query_id, r.vec_id, r.dist, r.rank)
-        for r in spark.sql("select * from ivfpq_stream").collect()
-    )
-    want = sorted(
-        (r.query_id, r.vec_id, r.dist, r.rank)
-        for r in similarity.ivf_pq_score_stream(
-            queries, idx, refine=None
-        ).collect()
-    )
-    assert got == want and len(got) > 0
-    # refine without vectors is a loud error, not a silent fallback
-    with pytest.raises(ValueError, match="with_vectors"):
-        similarity.ivf_pq_score_stream(queries, idx, refine=10)
 
 
 def test_multi_kmeans_fused_equals_sequential(spark, emb):

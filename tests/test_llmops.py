@@ -1320,38 +1320,6 @@ def test_decontaminate_empty_test_set(spark):
     assert out == {1: (3, 0, False), 2: (0, 0, False)}
 
 
-def test_decontaminate_stream_matches_batch(spark, sf_dir, tmp_path):
-    """The stateless streaming gate must emit exactly the batch
-    operator's per-doc stats (stream-static broadcast of the
-    single-row test-gram array; zero streaming state)."""
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    train = docs.filter(F.col("doc_id") % 17 != 0)
-    test = docs.filter(F.col("doc_id") % 17 == 0)
-    path = str(tmp_path / "train_stream")
-    train.select(
-        F.to_json(F.struct("doc_id", "text")).alias("value")
-    ).write.mode("overwrite").format("text").save(path)
-    stream = spark.readStream.schema("doc_id long, text string").json(path)
-    out = run_bounded_append(decontam.decontaminate_stream(stream, test, n=5))
-    got = {
-        r.doc_id: (r.n_grams, r.n_hits, r.contaminated)
-        for r in out.collect()
-    }
-    want = {
-        r.doc_id: (r.n_grams, r.n_hits, r.contaminated)
-        for r in decontam.decontaminate(train, test, n=5).collect()
-    }
-    assert got == want
-    # batch frames work through the same code path (it is plain ops)
-    got_batch = {
-        r.doc_id: (r.n_grams, r.n_hits, r.contaminated)
-        for r in decontam.decontaminate_stream(train, test, n=5).collect()
-    }
-    assert got_batch == want
-
-
 def test_pack_windows_reconstruction(spark, sf_dir):
     """Materialized windows must be the exact packed token stream: every
     window is seq_len tokens except possibly the last, and concatenating
@@ -1601,40 +1569,6 @@ def test_line_dedup_strips_boilerplate_everywhere(spark):
         ).collect()
     }
     assert out2[1].n_kept == 3 and out2[2].n_kept == 2
-
-
-def test_line_dedup_stream_matches_batch(spark, tmp_path):
-    """Streaming gate == batch operator when the reference corpus IS
-    the streamed corpus (the stream==batch pin every learned filter
-    carries)."""
-    from teste_carga_avro_vs_json_spark.operators import corpus
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
-
-    nav = "Home | About | Contact"
-    rows = [
-        (1, nav + "\nunique first content line\nunique second line"),
-        (2, nav + "\ndifferent content for doc two"),
-        (3, nav),
-        (4, "entirely original document"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {
-        r.doc_id: (r.n_lines, r.n_kept, r.clean_text)
-        for r in corpus.line_dedup(docs).collect()
-    }
-    docs.write.mode("overwrite").parquet(f"{tmp_path}/stream_in")
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(f"{tmp_path}/stream_in")
-    )
-    got = {
-        r.doc_id: (r.n_lines, r.n_kept, r.clean_text)
-        for r in run_bounded_append(
-            corpus.line_dedup_stream(stream, docs)
-        ).collect()
-    }
-    assert got == want
 
 
 def test_normalize_text_canonicalizes(spark):

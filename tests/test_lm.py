@@ -60,33 +60,6 @@ def test_perplexity_gate_splits_fixture(spark, sf_dir):
     assert stats.hi > stats.lo
 
 
-def test_perplexity_stream_matches_batch(spark, sf_dir, tmp_path):
-    """The stateless streaming scorer (broadcast in-memory model, pure
-    projection per micro-batch) must emit exactly the batch join-form
-    scores — including the ln-quantization agreement across the
-    libm/Java boundary."""
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    want = {
-        r.doc_id: (r.n_scored, r.avg_nll, r.keep)
-        for r in lm.perplexity_score(docs).collect()
-    }
-    model = lm.collect_model(*lm.train_bigram_lm(docs))
-    path = str(tmp_path / "docs_stream")
-    docs.select(
-        F.to_json(F.struct("doc_id", "text")).alias("value")
-    ).write.mode("overwrite").format("text").save(path)
-    stream = spark.readStream.schema("doc_id long, text string").json(path)
-    out = run_bounded_append(lm.perplexity_stream(stream, model))
-    got = {
-        r.doc_id: (r.n_scored, r.avg_nll, r.keep) for r in out.collect()
-    }
-    assert got == want
-
-
 def test_dsir_prefers_target_like_docs(spark):
     """DSIR must rank documents from the target's vocabulary above
     documents from a disjoint vocabulary: with target split
@@ -202,53 +175,6 @@ def test_perplexity_kn_golden_tiny_corpus(spark):
     assert out[1].avg_nll == exp1 == out[2].avg_nll
     assert out[3].avg_nll == exp3
     assert out[3].avg_nll > out[1].avg_nll  # rarer continuation
-
-
-def test_perplexity_kn_stream_matches_batch(spark, sf_dir, tmp_path):
-    """KN stream scorer (stats derived from the collected bigram dict)
-    must emit exactly the batch join-form scores."""
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    want = {
-        r.doc_id: (r.n_scored, r.avg_nll, r.keep)
-        for r in lm.perplexity_score(docs, smoothing="kn").collect()
-    }
-    model = lm.collect_model(*lm.train_bigram_lm(docs))
-    path = str(tmp_path / "docs_stream_kn")
-    docs.select(
-        F.to_json(F.struct("doc_id", "text")).alias("value")
-    ).write.mode("overwrite").format("text").save(path)
-    stream = spark.readStream.schema("doc_id long, text string").json(path)
-    out = run_bounded_append(
-        lm.perplexity_stream(stream, model, smoothing="kn")
-    )
-    got = {
-        r.doc_id: (r.n_scored, r.avg_nll, r.keep) for r in out.collect()
-    }
-    assert got == want
-
-
-def test_perplexity_kn_unseen_stays_finite(spark):
-    """Scoring NEW text against a fixed model: an unseen word (zero
-    continuation count) and an unseen context must both get finite,
-    positive NLL mass — the continuation floor at work. The stream
-    scorer doubles as the fixed-model batch scorer (pure projection)."""
-    train = spark.createDataFrame(
-        [(1, "a b"), (2, "a b"), (3, "a c")], "doc_id long, text string"
-    )
-    model = lm.collect_model(*lm.train_bigram_lm(train))
-    probe = spark.createDataFrame(
-        [(10, "zz qq"), (11, "a b")], "doc_id long, text string"
-    )
-    out = {
-        r.doc_id: r
-        for r in lm.perplexity_stream(probe, model, smoothing="kn").collect()
-    }
-    assert out[10].n_scored == 2 and math.isfinite(out[10].avg_nll)
-    assert out[10].avg_nll > out[11].avg_nll
 
 
 def test_perplexity_unknown_smoothing_raises(spark):

@@ -1280,55 +1280,6 @@ def test_snapshot_cow_delete_on_dv_table_no_resurrection(
     assert after.where("doc_id < 20").count() == 0
 
 
-def test_snapshot_history_and_restore(spark, sf_dir, tmp_path):
-    """RESTORE publishes an old version's file list as a NEW commit —
-    manifest-only (no data movement), history keeps moving forward,
-    and DVs of the restored version come back with it."""
-    import os as _os
-
-    tdir = str(tmp_path / "table")
-    docs = _docs(spark, sf_dir)
-    mt.snapshot_commit(docs.where("doc_id < 300"), tdir)
-    mt.snapshot_commit(docs.where("doc_id >= 300"), tdir, mode="append")
-    mt.snapshot_delete(spark, tdir, "doc_id % 10 = 0", mode="mor")
-    # "bad" commit we want to roll back
-    mt.snapshot_commit(docs.limit(1), tdir, mode="overwrite")
-    assert mt.snapshot_read(spark, tdir).count() == 1
-
-    data_mtime = max(
-        _os.path.getmtime(_os.path.join(r, n))
-        for r, _d, ns in _os.walk(_os.path.join(tdir, "data"))
-        for n in ns
-    )
-    v5 = mt.snapshot_restore(tdir, 3)
-    assert v5 == 5
-    # no data file was touched by the restore
-    assert data_mtime == max(
-        _os.path.getmtime(_os.path.join(r, n))
-        for r, _d, ns in _os.walk(_os.path.join(tdir, "data"))
-        for n in ns
-    )
-    restored = mt.snapshot_read(spark, tdir)
-    assert _same_multiset(restored, mt.snapshot_read(spark, tdir, 3))
-    assert restored.where("doc_id % 10 = 0").count() == 0  # DVs restored
-    # the bad version is still inspectable
-    assert mt.snapshot_read(spark, tdir, 4).count() == 1
-
-    hist = mt.snapshot_history(tdir)
-    assert [h["version"] for h in hist] == [1, 2, 3, 4, 5]
-    assert [h["op"] for h in hist] == [
-        "append", "append", "delete-mor", "overwrite", "restore",
-    ]
-    assert hist[4]["extra"]["restored_version"] == 3
-    assert hist[2]["dv_rows"] == 50 and hist[4]["dv_rows"] == 50
-    assert hist[3]["dv_rows"] == 0
-
-    import pytest
-
-    with pytest.raises(ValueError, match="not in"):
-        mt.snapshot_restore(tdir, 99)
-
-
 # ------------------------------------------------- change data feed
 
 
@@ -1423,7 +1374,6 @@ def test_changes_merge_records_update_pre_and_post_images(
     # manifest records the change files + row count
     m2 = mt._read_manifest(tdir, 2)
     assert m2["cdf"]["n_rows"] == 2 * 30 + 20
-    assert mt.snapshot_history(tdir)[-1]["cdf_rows"] == 80
 
 
 def test_changes_delete_cow_equals_mor(spark, sf_dir, tmp_path):

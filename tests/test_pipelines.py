@@ -1,8 +1,8 @@
 """One-call corpus builder pins (pipelines.build_training_corpus):
 the ledger is complete (every stage accounted, monotone rows, dropped
 counts, the >95%-drop warning — no silent deaths), the decontamination
-stage removes planted contamination, the lazy (measure=False) mode
-builds the same final plan, and the packing plan is hole-free."""
+stage removes planted contamination, and the packing plan is
+hole-free."""
 
 import pytest
 import pyspark.sql.functions as F
@@ -93,21 +93,6 @@ def test_decontamination_removes_planted_leak(spark, sf_dir):
     )
     survivors = {r["doc_id"] for r in packed.select("doc_id").collect()}
     assert leaked["doc_id"] not in survivors
-
-
-def test_lazy_mode_same_final_plan(spark, sf_dir):
-    docs = _docs(spark, sf_dir, 150)
-    p1, s1 = pipelines.build_training_corpus(
-        docs, None, seq_len=256, measure=True, line_filter=False
-    )
-    p2, s2 = pipelines.build_training_corpus(
-        docs, None, seq_len=256, measure=False, line_filter=False
-    )
-    assert [s["stage"] for s in s1] == [s["stage"] for s in s2]
-    assert all(s["rows"] is None for s in s2 if "skipped" not in s)
-    a = {(r["doc_id"], r["seq_id"], r["n_tokens"]) for r in p1.collect()}
-    b = {(r["doc_id"], r["seq_id"], r["n_tokens"]) for r in p2.collect()}
-    assert a == b
 
 
 def test_packing_plan_is_contiguous(spark, sf_dir):

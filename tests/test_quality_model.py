@@ -134,28 +134,6 @@ def test_score_empty_doc_gets_bias(spark):
     assert out[1].margin > out[2].margin
 
 
-def test_score_stream_matches_batch(spark, sf_dir, tmp_path):
-    """The stateless streaming scorer must reproduce the batch join
-    form's margins and keep decisions exactly (quantized-exact margin
-    arithmetic on both paths)."""
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    wts = [((-1) ** i) * 0.01 * (i % 7) for i in range(512)] + [0.2]
-    want = {
-        r.doc_id: (r.margin, r.keep)
-        for r in qm.score_with_model(docs, wts).collect()
-    }
-    path = str(tmp_path / "qm_stream")
-    docs.select(
-        F.to_json(F.struct("doc_id", "text")).alias("value")
-    ).write.mode("overwrite").format("text").save(path)
-    stream = spark.readStream.schema("doc_id long, text string").json(path)
-    out = run_bounded_append(qm.score_stream(stream, wts))
-    got = {r.doc_id: (r.margin, r.keep) for r in out.collect()}
-    assert got == want
-
-
 def test_score_plan_shape(spark, sf_dir):
     """Scoring = broadcast weight join + keyed agg; no cartesian, no
     row-at-a-time Python."""

@@ -152,52 +152,6 @@ def test_bm25_plan_shape(spark, sf_dir):
     assert plans.expensive_filter_nodes(df) == []
 
 
-def test_bm25_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Frozen-model stream scorer == the batch operator's scores for
-    every matched (doc, query) pair (batch run with k large enough to
-    return all matches), through a real streaming source."""
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
-
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    want = {
-        (r.q_id, r.doc_id): (r.n_terms, r.score)
-        for r in retrieval.bm25_topk(docs, k=10**6).collect()
-    }
-    model = retrieval.collect_bm25_model(docs)
-    path = str(tmp_path / "docs_stream_bm25")
-    import pyspark.sql.functions as F
-
-    docs.select(
-        F.to_json(F.struct("doc_id", "text")).alias("value")
-    ).write.mode("overwrite").format("text").save(path)
-    stream = spark.readStream.schema("doc_id long, text string").json(path)
-    out = run_bounded_append(retrieval.bm25_score_stream(stream, model))
-    got = {
-        (r.q_id, r.doc_id): (r.n_terms, r.score) for r in out.collect()
-    }
-    assert got == want
-    assert len(got) > 0
-
-
-def test_bm25_model_freeze_contract(spark):
-    """The frozen model scores NEW docs with the reference corpus'
-    statistics — a doc unseen at freeze time still gets the frozen
-    idf/avgdl arithmetic; unseen terms contribute nothing."""
-    train = spark.createDataFrame(
-        [(1, "a b"), (2, "a c"), (3, "b b")], "doc_id long, text string"
-    )
-    model = retrieval.collect_bm25_model(train, [(0, "a zz")])
-    probe = spark.createDataFrame(
-        [(10, "a a zz"), (11, "zz only")], "doc_id long, text string"
-    )
-    rows = {r.doc_id: r for r in
-            retrieval.bm25_score_stream(probe, model).collect()}
-    # doc 10 matches 'a' (zz was never in the reference corpus: no idf)
-    assert rows[10].n_terms == 1 and rows[10].score > 0
-    # doc 11 matches nothing scoreable
-    assert 11 not in rows
-
-
 # -------------------------------------------- hard-negative mining
 def test_hard_negatives_excludes_positives_and_renumbers(spark, sf_dir):
     from teste_carga_avro_vs_json_spark.operators import retrieval as R

@@ -171,3 +171,10 @@ def test_one_session_builder():
         reads += [(name, k) for k in knobs if k in text]
     assert builders == ["teste_carga_avro_vs_json_spark/session.py"]
     assert reads == []
+
+
+def test_console_progress_off(spark):
+    """The built session draws no console progress bars, which would
+    overwrite the result lines the gate tools print."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.ui.showConsoleProgress") == "false"

@@ -1,5 +1,5 @@
-"""format("snapshot") — streaming consumption of snapshot tables +
-snapshot_diff. Pinned by stream==batch equality (the documented
+"""format("snapshot") — streaming consumption of snapshot tables.
+Pinned by stream==batch equality (the documented
 convention for streaming surfaces: no SQL oracle, DuckDB has no
 streaming)."""
 
@@ -279,31 +279,6 @@ def test_schema_evolution_projection(spark, sf_dir, tmp_path):
     assert out.count() == docs.filter("doc_id < 30").count()
 
 
-# ---------------------------------------------------------- snapshot_diff
-def test_snapshot_diff_appends_and_rewrites(spark, sf_dir, tmp_path):
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "table")
-    mt.snapshot_commit(docs.filter("doc_id < 100"), tdir)
-    mt.snapshot_commit(
-        docs.filter("doc_id >= 100 and doc_id < 150"), tdir, mode="append"
-    )
-    d = mt.snapshot_diff(tdir, 1, 2)
-    assert d["append_only"] and d["ops"] == ["append"]
-    assert not d["files_removed"]
-    assert d["rows_added"] == docs.filter(
-        "doc_id >= 100 and doc_id < 150"
-    ).count()
-    # from the empty table
-    d0 = mt.snapshot_diff(tdir, 0)
-    assert d0["rows_added"] == docs.filter("doc_id < 150").count()
-    # a rewrite breaks append_only and removes files
-    mt.snapshot_compact(spark, tdir)
-    d2 = mt.snapshot_diff(tdir, 2, 3)
-    assert not d2["append_only"] and d2["files_removed"]
-    with pytest.raises(ValueError, match="not in"):
-        mt.snapshot_diff(tdir, 99)
-
-
 def test_snapshot_stream_to_kafka_wire_sink_e2e(spark, sf_dir, tmp_path):
     """Composition pin across the r10 surfaces: a snapshot table
     streams through format('snapshot') into the format('kafka_wire')
@@ -533,89 +508,6 @@ def test_stream_writer_replayed_epoch_is_noop(spark, sf_dir, tmp_path):
     w3 = ss.SnapshotStreamWriter({"path": tdir}, overwrite=False)
     w3.commit([w3.write(iter([batch]))], 1)
     assert mt.snapshot_versions(tdir) == [1, 2]
-
-
-def test_replicate_stream_exactly_once_and_batch_interop(
-    spark, sf_dir, tmp_path
-):
-    """snapshot_replicate_stream (r11): continuous CDC composed from
-    the read_changes stream + foreachBatch net-outcome merge.
-    Checkpointed restarts replay no change twice (epoch fold via
-    (replicate_stream, batch) in dst manifest extra — exercised by
-    deleting the checkpoint's last commit marker, the standard
-    crash-between-commit-and-ack simulation), replica == source after
-    a mixed mutation history, and batch-mode snapshot_replicate can
-    take over the same high-water protocol."""
-    import glob
-    import os as _os
-
-    docs = _docs(spark, sf_dir)
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    cp = str(tmp_path / "cp")
-    mt.snapshot_commit(docs.filter("doc_id < 120"), src)
-
-    r1 = mt.snapshot_replicate_stream(
-        spark, src, dst, keys=["doc_id"], checkpoint=cp
-    )
-    assert r1["batches_applied"] >= 1
-    assert _same(
-        mt.snapshot_read(spark, dst), mt.snapshot_read(spark, src)
-    )
-
-    # mixed churn while the stream is down: update-merge, mor delete,
-    # reorg (transparent), append
-    mt.snapshot_merge(
-        docs.filter("doc_id < 10").withColumn("text", F.lit("v2")),
-        src, keys=["doc_id"],
-    )
-    mt.snapshot_delete(spark, src, "doc_id % 7 = 3", mode="mor")
-    mt.snapshot_cluster_by(spark, src, "doc_id", n_files=2)
-    mt.snapshot_commit(
-        docs.filter("doc_id >= 120 and doc_id < 150"), src, mode="append"
-    )
-    r2 = mt.snapshot_replicate_stream(
-        spark, src, dst, keys=["doc_id"], checkpoint=cp
-    )
-    assert r2["batches_applied"] >= 1
-    assert _same(
-        mt.snapshot_read(spark, dst), mt.snapshot_read(spark, src)
-    )
-
-    # crash between dst commit and checkpoint ack: drop the newest
-    # checkpoint commit marker so the last batch REPLAYS with the same
-    # batch id — the epoch fold must apply nothing
-    versions_before = mt.snapshot_versions(dst)
-    commits = sorted(
-        p for p in glob.glob(_os.path.join(cp, "commits", "*"))
-        if not p.endswith(".tmp") and not p.endswith(".crc")
-    )
-    _os.remove(commits[-1])
-    crc = _os.path.join(
-        _os.path.dirname(commits[-1]),
-        "." + _os.path.basename(commits[-1]) + ".crc",
-    )
-    if _os.path.exists(crc):  # stale sidecar reads as concurrent use
-        _os.remove(crc)
-    r3 = mt.snapshot_replicate_stream(
-        spark, src, dst, keys=["doc_id"], checkpoint=cp
-    )
-    assert mt.snapshot_versions(dst) == versions_before
-    assert r3["batches_applied"] == 0  # folded, not re-applied
-    assert _same(
-        mt.snapshot_read(spark, dst), mt.snapshot_read(spark, src)
-    )
-
-    # the high-water protocol is shared: batch mode sees it's synced
-    rb = mt.snapshot_replicate(spark, src, dst, keys=["doc_id"])
-    assert not rb["applied"]
-    # and can take over the feed after further churn
-    mt.snapshot_delete(spark, src, "doc_id = 42", mode="cow")
-    rb2 = mt.snapshot_replicate(spark, src, dst, keys=["doc_id"])
-    assert rb2["applied"]
-    assert _same(
-        mt.snapshot_read(spark, dst), mt.snapshot_read(spark, src)
-    )
 
 
 def test_read_changes_stream_equals_batch_cdf(spark, sf_dir, tmp_path):
