@@ -36,32 +36,16 @@ from teste_carga_avro_vs_json_spark.session import get_spark
 from teste_carga_avro_vs_json_spark.sources import generator, io_files
 
 
-def _producer_metrics(msgs, warmup: int):
-    """Producer-side metrics: structural size estimate, all success
-    (file writes either all land or the job fails — acks=1 semantics
-    collapse to job success in batch)."""
-    sized = routing.size_estimate(msgs)
+def _report(msgs, warmup: int):
+    """Metrics report over a message frame: structural size estimate,
+    all success (file writes either all land or the job fails — acks=1
+    semantics collapse to job success in batch). ``registrar`` keeps
+    (sequencia, tamanho_bytes, sucesso); the event clock is rebuilt
+    from ``sequencia`` after it (the generator's EPOCH0 + sequencia)."""
     src = metrics.registrar(
-        sized.withColumn("sucesso", F.lit(True)).withColumn(
-            "ts_ms", F.lit(generator.EPOCH0) + F.col("sequencia")
-        ),
+        routing.size_estimate(msgs),
         bytes_col="tamanho_estimado",
-        sucesso_col="sucesso",
-    ).join(
-        msgs.select("sequencia", (F.lit(generator.EPOCH0) + F.col("sequencia")).alias("ts_ms")),
-        "sequencia",
-    )
-    return metrics.relatorio(metrics.metricas_agg(metrics.warmup_filter(src, warmup)))
-
-
-def _consumer_metrics(spark, decoded, warmup: int):
-    sized = routing.size_estimate(decoded)
-    src = metrics.registrar(
-        sized.withColumn("sucesso", F.lit(True)).withColumn(
-            "ts_ms", F.lit(generator.EPOCH0) + F.col("sequencia")
-        ),
-        bytes_col="tamanho_estimado",
-        sucesso_col="sucesso",
+        sucesso_col=F.lit(True),
     ).withColumn("ts_ms", F.lit(generator.EPOCH0) + F.col("sequencia"))
     return metrics.relatorio(metrics.metricas_agg(metrics.warmup_filter(src, warmup)))
 
@@ -89,7 +73,7 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
             if app.endswith("JSON")
             else serde.avro_roundtrip(msgs)
         )
-        report = _producer_metrics(decoded, warmup)
+        report = _report(decoded, warmup)
     elif cfg.bootstrap_servers:
         # TRUE Kafka mode (r6): the reference's actual scenario — the
         # producer app publishes keyed, partition-routed wire frames to
@@ -118,7 +102,7 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
                 .mode("append")
                 .save()
             )
-            report = _producer_metrics(msgs, warmup)
+            report = _report(msgs, warmup)
         else:
             # the reference consumer positions at end-N before reading
             # (posicionarNoFimMenosN, ConsumidorAvro.java:163-180): only
@@ -169,14 +153,14 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
                         raw.withColumnRenamed("value", "valor_avro")
                     )
                 )
-                report = _consumer_metrics(spark, decoded, warmup)
+                report = _report(decoded, warmup)
     elif app.startswith("PRODUTOR"):
         msgs = generator.mensagens(spark, total, kb)
         if app == "PRODUTOR_JSON":
             io_files.write_json(msgs, path, P, cfg.compression_type)
         else:
             io_files.write_avro(msgs, path, P, cfg.compression_type)
-        report = _producer_metrics(msgs, warmup)
+        report = _report(msgs, warmup)
     else:
         if cfg.bench_mode == "TRANSPORTE":
             # raw bytes, no parse (ConsumidorJson.java:59-114)
@@ -201,7 +185,7 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
                 if app == "CONSUMIDOR_JSON"
                 else io_files.read_avro(spark, path)
             )
-            report = _consumer_metrics(spark, decoded, warmup)
+            report = _report(decoded, warmup)
 
     [row] = report.collect()
     return row.asDict()

@@ -10,7 +10,6 @@ from teste_carga_avro_vs_json_spark.functions.portable import (  # noqa: F401
     hex32,
     hex32_sql,
     pseudo_uuid_sql,
-    rand_text,
     rand_text_sql,
     pseudo_double_sql,
 )

@@ -41,7 +41,6 @@ import struct
 
 import pandas as pd
 from pyspark.sql import Column
-import pyspark.sql.functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -612,15 +611,6 @@ def _lazy_resolver(writer, reader, w_env, r_env, _cache):
             raise AvroResolutionError(msg)
 
         return _fail
-
-
-def decode_resolved(writer_schema, reader_schema, data: bytes):
-    w_root, w_env = parse_schema(writer_schema)
-    r_root, r_env = parse_schema(reader_schema)
-    value, pos = make_resolver(w_root, r_root, w_env, r_env)(data, 0)
-    if pos != len(data):
-        raise ValueError(f"{len(data) - pos} trailing bytes")
-    return value
 
 
 # ------------------------------------------------------- spark exposure

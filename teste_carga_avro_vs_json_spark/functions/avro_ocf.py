@@ -139,31 +139,4 @@ def read_ocf(data: bytes) -> list[dict]:
     return out
 
 
-def read_ocf_any(data: bytes, reader_schema: str | None = None) -> list:
-    """Schema-agnostic OCF reader with spec resolution: the WRITER
-    schema comes from the file's own ``avro.schema`` metadata (OCFs are
-    self-describing); ``reader_schema`` evolves it — added fields
-    default-fill, removed fields skip, promotions apply
-    (:func:`functions.avro_generic.make_resolver`). ``None`` reads in
-    the writer's shape."""
-    from teste_carga_avro_vs_json_spark.functions import avro_generic as ag
-
-    meta, sync, pos = _parse_header(data)
-    codec = meta.get("avro.codec", b"null").decode()
-    writer = meta["avro.schema"].decode()
-    w_root, w_env = ag.parse_schema(writer)
-    if reader_schema is None:
-        resolver = ag._make_decoder(w_root, w_env)
-    else:
-        r_root, r_env = ag.parse_schema(reader_schema)
-        resolver = ag.make_resolver(w_root, r_root, w_env, r_env)
-    out: list = []
-    for n_rec, payload in _iter_blocks(data, codec, sync, pos):
-        rpos = 0
-        for _ in range(n_rec):
-            rec, rpos = resolver(payload, rpos)
-            out.append(rec)
-    return out
-
-
-__all__ = ["MAGIC", "write_ocf", "read_ocf", "read_ocf_any", "sync_marker"]
+__all__ = ["MAGIC", "write_ocf", "read_ocf", "sync_marker"]

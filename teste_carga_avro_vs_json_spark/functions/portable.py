@@ -10,9 +10,9 @@ arithmetic that evaluates identically in Spark SQL and DuckDB SQL:
 - base64(md5-bytes) -> same standard alphabet in both engines
 
 Every builder here returns a *pair of dialects*: ``f_sx(expr)`` gives the
-Spark SQL fragment (``hex32`` and ``rand_text`` also keep a Column
-form), ``f_sql(expr)`` the DuckDB SQL fragment. Keeping them
-adjacent in one module is what keeps the two dialects in lockstep.
+Spark SQL fragment (``hex32`` also keeps a Column form), ``f_sql(expr)``
+the DuckDB SQL fragment. Keeping them adjacent in one module is what
+keeps the two dialects in lockstep.
 
 All md5-derived integers are taken from the first 8 hex chars, i.e.
 uniform in [0, 2^32) — always positive, so ``%`` is sign-safe in both
@@ -77,16 +77,9 @@ def pseudo_uuid_sql(expr: str) -> str:
 # '/'->b and deletes '='. Repeating 5x gives >=110 chars; slice to length.
 # Alphabet stays inside the reference's [A-Za-z0-9]
 # (GeradorCargaEstruturada.java:69).
-def rand_text(key: Column | str, length: int = 100) -> Column:
-    """Deterministic noise text of exactly ``length`` chars
-    (replaces gerarTextoAleatorio, GeradorCargaEstruturada.java:67-74)."""
-    block = F.translate(F.base64(F.unhex(F.md5(_as_col(key)))), "+/=", "ab")
-    reps = (length // 22) + 2
-    return F.substring(F.repeat(block, reps), 1, length)
-
-
 def rand_text_sx(expr: str, length: int = 100) -> str:
-    """SPARK-SQL fragment twin of :func:`rand_text`."""
+    """Deterministic noise text of exactly ``length`` chars (replaces
+    gerarTextoAleatorio, GeradorCargaEstruturada.java:67-74)."""
     reps = (length // 22) + 2
     block = f"translate(base64(unhex(md5({expr}))), '+/=', 'ab')"
     return f"substring(repeat({block}, {reps}), 1, {length})"

@@ -152,32 +152,6 @@ def parsing_canonical_form(schema: str) -> str:
     )
 
 
-def rabin_fingerprint(pcf: str) -> int:
-    """64-bit Rabin fingerprint (CRC-64-AVRO) of a Parsing Canonical
-    Form string — the spec's standard schema fingerprint (Avro spec,
-    §Schema Fingerprints; the EMPTY polynomial seed is given there).
-    Returned as an unsigned int; used for compact schema identity where
-    a registry id is unavailable."""
-    empty = 0xC15D213AA4D7A795
-    table = getattr(rabin_fingerprint, "_table", None)
-    if table is None:
-        table = []
-        for i in range(256):
-            fp = i
-            for _ in range(8):
-                fp = (fp >> 1) ^ (empty & -(fp & 1))
-            table.append(fp)
-        rabin_fingerprint._table = table
-    fp = empty
-    for byte in pcf.encode("utf-8"):
-        # per the spec's reference code: fp = (fp >>> 8) ^ table[...]
-        # (the table builder shifts by 1 eight times; the byte step
-        # shifts by 8 — r6 interop testing against Java's
-        # SchemaNormalization caught a >>1 here)
-        fp = (fp >> 8) ^ table[(fp ^ byte) & 0xFF]
-    return fp
-
-
 class InMemorySchemaRegistry:
     """Subject -> versioned schema store with Confluent id semantics:
     ids are GLOBAL content identity — the same canonical schema gets
@@ -631,66 +605,6 @@ class SchemaRegistryServer:
     def __exit__(self, *exc) -> None:
         self._server.shutdown()
         self._server.server_close()
-
-
-# ------------------------------------------- single-object encoding
-SINGLE_OBJECT_MAGIC = b"\xc3\x01"
-
-
-def single_object_wrap(body: bytes, schema: str) -> bytes:
-    """Avro single-object encoding (spec §Single-object encoding):
-    2-byte magic C3 01 + the schema's 8-byte LITTLE-ENDIAN CRC-64-AVRO
-    fingerprint + the binary-encoded body — the registry-less framing
-    for datum-at-a-time transports (message queues, logs). The
-    fingerprint is pinned against Java's SchemaNormalization."""
-    fp = rabin_fingerprint(parsing_canonical_form(schema))
-    return SINGLE_OBJECT_MAGIC + fp.to_bytes(8, "little") + body
-
-
-def single_object_unwrap(
-    frame: bytes, store: dict[int, str]
-) -> tuple[str, bytes]:
-    """Parse a single-object frame: returns (writer_schema, body) by
-    looking the fingerprint up in ``store`` (fingerprint -> schema
-    JSON). Raises KeyError for an unknown fingerprint and ValueError
-    for bad magic."""
-    if frame[:2] != SINGLE_OBJECT_MAGIC:
-        raise ValueError("not a single-object frame (bad magic)")
-    fp = int.from_bytes(frame[2:10], "little")
-    return store[fp], frame[10:]
-
-
-def fingerprint_store(*schemas: str) -> dict[int, str]:
-    """fingerprint -> schema map for :func:`single_object_unwrap` (the
-    consumer-side registry-less schema store)."""
-    return {
-        rabin_fingerprint(parsing_canonical_form(s)): s for s in schemas
-    }
-
-
-def single_object_wrap_col(body: Column, schema: str) -> Column:
-    """Column form of :func:`single_object_wrap`: the 10-byte header is
-    a per-schema LITERAL, so framing is a scan-local JVM ``concat`` —
-    zero Python in the hot path (same shape as the Confluent framing
-    wrappers in functions/avro_codec.py)."""
-    import pyspark.sql.functions as F
-
-    fp = rabin_fingerprint(parsing_canonical_form(schema))
-    header = SINGLE_OBJECT_MAGIC + fp.to_bytes(8, "little")
-    return F.concat(F.lit(header), body)
-
-
-def single_object_fingerprint_col(frame: Column) -> Column:
-    """Extract the frame's 8-byte little-endian fingerprint as an
-    unsigned decimal STRING column (JVM-side: hex the bytes, reverse
-    the byte pairs to big-endian, ``conv`` base 16→10 — all scan-local,
-    no Python). Compare against ``str(rabin_fingerprint(...))``."""
-    import pyspark.sql.functions as F
-
-    hx = F.hex(F.substring(frame, 3, 8))  # 16 hex chars, LE byte order
-    pairs = [F.substring(hx, i * 2 + 1, 2) for i in range(8)]
-    big_endian = F.concat(*reversed(pairs))
-    return F.conv(big_endian, 16, 10).alias("fingerprint")
 
 
 # -------------------------------------------------- compatibility modes

@@ -14,5 +14,5 @@
 - ``asof``       as-of join (temporal attribution), sessionization
 - ``similarity`` embedding cosine top-k (brute force + LSH-bucketed)
 - ``multimodal`` binary payload columns with typed metadata (stubbed decode)
-- ``skew``       salted aggregation / salted broadcast join
+- ``skew``       salted two-phase aggregation
 """

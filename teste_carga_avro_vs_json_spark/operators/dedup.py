@@ -21,9 +21,6 @@ Everything is built-in expressions (md5/array HOFs) — no UDFs, no
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
@@ -35,8 +32,6 @@ from teste_carga_avro_vs_json_spark.functions.portable import (
 from teste_carga_avro_vs_json_spark.operators.text import (
     tokens,
     tokens_sql,
-    tokens_sx,
-    word_kgrams,
     word_kgrams_sx,
 )
 
@@ -88,49 +83,7 @@ def exact_dedup_scale(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def incremental_dedup(
-    delta: DataFrame, corpus: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Delta-vs-corpus exact dedup — the production shape for ingesting
-    a new crawl/batch against an existing deduplicated corpus: keep
-    only delta rows whose content fingerprint is (a) absent from the
-    corpus and (b) the first occurrence within the delta itself.
-
-    Registry-retired extra (50-entry cap): pytest pins it against the
-    batch-union formulation (incremental over a split == exact dedup of
-    the union, restricted to delta-won fingerprints).
-
-    100 TB shape: the corpus side reduces to its DISTINCT fingerprint
-    set before the anti-join — at 10^11 docs the join probes move one
-    16-byte key pair per row and the corpus build side is fingerprints
-    only, never text. AQE handles hot fingerprints; both the
-    within-delta dedup and the anti-join key on the same pair, so the
-    delta is shuffled once."""
-    fp = [
-        F.xxhash64(F.col(text_col)).alias("fp64"),
-        F.xxhash64(F.lit("fp2|"), F.col(text_col)).alias("fp64b"),
-    ]
-    seen = corpus.select(*fp).dropDuplicates(["fp64", "fp64b"])
-    fresh = (
-        delta.select(*fp, "doc_id")
-        .groupBy("fp64", "fp64b")
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-    )
-    return fresh.join(seen, ["fp64", "fp64b"], "left_anti")
-
-
 # --------------------------------------------------------------- shingles
-def shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles ('w1 w2 w3' strings). Empty/short docs
-    yield what they can (< k words → no shingles → empty array).
-
-    Tokenizes inline (k+1 evaluations per row); hot paths should use
-    :func:`_shingled`, which stages the token array behind a projection
-    so the tokenizer runs exactly once per row."""
-    return F.array_distinct(word_kgrams(tokens(text), k))
 
 
 def _shingled(
@@ -645,17 +598,8 @@ def simhash_sql(table: str = "documents", bits: int = 16) -> str:
 
 # ------------------------------------------------------------- bloom
 #
-# Bloom-filter incremental dedup — the Dolma mechanism: when the
-# historical corpus is 100 TB, even a fingerprints-only anti-join
-# (incremental_dedup above) means re-scanning 10^11 keys per ingest
-# batch. A Bloom filter compresses the ENTIRE seen-set into a fixed
-# byte array (e.g. 10^9 docs at 1% FP ≈ 1.2 GB) that broadcasts once
-# and gates the firehose with zero joins, zero shuffles and zero
-# state growth. The trade is principled: NO false negatives (a true
-# duplicate is always caught — the dedup guarantee), a tunable
-# false-positive rate (a tiny fraction of fresh docs wrongly dropped
-# — harmless for training corpora, and measurable: callers get the
-# theoretical rate alongside the filter).
+# The per-file manifest Bloom filters of operators/maintenance.py
+# (equality data skipping) are built and probed with this filter.
 
 
 class BloomFilter:
@@ -683,11 +627,6 @@ class BloomFilter:
         k = max(1, round(m / n * math.log(2)))
         return m, k
 
-    def theoretical_fpp(self, n_items: int) -> float:
-        import math
-
-        return (1.0 - math.exp(-self.k * n_items / self.m_bits)) ** self.k
-
     def contains(self, text: str) -> bool:
         h1, h2 = _bloom_h(text)
         for i in range(self.k):
@@ -707,92 +646,3 @@ def _bloom_h(text: str) -> tuple[int, int]:
         int.from_bytes(d[:8], "little"),
         int.from_bytes(d[8:], "little") | 1,  # odd => full-cycle stride
     )
-
-
-def bloom_build(
-    corpus: DataFrame,
-    text_col: str = "text",
-    n_items: int | None = None,
-    fpp: float = 0.01,
-) -> BloomFilter:
-    """Distributed Bloom build: ONE corpus scan. Each partition folds
-    its texts into a local m-bit bitmap inside an Arrow batch pass
-    (``mapInPandas`` — the documented py-lane; bit setting is not a
-    JVM expression), emits the bitmap ONCE as chunked rows, and the
-    driver ORs the per-partition bitmaps — the classic commutative
-    monoid reduce, so the result is partitioning-independent. Driver
-    traffic is (n_partitions × m/8) bytes, never row data; a 1000-
-    executor deployment drops in ``treeAggregate`` semantics by
-    OR-reducing chunk rows with one extra shuffle stage if the
-    partition count makes the driver fan-in the bottleneck."""
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    if n_items is None:
-        n_items = corpus.count()
-    m_bits, k = BloomFilter.params(n_items, fpp)
-    n_bytes = m_bits // 8
-    chunk = 1 << 20
-
-    def _bitmaps(batches):
-        import numpy as np
-
-        local = np.zeros(n_bytes, dtype=np.uint8)
-        touched = False
-        for pdf in batches:
-            for text in pdf.iloc[:, 0]:
-                h1, h2 = _bloom_h(text)
-                for i in range(k):
-                    pos = (h1 + i * h2) % m_bits
-                    local[pos >> 3] |= 1 << (pos & 7)
-                touched = True
-        if touched:
-            rows = [
-                (off // chunk, local[off : off + chunk].tobytes())
-                for off in range(0, n_bytes, chunk)
-            ]
-            yield pd.DataFrame(rows, columns=["chunk_id", "bits"])
-
-    parts = corpus.select(text_col).mapInPandas(
-        _bitmaps, "chunk_id int, bits binary"
-    )
-    import numpy as np
-
-    merged = np.zeros(n_bytes, dtype=np.uint8)
-    for row in parts.collect():
-        off = row["chunk_id"] * chunk
-        arr = np.frombuffer(bytes(row["bits"]), dtype=np.uint8)
-        merged[off : off + len(arr)] |= arr
-    return BloomFilter(m_bits, k, merged.tobytes())
-
-
-def bloom_dedup(
-    delta: DataFrame,
-    bloom: BloomFilter,
-    text_col: str = "text",
-) -> DataFrame:
-    """Gate an ingest batch (or unbounded stream — the projection is
-    stateless) against a
-    built filter: adds ``probably_seen``; callers keep the False rows.
-    NO false negatives: every text inserted by ``bloom_build`` tests
-    True here (same md5 halves, same stride). One Arrow-batched
-    projection, zero shuffle; the filter bytes ride the closure once
-    per executor."""
-    m_bits, k, bits = bloom.m_bits, bloom.k, bloom.bits
-
-    @F.pandas_udf("boolean")
-    def _seen(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in texts:
-            out = []
-            for text in batch:
-                h1, h2 = _bloom_h(text)
-                hit = True
-                for i in range(k):
-                    pos = (h1 + i * h2) % m_bits
-                    if not (bits[pos >> 3] >> (pos & 7)) & 1:
-                        hit = False
-                        break
-                out.append(hit)
-            yield pd.Series(out, dtype="bool")
-
-    return delta.withColumn("probably_seen", _seen(F.col(text_col)))

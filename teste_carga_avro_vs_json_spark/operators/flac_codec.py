@@ -1,8 +1,8 @@
 """Pure-stdlib FLAC codec (RFC 9639) — closes the ``flac`` half of the
 compressed-media boundary the same way ``sources/zstd_stdlib`` closed
 zstd: a real spec-conformant implementation on stdlib only, so
-``decode_audio``/``audio_neardup`` run on genuinely compressed audio in
-this container instead of the import-gated soundfile path.
+genuinely compressed audio decodes in this container instead of
+behind the import-gated soundfile path.
 
 FLAC is LOSSLESS, so the correctness pin is exact: encode→decode must
 reproduce the input samples bit-for-bit AND the STREAMINFO MD5 of the
@@ -33,9 +33,7 @@ Spec bit conventions implemented (RFC 9639):
 
 Scale shape: this codec runs executor-side inside ``mapInPandas``
 batches (the multimodal convention) — payload bytes never shuffle. A
-pure-Python bit-level decode is the honest cost of zero dependencies;
-production clusters flip to soundfile/libFLAC via the existing
-``decode_audio`` gate with no schema change.
+pure-Python bit-level decode is the honest cost of zero dependencies.
 """
 
 from __future__ import annotations

@@ -2,8 +2,8 @@
 half of the compressed-media boundary, closed the same way
 ``flac_codec`` closed audio and ``zstd_stdlib`` closed wire
 compression: a real spec implementation on stdlib only, so
-``decode_image`` / ``image_dhash`` run on genuine JPEGs in this
-container instead of the import-gated Pillow path.
+``image_dhash`` runs on genuine JPEGs in this container instead of
+behind the import-gated Pillow path.
 
 JPEG is LOSSY, so the pins are layered rather than bit-exact
 (``tests/test_jpeg.py``):
@@ -34,8 +34,7 @@ directions (test_imageio_interop.py). Lossless/hierarchical/
 arithmetic SOFs raise ``NotImplementedError`` (documented boundary).
 
 Scale shape: same as every codec here — decode runs executor-side in
-``mapInPandas`` batches, payload bytes never shuffle; clusters with
-Pillow flip ``decode_image`` to the C path with no schema change.
+``mapInPandas`` batches, payload bytes never shuffle.
 """
 
 from __future__ import annotations

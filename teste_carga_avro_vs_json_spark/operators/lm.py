@@ -242,24 +242,6 @@ def perplexity_score(
     )
 
 
-def nll_cutoff(scored: DataFrame, keep_frac: float) -> float:
-    """The absolute avg_nll cutoff the quantile gate implies —
-    PERCENTILE_DISC(keep_frac): the largest avg_nll any kept doc has.
-    Compute this ONCE batch-side and freeze it into a stateless gate
-    (``avg_nll <= cut``): a stream cannot see the corpus distribution,
-    which is exactly how CCNet deploys its bucketing (thresholds come
-    from a reference corpus).
-    Bounded driver collect: one scalar."""
-    w = Window.orderBy("avg_nll")
-    row = (
-        scored.withColumn("cd", F.cume_dist().over(w))
-        .filter(F.col("cd") >= F.lit(keep_frac))
-        .agg(F.min("avg_nll").alias("cut"))
-        .first()
-    )
-    return float(row["cut"]) if row["cut"] is not None else float("inf")
-
-
 def perplexity_score_sql(
     table: str = "documents",
     keep_nll: float = 3.4,

@@ -1,35 +1,21 @@
-"""Dataset maintenance — the housekeeping a 100 TB parquet corpus
-needs between pipeline runs: small-file compaction and sort-based
-clustering for scan locality. The reference engine writes flat files
-with no layout management (SURVEY.md §2.2 — no table maintenance);
-these are the standard lakehouse operations (Delta/Iceberg
-OPTIMIZE / ZORDER are the productized forms) re-expressed as plain
-Spark primitives over plain parquet directories.
+"""Dataset maintenance — versioned snapshot tables over plain parquet
+directories and the housekeeping a 100 TB corpus needs between
+pipeline runs. The reference engine writes flat files with no layout
+management (SURVEY.md §2.2 — no table maintenance); these are the
+standard lakehouse operations (Delta/Iceberg commit, MERGE, DELETE,
+change feed, OPTIMIZE) re-expressed as plain Spark primitives.
 
-Why these matter at scale:
+Layout maintenance is a snapshot commit like any other:
 
-- **Compaction** (`compact`): a streaming or per-batch ingest leaves
-  thousands of KB-sized files; every one costs a scheduler task, a
-  file-open round-trip and a footer read. Target-sized output files
-  restore O(bytes / target) task counts. Implemented as
-  ``coalesce(n)`` — a NARROW repartitioning (no shuffle: partitions
-  are concatenated, never rehashed) sized from the dataset's actual
-  on-disk bytes; only the rarer split direction (more files than scan
-  partitions) pays one round-robin shuffle.
-- **Clustering** (`cluster_by`): ``repartitionByRange(col) +
-  sortWithinPartitions(col)`` gives every output file a tight,
-  pairwise-disjoint min/max range on the cluster key, which parquet
-  records in its footer statistics — so a point/range predicate on
-  that key prunes whole files (and row groups) at planning time
-  instead of scanning. One range shuffle, total ordering across
-  files; the sampled range boundaries make output sizes balanced
-  even on skewed keys.
+- **Compaction** (:func:`snapshot_compact`): target-sized output files
+  restore O(bytes / target) task counts after many small appends.
+- **Clustering** (:func:`snapshot_cluster_by`): a range repartition +
+  sort gives every output file a tight, pairwise-disjoint min/max
+  range on the cluster key, recorded in the manifest stats, so point
+  and range predicates prune whole files at planning time.
 
 Both preserve content EXACTLY (multiset equality pinned in
-``tests/test_maintenance.py``; the clustering pin additionally reads
-the parquet footers back with pyarrow and asserts the per-file
-min/max ranges are disjoint — the pruning property itself, not a
-proxy for it).
+``tests/test_maintenance.py``).
 """
 
 from __future__ import annotations
@@ -41,204 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 
-def _dataset_bytes(spark: SparkSession, src_dir: str) -> int:
-    """Total on-disk bytes of a parquet dataset's data files, via the
-    same file listing the scan will use (``inputFiles``) — works for
-    local paths (the test/bench environment); a DFS deployment swaps
-    in the FileSystem API behind this one helper."""
-    total = 0
-    for uri in spark.read.parquet(src_dir).inputFiles():
-        path = uri[len("file:"):] if uri.startswith("file:") else uri
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            pass
-    return total
-
-
 def plan_output_files(total_bytes: int, target_mb: float) -> int:
     """ceil(bytes / target), floored at 1 — pure so it is testable.
     ``target_mb`` may be fractional (small fixtures / tests)."""
     return max(1, math.ceil(total_bytes / (target_mb * 1024 * 1024)))
-
-
-def compact(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    target_mb: float = 256,
-) -> dict:
-    """Rewrite ``src_dir`` as ``ceil(bytes/target_mb)`` parquet files
-    in ``dst_dir``. Narrow plan: ``coalesce`` concatenates input
-    partitions without a shuffle (row order within partitions is
-    preserved; no key movement). Returns audit stats — the
-    no-silent-caps convention: report what the rewrite did."""
-    df = spark.read.parquet(src_dir)
-    in_files = len(df.inputFiles())
-    total = _dataset_bytes(spark, src_dir)
-    n_out = plan_output_files(total, target_mb)
-    # The scan itself bundles small files into <= maxPartitionBytes
-    # partitions, so the common (merge) direction is a narrow
-    # ``coalesce``. If the plan needs MORE files than the scan has
-    # partitions (splitting oversized files), a narrow op cannot
-    # create partitions — that direction genuinely requires one
-    # round-robin shuffle, exactly as lakehouse OPTIMIZE does.
-    n_scan = df.rdd.getNumPartitions()
-    shaped = df.coalesce(n_out) if n_out <= n_scan else df.repartition(n_out)
-    shaped.write.mode("overwrite").parquet(dst_dir)
-    out_files = len(spark.read.parquet(dst_dir).inputFiles())
-    return {
-        "input_files": in_files,
-        "input_bytes": total,
-        "planned_files": n_out,
-        "output_files": out_files,
-        "shuffled": n_out > n_scan,
-    }
-
-
-def cluster_by(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    col: str,
-    n_files: int | None = None,
-    target_mb: float = 256,
-) -> dict:
-    """Rewrite ``src_dir`` range-clustered on ``col``: one range
-    shuffle (sampled boundaries → balanced files even on skew), sorted
-    within partitions, so every output file carries a tight disjoint
-    [min, max] footer range on ``col`` and predicate pushdown prunes
-    files instead of scanning them."""
-    df = spark.read.parquet(src_dir)
-    if n_files is None:
-        n_files = plan_output_files(_dataset_bytes(spark, src_dir), target_mb)
-    (
-        df.repartitionByRange(n_files, F.col(col))
-        .sortWithinPartitions(col)
-        .write.mode("overwrite")
-        .parquet(dst_dir)
-    )
-    out_files = len(spark.read.parquet(dst_dir).inputFiles())
-    return {"planned_files": n_files, "output_files": out_files}
-
-
-def file_ranges(dst_dir: str, col: str) -> list[tuple[str, object, object]]:
-    """Read back every data file's parquet FOOTER statistics for
-    ``col`` — [(file, min, max)] — via pyarrow. This is the pruning
-    contract itself: what a scan's predicate pushdown consults."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(dst_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        path = os.path.join(dst_dir, name)
-        md = pq.read_metadata(path)
-        idx = md.schema.names.index(col)
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                continue
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        if lo is not None:
-            out.append((name, lo, hi))
-    return out
-
-
-def _zvalue_col(bucket_cols: list, bits: int):
-    """Interleave the low ``bits`` bits of N bucket-index columns into
-    one Morton (Z-curve) value — fixed-width JVM bit arithmetic, a
-    pure projection (never filtered on, so no expensive-filter risk)."""
-    n = len(bucket_cols)
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for j, c in enumerate(bucket_cols):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftrightunsigned(c.cast("long"), i).bitwiseAND(
-                        F.lit(1)
-                    ),
-                    i * n + j,
-                )
-            )
-    return z
-
-
-def zorder_by(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    cols: list[str],
-    n_files: int | None = None,
-    target_mb: float = 256,
-    bits: int = 6,
-) -> dict:
-    """Multi-column clustering via a Morton (Z-order) curve — the
-    lakehouse ZORDER: single-column range clustering gives perfect
-    pruning on ONE key and none on the others; interleaving the
-    quantile-bucket bits of each key makes every output file cover a
-    small hyper-rectangle of the key space, so footer min/max ranges
-    prune usefully on EVERY listed column at once.
-
-    Per column: 2^bits QUANTILE boundaries from ``approxQuantile``
-    (driver-side, 2^bits doubles — bounded; quantile buckets, not
-    equal-width, so skewed keys still fill the curve evenly, the same
-    choice Delta's ZORDER makes via range_partition_id). The bucket
-    lookup is a fold over the broadcast-constant boundary array —
-    O(2^bits) interpreted per row, which is why ``bits`` defaults to
-    6: 64 buckets/column = 4096 z-cells for two columns, far more
-    granularity than file-level pruning can use (cells >> files), at
-    63 compares/row. Do NOT raise bits past ~8 without moving the
-    lookup JVM-side (the k-means HOF-fold lesson). Then
-    bit-interleave → one range shuffle on the z-value + sort within
-    partitions. Content preserved exactly (multiset pin in tests);
-    pruning asserted by reading the per-file footer statistics back,
-    same contract as :func:`cluster_by`."""
-    df = spark.read.parquet(src_dir)
-    if n_files is None:
-        n_files = plan_output_files(_dataset_bytes(spark, src_dir), target_mb)
-    (
-        _zorder_frame(df, cols, n_files, bits)
-        .write.mode("overwrite")
-        .parquet(dst_dir)
-    )
-    out_files = len(spark.read.parquet(dst_dir).inputFiles())
-    return {"planned_files": n_files, "output_files": out_files}
-
-
-def _zorder_frame(
-    df: DataFrame, cols: list[str], n_files: int, bits: int
-) -> DataFrame:
-    """The Z-order rewrite as a frame transform (shared by
-    :func:`zorder_by` and :func:`snapshot_zorder_by`)."""
-    n_buckets = 1 << bits
-    bucket_exprs = []
-    for c in cols:
-        qs = df.stat.approxQuantile(
-            c, [i / n_buckets for i in range(1, n_buckets)], 0.001
-        )
-        # strictly increasing boundary list (dedup ties) keeps the
-        # bucket lookup a sorted-array search
-        bounds = sorted(set(qs))
-        arr = F.array(*[F.lit(b) for b in bounds])
-        # bucket = count of boundaries <= value: a fixed-size fold on a
-        # broadcast-constant array, row-local
-        bucket = F.aggregate(
-            arr,
-            F.lit(0),
-            lambda acc, b: acc
-            + F.when(F.col(c) >= b, F.lit(1)).otherwise(F.lit(0)),
-        )
-        bucket_exprs.append(F.coalesce(bucket, F.lit(0)))
-    z = _zvalue_col(bucket_exprs, bits)
-    return (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
 
 
 # ----------------------------------------------------------- snapshots
@@ -273,11 +65,6 @@ def _zorder_frame(
 
 class SnapshotConflictError(RuntimeError):
     """Commit lost the version race ``max_retries`` times in a row."""
-
-
-class ConstraintViolationError(ValueError):
-    """Incoming rows (or, when ADDING a constraint, existing rows)
-    violate a table CHECK constraint — the commit publishes nothing."""
 
 
 _SNAP_DIR = "_snapshots"
@@ -339,8 +126,8 @@ def snapshot_commit(
     table indexed through appends, compactions and merges; pass
     ``()`` to stop indexing new files.
 
-    ``parent_version`` (reorg overwrites only — compact/cluster/
-    zorder pass it) names the version the rewrite was computed FROM:
+    ``parent_version`` (reorg overwrites only — compact/cluster pass
+    it) names the version the rewrite was computed FROM:
     commits that landed after it are folded in when they are pure
     appends (their files ride along unreorganized) and raise
     :class:`SnapshotConflictError` otherwise — without it, a reorg
@@ -357,13 +144,6 @@ def snapshot_commit(
             bloom_cols = _manifest_bloom_cols(
                 _read_manifest(table_dir, prior[-1])
             )
-    cons = snapshot_constraints(table_dir)
-    if cons and not (extra or {}).get("reorg"):
-        # CHECK constraints gate every commit's NEW rows — one filter
-        # pass over df, never the table (r11). Reorg commits preserve
-        # content exactly, so re-validating them would add an O(table)
-        # pass for rows that already passed.
-        _enforce_constraints(df, cons, "commit")
     # data dir is unique per ATTEMPT, never keyed by version: two
     # racing writers must not write into the same parquet directory.
     # Entries carry per-file footer min/max stats (data skipping).
@@ -384,7 +164,6 @@ def _publish_files(
     extra: dict | None,
     max_retries: int = 8,
     parent_version: int | None = None,
-    constraints: dict[str, str] | None = None,
 ) -> int:
     """The manifest-publish retry loop shared by :func:`snapshot_commit`
     and the ``format("snapshot")`` writer: compute the next version
@@ -434,15 +213,6 @@ def _publish_files(
                 None,
             )
             files = new_files + added
-        # CHECK constraints are table properties (Delta semantics):
-        # they ride EVERY commit — appends, semantic overwrites and
-        # reorgs alike — until explicitly dropped. ``constraints``
-        # overrides (the add/drop commits); None inherits the head's.
-        cons = constraints
-        if cons is None and versions:
-            cons = _read_manifest(table_dir, versions[-1]).get(
-                "constraints"
-            )
         manifest = {
             "version": version,
             "op": mode,
@@ -451,13 +221,11 @@ def _publish_files(
             "n_bytes": sum(f["bytes"] for f in files),
             "files": files,
         }
-        if cons:
-            manifest["constraints"] = dict(cons)
         if dv and dv.get("files"):
             manifest["dv"] = dv
         if extra:
-            # application metadata rides the commit (e.g. the
-            # incremental builder's high-water raw version); readers
+            # application metadata rides the commit (e.g. a
+            # replicate sync's high-water source version); readers
             # that don't know the keys ignore them
             manifest["extra"] = dict(extra)
         fd, tmp = tempfile.mkstemp(
@@ -551,112 +319,6 @@ def snapshot_prune_report(
         "rows_total": sum(f.get("rows", 0) for f in files),
         "rows_kept": sum(f.get("rows", 0) for f in kept),
     }
-
-
-# ------------------------------------------------- CHECK constraints
-def snapshot_constraints(table_dir: str) -> dict[str, str]:
-    """The table's CHECK constraints (``{name: sql_expr}``) from the
-    HEAD manifest — a table property that rides every commit (Delta
-    semantics) until :func:`snapshot_drop_constraint`."""
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        return {}
-    return dict(
-        _read_manifest(table_dir, versions[-1]).get("constraints") or {}
-    )
-
-
-def _constraint_violations(df: DataFrame, expr: str) -> DataFrame:
-    """Rows VIOLATING a CHECK constraint: the standard-SQL rule — a
-    row violates only when the expression evaluates to FALSE (UNKNOWN/
-    NULL passes, like every SQL engine's CHECK)."""
-    return df.where(
-        ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
-    )
-
-
-def _enforce_constraints(
-    df: DataFrame, constraints: dict[str, str], what: str
-) -> None:
-    """Raise :class:`ConstraintViolationError` when any incoming row
-    violates a table constraint — one filter pass over the NEW rows
-    only (never the table), with a bounded sample in the message."""
-    for name, expr in sorted(constraints.items()):
-        sample = _constraint_violations(df, expr).limit(3).collect()
-        if sample:
-            rows = "; ".join(str(r.asDict()) for r in sample)
-            raise ConstraintViolationError(
-                f"{what} violates CHECK constraint {name!r} "
-                f"({expr}): {rows}"
-            )
-
-
-def snapshot_add_constraint(
-    spark: SparkSession,
-    table_dir: str,
-    name: str,
-    expr: str,
-    ts: int = SNAP_EPOCH,
-) -> int:
-    """ALTER TABLE ADD CONSTRAINT ... CHECK (expr) over the manifest
-    log (r11): validates the CURRENT table once (one full scan — the
-    Delta semantics for adding a constraint to existing data; rows
-    where the expression is UNKNOWN pass, per standard SQL), then
-    publishes a zero-added-file append commit carrying the updated
-    constraint set. From that commit on, every
-    :func:`snapshot_commit`, :func:`snapshot_merge` delta and
-    ``format("snapshot")`` write validates its NEW rows — O(delta),
-    never O(table) — and refuses with
-    :class:`ConstraintViolationError` naming the constraint and a
-    bounded row sample. Stream readers see nothing (no files were
-    added). Constraints should be PORTABLE ANSI SQL boolean
-    expressions: the Arrow writer path evaluates them with DuckDB
-    executor-side (the repo's portable-SQL discipline)."""
-    if not name or not name.replace("_", "").isalnum():
-        raise ValueError(f"constraint name {name!r} must be [a-zA-Z0-9_]+")
-    F.expr(expr)  # parse check (raises on syntax errors)
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise ValueError(f"no committed snapshots under {table_dir}")
-    cons = snapshot_constraints(table_dir)
-    if name in cons:
-        raise ValueError(
-            f"constraint {name!r} already exists ({cons[name]!r}) — "
-            "drop it first to change the expression"
-        )
-    current = snapshot_read(spark, table_dir)
-    sample = _constraint_violations(current, expr).limit(3).collect()
-    if sample:
-        rows = "; ".join(str(r.asDict()) for r in sample)
-        raise ConstraintViolationError(
-            f"existing rows violate CHECK {name!r} ({expr}): {rows} — "
-            "clean the table (snapshot_delete) before adding it"
-        )
-    cons[name] = expr
-    return _publish_files(
-        table_dir, [], "append", ts,
-        {"constraint_added": name}, constraints=cons,
-    )
-
-
-def snapshot_drop_constraint(
-    table_dir: str, name: str, ts: int = SNAP_EPOCH
-) -> int:
-    """ALTER TABLE DROP CONSTRAINT: manifest-only commit removing the
-    named constraint (unknown names raise)."""
-    cons = snapshot_constraints(table_dir)
-    if name not in cons:
-        raise ValueError(
-            f"no constraint {name!r} on {table_dir!r} "
-            f"(have: {sorted(cons)})"
-        )
-    del cons[name]
-    return _publish_files(
-        table_dir, [], "append", ts,
-        {"constraint_dropped": name},
-        # a now-empty dict must still OVERRIDE inheritance
-        constraints=cons if cons else {},
-    )
 
 
 def _version_schema_info(
@@ -819,8 +481,7 @@ def snapshot_compact(
 ) -> dict:
     """Rewrite the LATEST version's files at target size as a new
     ``overwrite`` commit (content preserved exactly — the OPTIMIZE
-    operation). Readers pinned to older versions keep their files;
-    reclaim space afterwards with :func:`snapshot_vacuum`.
+    operation). Readers pinned to older versions keep their files.
 
     On a schema-evolved version (files with diverging columns) the
     rewrite reads the UNION schema (r11) — compaction CONSOLIDATES an
@@ -862,9 +523,9 @@ def snapshot_cluster_by(
     key-clustered layout bounds a K-key upsert to ~K files, while an
     unclustered one degrades toward rewriting everything. Run it the
     way Delta runs OPTIMIZE ZORDER — periodically, after merge churn.
-    Readers pinned to older versions keep their files (reclaim with
-    :func:`snapshot_vacuum`). Schema-evolved versions rewrite with the
-    UNION schema, like :func:`snapshot_compact`."""
+    Readers pinned to older versions keep their files. Schema-evolved
+    versions rewrite with the UNION schema, like
+    :func:`snapshot_compact`."""
     head = snapshot_versions(table_dir)[-1]
     manifest = _read_manifest(table_dir, head)
     hetero, _ = _version_schema_info(table_dir, manifest)
@@ -888,49 +549,6 @@ def snapshot_cluster_by(
     }
 
 
-def snapshot_zorder_by(
-    spark: SparkSession,
-    table_dir: str,
-    cols: list[str],
-    n_files: int | None = None,
-    target_mb: float = 256.0,
-    bits: int = 6,
-    ts: int = SNAP_EPOCH,
-) -> dict:
-    """Z-order the LATEST snapshot version on ``cols`` as a new
-    ``overwrite`` commit — OPTIMIZE ZORDER over the manifest log.
-    Where :func:`snapshot_cluster_by` gives perfect pruning on ONE
-    key, the Morton layout makes every rewritten file cover a small
-    hyper-rectangle, so the commit-time manifest stats let
-    ``snapshot_read(prune=...)`` skip files on EVERY listed column at
-    once — the multi-dimensional point/range lookup a 100 TB corpus
-    needs for (e.g.) (domain, fetch-date) slices. Content preserved
-    exactly; readers pinned to older versions keep their files
-    (reclaim with :func:`snapshot_vacuum`). Schema-evolved versions
-    rewrite with the UNION schema, like :func:`snapshot_compact`."""
-    head = snapshot_versions(table_dir)[-1]
-    manifest = _read_manifest(table_dir, head)
-    hetero, _ = _version_schema_info(table_dir, manifest)
-    latest = snapshot_read(spark, table_dir, version=head,
-                           merge_schema=hetero)
-    if n_files is None:
-        n_files = plan_output_files(manifest["n_bytes"], target_mb)
-    version = snapshot_commit(
-        _zorder_frame(latest, cols, n_files, bits),
-        table_dir,
-        mode="overwrite",
-        ts=ts,
-        extra={"reorg": True},  # content-preserving (dataChange=false)
-        parent_version=head,
-    )
-    return {
-        "version": version,
-        "planned_files": n_files,
-        "output_files": _read_manifest(table_dir, version)["n_files"],
-        "input_files": manifest["n_files"],
-    }
-
-
 def snapshot_merge(
     delta: DataFrame,
     table_dir: str,
@@ -940,7 +558,6 @@ def snapshot_merge(
     cdf: bool = True,
     delete_keys: DataFrame | None = None,
     not_matched_by_source: str = "keep",
-    source_keys: DataFrame | None = None,
 ) -> dict:
     """Keyed UPSERT as a copy-on-write commit (r10, VERDICT order #4)
     — the Delta/Iceberg MERGE pattern on plain parquet: rows in
@@ -984,15 +601,10 @@ def snapshot_merge(
     ``not_matched_by_source="delete"`` (r12, VERDICT r11 order #6) is
     Delta's third clause — WHEN NOT MATCHED BY SOURCE THEN DELETE:
     live table rows whose key is absent from the SOURCE die in the
-    same commit. The source reference set defaults to the keys this
-    merge carries (``delta`` ∪ ``delete_keys``); pass ``source_keys``
-    when the delta was pre-filtered to changed rows (the Delta
-    footgun: a filtered source would otherwise delete every unchanged
-    row) — :func:`snapshot_mirror` does exactly that to bootstrap-sync
-    a drifted replica with only the files that actually changed
-    rewritten. The absent-key set is computed with one keys-only
-    anti-join over the live scan; for a drifted replica it is small
-    and rides the same broadcast probe as explicit delete keys.
+    same commit. The source reference set is the keys this merge
+    carries (``delta`` ∪ ``delete_keys``). The absent-key set is
+    computed with one keys-only anti-join over the live scan and rides
+    the same broadcast probe as explicit delete keys.
 
     Returns ``{version, files_rewritten, files_kept, files_new,
     rows_replaced, rows_inserted, rows_deleted}`` so callers can
@@ -1036,26 +648,6 @@ def snapshot_merge(
             f"not_matched_by_source={not_matched_by_source!r}: "
             "'keep' (default) or 'delete'"
         )
-    if source_keys is not None and not_matched_by_source != "delete":
-        raise ValueError(
-            "source_keys only applies with not_matched_by_source="
-            "'delete' (it is that clause's reference set)"
-        )
-    src_keys = (
-        source_keys.select(*keys).distinct()
-        if source_keys is not None
-        else all_keys
-    )
-    if source_keys is not None and (
-        all_keys.join(src_keys, on=keys, how="left_anti").count()
-    ):
-        # a delta/delete key outside source_keys would come back as
-        # "absent from source" — upserted AND deleted in one commit
-        raise ValueError(
-            "source_keys must cover every delta and delete_keys key "
-            "(the source reference set is the WHOLE source, not the "
-            "changed subset)"
-        )
 
     # schema-evolution guard (r11): when the parent's files diverge
     # (an evolving append added columns), reading first-file schema
@@ -1087,11 +679,6 @@ def snapshot_merge(
                 delta = delta.withColumn(
                     c, F.lit(None).cast(base.schema[c].dataType)
                 )
-    cons = manifest.get("constraints") or {}
-    if cons:
-        # CHECK constraints gate the delta's rows — survivors of the
-        # rewrite already passed when they were committed (r11)
-        _enforce_constraints(delta, cons, "merge delta")
     current = _apply_dv(
         spark,
         table_dir,
@@ -1102,12 +689,12 @@ def snapshot_merge(
         # WHEN NOT MATCHED BY SOURCE THEN DELETE (r12): live keys
         # absent from the source reference set become delete keys and
         # ride the same machinery. One keys-only anti-join over the
-        # scan (no broadcast hint: the source key set is table-scale
-        # for a mirror — AQE picks; the RESULT is drift-sized)
+        # scan (no broadcast hint: the source key set may be
+        # table-scale — AQE picks)
         absent = (
             current.select(*keys)
             .distinct()
-            .join(src_keys, on=keys, how="left_anti")
+            .join(all_keys, on=keys, how="left_anti")
             .persist()
         )
         if absent.count():
@@ -1255,11 +842,6 @@ def snapshot_merge(
             "new_entries": new_files,
             "parent_dv": manifest.get("dv"),
             "winner_guard": _winner_guard,
-            # the delta's rows are NEW — a constraint ADDED between
-            # parent and head never saw them, so revalidate (r12)
-            "recheck_constraints": lambda c: _enforce_constraints(
-                delta, c, "merge delta (rebased past constraint change)"
-            ),
         },
     )
     if not_matched_by_source == "delete":
@@ -1726,7 +1308,6 @@ def _publish_cow_manifest(
     import json
     import tempfile
 
-    cons = _read_manifest(table_dir, parent).get("constraints")
     parent_dv = (rebase or {}).get("parent_dv")
     for _attempt in range(max_retries):
         version = parent + 1
@@ -1739,8 +1320,6 @@ def _publish_cow_manifest(
             "files": files,
             "extra": extra,
         }
-        if cons:  # table property: rides every commit until dropped
-            out_manifest["constraints"] = dict(cons)
         if dv and dv.get("files"):
             out_manifest["dv"] = dv
         if cdf and cdf.get("files"):
@@ -1789,31 +1368,6 @@ def _publish_cow_manifest(
             files = [
                 f for f in head_files if f["path"] not in affected
             ] + list(rebase["new_entries"])
-            # A winner may have been a zero-file ADD/DROP CONSTRAINT
-            # commit (a pure append that rebases structurally): adopt
-            # the head's constraint set — publishing the parent's
-            # stale set would silently drop/resurrect the constraint
-            # as a table property. A NEW constraint must also be
-            # enforced over rows this commit introduces: callers whose
-            # rows are not a subset of already-validated table rows
-            # (merge deltas) supply ``recheck_constraints`` to
-            # revalidate; a cow delete's survivors were validated by
-            # the ADD-constraint commit's own full-table scan, so it
-            # passes a no-op. Without a recheck hook, a changed set
-            # conflicts conservatively.
-            new_cons = _read_manifest(table_dir, new_parent).get(
-                "constraints"
-            )
-            if (new_cons or None) != (cons or None):
-                recheck = rebase.get("recheck_constraints")
-                if recheck is None:
-                    raise SnapshotConflictError(
-                        f"{op} raced a constraint change (parent "
-                        f"v{parent} vs head v{new_parent}) — re-run "
-                        f"the {op} against the new head"
-                    )
-                recheck(dict(new_cons or {}))
-                cons = new_cons
             parent = new_parent
         finally:
             os.unlink(tmp)
@@ -1888,12 +1442,9 @@ def snapshot_delete(
 
     Same optimistic concurrency as :func:`snapshot_merge` (lost race
     raises, caller re-runs). NOTE: older versions still CONTAIN the
-    rows (time travel is the point of snapshots) — a compliance
-    erasure completes with :func:`snapshot_vacuum` to retire
-    pre-delete versions; for ``mor`` the matched row DATA also remains
-    in the current version's files until a compaction rewrites them,
-    so a strict erasure is cow-delete (or mor-delete + compact) +
-    vacuum.
+    rows (time travel is the point of snapshots); for ``mor`` the
+    matched row DATA also remains in the current version's files until
+    a compaction rewrites them.
 
     ``cdf=True`` (default) records the deleted rows as change files
     for ``cow`` commits so :func:`snapshot_changes` stays exact over
@@ -1987,10 +1538,6 @@ def snapshot_delete(
                 "winner_guard": _delete_winner_guard(
                     spark, table_dir, cond, condition
                 ),
-                # a mor delete writes only delete vectors — removing
-                # rows can never violate a CHECK; adopt the head's
-                # constraint set with no revalidation (r12)
-                "recheck_constraints": lambda c: None,
             },
         )
         return {
@@ -2078,11 +1625,6 @@ def snapshot_delete(
             "winner_guard": _delete_winner_guard(
                 spark, table_dir, cond, condition
             ),
-            # a cow delete's survivors are a SUBSET of rows the
-            # concurrent ADD-constraint commit validated with its own
-            # full-table scan (winners never touch this delete's
-            # affected files) — adopt with no revalidation (r12)
-            "recheck_constraints": lambda c: None,
         },
     )
     return {
@@ -2125,7 +1667,7 @@ def snapshot_changes(
     - ``delete-mor``: the delete vectors added by the commit, joined
       back to their data files — the DV IS the change record, free at
       write time;
-    - reorg commits (compact / cluster_by / zorder_by): content-
+    - reorg commits (compact / cluster_by): content-
       preserving by construction (``extra.reorg``, Delta's
       ``dataChange=false``) — emit NOTHING;
     - semantic ``overwrite`` / ``restore`` (and any commit whose row
@@ -2305,79 +1847,6 @@ def snapshot_changes(
     return reduce(lambda a, b: a.unionByName(b), pieces)
 
 
-def snapshot_mirror(
-    spark: SparkSession,
-    src_dir: str,
-    dst_dir: str,
-    keys: list[str],
-    ts: int = SNAP_EPOCH,
-    extra: dict | None = None,
-    maintain_cluster_col: str | None = None,
-    target_mb: float = 128.0,
-) -> dict:
-    """Bootstrap-sync a DRIFTED replica as one merge commit (r12,
-    VERDICT r11 order #6) — the full-mirror move
-    :func:`snapshot_replicate` cannot make when the destination's
-    history diverged from the change feed (manual edits, a restored
-    version, a feed gap past vacuum): make ``dst`` row-identical to
-    ``src`` WITHOUT a full overwrite.
-
-    changed = src_live ∖ dst_live (multiset except — rows missing or
-    differing in dst) becomes the upsert delta; the WHEN NOT MATCHED
-    BY SOURCE THEN DELETE clause (``source_keys`` = the FULL src key
-    set, so pre-filtering the delta to changed rows cannot nuke
-    unchanged dst rows) removes dst keys absent from src. Only files
-    actually containing a changed/absent key rewrite; identical
-    replicas commit nothing. CDF records the deletes, so downstream
-    feeds keep working. Cost: one full-row compare shuffle of both
-    tables (that IS bootstrap), then drift-bounded copy-on-write.
-
-    Requires a keyed src (one live row per key — the
-    :func:`snapshot_replicate` table model) and matching column sets.
-
-    ``maintain_cluster_col`` (r13, VERDICT order #6) makes
-    bootstrap→sync→cluster one call: after the sync commit the
-    :func:`snapshot_maintain` policy runs with the merge's rewrite
-    fraction fed in — a scatter-degraded sync (most files rewritten)
-    or tripped file/DV thresholds recluster on the spot, keeping later
-    merges at the bounded min(K, files) economics; a healthy sync adds
-    no version. The audit dict lands under ``result['maintain']``."""
-    src_live = snapshot_read(spark, src_dir)
-    dst_live = snapshot_read(spark, dst_dir)
-    if set(src_live.columns) != set(dst_live.columns):
-        raise ValueError(
-            f"mirror requires matching columns: src {src_live.columns} "
-            f"vs dst {dst_live.columns}"
-        )
-    changed = src_live.exceptAll(dst_live.select(*src_live.columns))
-    if not changed.count():
-        # still honor pure-delete drift (extra dst keys, no changes)
-        absent = (
-            dst_live.select(*keys).distinct()
-            .join(src_live.select(*keys).distinct(), on=keys, how="left_anti")
-        )
-        if not absent.count():
-            head = snapshot_versions(dst_dir)[-1]
-            return {"version": head, "files_rewritten": 0,
-                    "files_kept": len(_read_manifest(dst_dir, head)["files"]),
-                    "files_new": 0, "rows_replaced": 0,
-                    "rows_inserted": 0, "rows_deleted": 0}
-    res = snapshot_merge(
-        changed,
-        dst_dir,
-        keys,
-        ts=ts,
-        extra={**(extra or {}), "mirror_src": os.path.abspath(src_dir)},
-        not_matched_by_source="delete",
-        source_keys=src_live.select(*keys),
-    )
-    if maintain_cluster_col is not None:
-        res["maintain"] = _maintain_after_sync(
-            spark, dst_dir, maintain_cluster_col, target_mb, ts, res
-        )
-    return res
-
-
 def _maintain_after_sync(
     spark: SparkSession,
     dst_dir: str,
@@ -2386,7 +1855,7 @@ def _maintain_after_sync(
     ts: int,
     merge_res: dict | None,
 ) -> dict:
-    """Shared mirror/replicate post-sync hook: feed the sync's rewrite
+    """Replicate's post-sync hook: feed the sync's rewrite
     fraction into the maintain policy. A bootstrap append (no merge
     stats) counts as fraction 1.0 — the fresh replica is one
     unclustered blob, exactly the state where the next merge degrades
@@ -2421,8 +1890,7 @@ def snapshot_replicate(
     since the last sync as ONE commit on ``dst_dir`` — the
     change-feed-consumer loop every sibling table (a search index, a
     regional replica, a downstream feature store) runs against a
-    production corpus. Incremental and exactly-once by the same
-    mechanism as ``build_corpus_incremental``: the destination commit
+    production corpus. Incremental and exactly-once: the destination commit
     carries the consumed source version in its manifest ``extra``
     (``replicate_src_version``), so the high-water mark advances
     ATOMICALLY with the data — a crash between syncs just re-derives
@@ -2445,15 +1913,12 @@ def snapshot_replicate(
     Returns ``{from_version, to_version, version, rows_upserted,
     rows_deleted, applied}``.
 
-    Vacuum caveat: the high-water mark lives in the newest RETAINED
-    destination manifest that carries one — ``snapshot_vacuum`` on the
-    destination with a ``keep_last`` smaller than the number of
-    commits since the last sync can drop it, after which the next
-    sync re-derives from 0. With keys that re-apply is IDEMPOTENT
+    Retention caveat: the high-water mark lives in the newest
+    destination manifest that carries one; if retention drops it, the
+    next sync re-derives from 0. With keys that re-apply is IDEMPOTENT
     (upserts replace, deletes re-delete) but needs source history
-    back to 0 — a vacuumed source range raises instead (never silent
-    double-apply). Keep the destination's vacuum horizon at least one
-    sync deep.
+    back to 0 — a missing source range raises instead (never silent
+    double-apply).
 
     ``maintain_cluster_col`` (r13, VERDICT order #6): run the
     :func:`snapshot_maintain` policy after each applied sync with the
@@ -2607,9 +2072,8 @@ def snapshot_maintain(
     manifest (file counts and DV rows look healthy while every merge
     rewrites the whole table — the measured 1.0 fraction on
     unclustered replicas, CLAUDE.md r10); the merge outcome itself is
-    the evidence, so the sync paths (:func:`snapshot_mirror` /
-    :func:`snapshot_replicate` with ``maintain_cluster_col``) feed it
-    back here.
+    the evidence, so :func:`snapshot_replicate` with
+    ``maintain_cluster_col`` feeds it back here.
 
     No threshold tripped = NO new version (decide from the manifest,
     never scan data to decide). Returns the audit dict
@@ -2655,55 +2119,3 @@ def snapshot_maintain(
     out["acted"] = True
     out["version"] = res["version"]
     return out
-
-
-def snapshot_vacuum(
-    table_dir: str, keep_last: int = 2, grace_sec: float = 600.0
-) -> list[str]:
-    """Retire old versions: drop all but the last ``keep_last``
-    manifests, then delete data files no RETAINED manifest references.
-    Returns the deleted paths (no silent destruction). The deletion
-    order (manifests first) means a crashed vacuum can only strand
-    unreferenced files, never break a readable version.
-
-    ``grace_sec`` (r12): files YOUNGER than this are never deleted —
-    the Delta retention check. A concurrent writer materializes its
-    attempt-unique data files BEFORE the create-exclusive manifest
-    publish; without the grace window a racing vacuum would see them
-    as unreferenced, delete them, and the commit would then publish a
-    manifest pointing at nothing (silent table corruption on the next
-    read). Fresh orphans from FAILED attempts age past the window and
-    are reclaimed by the next vacuum. ``grace_sec=0`` restores the
-    immediate sweep (single-writer maintenance windows only)."""
-    import time as _time
-
-    versions = snapshot_versions(table_dir)
-    retained = versions[-keep_last:] if keep_last > 0 else []
-    live: set[str] = set()
-    for v in retained:
-        manifest = _read_manifest(table_dir, v)
-        for f in manifest["files"]:
-            live.add(os.path.normpath(os.path.join(table_dir, f["path"])))
-        for f in (manifest.get("dv") or {}).get("files", []):
-            live.add(os.path.normpath(os.path.join(table_dir, f["path"])))
-        for f in (manifest.get("cdf") or {}).get("files", []):
-            live.add(os.path.normpath(os.path.join(table_dir, f["path"])))
-    removed = []
-    for v in versions:
-        if v not in retained:
-            os.remove(_manifest_path(table_dir, v))
-    cutoff = _time.time() - grace_sec
-    for sub in ("data", "deletes", "changes"):
-        for dirpath, _dirs, names in os.walk(os.path.join(table_dir, sub)):
-            for name in names:
-                path = os.path.normpath(os.path.join(dirpath, name))
-                if not name.endswith(".parquet") or path in live:
-                    continue
-                try:
-                    if os.path.getmtime(path) > cutoff:
-                        continue  # possibly an in-flight commit's file
-                except OSError:
-                    continue  # deleted concurrently: nothing to do
-                os.remove(path)
-                removed.append(path)
-    return sorted(removed)

@@ -87,37 +87,6 @@ def _pil():
         return None
 
 
-def decode_image(payload: bytes, fmt: str):
-    """Real image decode — PIL-backed when Pillow is installed (a
-    cluster image flips this on with no code changes); BMP payloads
-    fall back to the dependency-free stdlib decoder
-    (:func:`decode_bmp_stdlib`) so BMP decode is REAL on every
-    environment — the image twin of the WAV fallback in
-    :func:`decode_audio`; PNG payloads decode via the stdlib zlib
-    path (:func:`decode_png_stdlib`). Only jpeg/webp still require
-    Pillow."""
-    image_mod = _pil()
-    if image_mod is None:
-        if payload[:2] == b"BM":
-            return decode_bmp_stdlib(payload)
-        if payload[:8] == b"\x89PNG\r\n\x1a\n":
-            return decode_png_stdlib(payload)
-        if payload[:3] == b"\xff\xd8\xff":
-            return decode_jpeg_stdlib(payload)
-        if payload[:4] in (b"II*\x00", b"MM\x00*"):
-            return decode_tiff_stdlib(payload)
-        raise NotImplementedError(
-            "decoding non-BMP/PNG/JPEG/TIFF images requires PIL which is "
-            "not in this container; BMP, PNG, baseline-JPEG and classic-"
-            "TIFF payloads decode via the stdlib paths, or use "
-            "extract_features(..., fake=True) for the deterministic "
-            "stand-in"
-        )
-    import io
-
-    return image_mod.open(io.BytesIO(payload))  # pragma: no cover
-
-
 def _soundfile():
     """Import-gated soundfile (audio twin of :func:`_pil`): returns the
     module on a cluster image that ships libsndfile bindings, None in
@@ -128,48 +97,6 @@ def _soundfile():
         return soundfile
     except ImportError:
         return None
-
-
-def _pyav():
-    """Import-gated PyAV (video twin of :func:`_pil`): returns the
-    module on a cluster image that ships ffmpeg bindings, None here."""
-    try:  # pragma: no cover - environment-dependent
-        import av  # type: ignore
-
-        return av
-    except ImportError:
-        return None
-
-
-def decode_audio(payload: bytes, fmt: str):
-    """Real audio decode — soundfile-backed when installed (a cluster
-    image flips this on with no code changes); RIFF/WAVE payloads fall
-    back to the dependency-free stdlib decoder
-    (:func:`decode_wav_stdlib`) so WAV decode is REAL on every
-    environment. Only compressed formats (flac/ogg/mp3) still require
-    soundfile."""
-    sf_mod = _soundfile()
-    if sf_mod is None:
-        if payload[:4] == b"RIFF":
-            return decode_wav_stdlib(payload)
-        if payload[:4] == b"fLaC":
-            return decode_flac_stdlib(payload)
-        if payload[:4] == b"FORM" and payload[8:12] == b"AIFF":
-            rate, channels, bps, samples = decode_aiff_stdlib(payload)
-            if bps >= 16:
-                mx = max((abs(s) >> (bps - 16) for s in samples), default=0)
-            else:
-                mx = max((abs(s) << (16 - bps) for s in samples), default=0)
-            return len(samples) // channels, rate, min(mx, 32767)
-        raise NotImplementedError(
-            "decoding non-WAV/AIFF/FLAC audio requires soundfile which "
-            "is not in this container; WAV, AIFF and FLAC payloads "
-            "decode via the stdlib paths, or use extract_audio_features"
-            "(..., fake=True) for the deterministic stand-in"
-        )
-    import io
-
-    return sf_mod.read(io.BytesIO(payload))  # pragma: no cover
 
 
 def decode_wav_stdlib(payload: bytes) -> tuple[int, int, int]:
@@ -211,27 +138,6 @@ def decode_wav_stdlib(payload: bytes) -> tuple[int, int, int]:
     else:
         raise NotImplementedError(f"unsupported PCM sample width {width}")
     return n_frames, rate, peak
-
-
-def decode_video_frames(payload: bytes, fmt: str, every_n: int = 1):
-    """Real video frame decode — PyAV/ffmpeg-backed when installed,
-    raising here so callers fall back to :func:`frame_sample`'s
-    16-byte-block slicer (same explode-side plumbing, fake frames)."""
-    av_mod = _pyav()
-    if av_mod is None:
-        raise NotImplementedError(
-            "video decoding requires PyAV/ffmpeg which is not in this "
-            "container; use frame_sample(...) for the deterministic "
-            "frame-slicing stand-in"
-        )
-    import io  # pragma: no cover
-
-    frames = []  # pragma: no cover
-    with av_mod.open(io.BytesIO(payload)) as container:  # pragma: no cover
-        for i, frame in enumerate(container.decode(video=0)):
-            if i % every_n == 0:
-                frames.append(frame)
-    return frames  # pragma: no cover
 
 
 AUDIO_FEATURES = StructType(
@@ -635,32 +541,6 @@ def synth_bmp_media(docs: DataFrame, max_dim: int = 24) -> DataFrame:
     )
 
 
-def extract_features_bmp(media: DataFrame) -> DataFrame:
-    """REAL image feature extraction on every environment for BMP
-    payloads: decode with :func:`decode_bmp_stdlib` inside the same
-    ``mapInPandas`` batch shape as :func:`extract_features` —
-    width/height read from the FILE HEADER (not trusted metadata),
-    features = quadrant luminance. Non-BMP payloads raise (callers
-    route by format, mirroring the WAV/soundfile split)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, fmt, b in zip(
-                pdf["doc_id"], pdf["format"], pdf["payload"]
-            ):
-                raw = bytes(b)
-                w, h, feats = decode_bmp_stdlib(raw)
-                rows.append(
-                    (did, fmt, w, h, len(raw), int(raw[0]), feats)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURES.fields]
-            )
-
-    return media.mapInPandas(_extract, FEATURES)
-
-
 # ------------------------------------------------------ PNG (stdlib-real)
 def encode_png_stdlib(width: int, height: int, rgb: bytes) -> bytes:
     """Pure-stdlib PNG encoder (zlib IS the stdlib): 8-bit RGB (color
@@ -870,37 +750,14 @@ def synth_png_media(docs: DataFrame, max_dim: int = 24) -> DataFrame:
     )
 
 
-def extract_features_png(media: DataFrame) -> DataFrame:
-    """REAL image feature extraction for PNG payloads on every
-    environment — same ``mapInPandas`` batch shape and FEATURES schema
-    as :func:`extract_features_bmp`; width/height come from IHDR, not
-    trusted metadata."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, fmt, b in zip(
-                pdf["doc_id"], pdf["format"], pdf["payload"]
-            ):
-                raw = bytes(b)
-                w, h, feats = decode_png_stdlib(raw)
-                rows.append((did, fmt, w, h, len(raw), int(raw[0]), feats))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FEATURES.fields]
-            )
-
-    return media.mapInPandas(_extract, FEATURES)
-
-
 # --------------------------------------------------------------- GIF
 #
 # Real GIF89a encode/decode on stdlib only — the third REAL image
 # codec (after BMP/PNG) and the first genuinely MULTI-FRAME container:
-# animated GIFs are actual video-ish media, so `phash.video_neardup`
-# can run against a published interchange format instead of the
-# concatenated-BMP stand-in. Grammar per the public GIF89a spec
-# (logical screen descriptor, global/local color tables, graphic
-# control extensions, image descriptors, LZW-compressed index
+# animated GIFs are actual video-ish media in a published interchange
+# format, not the concatenated-BMP stand-in. Grammar per the public
+# GIF89a spec (logical screen descriptor, global/local color tables,
+# graphic control extensions, image descriptors, LZW-compressed index
 # sub-blocks, trailer). The reference engine has no media codecs
 # (SURVEY.md §2.2); extension surface.
 
@@ -1211,87 +1068,7 @@ def _decode_gif_impl(
 GRAY_PALETTE = bytes(v for i in range(256) for v in (i, i, i))
 
 
-# --------------------------------------------------------------- FLAC
-
-
-def decode_flac_stdlib(payload: bytes) -> tuple[int, int, int]:
-    """Real FLAC decode on stdlib only (``operators/flac_codec``, RFC
-    9639): returns ``(n_frames, rate, peak)`` with ``peak`` in s16
-    units — the same convention as :func:`decode_wav_stdlib`, so
-    feature rows agree across containers of the same recording."""
-    from .flac_codec import decode_flac
-
-    rate, channels, bps, samples = decode_flac(payload)
-    if bps >= 16:
-        mx = max((abs(s) >> (bps - 16) for s in samples), default=0)
-    else:
-        mx = max((abs(s) << (16 - bps) for s in samples), default=0)
-    return len(samples) // channels, rate, min(mx, 32767)
-
-
-def synth_flac_media(docs: DataFrame, n_samples: int = 400) -> DataFrame:
-    """REAL audio table: every payload is a genuine FLAC stream whose
-    16-bit PCM derives deterministically from md5(text) — the
-    compressed-container twin of the WAV fixtures (same
-    signal-from-digest recipe, so a doc's WAV and FLAC fingerprints
-    can be compared)."""
-    import hashlib
-
-    from .flac_codec import encode_flac
-
-    @F.pandas_udf("binary")
-    def make_flac(texts: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        def one(text: str) -> bytes:
-            out: list[int] = []
-            seed = b""
-            while len(out) < n_samples:
-                seed = hashlib.md5((text or "").encode() + seed).digest()
-                for i in range(0, 16, 2):
-                    out.append(
-                        int.from_bytes(seed[i : i + 2], "little", signed=True)
-                    )
-            return encode_flac(
-                out[:n_samples], channels=1,
-                sample_rate=_FAKE_SAMPLE_RATE, block_size=256,
-            )
-
-        for batch in texts:
-            yield pd.Series([one(t) for t in batch])
-
-    return docs.select(
-        "doc_id",
-        make_flac("text").alias("payload"),
-        F.lit("flac").alias("format"),
-    )
-
-
 # --------------------------------------------------------------- JPEG
-
-
-def decode_jpeg_stdlib(payload: bytes) -> tuple[int, int, list[float]]:
-    """Real baseline-JPEG decode on stdlib only
-    (``operators/jpeg_codec``, ITU-T T.81): returns ``(width, height,
-    quadrant_features)`` with the same length-4 luminance contract as
-    :func:`decode_bmp_stdlib`, so feature rows agree across image
-    containers."""
-    from .jpeg_codec import decode_jpeg
-
-    width, height, rgb = decode_jpeg(payload)
-    half_w, half_h = (width + 1) // 2, (height + 1) // 2
-    sums = [0.0] * 4
-    counts = [0] * 4
-    for y in range(height):
-        for x in range(width):
-            i = 3 * (y * width + x)
-            lum = (
-                299 * rgb[i] + 587 * rgb[i + 1] + 114 * rgb[i + 2]
-            ) / 1000.0
-            q = (0 if y < half_h else 2) + (0 if x < half_w else 1)
-            sums[q] += lum
-            counts[q] += 1
-    return width, height, [
-        (s / c / 255.0) if c else 0.0 for s, c in zip(sums, counts)
-    ]
 
 
 def synth_jpeg_media(
@@ -1440,8 +1217,7 @@ def decode_aiff_stdlib(payload: bytes) -> tuple[int, int, int, list[int]]:
 # already exist as pinned stdlib codecs, so the container logic is the
 # only new surface. MJPEG-in-AVI remains the interchange shape
 # webcams, DVRs and OpenCV's default writer emit; inter-frame codecs
-# (H.264 etc.) stay the documented PyAV boundary
-# (`decode_video_frames`).
+# (H.264 etc.) stay out of scope.
 
 _MAX_AVI_FRAMES = 10_000
 
@@ -1827,68 +1603,6 @@ def build_mp4_skeleton(
     ftyp = box(b"ftyp", brand.encode("latin-1")[:4] + struct.pack(">I", 0)
                + b"isom")
     return ftyp + moov + box(b"mdat", b"")
-
-
-def probe_video_mp4(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """(doc_id, payload) → container facts per video — the metadata
-    filter stage ("keep 720p+, drop > 10 min") that runs long before
-    any frame decodes. One Arrow-batched shuffle-free projection with
-    the standard error column (malformed containers are rows, never
-    failed stages)."""
-
-    @F.pandas_udf(
-        "struct<brand: string, duration_s: double, n_tracks: int, "
-        "video_codec: string, width: int, height: int, error: string>"
-    )
-    def probe(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for raw in batch:
-                try:
-                    if raw is None:
-                        raise NotImplementedError("null payload")
-                    info = probe_mp4(bytes(raw))
-                    vid = next(
-                        (
-                            t
-                            for t in info["tracks"]
-                            if t["handler"] == "vide"
-                        ),
-                        None,
-                    )
-                    rows.append(
-                        {
-                            "brand": info["brand"],
-                            "duration_s": info["duration_s"],
-                            "n_tracks": len(info["tracks"]),
-                            "video_codec": vid["codec"] if vid else None,
-                            "width": vid["width"] if vid else None,
-                            "height": vid["height"] if vid else None,
-                            "error": None,
-                        }
-                    )
-                except NotImplementedError as e:
-                    rows.append(
-                        {
-                            "brand": None,
-                            "duration_s": None,
-                            "n_tracks": 0,
-                            "video_codec": None,
-                            "width": None,
-                            "height": None,
-                            "error": type(e).__name__,
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.select(
-        "doc_id", probe(F.col(payload_col)).alias("p")
-    ).select(
-        "doc_id", "p.brand", "p.duration_s", "p.n_tracks",
-        "p.video_codec", "p.width", "p.height", "p.error",
-    )
 
 
 # --------------------------------------------------------- ogg / mp3 probes
@@ -2396,80 +2110,6 @@ def build_mp3(
     return id3 + bytes(frames)
 
 
-def probe_audio_stream(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """(doc_id, payload) → compressed-audio container facts, magic-
-    dispatched (OggS → :func:`probe_ogg`, ID3/frame-sync →
-    :func:`probe_mp3`) — the audio twin of :func:`probe_video_mp4`:
-    one Arrow-batched shuffle-free projection with the standard error
-    column, filtering crawls by channels/rate/duration/tags long
-    before any PCM decoder is needed."""
-
-    @F.pandas_udf(
-        "struct<container: string, codec: string, channels: int, "
-        "sample_rate: int, duration_s: double, title: string, "
-        "artist: string, error: string>"
-    )
-    def probe(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for raw in batch:
-                try:
-                    if raw is None:
-                        raise NotImplementedError("null payload")
-                    blob = bytes(raw)
-                    if blob[:4] == b"OggS":
-                        info = probe_ogg(blob)
-                        rows.append(
-                            {
-                                "container": "ogg",
-                                "codec": info["codec"],
-                                "channels": info["channels"],
-                                "sample_rate": info["sample_rate"],
-                                "duration_s": info["duration_s"],
-                                "title": info["tags"].get("TITLE"),
-                                "artist": info["tags"].get("ARTIST"),
-                                "error": None,
-                            }
-                        )
-                    else:
-                        info = probe_mp3(blob)
-                        rows.append(
-                            {
-                                "container": "mp3",
-                                "codec": "mp3",
-                                "channels": info["channels"],
-                                "sample_rate": info["sample_rate"],
-                                "duration_s": info["duration_s"],
-                                "title": info["tags"].get("TIT2"),
-                                "artist": info["tags"].get("TPE1"),
-                                "error": None,
-                            }
-                        )
-                except NotImplementedError as e:
-                    rows.append(
-                        {
-                            "container": None,
-                            "codec": None,
-                            "channels": None,
-                            "sample_rate": None,
-                            "duration_s": None,
-                            "title": None,
-                            "artist": None,
-                            "error": str(e)[:120] or type(e).__name__,
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.select(
-        "doc_id", probe(F.col(payload_col)).alias("p")
-    ).select(
-        "doc_id", "p.container", "p.codec", "p.channels",
-        "p.sample_rate", "p.duration_s", "p.title", "p.artist", "p.error",
-    )
-
-
 # ---------------------------------------------------------------- TIFF
 # Real classic-TIFF (6.0 baseline subset) on stdlib only — the scan/
 # fax/scientific-archive interchange format that web crawls still
@@ -2815,39 +2455,3 @@ def probe_image(payload: bytes) -> dict:
             f"malformed image header: {exc}"
         ) from exc
     raise NotImplementedError("unrecognized image magic")
-
-
-def probe_image_stream(
-    media: DataFrame, payload_col: str = "payload"
-) -> DataFrame:
-    """(doc_id, payload) → header-only image facts — the image twin of
-    :func:`probe_audio_stream`: one Arrow-batched shuffle-free
-    projection with the standard error column (malformed payloads are
-    rows, never failed stages)."""
-
-    @F.pandas_udf(
-        "struct<format: string, width: int, height: int, error: string>"
-    )
-    def probe(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows = []
-            for raw in batch:
-                try:
-                    if raw is None:
-                        raise NotImplementedError("null payload")
-                    info = probe_image(bytes(raw))
-                    rows.append({**info, "error": None})
-                except NotImplementedError as exc:
-                    rows.append(
-                        {
-                            "format": None,
-                            "width": None,
-                            "height": None,
-                            "error": str(exc),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return media.select(
-        "doc_id", probe(payload_col).alias("probe")
-    ).select("doc_id", "probe.*")

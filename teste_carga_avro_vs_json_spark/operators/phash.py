@@ -23,8 +23,7 @@ dedup pass) is a tiny perceptual fingerprint + a Hamming-ball join:
 
 Decoding uses the repo's stdlib-real BMP/PNG codecs
 (`operators/multimodal.py`) inside one Arrow-batched pandas UDF —
-the documented py-lane, identical batch shape to
-``extract_features_bmp``. The reference engine has no image
+the documented py-lane. The reference engine has no image
 pipeline at all (SURVEY.md §2.2); this extends the multimodal
 surface (E5) with the dedup discipline of E2.
 
@@ -173,16 +172,6 @@ def _gif_frame_lums(payload: bytes) -> list[tuple[int, int, list[list[int]]]]:
     from .multimodal import decode_gif_stdlib
 
     w, h, frames = decode_gif_stdlib(payload)
-    return [_rgb_lum_rows(w, h, fr) for fr in frames]
-
-
-def _avi_frame_lums(payload: bytes) -> list[tuple[int, int, list[list[int]]]]:
-    """AVI/MJPEG → one (w, h, lum rows) per frame. MJPEG is lossy, so
-    an AVI re-encode of a BMP-stream video hashes CLOSE per frame —
-    exactly the shape video_neardup's Hamming join exists for."""
-    from .multimodal import decode_avi_mjpeg
-
-    w, h, frames = decode_avi_mjpeg(payload)
     return [_rgb_lum_rows(w, h, fr) for fr in frames]
 
 
@@ -383,114 +372,6 @@ def phash_neardup(
     )
 
 
-# ------------------------------------------------------- audio twin
-def _wav_samples(payload: bytes) -> list[int]:
-    """RIFF/PCM WAV → one interleaved s16-scaled sample stream
-    (8/16/32-bit PCM, same dialect as
-    ``multimodal.decode_wav_stdlib``; array-module pass, no per-sample
-    Python loop for 16/32-bit)."""
-    import array
-    import io
-    import sys
-    import wave
-
-    with wave.open(io.BytesIO(payload), "rb") as wf:
-        width = wf.getsampwidth()
-        raw = wf.readframes(wf.getnframes())
-    if width == 1:  # u8 offset-binary → s16 scale
-        return [(b - 128) * 256 for b in raw]
-    if width in (2, 4):
-        samples = array.array("h" if width == 2 else "i")
-        samples.frombytes(raw[: len(raw) - len(raw) % width])
-        if sys.byteorder == "big":
-            samples.byteswap()
-        if width == 4:
-            return [s >> 16 for s in samples]
-        return list(samples)
-    raise NotImplementedError(f"unsupported PCM sample width {width}")
-
-
-def _audio_samples(payload: bytes) -> list[int]:
-    """Container autodetect: FLAC (stdlib codec, exact) or RIFF/WAV —
-    both normalized to the s16 sample scale so fingerprints agree
-    across containers of the same recording."""
-    if payload[:4] == b"fLaC":
-        from .flac_codec import decode_flac
-
-        _, _, bps, samples = decode_flac(payload)
-    elif payload[:4] == b"FORM" and payload[8:12] == b"AIFF":
-        from .multimodal import decode_aiff_stdlib
-
-        _, _, bps, samples = decode_aiff_stdlib(payload)
-    else:
-        return _wav_samples(payload)
-    if bps == 16:
-        return samples
-    if bps < 16:
-        return [s << (16 - bps) for s in samples]
-    return [s >> (bps - 16) for s in samples]
-
-
-def audio_fingerprint64(samples: list[int]) -> int:
-    """64-bit audio energy hash — dHash's recipe on the time axis:
-    split the sample stream into 65 equal chunks, chunk energy =
-    floor-mean |sample| (exact integer arithmetic), bit ``i`` = 1 iff
-    energy(i) < energy(i+1). Robust to re-encoding, resampling and
-    uniform gain (monotone transforms mostly preserve the energy
-    ORDER between adjacent chunks); any local edit flips only nearby
-    bits. Returns signed 64-bit for a Spark ``long``; silent or empty
-    streams hash to 0."""
-    n = len(samples)
-    cells = []
-    for i in range(GRID_W * GRID_H + 1):  # 65 chunks -> 64 comparisons
-        lo = i * n // 65
-        hi = max(lo + 1, (i + 1) * n // 65)
-        s = 0
-        cnt = 0
-        for x in range(lo, min(hi, n)):
-            s += samples[x] if samples[x] >= 0 else -samples[x]
-            cnt += 1
-        cells.append(s // cnt if cnt else 0)
-    h = 0
-    for i in range(64):
-        if cells[i] < cells[i + 1]:
-            h |= 1 << i
-    return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def audio_dhash(media: DataFrame) -> DataFrame:
-    """(doc_id, payload WAV or FLAC bytes — container autodetect) →
-    (doc_id, dhash long); same Arrow-batched shuffle-free shape as
-    :func:`image_dhash`."""
-
-    @F.pandas_udf("long")
-    def _ah(payloads: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for batch in payloads:
-            yield pd.Series(
-                [
-                    audio_fingerprint64(_audio_samples(bytes(p)))
-                    for p in batch
-                ],
-                dtype="int64",
-            )
-
-    return media.select("doc_id", _ah("payload").alias("dhash"))
-
-
-def audio_neardup(
-    media: DataFrame,
-    max_hamming: int = 3,
-    max_band_df: int | None = 1000,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Audio pairs within energy-hash Hamming distance ``max_hamming``
-    — near-identical recordings (re-encodes, gain changes, small
-    edits) under the same banding join as the image path."""
-    return hamming_neardup(
-        audio_dhash(media), max_hamming, max_band_df, stats
-    )
-
-
 # ------------------------------------------------------- video twin
 def split_bmp_stream(payload: bytes) -> list[bytes]:
     """Split a concatenated-BMP frame stream into frames. Every BMP
@@ -561,135 +442,4 @@ def synth_bmp_video(
         "doc_id",
         make_stream("text", "width", "height").alias("payload"),
         F.lit("bmpstream").alias("format"),
-    )
-
-
-def synth_gif_video(
-    docs: DataFrame, n_frames: int = 6, max_dim: int = 12
-) -> DataFrame:
-    """REAL animated-GIF video table: every payload is a genuine
-    GIF89a (grayscale palette, per-frame GCE) whose frame pixels
-    derive deterministically from md5(text, frame index) — the same
-    pixel recipe as :func:`synth_bmp_video`, through a published
-    container format instead of the concatenation stand-in."""
-    import hashlib
-
-    from .multimodal import GRAY_PALETTE, encode_gif_stdlib
-
-    @F.pandas_udf("binary")
-    def make_gif(
-        cols: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        def one(text: str, w: int, h: int) -> bytes:
-            need = w * h
-            frames = []
-            for fr in range(n_frames):
-                seed = hashlib.md5(f"{fr}|{text or ''}".encode()).digest()
-                reps = need // len(seed) + 1
-                frames.append((seed * reps)[:need])
-            return encode_gif_stdlib(w, h, frames, GRAY_PALETTE)
-
-        for texts, ws, hs in cols:
-            yield pd.Series(
-                [one(t, int(w), int(h)) for t, w, h in zip(texts, ws, hs)]
-            )
-
-    from ..functions.portable import hex32
-
-    w = (hex32(F.concat(F.lit("vw-"), F.col("doc_id"))) % max_dim + 4).cast(
-        "int"
-    )
-    h = (hex32(F.concat(F.lit("vh-"), F.col("doc_id"))) % max_dim + 4).cast(
-        "int"
-    )
-    staged = docs.select("doc_id", "text", w.alias("width"), h.alias("height"))
-    return staged.select(
-        "doc_id",
-        make_gif("text", "width", "height").alias("payload"),
-        F.lit("gif").alias("format"),
-    )
-
-
-#: frame index width inside the synthetic frame id (max 2^10 frames)
-_FRAME_SHIFT = 10
-
-
-def video_frame_hashes(media: DataFrame) -> DataFrame:
-    """(doc_id, payload frame-stream) → one row per frame:
-    (doc_id, frame_idx, dhash). mapInPandas so a single input row may
-    emit many frame rows; decode stays payload-local."""
-    import pyspark.sql.types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("dhash", T.LongType()),
-        ]
-    )
-
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, b in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(b)
-                # container autodetect by magic: AVI/MJPEG and
-                # animated GIF are real interchange formats; "BM" =
-                # the concatenated-BMP frame-stream stand-in for
-                # extracted video.
-                if raw[:4] == b"RIFF" and raw[8:12] == b"AVI ":
-                    lums = _avi_frame_lums(raw)
-                elif raw[:4] == b"GIF8":
-                    lums = _gif_frame_lums(raw)
-                else:
-                    lums = [
-                        _bmp_lum_rows(frame)
-                        for frame in split_bmp_stream(raw)
-                    ]
-                for idx, lum in enumerate(lums):
-                    rows.append((did, idx, dhash64(*lum)))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "dhash"]
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(_frames, schema)
-
-
-def video_neardup(
-    media: DataFrame,
-    max_hamming: int = 3,
-    min_shared_frames: int = 2,
-    max_band_df: int | None = 1000,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Video pairs sharing >= ``min_shared_frames`` perceptually-equal
-    frames (per-frame dHash within ``max_hamming``) →
-    (doc_a, doc_b, shared_frames). The standard re-upload/re-encode
-    detection shape: frame hashes ride the SAME pigeonhole Hamming
-    join as images (frames get synthetic ids doc_id<<10 | idx), the
-    frame-pair fan-in to video pairs is one hash aggregation.
-
-    ``shared_frames`` counts matching frame PAIRS (a frame of A
-    matching two frames of B contributes 2) — multiplicity is signal
-    for looped/padded re-uploads; the brute-force pytest pin mirrors
-    exactly this rule. Requires frame_idx < 2^10 and doc_id < 2^53
-    (id packing)."""
-    frames = video_frame_hashes(media).select(
-        (
-            F.col("doc_id") * F.lit(1 << _FRAME_SHIFT) + F.col("frame_idx")
-        ).alias("doc_id"),
-        "dhash",
-    )
-    fpairs = hamming_neardup(frames, max_hamming, max_band_df, stats)
-    da = F.shiftrightunsigned(F.col("doc_a"), _FRAME_SHIFT)
-    db = F.shiftrightunsigned(F.col("doc_b"), _FRAME_SHIFT)
-    return (
-        fpairs.select(
-            F.least(da, db).alias("doc_a"),
-            F.greatest(da, db).alias("doc_b"),
-        )
-        .filter(F.col("doc_a") != F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared_frames"))
-        .filter(F.col("shared_frames") >= min_shared_frames)
     )

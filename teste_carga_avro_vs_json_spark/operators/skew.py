@@ -1,17 +1,13 @@
 """Skew mitigation utilities (100 TB design toolbox).
 
 AQE's skew-join splitting (on in session.py) handles most runtime skew;
-these are the *explicit* shapes for when the skew is known up front —
-hot grouping keys (boilerplate-heavy corpora in dedup, error-storm
-event types in metrics):
-
-- :func:`salted_agg` — two-phase aggregation: phase 1 aggregates
-  ``(key, salt)`` sub-groups (spreads one hot key over N reducers),
-  phase 2 merges the tiny partials by key. Only decomposable
-  aggregates (sum/count/min/max) qualify — exactly the counter set the
-  metrics pipeline uses (MetricasDesempenho.java:29-39 are all adds).
-- :func:`salted_broadcast_join` — replicate the small side over the
-  salt domain so a skewed big side still joins without one giant task.
+:func:`salted_agg` is the *explicit* shape for when the skew is known
+up front — hot grouping keys (boilerplate-heavy corpora in dedup,
+error-storm event types in metrics): phase 1 aggregates ``(key, salt)``
+sub-groups (spreads one hot key over N reducers), phase 2 merges the
+tiny partials by key. Only decomposable aggregates (sum/count/min/max)
+qualify — exactly the counter set the metrics pipeline uses
+(MetricasDesempenho.java:29-39 are all adds).
 
 Salts are deterministic (``xxhash64`` of the row's own key columns), so
 results stay oracle-reproducible.
@@ -70,26 +66,3 @@ def salted_agg(
     return partial.groupBy(*keys).agg(
         *[_DECOMPOSABLE[name][1](out).alias(out) for name, _, out in aggs]
     )
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    salt_cols: list[str] | None = None,
-) -> DataFrame:
-    """Equi-join where ``big`` is skewed on ``key``: salt the big side,
-    explode the small side across the salt domain, join on (key, salt).
-
-    The small side grows ``salt_buckets``× (still broadcastable by
-    assumption); the big side's hot key spreads over ``salt_buckets``
-    tasks. Output columns = big's + small's non-key columns.
-    """
-    salt_cols = salt_cols or [c for c in big.columns if c != key]
-    big_s = big.withColumn("_salt", _salt(salt_cols, salt_buckets))
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    out = big_s.join(F.broadcast(small_s), [key, "_salt"])
-    return out.drop("_salt")

@@ -326,9 +326,8 @@ def quality_score_sql(table: str = "documents") -> str:
 # ----------------------------------------------------------- fingerprint
 def fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprint: md5 over whitespace-normalized lowercase
-    text — the canonical content-defined exact-dup key. (The rolling
-    Rabin-hash variant lives in dedup.shingles; md5 here keeps the
-    oracle twin exact.)"""
+    text — the canonical content-defined exact-dup key (md5 keeps the
+    oracle twin exact)."""
     norm = "regexp_replace(trim(lower(text)), '\\\\s+', ' ')"
     return docs.select(
         "doc_id",

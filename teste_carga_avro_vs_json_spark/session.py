@@ -130,22 +130,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     return df
 
 
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view (normalized clocks
-    included) so the whole engine surface is reachable from
-    ``spark.sql(...)`` — the same table names the DuckDB oracle uses,
-    making Spark-SQL formulations of the oracle queries copy-paste
-    runnable."""
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def normalize_events_ts(df):
     """Coerce an events frame's ``ts`` to epoch-nanos long if the file
     delivered it as a timestamp type (see load_table docstring).

@@ -1,53 +1,27 @@
-"""Archive ingestion — ZIP and TAR(.gz) dataset bundles as Spark
-sources, the way public corpora actually arrive (arXiv bulk dumps,
-GitHub archives, Kaggle datasets, institutional crawls that didn't
-use WARC).
-
-Shape: ``binaryFile`` scan = one task per archive, then ONE
-Arrow-batched ``mapInPandas`` pass that walks the container with the
-stdlib ``zipfile``/``tarfile`` modules and emits one row per member —
-``(archive, member, payload, error)``. Zero shuffle; parallelism is
-the archive count (the WARC convention: a single huge archive is the
-uploader's pathology — resharding is a one-liner with
-``write_zip``/``write_tar``).
-
-Hardening (the decoder rule — test_fuzz_decoders.py rows "zip" and
+"""ZIP and TAR(.gz) member walkers — the stdlib ``zipfile``/
+``tarfile`` containers read one ``(member, payload)`` at a time, with
+the decoder hardening rule (test_fuzz_decoders.py rows "zip" and
 "tar"):
 
-- corrupt archives land as ONE row with ``error`` set, never a thrown
-  stage (no-silent-caps: callers count them);
 - per-member extraction is capped (``max_member_bytes``) against zip
-  bombs, checked BEFORE reading the member — a capped member becomes
-  an error row naming the member, the rest of the archive still
-  extracts;
-- truncated/overlapping member entries surface as
-  :class:`ArchiveFormatError` rows (zipfile/tarfile's raw exceptions
-  are wrapped at the entry).
+  bombs, checked BEFORE reading the member;
+- truncated/overlapping member entries raise
+  :class:`ArchiveFormatError` (zipfile/tarfile's raw exceptions are
+  wrapped at the entry).
 
 Builder twins ``build_zip``/``build_tar`` emit DETERMINISTIC bytes
 (fixed timestamps — never wall-clock, stored member order, zlib level
-pinned), so round-trips pin exactly. No SQL oracle: DuckDB has no
-archive reader — pytest-pinned (the documented codec convention).
-
-Reference scope: extension surface (the reference reads Kafka only);
-chains into html_extract / pdf_extract / build_training_corpus like
-the WARC source.
+pinned), so round-trips pin exactly.
 """
 
 from __future__ import annotations
 
 import io
-import os
 import struct
 import tarfile
 import zipfile
 import zlib
 from typing import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
 
 
 class ArchiveFormatError(ValueError):
@@ -173,103 +147,3 @@ def iter_tar_members(
             except (tarfile.TarError, ValueError, OSError, EOFError,
                     zlib.error, struct.error) as e:
                 yield info.name, None, type(e).__name__
-
-
-# ------------------------------------------------------------ sources
-_MEMBER_SCHEMA = (
-    "archive string, member string, payload binary, error string"
-)
-
-
-def _read_archives(
-    spark: SparkSession,
-    path: str,
-    glob: str,
-    walker,
-    member_pattern: str | None,
-    max_member_bytes: int,
-) -> DataFrame:
-    import re as _re
-
-    raw = spark.read.format("binaryFile").load(os.path.join(path, glob))
-    pat = _re.compile(member_pattern) if member_pattern else None
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for apath, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(apath))
-                try:
-                    for member, data, err in walker(
-                        bytes(content), max_member_bytes
-                    ):
-                        if pat is not None and not pat.search(member):
-                            continue
-                        rows.append((name, member, data, err))
-                except ArchiveFormatError as e:
-                    # one honest row per unreadable archive
-                    rows.append((name, None, None, str(e)))
-            yield pd.DataFrame(
-                rows, columns=["archive", "member", "payload", "error"]
-            )
-
-    return raw.select("path", "content").mapInPandas(walk, _MEMBER_SCHEMA)
-
-
-def read_zip_members(
-    spark: SparkSession,
-    path: str,
-    glob: str = "*.zip",
-    member_pattern: str | None = None,
-    max_member_bytes: int = DEFAULT_MAX_MEMBER_BYTES,
-) -> DataFrame:
-    """All file members of every ZIP under ``path`` —
-    ``(archive, member, payload, error)``. ``member_pattern`` filters
-    member names scan-side (regex), e.g. ``r"\\.txt$"``."""
-    return _read_archives(
-        spark, path, glob, iter_zip_members, member_pattern,
-        max_member_bytes,
-    )
-
-
-def read_tar_members(
-    spark: SparkSession,
-    path: str,
-    glob: str = "*.tar*",
-    member_pattern: str | None = None,
-    max_member_bytes: int = DEFAULT_MAX_MEMBER_BYTES,
-) -> DataFrame:
-    """TAR(.gz) twin of :func:`read_zip_members`."""
-    return _read_archives(
-        spark, path, glob, iter_tar_members, member_pattern,
-        max_member_bytes,
-    )
-
-
-def write_zip(
-    frame: DataFrame,
-    out_dir: str,
-    shard_col: str = "archive",
-    name_col: str = "member",
-    payload_col: str = "payload",
-) -> list[str]:
-    """(shard, member, payload) rows → one deterministic ZIP per
-    shard under ``out_dir``. Collected per shard DRIVER-side only for
-    the builder-twin/test surface (real exports stay parquet/WARC);
-    shard sizing is the caller's contract."""
-    rows = (
-        frame.select(shard_col, name_col, payload_col)
-        .sort(shard_col, name_col)
-        .collect()
-    )
-    os.makedirs(out_dir, exist_ok=True)
-    by_shard: dict[str, list[tuple[str, bytes]]] = {}
-    for r in rows:
-        by_shard.setdefault(str(r[0]), []).append((str(r[1]), bytes(r[2])))
-    written = []
-    for shard, members in sorted(by_shard.items()):
-        out = os.path.join(out_dir, f"{shard}.zip")
-        with open(out, "wb") as f:
-            f.write(build_zip(members))
-        written.append(out)
-    return written

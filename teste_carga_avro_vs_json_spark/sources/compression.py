@@ -165,15 +165,6 @@ def _lz4_emit(
         _lz4_emit_len(out, m - 15)
 
 
-def lz4_block_decompress(src: bytes, max_size: int = 1 << 30) -> bytes:
-    """LZ4 block decode (token / literals / offset+match with overlap
-    copy). Malformed input raises ValueError; output is capped at
-    ``max_size`` so hostile frames can't balloon memory."""
-    out = bytearray()
-    _lz4_decompress_into(src, out, max_size, 0)
-    return bytes(out)
-
-
 def _lz4_decompress_into(
     src: bytes, out: bytearray, max_size: int, base: int
 ) -> None:

@@ -221,128 +221,6 @@ def read_avro_ocf(spark: SparkSession, path: str) -> DataFrame:
     return raw.select("path", "content").mapInPandas(_decode, schema)
 
 
-def write_avro_ocf_any(
-    df: DataFrame,
-    path: str,
-    schema_json: str,
-    codec: str = "null",
-    block_records: int = 1000,
-) -> DataFrame:
-    """ANY-schema OCF dataset writer: encodes every row of ``df`` under
-    ``schema_json`` (generic codec, logical types included) and writes
-    one container file per task — the write twin of
-    :func:`read_avro_ocf_any`. The DataFrame's columns must match the
-    record schema's fields (the encoder consumes row dicts).
-
-    Returns the write manifest (file, n_records, n_bytes). Executor-side
-    writes, no driver collect; local-FS sink as with
-    :func:`write_avro_ocf` (on a cluster: DFS mount or the JVM
-    spark-avro package)."""
-    from teste_carga_avro_vs_json_spark.functions import avro_generic, avro_ocf
-
-    root, env = avro_generic.parse_schema(schema_json)
-    names = [f["name"] for f in root["fields"]]
-    enc = df.select(
-        avro_generic.to_avro_any(
-            F.struct(*[F.col(n) for n in names]), schema_json
-        ).alias("value")
-    )
-
-    def _write(batches):
-        import pandas as pd
-        from pyspark import TaskContext
-
-        task_id = TaskContext.get().partitionId()
-        records: list[bytes] = []
-        for pdf in batches:
-            records.extend(bytes(v) for v in pdf["value"].tolist())
-        rows = []
-        if records:
-            os.makedirs(path, exist_ok=True)
-            fpath = os.path.join(path, f"part-{task_id:05d}.avro")
-            blob = avro_ocf.write_ocf(
-                records,
-                codec=codec,
-                block_records=block_records,
-                sync_token=str(task_id),
-                schema_json=schema_json,
-            )
-            with open(fpath, "wb") as f:
-                f.write(blob)
-            rows.append((fpath, len(records), len(blob)))
-        yield pd.DataFrame(rows, columns=["file", "n_records", "n_bytes"])
-
-    manifest = enc.mapInPandas(
-        _write, "file string, n_records long, n_bytes long"
-    ).cache()
-    manifest.count()  # materialize: files hit disk exactly once
-    return manifest
-
-
-def read_avro_ocf_any(
-    spark: SparkSession,
-    path: str,
-    reader_schema: str | None = None,
-    pattern: str = "*.avro",
-) -> DataFrame:
-    """ANY-schema OCF dataset reader with evolution: decodes container
-    files through the generic resolver (functions/avro_generic). The
-    writer schema comes from each file's own ``avro.schema`` metadata;
-    ``reader_schema`` evolves it (defaults/promotions/skips), and the
-    Spark schema derives from the reader. With ``reader_schema=None``
-    the schema is sniffed from ONE file header driver-side (the same
-    inference contract as Spark's own Avro reader) and every file is
-    decoded in that shape.
-
-    Scale shape: binaryFile source (one task per file), Arrow-batched
-    decode, no shuffle; the driver touches only a single file header.
-    """
-    import glob as _glob
-
-    from teste_carga_avro_vs_json_spark.functions import avro_generic, avro_ocf
-
-    if reader_schema is None:
-        candidates = sorted(
-            _glob.glob(os.path.join(path, pattern))
-            or _glob.glob(os.path.join(path, "**", pattern), recursive=True)
-        )
-        if not candidates:
-            raise FileNotFoundError(f"no {pattern} under {path}")
-        with open(candidates[0], "rb") as f:
-            header = f.read(1 << 20)  # header fits well inside 1 MB
-        meta, _sync, _pos = avro_ocf._parse_header(header)
-        reader_schema = meta["avro.schema"].decode()
-    out_type = avro_generic.spark_type_of(reader_schema)
-    if not hasattr(out_type, "fields"):
-        raise ValueError("OCF datasets must have a record root schema")
-    names = [fld.name for fld in out_type.fields]
-
-    raw = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
-
-    def _decode(batches):
-        import pandas as pd
-
-        # logical types (date/timestamp/decimal) ride the wire as base
-        # types; convert at the Spark boundary like from_avro_any does
-        r_root, r_env = avro_generic.parse_schema(reader_schema)
-        conv = avro_generic._make_reader_converter(r_root, r_env)
-        for pdf in batches:
-            rows = []
-            for blob in pdf["content"].tolist():
-                for rec in avro_ocf.read_ocf_any(bytes(blob), reader_schema):
-                    if conv is not None:
-                        rec = conv(rec)
-                    rows.append(tuple(rec[n] for n in names))
-            yield pd.DataFrame(rows, columns=names)
-
-    return raw.select("content").mapInPandas(_decode, out_type)
-
-
 # --------------------------------------------------------------- Parquet
 def write_parquet(
     msgs: DataFrame,
@@ -368,61 +246,4 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return df.select(
         F.col("particao").cast("int").alias("particao"),
         "id", "timestamp", "sequencia", "dados", "versao",
-    )
-
-
-# ------------------------------------------------------------ compaction
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_records_per_file: int = 1_000_000,
-    partition_col: str | None = "particao",
-) -> DataFrame:
-    """Small-files compaction: rewrite a parquet dataset with bounded
-    file counts — THE standard maintenance job for long-lived ingest
-    layouts, where every micro-batch/task leaves a file per partition
-    and the metadata + open-file overhead eventually dominates scans.
-
-    Shape: one ``repartition(partition_col)`` shuffle co-locates each
-    Hive partition's rows into one task (so each partition dir gets
-    files from exactly one writer), and ``maxRecordsPerFile`` caps file
-    size without a second pass. At 100 TB, run per-partition-range so
-    the shuffle stays bounded; AQE coalesces the small tail. Returns a
-    one-row-per-partition manifest (files before is the caller's
-    concern; files after == ceil(rows / target) per partition).
-
-    ``dst`` must be a fresh location: the read of ``src`` is lazy, so an
-    overwrite of the same (or an enclosing/nested) path would delete the
-    source mid-job and lose the dataset — rejected up front.
-    """
-    src_real = os.path.realpath(src)
-    dst_real = os.path.realpath(dst)
-    if (
-        src_real == dst_real
-        or dst_real.startswith(src_real + os.sep)
-        or src_real.startswith(dst_real + os.sep)
-    ):
-        raise ValueError(
-            f"compact_parquet dst must not overlap src (src={src!r}, "
-            f"dst={dst!r}): the lazy overwrite would destroy the source"
-        )
-    df = spark.read.parquet(src)
-    writer = (
-        (df.repartition(F.col(partition_col)) if partition_col else df.coalesce(1))
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", target_records_per_file)
-    )
-    if partition_col:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(dst)
-    out = spark.read.parquet(dst)
-    group = [partition_col] if partition_col else []
-    return (
-        out.groupBy(*group)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .withColumn(
-            "n_files_max",
-            F.ceil(F.col("n_rows") / F.lit(target_records_per_file)).cast("int"),
-        )
     )

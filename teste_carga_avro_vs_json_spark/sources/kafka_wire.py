@@ -325,8 +325,8 @@ def count_records_validated(record_set: bytes, crc_fn=None) -> int:
     WITHOUT parsing record internals — what a real broker's produce
     validation does (it checks batch CRCs and trusts the CRC-covered
     recordCount header field; it never decompresses or walks records).
-    r7: this replaced full ``decode_record_batches`` in the StubBroker
-    append path, which was the produce soak's GIL bottleneck.
+    r7: this replaced a full record decode in the StubBroker append
+    path, which was the produce soak's GIL bottleneck.
     ``crc_fn`` overrides the CRC32C implementation (the broker passes
     the JVM accelerator when one is live — :func:`jvm_crc32c_fn`).
     Raises ValueError on CRC mismatch / malformed framing."""
@@ -358,27 +358,6 @@ def count_records_validated(record_set: bytes, crc_fn=None) -> int:
     return total
 
 
-def decode_record_batches(
-    data: bytes, check_crc: bool = True
-) -> list[tuple[int, bytes | None, bytes | None]]:
-    """Decode a concatenation of v2 record batches into
-    ``(offset, key, value)`` triples (CRC-validated by default).
-    Malformed input (hostile or truncated mid-field) raises a clean
-    ``ValueError`` — never hangs, loops, or leaks struct errors."""
-    try:
-        return [
-            rec
-            for _meta, recs in _decode_batches_meta(data, check_crc)
-            for rec in recs
-        ]
-    except NotImplementedError:
-        raise
-    except ValueError:
-        raise
-    except Exception as e:  # struct.error, zlib.error, IndexError, EOF
-        raise ValueError(f"malformed record batch: {e}") from e
-
-
 def decode_batches_meta(
     data: bytes, check_crc: bool = True
 ) -> list[tuple[dict, list[tuple[int, bytes | None, bytes | None]]]]:
@@ -386,8 +365,9 @@ def decode_batches_meta(
     ``(meta, records)`` where meta carries ``base_offset``,
     ``producer_id``, ``producer_epoch``, ``transactional`` (attributes
     bit 4) and ``control`` (bit 5) — what a read_committed consumer
-    needs to skip markers and aborted ranges. Same hardening contract
-    as :func:`decode_record_batches`."""
+    needs to skip markers and aborted ranges. Malformed input (hostile
+    or truncated mid-field) raises a clean ``ValueError`` — never
+    hangs, loops, or leaks struct errors."""
     try:
         return _decode_batches_meta(data, check_crc)
     except NotImplementedError:
@@ -718,16 +698,6 @@ class OutOfOrderSequenceError(ValueError):
     for this (producer, partition) does not match the batch's — a
     non-retriable sequence regression/gap (re-sending the same bytes
     can never fix it; the producer must re-init its producer id)."""
-
-
-class ProducerFailedError(ValueError):
-    """The idempotent producer exhausted its retries with the append
-    outcome UNKNOWN (the broker may hold the batch at the current base
-    sequence): reusing the instance for NEW records would resend the
-    same (pid, epoch, seq) and the broker's dedup window would ack the
-    OLD batch's offset — silently dropping the new data. The instance
-    is poisoned; call :meth:`IdempotentProducer.reset` (new producer
-    id ⇒ fresh sequence space) or build a new producer."""
 
 
 # the protocol error codes this stack produces/interprets
@@ -1784,137 +1754,10 @@ class WireKafkaClient:
         return out
 
 
-class IdempotentProducer:
-    """KIP-98 idempotent producer (r12, VERDICT r11 order #5): the
-    retry loop the reference's fire-and-forget path lacks — the
-    reference produces acks=1 and merely COUNTS errors
-    (ProdutorAvro.java:74-90); a naive retry there can append the same
-    batch twice. This wrapper closes the duplicate window end to end:
-
-    - ``InitProducerId`` once at construction (broker-assigned
-      producer id + epoch);
-    - one monotone sequence counter per (topic, partition), advancing
-      by RECORD count (the broker enforces contiguity);
-    - on a TRANSIENT failure (socket drop, timeout — the broker may or
-      may not have appended) it reconnects and retransmits the SAME
-      bytes with the SAME (pid, epoch, base_sequence): the broker's
-      5-deep producer-state cache acks the ORIGINAL offset instead of
-      appending twice;
-    - a sequence regression surfaces as the non-retriable
-      :class:`OutOfOrderSequenceError` (re-sending cannot fix it).
-
-    ``send`` returns the batch's base offset exactly like
-    :meth:`WireKafkaClient.produce`. Not thread-safe (one socket, one
-    sequence stream — run one producer per thread, the real client's
-    model)."""
-
-    def __init__(
-        self,
-        host: str,
-        port: int,
-        retries: int = 3,
-        client_factory=None,
-        **client_kwargs,
-    ):
-        self._mk = client_factory or (
-            lambda: WireKafkaClient(host, port, **client_kwargs)
-        )
-        self._client = self._mk()
-        self.producer_id, self.producer_epoch = (
-            self._client.init_producer_id()
-        )
-        self.retries = retries
-        self.retransmits = 0  # observability: how many dedup saves
-        self._seq: dict[tuple[str, int], int] = {}
-        self._failed = False
-
-    def reset(self) -> None:
-        """Recover a poisoned producer: re-run InitProducerId (fresh
-        pid ⇒ fresh per-partition sequence space on the broker, so a
-        possibly-appended in-doubt batch can never dedup-swallow new
-        records; the caller owns re-checking/deduplicating the in-doubt
-        batch itself, e.g. by reading the tail)."""
-        try:
-            self._client.close()
-        except Exception:  # noqa: BLE001 - may already be broken
-            pass
-        self._client = self._mk()
-        self.producer_id, self.producer_epoch = (
-            self._client.init_producer_id()
-        )
-        self._seq = {}
-        self._failed = False
-
-    def send(
-        self,
-        topic: str,
-        partition: int,
-        records: list[tuple[bytes | None, bytes | None]],
-        codec: str | None = None,
-        timeout_ms: int = 30000,
-    ) -> int:
-        if not records:
-            raise ValueError("empty batch")
-        if self._failed:
-            raise ProducerFailedError(
-                "producer poisoned by an in-doubt batch — reset() or "
-                "build a new producer"
-            )
-        key = (topic, partition)
-        seq = self._seq.setdefault(key, 0)
-        last_exc: Exception | None = None
-        for attempt in range(self.retries + 1):
-            if attempt:
-                self.retransmits += 1
-            try:
-                base = self._client.produce(
-                    topic,
-                    partition,
-                    records,
-                    timeout_ms=timeout_ms,
-                    codec=codec,
-                    producer_id=self.producer_id,
-                    producer_epoch=self.producer_epoch,
-                    base_sequence=seq,
-                )
-            except (ConnectionError, TimeoutError, OSError) as exc:
-                # transient: the broker MAY have appended before the
-                # connection died — reconnect and retransmit the same
-                # sequence; the broker dedupes
-                last_exc = exc
-                try:
-                    self._client.close()
-                except Exception:  # noqa: BLE001 - already broken
-                    pass
-                self._client = self._mk()
-                continue
-            self._seq[key] = seq + len(records)
-            return base
-        # the append outcome is UNKNOWN (every attempt died on the
-        # wire): poison the instance — a later send() of DIFFERENT
-        # records at this same base_sequence would be dedup-acked with
-        # the old batch's offset and silently dropped
-        self._failed = True
-        raise ConnectionError(
-            f"produce to {topic}[{partition}] failed after "
-            f"{self.retries + 1} attempts; producer poisoned "
-            "(in-doubt batch) — reset() before reuse"
-        ) from last_exc
-
-    def close(self) -> None:
-        self._client.close()
-
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
-        self.close()
-
-
 class TransactionalProducer:
     """KIP-98 transactional producer (r12): atomic multi-partition
     produce with zombie fencing — the full exactly-once produce story
-    on top of :class:`IdempotentProducer`'s sequence machinery.
+    with idempotent per-partition sequences.
 
     - ``InitProducerId(transactional.id)`` at construction: the pid is
       stable for the id, the EPOCH BUMPS — any older incarnation is

@@ -7,14 +7,14 @@ Offsets ARE committed version numbers: micro-batch N+1 contains the
 rows of every file ADDED between the last consumed version and the
 current head, stepped version by version against each commit's parent
 manifest — so an append-only producer (``snapshot_commit(mode=
-"append")``, ``build_corpus_incremental``) streams EXACTLY-ONCE into
+"append")``) streams EXACTLY-ONCE into
 any downstream pipeline (the broadcast-model streaming twins, Kafka
 sinks, windowed aggs), with replay driven by the immutable manifests
 (``readBetweenOffsets`` re-reads the same version range and gets the
 same rows, byte for byte).
 
 Copy-on-write commits (merge / delete / overwrite / compact /
-cluster_by) REWRITE surviving rows into new files, so their file diff
+cluster) REWRITE surviving rows into new files, so their file diff
 is not a row delta. ``on_rewrite`` picks the policy, mirroring Delta's
 streaming-source options:
 
@@ -44,7 +44,7 @@ appended with EXTRA columns have them dropped, files missing pinned
 columns null-fill (the merge-schema caveat of ``snapshot_read``
 applies to streams too).
 
-A vacuumed parent manifest (``snapshot_vacuum`` retiring versions the
+A missing parent manifest (a retention process retiring versions the
 stream has not consumed yet) raises — the missing history cannot be
 reconstructed, matching Delta's "version no longer available".
 
@@ -209,7 +209,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         manifest = mt._read_manifest(self.table_dir, version)
         if manifest["op"] != "append":
             if (manifest.get("extra") or {}).get("reorg"):
-                # compact/cluster_by/zorder_by preserve content exactly
+                # compact/cluster_by preserve content exactly
                 # (Delta's dataChange=false): no rows changed, nothing
                 # to emit, regardless of on_rewrite
                 return []
@@ -430,8 +430,8 @@ class _SnapshotWriterBase:
     manifest publish via ``maintenance._publish_files``, racing other
     writers safely), and ``abort`` removes the files so a failed job
     leaves nothing a reader can see. Task retries/zombies at worst
-    strand unreferenced files in the attempt dir — exactly the orphan
-    class ``snapshot_vacuum`` already retires.
+    strand unreferenced files in the attempt dir, which no manifest
+    references and no reader sees.
 
     Same single-node caveat as ``write_avro_ocf`` (SCALE.md): tasks
     write to a path that must be shared storage on a real cluster."""
@@ -449,12 +449,6 @@ class _SnapshotWriterBase:
         self.data_dir = tempfile.mkdtemp(
             prefix="c-", dir=os.path.join(self.table_dir, "data")
         )
-        # CHECK constraints snapshot taken driver-side at job setup
-        # and pickled to executors; write() enforces them per Arrow
-        # batch with DuckDB (constraints are portable ANSI SQL — the
-        # repo's oracle discipline), so a violating row fails ITS task
-        # before any manifest publish
-        self.constraints = _mt().snapshot_constraints(self.table_dir)
 
     # executor side -----------------------------------------------------
     def write(self, iterator):
@@ -470,41 +464,7 @@ class _SnapshotWriterBase:
         path = os.path.join(self.data_dir, f"part-{attempt}.parquet")
         writer = None
         rows = 0
-        duck = None
         for batch in iterator:
-            if self.constraints:
-                import pyarrow as pa
-
-                if duck is None:
-                    import duckdb
-
-                    duck = duckdb.connect()
-                tbl = pa.Table.from_batches([batch])
-                for name, expr in sorted(self.constraints.items()):
-                    # standard CHECK semantics: violation == expr
-                    # evaluates to FALSE (UNKNOWN passes)
-                    duck.register("_batch", tbl)
-                    n_bad = duck.execute(
-                        "SELECT count(*) FROM _batch "
-                        f"WHERE NOT coalesce(({expr}), true)"
-                    ).fetchone()[0]
-                    if n_bad:
-                        # same error surface as every other
-                        # enforcement path: ConstraintViolationError
-                        # with a bounded row sample (ADVICE r11)
-                        from ..operators.maintenance import (
-                            ConstraintViolationError,
-                        )
-
-                        sample = duck.execute(
-                            "SELECT * FROM _batch WHERE NOT "
-                            f"coalesce(({expr}), true) LIMIT 3"
-                        ).fetchall()
-                        raise ConstraintViolationError(
-                            f"write violates CHECK constraint "
-                            f"{name!r} ({expr}): {n_bad} row(s) in "
-                            f"this batch, e.g. {sample!r}"
-                        )
             if writer is None:
                 writer = pq.ParquetWriter(path, batch.schema)
             writer.write_batch(batch)

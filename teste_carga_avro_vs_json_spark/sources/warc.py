@@ -44,8 +44,8 @@ across reruns and partitionings, so manifests and round-trip tests
 hash identically.
 
 No SQL oracle: DuckDB has no WARC reader — pinned by exact pytest
-round-trips (build→parse, Spark write→read, member-offset
-splittability) per the documented non-relational-codec convention.
+round-trips (build→parse, Spark write→read, one gzip member
+per record) per the documented non-relational-codec convention.
 """
 
 from __future__ import annotations
@@ -286,19 +286,6 @@ def _inflate_member(data: bytes, pos: int) -> tuple[bytes, int]:
     return bytes(out), len(data) - len(d.unused_data)
 
 
-def gzip_member_offsets(data: bytes) -> list[tuple[int, int]]:
-    """(offset, length) of each gzip member — the CDX-style index a
-    production reader seeks with. Walks real DEFLATE framing via
-    decompressobj (never guesses from magic bytes, which can occur
-    inside compressed payloads)."""
-    out, pos = [], 0
-    while pos < len(data):
-        _, end = _inflate_member(data, pos)
-        out.append((pos, end - pos))
-        pos = end
-    return out
-
-
 def iter_gzip_members(data: bytes) -> Iterator[bytes]:
     """Yield each member's inflated bytes — streaming, one member's
     inflate in memory at a time."""
@@ -316,13 +303,11 @@ def docs_to_warc_bytes(
     *,
     gz: bool = True,
     date: str = DEFAULT_DATE,
-    content_type: str = "text/html; charset=utf-8",
 ) -> bytes:
-    """(doc_id, url, payload) rows → one WARC file image: a leading
+    """(doc_id, url, html) rows → one WARC file image: a leading
     ``warcinfo`` record then one HTTP ``response`` record per doc.
     ``gz=True`` emits one gzip member PER RECORD (the CommonCrawl
-    splittable layout). Payloads may be str (encoded UTF-8 — the HTML
-    case) or raw bytes (binary crawl payloads, e.g. PDFs)."""
+    splittable layout)."""
     info = build_record(
         "warcinfo",
         b"software: teste_carga_avro_vs_json_spark\r\nformat: WARC/1.1\r\n",
@@ -331,12 +316,7 @@ def docs_to_warc_bytes(
     )
     recs = [info]
     for doc_id, url, payload in rows:
-        body = (
-            bytes(payload)
-            if isinstance(payload, (bytes, bytearray, memoryview))
-            else (payload or "").encode("utf-8")
-        )
-        http = build_http_response(body, content_type=content_type)
+        http = build_http_response((payload or "").encode("utf-8"))
         recs.append(
             build_record(
                 "response",
@@ -363,9 +343,8 @@ def write_warc(
     num_files: int = 8,
     gz: bool = True,
     date: str = DEFAULT_DATE,
-    content_type: str = "text/html; charset=utf-8",
 ) -> DataFrame:
-    """Write (doc_id, url, payload) as ``part-NNNNN.warc[.gz]`` shards,
+    """Write (doc_id, url, html) as ``part-NNNNN.warc[.gz]`` shards,
     one per task (OCF sink pattern) — returns the write manifest
     (file, n_records, n_bytes). Files land deterministically:
     repartition by doc id so reruns produce identical shards."""
@@ -394,9 +373,7 @@ def write_warc(
         out = []
         if rows:
             rows.sort(key=lambda r: r[0])  # stable member order per shard
-            blob = docs_to_warc_bytes(
-                rows, gz=gz, date=date, content_type=content_type
-            )
+            blob = docs_to_warc_bytes(rows, gz=gz, date=date)
             os.makedirs(path, exist_ok=True)
             ext = "warc.gz" if gz else "warc"
             fpath = os.path.join(path, f"part-{task_id:05d}.{ext}")
@@ -489,80 +466,6 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
             )
 
     return raw.select("path", "content").mapInPandas(_decode, _READ_SCHEMA)
-
-
-def read_warc_payloads(
-    spark: SparkSession,
-    path: str,
-    content_type_prefix: str | None = None,
-) -> DataFrame:
-    """(doc_id, url, content_type, body) with RAW bytes for every 2xx
-    response — the binary twin of :func:`read_warc_responses` for
-    non-text crawl payloads (PDF, images, audio). The content-type
-    filter applies SCAN-LOCALLY inside the same Arrow pass, so a
-    PDF-only read never materializes the HTML payloads at all. One
-    task per shard, zero shuffle."""
-    raw = spark.read.format("binaryFile").load(f"{path}/*.warc*")
-    prefix = (content_type_prefix or "").lower()
-
-    def _decode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for fpath, blob in zip(
-                pdf["path"].tolist(), pdf["content"].tolist()
-            ):
-                blob = bytes(blob)
-                if fpath.endswith(".gz"):
-                    recs: list[WarcRecord] = []
-                    try:
-                        for member in iter_gzip_members(blob):
-                            rs, _bad = parse_warc(member, tolerant=True)
-                            recs.extend(rs)
-                    except WarcFormatError:
-                        pass  # truncated tail: keep the valid prefix
-                else:
-                    recs, _bad = parse_warc(blob, tolerant=True)
-                for r in recs:
-                    if r.warc_type != "response":
-                        continue
-                    try:
-                        status, hh, body = parse_http_response(r.payload)
-                    except (WarcFormatError, ValueError):
-                        continue
-                    if not 200 <= status < 300:
-                        continue
-                    ctype = (hh.get("content-type") or "").lower()
-                    if prefix and not ctype.startswith(prefix):
-                        continue
-                    did = r.headers.get("WARC-X-Spark-Doc-Id")
-                    rows.append(
-                        (
-                            int(did) if did is not None else None,
-                            r.target_uri,
-                            hh.get("content-type"),
-                            body,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "url", "content_type", "body"]
-            )
-
-    return raw.select("path", "content").mapInPandas(
-        _decode,
-        "doc_id long, url string, content_type string, body binary",
-    )
-
-
-def read_warc_pdfs(spark: SparkSession, path: str) -> DataFrame:
-    """(doc_id, url, pdf) for every 2xx ``application/pdf`` response —
-    feeds ``operators/pdf_extract.extract_text_pdf`` directly: the
-    CommonCrawl PDF ingest chain (`warc → pdf_extract →
-    build_training_corpus`)."""
-    return read_warc_payloads(
-        spark, path, content_type_prefix="application/pdf"
-    ).select("doc_id", "url", F.col("body").alias("pdf"))
 
 
 def read_warc_responses(spark: SparkSession, path: str) -> DataFrame:

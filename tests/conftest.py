@@ -27,8 +27,6 @@ _SLOW_MODULES = {
     "test_kafka_wire_source",
     "test_evolution_e2e",
     "test_bpe",
-    "test_unigram",
-    "test_quality_model",
     "test_avro_generic",
     "test_zstd_stdlib",
     "test_imageio_interop",
@@ -45,14 +43,12 @@ _SLOW_MODULES = {
     "test_crawl",
     "test_maintenance",
     "test_warc",
-    "test_bloom",
     "test_ivfpq",
     "test_kafka_txn",
     "test_kafka_txn_offsets",
     "test_kafka_groups",
     "test_kafka_rebalance",
     "test_snapshot_source",
-    "test_archive",
     "test_bench_lanes",
 }
 

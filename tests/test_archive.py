@@ -1,10 +1,8 @@
-"""Archive ingestion (sources/archive.py): exact round-trips over the
-deterministic builders, bomb caps, corrupt-container error rows, and
-the chain into the PDF extractor — pytest-pinned (no SQL oracle:
-DuckDB has no archive reader, the documented codec convention)."""
+"""Archive member walkers (sources/archive.py): exact round-trips over
+the deterministic builders, bomb caps and corrupt-container errors —
+pytest-pinned (no SQL oracle: DuckDB has no archive reader, the
+documented codec convention)."""
 
-import gzip
-import io
 import zipfile
 
 import pytest
@@ -74,83 +72,3 @@ def test_zip_lying_length_is_caught():
     patched = bytes(blob).replace(needle, struct.pack("<I", 16))
     got = list(ar.iter_zip_members(patched, max_member_bytes=1024))
     assert got and got[0][1] is None and got[0][2] is not None
-
-
-def test_spark_read_zip_and_tar(spark, tmp_path):
-    zdir = tmp_path / "zips"
-    zdir.mkdir()
-    (zdir / "one.zip").write_bytes(ar.build_zip(_MEMBERS))
-    (zdir / "two.zip").write_bytes(
-        ar.build_zip([("only.txt", b"segundo arquivo")])
-    )
-    (zdir / "broken.zip").write_bytes(b"PK\x03\x04 nope")
-    out = ar.read_zip_members(spark, str(zdir)).collect()
-    by_archive = {}
-    for r in out:
-        by_archive.setdefault(r.archive, []).append(r)
-    assert len(by_archive["one.zip"]) == 3
-    assert by_archive["two.zip"][0].member == "only.txt"
-    assert bytes(by_archive["two.zip"][0].payload) == b"segundo arquivo"
-    # the corrupt archive is ONE honest error row, not a thrown stage
-    bad = by_archive["broken.zip"]
-    assert len(bad) == 1 and bad[0].error and bad[0].member is None
-
-    tdir = tmp_path / "tars"
-    tdir.mkdir()
-    (tdir / "one.tar.gz").write_bytes(ar.build_tar(_MEMBERS, gz=True))
-    tout = ar.read_tar_members(spark, str(tdir)).collect()
-    assert sorted(r.member for r in tout) == sorted(n for n, _ in _MEMBERS)
-    # member_pattern filters scan-side
-    only_txt = ar.read_tar_members(
-        spark, str(tdir), member_pattern=r"\.txt$"
-    ).collect()
-    assert sorted(r.member for r in only_txt) == ["docs/a.txt", "docs/b.txt"]
-
-
-def test_zip_chains_into_pdf_extractor(spark, tmp_path):
-    """The crawl-bundle shape: a ZIP of PDFs → members → extract_text_pdf
-    == the plaintext twins."""
-    import pyspark.sql.functions as F
-
-    from teste_carga_avro_vs_json_spark.operators import pdf_extract as px
-
-    pages = [["um dois tres"], ["quatro"]]
-    pdfs = [
-        (f"d{i}.pdf", px.build_pdf([[f"doc {i} linha"]])) for i in range(4)
-    ]
-    zdir = tmp_path / "bundle"
-    zdir.mkdir()
-    (zdir / "batch.zip").write_bytes(ar.build_zip(pdfs))
-    members = ar.read_zip_members(
-        spark, str(zdir), member_pattern=r"\.pdf$"
-    )
-    docs = members.select(
-        F.regexp_extract("member", r"d(\d+)\.pdf", 1)
-        .cast("long")
-        .alias("doc_id"),
-        F.col("payload").alias("pdf"),
-    )
-    got = {r.doc_id: r.text for r in px.extract_text_pdf(docs).collect()}
-    assert got == {i: f"doc {i} linha" for i in range(4)}
-
-
-def test_write_zip_roundtrip(spark, tmp_path):
-    rows = [
-        ("shard0", "a.txt", b"aa"),
-        ("shard0", "b.txt", b"bb"),
-        ("shard1", "c.txt", b"cc"),
-    ]
-    df = spark.createDataFrame(
-        rows, "archive string, member string, payload binary"
-    )
-    written = ar.write_zip(df, str(tmp_path / "out"))
-    assert [p.rsplit("/", 1)[1] for p in written] == [
-        "shard0.zip",
-        "shard1.zip",
-    ]
-    back = ar.read_zip_members(spark, str(tmp_path / "out")).collect()
-    assert sorted((r.archive, r.member, bytes(r.payload)) for r in back) == [
-        ("shard0.zip", "a.txt", b"aa"),
-        ("shard0.zip", "b.txt", b"bb"),
-        ("shard1.zip", "c.txt", b"cc"),
-    ]

@@ -13,6 +13,18 @@ import pytest
 from teste_carga_avro_vs_json_spark.functions import avro_generic as ag
 
 
+def _decode_resolved(writer_schema, reader_schema, data: bytes):
+    """Decode one datum written with ``writer_schema`` under
+    ``reader_schema`` through ``ag.make_resolver`` (the resolver
+    ``from_avro_any`` and ``schema_registry.can_read`` compile)."""
+    w_root, w_env = ag.parse_schema(writer_schema)
+    r_root, r_env = ag.parse_schema(reader_schema)
+    value, pos = ag.make_resolver(w_root, r_root, w_env, r_env)(data, 0)
+    if pos != len(data):
+        raise ValueError(f"{len(data) - pos} trailing bytes")
+    return value
+
+
 KITCHEN_SINK = json.dumps(
     {
         "type": "record",
@@ -106,7 +118,7 @@ def test_resolution_added_removed_promoted_aliased():
         }
     )
     raw = ag.encode(writer, {"id": 7, "legacy": ["a", "b"], "score": 3, "tag": "t"})
-    out = ag.decode_resolved(writer, reader, raw)
+    out = _decode_resolved(writer, reader, raw)
     assert out == {
         "id": 7,
         "score": 3.0,
@@ -124,26 +136,26 @@ def test_resolution_enum_default_and_union_shapes():
     r_enum = json.dumps(
         {"type": "enum", "name": "E", "symbols": ["A", "B", "OTHER"], "default": "OTHER"}
     )
-    assert ag.decode_resolved(w_enum, r_enum, ag.encode(w_enum, "NEW")) == "OTHER"
-    assert ag.decode_resolved(w_enum, r_enum, ag.encode(w_enum, "B")) == "B"
+    assert _decode_resolved(w_enum, r_enum, ag.encode(w_enum, "NEW")) == "OTHER"
+    assert _decode_resolved(w_enum, r_enum, ag.encode(w_enum, "B")) == "B"
     # no default -> error only when the unknown symbol is actually read
     r_strict = json.dumps({"type": "enum", "name": "E", "symbols": ["A", "B"]})
-    assert ag.decode_resolved(w_enum, r_strict, ag.encode(w_enum, "A")) == "A"
+    assert _decode_resolved(w_enum, r_strict, ag.encode(w_enum, "A")) == "A"
     with pytest.raises(ag.AvroResolutionError):
-        ag.decode_resolved(w_enum, r_strict, ag.encode(w_enum, "NEW"))
+        _decode_resolved(w_enum, r_strict, ag.encode(w_enum, "NEW"))
     # writer non-union -> reader union
-    assert ag.decode_resolved('"int"', '["null", "long"]', ag.encode('"int"', 5)) == 5
+    assert _decode_resolved('"int"', '["null", "long"]', ag.encode('"int"', 5)) == 5
     # writer union -> reader single type: ok branch decodes, bad branch raises
     w_u = '["null", "string", "long"]'
-    assert ag.decode_resolved(w_u, '"string"', ag.encode(w_u, "x")) == "x"
+    assert _decode_resolved(w_u, '"string"', ag.encode(w_u, "x")) == "x"
     with pytest.raises(ag.AvroResolutionError):
-        ag.decode_resolved(w_u, '"string"', ag.encode(w_u, 9))
+        _decode_resolved(w_u, '"string"', ag.encode(w_u, 9))
     # string <-> bytes both ways
-    assert ag.decode_resolved('"string"', '"bytes"', ag.encode('"string"', "ab")) == b"ab"
-    assert ag.decode_resolved('"bytes"', '"string"', ag.encode('"bytes"', b"ab")) == "ab"
+    assert _decode_resolved('"string"', '"bytes"', ag.encode('"string"', "ab")) == b"ab"
+    assert _decode_resolved('"bytes"', '"string"', ag.encode('"bytes"', b"ab")) == "ab"
     # incompatible pair fails at compile time
     with pytest.raises(ag.AvroResolutionError):
-        ag.decode_resolved('"long"', '"int"', ag.encode('"long"', 1))
+        _decode_resolved('"long"', '"int"', ag.encode('"long"', 1))
 
 
 def test_resolution_named_type_name_matching():
@@ -157,34 +169,34 @@ def test_resolution_named_type_name_matching():
     renamed = {"type": "record", "name": "New",
                "fields": [{"name": "a", "type": "int"}]}
     with pytest.raises(ag.AvroResolutionError, match="name mismatch"):
-        ag.decode_resolved(w, json.dumps(renamed), ag.encode(w, {"a": 1}))
+        _decode_resolved(w, json.dumps(renamed), ag.encode(w, {"a": 1}))
     # reader alias for the writer name lifts the mismatch
     aliased = dict(renamed, aliases=["Old"])
-    assert ag.decode_resolved(w, json.dumps(aliased), ag.encode(w, {"a": 1})) == {"a": 1}
+    assert _decode_resolved(w, json.dumps(aliased), ag.encode(w, {"a": 1})) == {"a": 1}
     # same unqualified name under different namespaces still matches
     ns = json.dumps(
         {"type": "record", "name": "Old", "namespace": "com.y",
          "fields": [{"name": "a", "type": "int"}]}
     )
-    assert ag.decode_resolved(w, ns, ag.encode(w, {"a": 1})) == {"a": 1}
+    assert _decode_resolved(w, ns, ag.encode(w, {"a": 1})) == {"a": 1}
     # enum rename: same rule
     we = json.dumps({"type": "enum", "name": "E1", "symbols": ["A"]})
     re_bad = json.dumps({"type": "enum", "name": "E2", "symbols": ["A"]})
     with pytest.raises(ag.AvroResolutionError, match="name mismatch"):
-        ag.decode_resolved(we, re_bad, ag.encode(we, "A"))
+        _decode_resolved(we, re_bad, ag.encode(we, "A"))
     re_ok = json.dumps(
         {"type": "enum", "name": "E2", "aliases": ["E1"], "symbols": ["A"]}
     )
-    assert ag.decode_resolved(we, re_ok, ag.encode(we, "A")) == "A"
+    assert _decode_resolved(we, re_ok, ag.encode(we, "A")) == "A"
     # union branch selection now binds by NAME, not just structure:
     # writer union [Old, New] with identical shapes decodes the New
     # branch against reader New, and REJECTS the structurally-identical
     # Old branch (hand-framed union bytes: zigzag branch idx + record)
     w_u = json.dumps([json.loads(w), renamed])
     rec = ag.encode(json.dumps(renamed), {"a": 7})
-    assert ag.decode_resolved(w_u, json.dumps(renamed), b"\x02" + rec) == {"a": 7}
+    assert _decode_resolved(w_u, json.dumps(renamed), b"\x02" + rec) == {"a": 7}
     with pytest.raises(ag.AvroResolutionError):
-        ag.decode_resolved(w_u, json.dumps(renamed), b"\x00" + rec)
+        _decode_resolved(w_u, json.dumps(renamed), b"\x00" + rec)
 
 
 def test_reader_missing_field_without_default_is_an_error():
@@ -202,7 +214,7 @@ def test_reader_missing_field_without_default_is_an_error():
         }
     )
     with pytest.raises(ag.AvroResolutionError, match="no default"):
-        ag.decode_resolved(writer, reader, ag.encode(writer, {"a": 1}))
+        _decode_resolved(writer, reader, ag.encode(writer, {"a": 1}))
 
 
 def test_bytes_default_and_record_default():
@@ -230,7 +242,7 @@ def test_bytes_default_and_record_default():
     writer = json.dumps(
         {"type": "record", "name": "R", "fields": [{"name": "a", "type": "int"}]}
     )
-    out = ag.decode_resolved(writer, reader, ag.encode(writer, {"a": 2}))
+    out = _decode_resolved(writer, reader, ag.encode(writer, {"a": 2}))
     assert out == {"a": 2, "blob": b"\xff\x00", "sub": {"x": 3}}
 
 
@@ -372,7 +384,7 @@ def test_property_roundtrip_random_schemas():
         s = json.dumps(schema)
         raw = ag.encode(s, value)
         assert ag.decode(s, raw) == value
-        assert ag.decode_resolved(s, s, raw) == value
+        assert _decode_resolved(s, s, raw) == value
 
     check()
 
@@ -495,179 +507,13 @@ def test_recursive_schema_linked_list():
             ],
         }
     )
-    out = ag.decode_resolved(lst, lst2, raw)
+    out = _decode_resolved(lst, lst2, raw)
     assert out == {
         "v": 1, "tag": "-",
         "next": {"v": 2, "tag": "-", "next": {"v": 3, "tag": "-", "next": None}},
     }
     with pytest.raises(ValueError, match="recursive"):
         ag.spark_type_of(lst)
-
-
-def test_ocf_any_schema_and_evolution():
-    """OCF files are self-describing: write a container with a CUSTOM
-    embedded schema, read it back with no schema at all (writer shape)
-    and with an evolved reader (default fill + promotion); the fixed
-    MensagemCarga reader and the generic reader agree on reference
-    files."""
-    from teste_carga_avro_vs_json_spark.functions import avro_ocf
-
-    v1 = json.dumps(
-        {
-            "type": "record",
-            "name": "Pt",
-            "fields": [
-                {"name": "x", "type": "int"},
-                {"name": "tag", "type": "string"},
-            ],
-        }
-    )
-    recs = [{"x": i, "tag": f"t{i}"} for i in range(7)]
-    for codec in ("null", "deflate"):
-        blob = avro_ocf.write_ocf(
-            [ag.encode(v1, r) for r in recs],
-            codec=codec,
-            block_records=3,
-            schema_json=v1,
-        )
-        assert avro_ocf.read_ocf_any(blob) == recs
-        reader = json.dumps(
-            {
-                "type": "record",
-                "name": "Pt",
-                "fields": [
-                    {"name": "x", "type": "double"},
-                    {"name": "unit", "type": "string", "default": "m"},
-                ],
-            }
-        )
-        assert avro_ocf.read_ocf_any(blob, reader) == [
-            {"x": float(i), "unit": "m"} for i in range(7)
-        ]
-    # reference-schema files: generic reader == fixed reader
-    from teste_carga_avro_vs_json_spark.functions import avro_codec
-    from teste_carga_avro_vs_json_spark.schemas import MENSAGEM_CARGA_AVSC
-
-    row = {
-        "id": "m", "timestamp": 5, "sequencia": 1,
-        "dados": [], "versao": "1.0",
-    }
-    blob = avro_ocf.write_ocf([avro_codec.encode_mensagem(row)])
-    assert avro_ocf.read_ocf_any(blob) == avro_ocf.read_ocf(blob) == [row]
-    sink = json.loads(KITCHEN_SINK)
-    blob2 = avro_ocf.write_ocf(
-        [ag.encode(KITCHEN_SINK, SINK_VALUE)], schema_json=json.dumps(sink)
-    )
-    assert avro_ocf.read_ocf_any(blob2) == [SINK_VALUE]
-
-
-def test_read_avro_ocf_any_spark(spark, tmp_path):
-    """Spark-side ANY-schema OCF reads: schema sniffed from the file
-    header when no reader is given; an evolved reader applies
-    defaults/promotions across every file; the engine's own OCF
-    datasets decode identically through the generic path."""
-    from teste_carga_avro_vs_json_spark.functions import avro_ocf
-    from teste_carga_avro_vs_json_spark.sources import generator, io_files
-
-    v1 = json.dumps(
-        {
-            "type": "record",
-            "name": "Pt",
-            "fields": [
-                {"name": "x", "type": "int"},
-                {"name": "tag", "type": "string"},
-            ],
-        }
-    )
-    d = tmp_path / "pts"
-    d.mkdir()
-    for fidx in range(3):
-        recs = [{"x": fidx * 10 + i, "tag": f"f{fidx}"} for i in range(4)]
-        (d / f"part-{fidx}.avro").write_bytes(
-            avro_ocf.write_ocf(
-                [ag.encode(v1, r) for r in recs],
-                codec="deflate",
-                schema_json=v1,
-                sync_token=str(fidx),
-            )
-        )
-    # sniffed schema (reader=None)
-    df = io_files.read_avro_ocf_any(spark, str(d))
-    assert df.columns == ["x", "tag"]
-    assert df.count() == 12 and df.agg({"x": "max"}).first()[0] == 23
-    # evolved reader: promotion + default, applied to every file
-    reader = json.dumps(
-        {
-            "type": "record",
-            "name": "Pt",
-            "fields": [
-                {"name": "x", "type": "long"},
-                {"name": "unit", "type": "string", "default": "m"},
-            ],
-        }
-    )
-    ev = io_files.read_avro_ocf_any(spark, str(d), reader)
-    assert dict(ev.dtypes) == {"x": "bigint", "unit": "string"}
-    assert ev.filter(ev.unit == "m").count() == 12
-    # the engine's own OCF dataset through the generic path == fixed path
-    msgs = generator.mensagens(spark, 40, tamanho_kb=1)
-    p2 = str(tmp_path / "msgs")
-    io_files.write_avro_ocf(msgs, p2, num_particoes=4)
-    generic = io_files.read_avro_ocf_any(spark, p2)
-    fixed = io_files.read_avro_ocf(spark, p2)
-    assert sorted(r.sequencia for r in generic.collect()) == sorted(
-        r.sequencia for r in fixed.collect()
-    )
-    assert set(generic.columns) == set(fixed.columns) - {"particao"}
-
-
-def test_write_read_avro_ocf_any_roundtrip(spark, tmp_path):
-    """Write twin: an arbitrary DataFrame (incl. logical-typed columns)
-    goes to standard OCF files under a caller schema, and reads back
-    losslessly through read_avro_ocf_any — full generic file story."""
-    import datetime
-    from decimal import Decimal
-
-    from teste_carga_avro_vs_json_spark.sources import io_files
-
-    schema = json.dumps(
-        {
-            "type": "record",
-            "name": "Tx",
-            "fields": [
-                {"name": "id", "type": "long"},
-                {"name": "day", "type": {"type": "int", "logicalType": "date"}},
-                {
-                    "name": "amt",
-                    "type": {
-                        "type": "bytes",
-                        "logicalType": "decimal",
-                        "precision": 12,
-                        "scale": 2,
-                    },
-                },
-                {"name": "note", "type": ["null", "string"], "default": None},
-            ],
-        }
-    )
-    rows = [
-        (i, datetime.date(2024, 1, 1 + i % 28), Decimal(f"{i}.25"),
-         None if i % 3 == 0 else f"n{i}")
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, "id long, day date, amt decimal(12,2), note string"
-    ).repartition(4)
-    p = str(tmp_path / "tx")
-    manifest = io_files.write_avro_ocf_any(df, p, schema, codec="deflate")
-    m = manifest.collect()
-    assert sum(r.n_records for r in m) == 200 and len(m) >= 1
-    back = io_files.read_avro_ocf_any(spark, p)
-    assert dict(back.dtypes) == {
-        "id": "bigint", "day": "date", "amt": "decimal(12,2)", "note": "string",
-    }
-    got = sorted((r.id, r.day, r.amt, r.note) for r in back.collect())
-    assert got == sorted(rows)
 
 
 def test_spark_from_avro_any_evolution(spark):
@@ -787,7 +633,7 @@ def test_interop_with_apache_avro_java(spark):
     codec produces must decode in Java and re-encode to the IDENTICAL
     bytes (proves canonical binary form for every type incl. unions,
     fixed, maps, nested records), and Java's own schema-resolution of a
-    (writer, reader) pair must agree with decode_resolved."""
+    (writer, reader) pair must agree with make_resolver."""
     jvm = spark._jvm
 
     def java_roundtrip(schema_json, raw):
@@ -841,7 +687,7 @@ def test_interop_with_apache_avro_java(spark):
         }
     )
     wraw = ag.encode(writer_s, {"id": 6, "drop": "x", "tag": "hello"})
-    ours = ag.decode_resolved(writer_s, reader_s, wraw)
+    ours = _decode_resolved(writer_s, reader_s, wraw)
     wsch = jvm.org.apache.avro.Schema.Parser().parse(writer_s)
     rsch = jvm.org.apache.avro.Schema.Parser().parse(reader_s)
     jreader = jvm.org.apache.avro.generic.GenericDatumReader(wsch, rsch)
@@ -932,50 +778,3 @@ def test_ocf_files_readable_by_apache_avro_java(spark):
             out.append(json.loads(jreader.next().toString()))
         jreader.close()
         assert out == recs, codec
-
-
-def test_java_written_ocf_readable_by_our_reader(spark):
-    """Inverse interop: container files written by the REAL Apache Avro
-    DataFileWriter (its own sync markers, block sizing, deflate codec)
-    must open in read_ocf_any — our reader handles real-world files,
-    not just our own writer's output."""
-    jvm = spark._jvm
-    from teste_carga_avro_vs_json_spark.functions import avro_ocf
-
-    v1 = json.dumps(
-        {
-            "type": "record", "name": "Jv", "fields": [
-                {"name": "x", "type": "long"},
-                {"name": "s", "type": "string"},
-            ],
-        }
-    )
-    sch = jvm.org.apache.avro.Schema.Parser().parse(v1)
-    for codec in (None, "deflate"):
-        w = jvm.org.apache.avro.file.DataFileWriter(
-            jvm.org.apache.avro.generic.GenericDatumWriter(sch)
-        )
-        if codec:
-            w.setCodec(jvm.org.apache.avro.file.CodecFactory.deflateCodec(6))
-        baos = jvm.java.io.ByteArrayOutputStream()
-        w.create(sch, baos)
-        for i in range(25):
-            rec = jvm.org.apache.avro.generic.GenericData.Record(sch)
-            rec.put("x", i)
-            rec.put("s", f"j{i}")
-            w.append(rec)
-        w.close()
-        blob = bytes(baos.toByteArray())
-        out = avro_ocf.read_ocf_any(blob)
-        assert out == [{"x": i, "s": f"j{i}"} for i in range(25)], codec
-        # evolution read over the Java-written file
-        reader = json.dumps(
-            {
-                "type": "record", "name": "Jv", "fields": [
-                    {"name": "x", "type": "double"},
-                    {"name": "lang", "type": "string", "default": "und"},
-                ],
-            }
-        )
-        ev = avro_ocf.read_ocf_any(blob, reader)
-        assert ev[3] == {"x": 3.0, "lang": "und"}

@@ -1,21 +1,7 @@
-"""Bloom-filter incremental dedup pins (operators/dedup.py bloom
-section): the ZERO-false-negative guarantee (every inserted text tests
-positive — exhaustive, not sampled), a measured false-positive rate
-against theory on a disjoint corpus, partitioning-independence of the
-distributed OR-reduce build, agreement with the exact anti-join up to
-FPs, and textbook parameter sizing."""
-
-import pyspark.sql.functions as F
+"""Textbook sizing of ``dedup.BloomFilter``, the filter the snapshot
+manifests' per-file equality blooms are built with."""
 
 from teste_carga_avro_vs_json_spark.operators import dedup
-
-
-def _docs(spark, sf_dir, n=400):
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(n)
-        .select("doc_id", "text")
-    )
 
 
 def test_params_textbook():
@@ -25,61 +11,3 @@ def test_params_textbook():
     m2, _ = dedup.BloomFilter.params(10_000, 0.001)
     assert m2 > m  # tighter fpp → bigger filter
     assert m % 8 == 0
-
-
-def test_zero_false_negatives_exhaustive(spark, sf_dir):
-    corpus = _docs(spark, sf_dir)
-    bloom = dedup.bloom_build(corpus, fpp=0.01)
-    flagged = dedup.bloom_dedup(corpus, bloom)
-    # the dedup guarantee: EVERY inserted text tests positive
-    assert flagged.where(~F.col("probably_seen")).count() == 0
-
-
-def test_fp_rate_near_theory_and_exact_agreement(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    corpus = docs.filter("doc_id % 2 = 0")
-    delta = docs.filter("doc_id % 2 = 1").persist()
-    bloom = dedup.bloom_build(corpus, fpp=0.01)
-
-    gated = dedup.bloom_dedup(delta, bloom).persist()
-    n_delta = gated.count()
-    # exact truth: which delta texts REALLY appear in the corpus
-    truly_seen = delta.join(
-        corpus.select("text").distinct(), "text", "left_semi"
-    ).count()
-    n_flagged = gated.where("probably_seen").count()
-    # no false negatives → flagged >= truth; excess = false positives
-    assert n_flagged >= truly_seen
-    fp = n_flagged - truly_seen
-    fp_rate = fp / max(1, n_delta - truly_seen)
-    # generous bound: 5x the theoretical rate absorbs small-sample noise
-    theory = bloom.theoretical_fpp(corpus.count())
-    assert fp_rate <= max(0.03, 5 * theory), (fp_rate, theory)
-    gated.unpersist()
-    delta.unpersist()
-
-
-def test_build_is_partitioning_independent(spark, sf_dir):
-    corpus = _docs(spark, sf_dir, 200)
-    n = corpus.count()
-    b1 = dedup.bloom_build(corpus.repartition(1), n_items=n, fpp=0.01)
-    b8 = dedup.bloom_build(corpus.repartition(8), n_items=n, fpp=0.01)
-    assert b1.bits == b8.bits and (b1.m_bits, b1.k) == (b8.m_bits, b8.k)
-    # driver-side contains() agrees with the distributed gate
-    sample = [r["text"] for r in corpus.limit(5).collect()]
-    for t in sample:
-        assert b1.contains(t)
-    assert not b1.contains("definitely-not-in-the-fixture-corpus-xyzzy")
-
-
-def test_gate_plan_is_stateless_projection(spark, sf_dir):
-    corpus = _docs(spark, sf_dir, 100)
-    bloom = dedup.bloom_build(corpus, fpp=0.05)
-    plan = (
-        dedup.bloom_dedup(corpus, bloom)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan and "Join" not in plan
-    assert "ArrowEvalPython" in plan or "Python" in plan  # documented py-lane

@@ -7,15 +7,11 @@ partitions) — the crafted-frame discipline test_zstd_stdlib.py uses
 for libzstd's predefined tables. CRC/MD5 corruption must raise."""
 
 import hashlib
-import io
 import struct
-import wave
 
 import pytest
 
 from teste_carga_avro_vs_json_spark.operators import flac_codec as fc
-from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-from teste_carga_avro_vs_json_spark.operators import phash as ph
 
 
 def _noise(tag: str, n: int, bps: int = 16) -> list[int]:
@@ -266,59 +262,3 @@ def test_crafted_escape_partition():
 
 
 # --------------------------------------------------- Spark integration
-
-
-def _wav_bytes(samples: list[int], rate: int = 16000) -> bytes:
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(
-            b"".join(struct.pack("<h", s) for s in samples)
-        )
-    return buf.getvalue()
-
-
-def test_flac_wav_fingerprint_equality(spark, sf_dir):
-    """The SAME recording in FLAC and WAV containers hashes
-    identically — fingerprints are over decoded samples, not bytes —
-    so cross-container audio near-dup works for free."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(12)
-        .select("doc_id", "text")
-    )
-    flac_media = mm.synth_flac_media(docs, n_samples=400).persist()
-    rows = flac_media.collect()
-    wav_rows = []
-    for r in rows:
-        _, _, _, samples = fc.decode_flac(bytes(r["payload"]))
-        wav_rows.append((r["doc_id"] + 100000, _wav_bytes(samples), "wav"))
-    wav_media = spark.createDataFrame(
-        wav_rows, "doc_id long, payload binary, format string"
-    )
-    both = flac_media.unionByName(wav_media)
-    hashes = {r["doc_id"]: r["dhash"]
-              for r in ph.audio_dhash(both).collect()}
-    for r in rows:
-        assert hashes[r["doc_id"]] == hashes[r["doc_id"] + 100000]
-    # and the banded join pairs every FLAC doc with its WAV twin
-    pairs = {
-        (p["doc_a"], p["doc_b"])
-        for p in ph.audio_neardup(both, max_hamming=0,
-                                  max_band_df=None).collect()
-    }
-    for r in rows:
-        assert (r["doc_id"], r["doc_id"] + 100000) in pairs
-    flac_media.unpersist()
-
-
-def test_decode_audio_gate_handles_flac():
-    samples = _noise("gate", 600)
-    blob = fc.encode_flac(samples, sample_rate=16000, block_size=256)
-    n, rate, peak = mm.decode_audio(blob, "flac")
-    assert (n, rate) == (600, 16000)
-    assert peak == min(max(abs(s) for s in samples), 32767)
-    with pytest.raises(NotImplementedError):
-        mm.decode_audio(b"OggS....", "ogg")

@@ -2,10 +2,8 @@
 dictionary overflow and the KwKwK case, exact-pixel encode→decode
 round-trips (plain + interlaced), the published minimal-GIF byte
 string decoded as an external golden, hand-crafted partial-rect /
-transparency / disposal compositing, and the video_neardup chain over
-real animated GIFs."""
+transparency / disposal compositing."""
 
-import itertools
 import struct
 
 import pytest
@@ -141,65 +139,6 @@ def test_disposal3_is_documented_boundary():
 
 
 # ------------------------------------------------------- Spark chain
-
-
-def _docs(spark, sf_dir, n):
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(n)
-        .select("doc_id", "text")
-    )
-
-
-def test_gif_video_neardup_equals_bruteforce(spark, sf_dir):
-    docs = _docs(spark, sf_dir, 15)
-    media = ph.synth_gif_video(docs, n_frames=5).persist()
-    # planted re-upload: re-encode the first 3 docs' GIFs with the
-    # last frame replaced by frame 0 (4 of 5 frames survive)
-    planted = []
-    for r in media.limit(3).collect():
-        w, h, frames = mm.decode_gif_stdlib(bytes(r["payload"]))
-        # composited canvases are grayscale (r==g==b): take the red
-        # channel back to palette indices and re-encode
-        idx_frames = [bytes(fr[0::3]) for fr in frames]
-        edited = idx_frames[:4] + [idx_frames[0]]
-        planted.append(
-            (
-                r["doc_id"] + 100000,
-                mm.encode_gif_stdlib(w, h, edited, mm.GRAY_PALETTE),
-                "gif",
-            )
-        )
-    extra = spark.createDataFrame(
-        planted, "doc_id long, payload binary, format string"
-    )
-    corpus = media.unionByName(extra).persist()
-
-    fh = {}
-    for r in ph.video_frame_hashes(corpus).collect():
-        fh.setdefault(r["doc_id"], []).append(r["dhash"] & ((1 << 64) - 1))
-    assert all(len(v) == 5 for v in fh.values())
-    want = {}
-    for da, db in itertools.combinations(sorted(fh), 2):
-        n = sum(
-            1
-            for ha in fh[da]
-            for hb in fh[db]
-            if bin(ha ^ hb).count("1") <= 3
-        )
-        if n >= 2:
-            want[(da, db)] = n
-    got = {
-        (r["doc_a"], r["doc_b"]): r["shared_frames"]
-        for r in ph.video_neardup(
-            corpus, max_hamming=3, min_shared_frames=2, max_band_df=None
-        ).collect()
-    }
-    assert got == want
-    for r in media.limit(3).collect():
-        assert (r["doc_id"], r["doc_id"] + 100000) in got
-    corpus.unpersist()
-    media.unpersist()
 
 
 def test_gif_still_image_dhash_matches_bmp_pixels(spark, sf_dir):

@@ -189,6 +189,12 @@ def test_cli_producer_consumer_json(spark, tmp_path):
     cons = run_app("CONSUMIDOR_JSON", path, cfg, spark)
     assert cons["total_mensagens"] == 20
     assert cons["taxa_sucesso_porcentagem"] == "100.00"
+    # the event clock is EPOCH0 + sequencia; warmup drops sequences 1-5
+    from teste_carga_avro_vs_json_spark.sources.generator import EPOCH0
+
+    for rep in (prod, cons):
+        assert rep["timestamp_inicio"] == EPOCH0 + 6
+        assert rep["timestamp_fim"] == EPOCH0 + 25
 
 
 def test_cli_transport_mode(spark, tmp_path):
@@ -457,51 +463,6 @@ def test_read_kafka_stream_reaches_connector_boundary(spark):
     msg = str(ei.value)
     assert "kafka" in msg.lower()
     assert "DATA_SOURCE_NOT_FOUND" in msg or "Failed to find" in msg
-
-
-def test_compact_parquet_bounds_file_counts(spark, tmp_path):
-    """Compaction must collapse a fragmented partitioned dataset to one
-    writer per partition dir (bounded by maxRecordsPerFile), preserving
-    every row."""
-    import glob
-
-    from teste_carga_avro_vs_json_spark.operators import routing
-
-    msgs = _msgs(spark, 60)
-    src = str(tmp_path / "frag")
-    # fragment deliberately: 8 writer tasks x 6 partition dirs -> up to
-    # 48 small files (the engine's own write_parquet repartitions by
-    # particao precisely to avoid this; raw writers don't)
-    routing.route(msgs, 6).repartition(8).write.partitionBy(
-        "particao"
-    ).parquet(src)
-    n_before = len(glob.glob(f"{src}/particao=*/*.parquet"))
-    dst = str(tmp_path / "compact")
-    manifest = io_files.compact_parquet(spark, src, dst)
-    n_after = len(glob.glob(f"{dst}/particao=*/*.parquet"))
-    assert n_after == 6 < n_before  # exactly one file per partition dir
-    back = io_files.read_parquet(spark, dst)
-    assert _flat_set(back.drop("particao")) == _flat_set(msgs)
-    rows = {r.particao: r.n_rows for r in manifest.collect()}
-    assert sum(rows.values()) == 60 and set(rows) == set(range(6))
-
-
-def test_compact_parquet_rejects_overlapping_dst(spark, tmp_path):
-    """dst == src (or nested either way) would let the lazy overwrite
-    delete the source mid-job — rejected before any read is planned."""
-    src = str(tmp_path / "data")
-    with pytest.raises(ValueError, match="must not overlap"):
-        io_files.compact_parquet(spark, src, src)
-    with pytest.raises(ValueError, match="must not overlap"):
-        io_files.compact_parquet(spark, src, src + "/sub")
-    with pytest.raises(ValueError, match="must not overlap"):
-        io_files.compact_parquet(spark, src + "/part", src)
-    # sibling path with a shared name prefix is NOT an overlap
-    ok_src = str(tmp_path / "d")
-    ok_dst = str(tmp_path / "d2")
-    spark.range(4).write.mode("overwrite").parquet(ok_src)
-    io_files.compact_parquet(spark, ok_src, ok_dst, partition_col=None)
-    assert spark.read.parquet(ok_dst).count() == 4
 
 
 def test_fetch_offsets_drives_kafka_python_api_contract(monkeypatch):

@@ -251,16 +251,3 @@ def test_jpeg_bmp_cross_container_neardup(spark, sf_dir):
         # separates the two containers
         assert bin(a ^ b).count("1") <= 3
     jpegs.unpersist()
-
-
-def test_decode_image_gate_and_features(spark, sf_dir):
-    rgb = _smooth_rgb(16, 12)
-    blob = jc.encode_jpeg(16, 12, rgb, quality=100)
-    w, h, feats = mm.decode_image(blob, "jpeg")
-    assert (w, h) == (16, 12)
-    bw, bh, bfeats = mm.decode_bmp_stdlib(mm.encode_bmp_stdlib(16, 12, rgb))
-    assert len(feats) == len(bfeats) == 4
-    for a, b in zip(feats, bfeats):
-        assert abs(a - b) < 0.02  # same quadrant-luma contract
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"RIFFwebp....", "webp")

@@ -25,9 +25,7 @@ from teste_carga_avro_vs_json_spark.sources.kafka_wire import (
     _API_PRODUCE,
     _W,
     ERR_CORRUPT_MESSAGE,
-    IdempotentProducer,
     InvalidTxnStateError,
-    ProducerFailedError,
     ProducerFencedError,
     StubBroker,
     TransactionalProducer,
@@ -271,56 +269,6 @@ def test_all_dropped_batch_still_commits_offsets():
 
 
 # ----------------------------------------------------- r13 ADVICE pins
-def test_idempotent_producer_poisoned_after_retry_exhaustion():
-    """ADVICE r12 (medium): after retry exhaustion the append outcome
-    is unknown — reusing the instance for NEW records at the same base
-    sequence could be dedup-acked against the in-doubt batch and
-    silently dropped. The producer poisons itself; reset() re-inits
-    with a FRESH pid so new sends can never collide with the in-doubt
-    sequence."""
-    with StubBroker(num_partitions=1) as broker:
-        dead = {"wire": False}
-
-        class FlakyClient:
-            """Real socket client whose produce path can be cut — the
-            injection point IdempotentProducer exposes for exactly this
-            retry-path testing (client_factory)."""
-
-            def __init__(self):
-                self._real = WireKafkaClient(*broker.addr)
-
-            def init_producer_id(self, *a, **k):
-                return self._real.init_producer_id(*a, **k)
-
-            def produce(self, *a, **k):
-                if dead["wire"]:
-                    raise ConnectionError("wire died mid-produce")
-                return self._real.produce(*a, **k)
-
-            def close(self):
-                self._real.close()
-
-        p = IdempotentProducer(
-            *broker.addr, retries=1, client_factory=FlakyClient
-        )
-        assert p.send("t", 0, [(b"k", b"v0")]) == 0
-        pid0 = p.producer_id
-        dead["wire"] = True
-        with pytest.raises(ConnectionError, match="poisoned"):
-            p.send("t", 0, [(b"k", b"v1")])
-        with pytest.raises(ProducerFailedError):
-            p.send("t", 0, [(b"k", b"DIFFERENT")])
-        # recovery: reset() re-inits with a FRESH pid (new sequence
-        # space — the in-doubt batch can never dedup-swallow new data)
-        dead["wire"] = False
-        p.reset()
-        assert p.producer_id != pid0
-        assert p.send("t", 0, [(b"k", b"v2")]) == 1
-        c = WireKafkaClient(*broker.addr)
-        _hw, recs = c.fetch("t", 0, 0)
-        assert [v for _o, _k, v in recs] == [b"v0", b"v2"]
-        c.close()
-        p.close()
 
 
 def test_malformed_transactional_produce_answers_corrupt_message():

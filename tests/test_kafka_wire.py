@@ -21,11 +21,16 @@ from teste_carga_avro_vs_json_spark.sources.kafka_wire import (
     StubBroker,
     WireKafkaClient,
     crc32c,
-    decode_record_batches,
+    decode_batches_meta,
     encode_record_batch,
     read_varint,
     write_varint,
 )
+
+
+def _records(data: bytes):
+    """Flat ``(offset, key, value)`` records of ``decode_batches_meta``."""
+    return [rec for _meta, recs in decode_batches_meta(data) for rec in recs]
 
 
 # ------------------------------------------------------------ unit level
@@ -45,16 +50,16 @@ def test_varint_zigzag_roundtrip():
 def test_record_batch_roundtrip_and_crc():
     recs = [(b"k1", b"v1"), (None, b"v2"), (b"k3", None), (b"", b"")]
     batch = encode_record_batch(recs, base_offset=7)
-    out = decode_record_batches(batch)
+    out = _records(batch)
     assert out == [(7 + i, k, v) for i, (k, v) in enumerate(recs)]
     # corrupting any payload byte must trip the CRC32C
     corrupt = bytearray(batch)
     corrupt[-1] ^= 0xFF
     with pytest.raises(ValueError, match="CRC32C"):
-        decode_record_batches(bytes(corrupt))
+        _records(bytes(corrupt))
     # two concatenated batches decode as one stream (fetch responses)
     two = batch + encode_record_batch([(b"x", b"y")], base_offset=11)
-    assert decode_record_batches(two)[-1] == (11, b"x", b"y")
+    assert _records(two)[-1] == (11, b"x", b"y")
 
 
 def test_record_batch_gzip_codec():
@@ -64,12 +69,12 @@ def test_record_batch_gzip_codec():
     plain = encode_record_batch(recs)
     gz = encode_record_batch(recs, codec="gzip")
     assert len(gz) < len(plain)  # repetitive payloads compress
-    assert decode_record_batches(gz) == decode_record_batches(plain)
+    assert _records(gz) == _records(plain)
     # r7: the full reference codec matrix encodes + decodes transparently
     for codec in ("snappy", "lz4", "zstd"):
         cz = encode_record_batch(recs, codec=codec)
         assert len(cz) < len(plain), codec
-        assert decode_record_batches(cz) == decode_record_batches(plain), codec
+        assert _records(cz) == _records(plain), codec
     with pytest.raises(NotImplementedError, match="codec"):
         encode_record_batch(recs, codec="brotli")
     # a reserved codec id (5) is a clear error, not garbage
@@ -81,7 +86,7 @@ def test_record_batch_gzip_codec():
     after = bytes(tampered[21:])
     tampered[17:21] = _s.pack(">I", crc32c(after))
     with pytest.raises(NotImplementedError, match="codec"):
-        decode_record_batches(bytes(tampered))
+        _records(bytes(tampered))
     # gzip survives the socket: broker CRC-validates + re-serves it
     with StubBroker(num_partitions=1) as broker:
         c = WireKafkaClient(*broker.addr)
@@ -395,7 +400,7 @@ def test_decoder_rejects_garbage_cleanly():
     @given(st.binary(max_size=200))
     def check(data):
         try:
-            out = decode_record_batches(data)
+            out = _records(data)
         except (ValueError, NotImplementedError):  # the full contract
             return
         assert isinstance(out, list)
@@ -405,7 +410,7 @@ def test_decoder_rejects_garbage_cleanly():
     batch = encode_record_batch([(b"k", b"v"), (None, b"w" * 50)])
     for cut in range(len(batch)):
         try:
-            out = decode_record_batches(batch[:cut])
+            out = _records(batch[:cut])
             assert out == []  # partial tail is ignored per fetch semantics
         except (ValueError, IndexError):
             pass

@@ -560,12 +560,11 @@ def test_idempotent_producer_forced_retransmit_lands_exactly_once():
     """r12 (VERDICT r11 order #5): the END-TO-END duplicate window.
     The broker APPENDS a batch, then the connection dies before the
     ack (the ambiguous failure acks=1 fire-and-forget cannot resolve —
-    the reference just counts it, ProdutorAvro.java:74-90).
-    IdempotentProducer reconnects and retransmits the SAME
-    (pid, epoch, sequence) bytes; the broker's producer-state cache
-    acks the ORIGINAL offset — the log holds each record exactly
-    once. A manual sequence regression raises the typed
-    non-retriable error."""
+    the reference just counts it, ProdutorAvro.java:74-90). A
+    retransmit of the SAME (pid, epoch, sequence) bytes is acked with
+    the ORIGINAL offset by the broker's producer-state cache — the log
+    holds each record exactly once. A manual sequence regression
+    raises the typed non-retriable error."""
     import pytest
 
     from teste_carga_avro_vs_json_spark.sources import kafka_wire as kw
@@ -583,16 +582,20 @@ def test_idempotent_producer_forced_retransmit_lands_exactly_once():
             return rc
 
         broker._append = flaky
-        with kw.IdempotentProducer(*broker.addr, retries=3) as prod:
-            base = prod.send("t", 0, [(b"k1", b"v1"), (None, b"v2")])
-            assert base == 0
-            assert prod.retransmits == 1  # exactly one retransmit
-            base2 = prod.send("t", 0, [(b"k3", b"v3")])
-            assert base2 == 2  # sequences advanced by record count
-            assert prod.retransmits == 1
-
+        batch = [(b"k1", b"v1"), (None, b"v2")]
+        c = kw.WireKafkaClient(*broker.addr)
+        pid, epoch = c.init_producer_id()
+        seq = {"producer_id": pid, "producer_epoch": epoch}
+        with pytest.raises(OSError):  # the connection died pre-ack
+            c.produce("t", 0, batch, base_sequence=0, **seq)
+        c.close()
         c = kw.WireKafkaClient(*broker.addr)
         try:
+            # the retransmit is deduped onto the original offset
+            assert c.produce("t", 0, batch, base_sequence=0, **seq) == 0
+            # sequences advance by record count
+            assert c.produce("t", 0, [(b"k3", b"v3")], base_sequence=2,
+                             **seq) == 2
             hw = c.list_offset("t", 0, -1)
             assert hw == 3  # exactly once: 3 records, no dup batch
             values = [
@@ -602,43 +605,7 @@ def test_idempotent_producer_forced_retransmit_lands_exactly_once():
             # sequence REGRESSION is non-retriable and typed: replay
             # an old sequence from a fresh socket outside the 5-deep
             # recent window shape (a gap forward also raises)
-            pid, epoch = prod.producer_id, prod.producer_epoch
             with pytest.raises(kw.OutOfOrderSequenceError):
-                c.produce("t", 0, [(b"x", b"y")], producer_id=pid,
-                          producer_epoch=epoch, base_sequence=99)
-        finally:
-            c.close()
-
-
-def test_idempotent_producer_exhausts_retries_loudly():
-    """Every attempt dying (broker appends each time but never acks)
-    ends in ConnectionError after retries+1 attempts — never a silent
-    drop; the appended-but-unacked batch is still exactly ONE batch in
-    the log (all retransmits deduped)."""
-    import pytest
-
-    from teste_carga_avro_vs_json_spark.sources import kafka_wire as kw
-
-    with StubBroker(num_partitions=1) as broker:
-        real_append = broker._append
-
-        def always_drop(topic, partition, record_set):
-            real_append(topic, partition, record_set)
-            raise kw._CloseConnection()
-
-        broker._append = always_drop
-        prod = kw.IdempotentProducer(*broker.addr, retries=2)
-        try:
-            with pytest.raises(ConnectionError, match="3 attempts"):
-                prod.send("t", 0, [(b"k", b"v")])
-        finally:
-            try:
-                prod.close()
-            except Exception:
-                pass
-        broker._append = real_append
-        c = kw.WireKafkaClient(*broker.addr)
-        try:
-            assert c.list_offset("t", 0, -1) == 1  # one record, 3 sends
+                c.produce("t", 0, [(b"x", b"y")], base_sequence=99, **seq)
         finally:
             c.close()

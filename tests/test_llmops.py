@@ -40,12 +40,6 @@ def test_exact_dedup_scale_agrees(spark, sf_dir):
     assert xx_side.exceptAll(md5_side).count() == 0
 
 
-def test_shingles(spark):
-    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    [row] = df.select(dedup.shingles("text", 3).alias("sh")).collect()
-    assert sorted(row.sh) == ["a b c", "b c d"]
-
-
 def test_minhash_identical_docs_always_candidates(spark):
     """P(candidate) = 1 for identical shingle sets regardless of bands."""
     df = spark.createDataFrame(
@@ -416,17 +410,6 @@ def test_media_features_plumbing(spark, sf_dir):
         assert r.first_byte == payloads[r.doc_id][0]
         assert len(r.features) == 4
         assert r.format in ("png", "jpeg", "webp")
-
-
-def test_decode_image_is_import_gated():
-    """No Pillow in this container: the real-decode path must raise —
-    on a cluster image with PIL the same calls flip to real decode with
-    no code changes (multimodal._pil gate)."""
-    import pytest
-
-    assert multimodal._pil() is None  # this container ships no Pillow
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x89PNG", "png")
 
 
 def test_extract_features_auto_gate_falls_back_to_fake(spark, sf_dir):
@@ -898,11 +881,7 @@ def test_media_pipeline_resize_then_features(spark, sf_dir):
 
 def test_audio_features_plumbing(spark, sf_dir):
     """Audio twin of the media plumbing test: deterministic byte-stat
-    features over synth payloads through mapInPandas; gates raise in
-    this container (a cluster image with soundfile/PyAV flips real
-    decode on with no code change)."""
-    import pytest as _pytest
-
+    features over synth payloads through mapInPandas."""
     docs = _docs(spark, sf_dir)
     audio = multimodal.synth_audio(docs)
     payloads = {r.doc_id: bytes(r.payload) for r in audio.collect()}
@@ -915,17 +894,6 @@ def test_audio_features_plumbing(spark, sf_dir):
         assert r.duration_ms == (len(b) // 2) * 1000 // 16000
         assert r.peak == max(b)
         assert r.format in ("wav", "flac", "ogg")
-    # Decode gates only raise where the real libs are ABSENT — on a
-    # cluster image with soundfile/PyAV the same suite must stay green
-    # (real decode flips on), so the raise-assertions are conditional.
-    if multimodal._soundfile() is None:
-        # non-RIFF payloads are still env-gated (compressed codecs);
-        # RIFF/WAVE routes to the stdlib decoder (tested below)
-        with _pytest.raises(NotImplementedError):
-            multimodal.decode_audio(b"OggS\x00", "ogg")
-    if multimodal._pyav() is None:
-        with _pytest.raises(NotImplementedError):
-            multimodal.decode_video_frames(b"\x00", "mp4")
 
 
 def _synth_wav(frames, rate=8000, width=2, channels=1):
@@ -949,13 +917,10 @@ def _synth_wav(frames, rate=8000, width=2, channels=1):
     return buf.getvalue()
 
 
-def test_bmp_stdlib_real_roundtrip(spark, sf_dir):
+def test_bmp_stdlib_real_roundtrip():
     """REAL image decode with zero third-party deps (the image twin of
     the WAV move): spec-correct 24-bit BMP encode -> exact quadrant
-    luminance on hand-built pixels (incl. odd-width row padding), then
-    the whole path through synth_bmp_media -> mapInPandas extraction —
-    header-read dimensions must match the metadata scheme and features
-    must be real, not byte stats."""
+    luminance on hand-built pixels (incl. odd-width row padding)."""
     # 2x2: quadrants are single pixels; BT.601 integer luma
     px = bytes(
         [255, 0, 0,  0, 255, 0,
@@ -977,21 +942,6 @@ def test_bmp_stdlib_real_roundtrip(spark, sf_dir):
     p3 = multimodal.encode_bmp_stdlib(3, 2, px3)
     w3, h3, f3 = multimodal.decode_bmp_stdlib(p3)
     assert (w3, h3) == (3, 2) and all(0.0 <= x <= 1.0 for x in f3)
-    # decode_image dispatch: BMP decodes without PIL
-    assert multimodal.decode_image(payload, "bmp") == (2, 2, exp)
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-    media = multimodal.synth_bmp_media(docs)
-    out = {r.doc_id: r for r in multimodal.extract_features_bmp(media).collect()}
-    meta = {r.doc_id: (r.width, r.height) for r in media.select(
-        "doc_id", "width", "height").collect()}
-    assert len(out) == 40
-    for did, r in out.items():
-        assert (r.width, r.height) == meta[did]  # header == metadata
-        assert len(r.features) == 4
-        assert all(0.0 <= x <= 1.0 for x in r.features)
-    # real spatial features vary across docs (not a constant stand-in)
-    assert len({tuple(r.features) for r in out.values()}) > 10
 
 
 def test_wav_stdlib_real_decode(spark):
@@ -1031,9 +981,6 @@ def test_wav_stdlib_real_decode(spark):
         8000,
         0,
     )
-    # decode_audio dispatch: RIFF payloads decode without soundfile
-    if multimodal._soundfile() is None:
-        assert multimodal.decode_audio(w16, "wav")[0] == 3
 
     # through the Arrow-batched extractor: fake=False is the REAL path
     media = spark.createDataFrame(
@@ -1053,53 +1000,6 @@ def test_wav_stdlib_real_decode(spark):
         multimodal.extract_audio_features(media, fake=False).schema
         == multimodal.extract_audio_features(media, fake=True).schema
     )
-
-
-def test_incremental_dedup_equals_union_dedup(spark, sf_dir):
-    """incremental(delta vs corpus) must equal exact dedup of the
-    union restricted to fingerprints the delta wins (i.e. content the
-    corpus has never seen), with injected cross-set and within-delta
-    duplicates."""
-    docs = _docs(spark, sf_dir)
-    corpus_part = docs.filter(F.col("doc_id") % 2 == 0)
-    # delta: odd docs + copies of two even docs (cross-set dups) + a
-    # doubled odd doc (within-delta dup)
-    cross = corpus_part.limit(2).withColumn(
-        "doc_id", F.col("doc_id") + 1_000_000
-    )
-    delta_base = docs.filter(F.col("doc_id") % 2 == 1)
-    within = delta_base.limit(1).withColumn(
-        "doc_id", F.col("doc_id") + 2_000_000
-    )
-    delta = delta_base.unionByName(cross).unionByName(within)
-
-    out = {
-        (r.fp64, r.fp64b): (r.keep_doc_id, r.n_copies)
-        for r in dedup.incremental_dedup(delta, corpus_part).collect()
-    }
-    # expected: per-fingerprint groups of the delta, minus any
-    # fingerprint present in corpus_part
-    seen = {
-        (r.fp64, r.fp64b)
-        for r in corpus_part.select(
-            F.xxhash64("text").alias("fp64"),
-            F.xxhash64(F.lit("fp2|"), F.col("text")).alias("fp64b"),
-        ).collect()
-    }
-    expected = {}
-    for r in delta.select(
-        F.xxhash64("text").alias("fp64"),
-        F.xxhash64(F.lit("fp2|"), F.col("text")).alias("fp64b"),
-        "doc_id",
-    ).collect():
-        k = (r.fp64, r.fp64b)
-        if k in seen:
-            continue
-        kept, n = expected.get(k, (r.doc_id, 0))
-        expected[k] = (min(kept, r.doc_id), n + 1)
-    assert out == expected
-    # the two cross-set copies vanished; the within-delta dup collapsed
-    assert len(out) == delta.count() - 2 - 1
 
 
 def test_registry_stays_within_driver_window():
@@ -1373,12 +1273,11 @@ def test_shingled_regex_gate_equivalence(spark):
     assert gated == truth == {1, 3, 7, 9}
 
 
-def test_png_stdlib_real_roundtrip(spark, sf_dir):
+def test_png_stdlib_real_roundtrip():
     """REAL compressed-image decode with zero third-party deps (zlib IS
     the stdlib): spec-correct PNG encode -> exact pixel recovery and
     BMP-parity quadrant features, all five scanline filter types,
-    gray/RGBA color types, CRC validation, then the whole
-    synth_png_media -> mapInPandas path."""
+    gray/RGBA color types, CRC validation."""
     import hashlib
     import struct
     import zlib
@@ -1396,9 +1295,6 @@ def test_png_stdlib_real_roundtrip(spark, sf_dir):
         multimodal.decode_bmp_stdlib(
             multimodal.encode_bmp_stdlib(2, 2, px)
         )[2]
-    # decode_image dispatch: PNG decodes without PIL
-    assert multimodal.decode_image(payload, "png") == \
-        multimodal.decode_png_stdlib(payload)
 
     # all five filter types recover the same pixels (reference-filtered
     # stream built independently of the decoder)
@@ -1461,23 +1357,6 @@ def test_png_stdlib_real_roundtrip(spark, sf_dir):
         raise AssertionError("corrupt CRC accepted")
     except ValueError:
         pass
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-    media = multimodal.synth_png_media(docs)
-    out = {
-        r.doc_id: r
-        for r in multimodal.extract_features_png(media).collect()
-    }
-    meta = {
-        r.doc_id: (r.width, r.height)
-        for r in media.select("doc_id", "width", "height").collect()
-    }
-    assert len(out) == 40
-    for did, r in out.items():
-        assert (r.width, r.height) == meta[did]  # IHDR == metadata
-        assert len(r.features) == 4
-        assert all(0.0 <= x <= 1.0 for x in r.features)
-    assert len({tuple(r.features) for r in out.values()}) > 10
 
 
 def test_shared_passages_stats_expose_cap(spark):

@@ -1,8 +1,8 @@
-"""Dataset maintenance (operators/maintenance.py): compaction and
-range-clustering must preserve content exactly, hit the planned file
-counts, and — the point of clustering — leave pairwise-DISJOINT
-per-file min/max footer ranges on the cluster key (read back with
-pyarrow: the very statistics predicate pushdown consults)."""
+"""Snapshot tables (operators/maintenance.py): commits, time travel,
+merge/delete, manifest stats and blooms, the change feed, replication
+and the maintenance policy. Compaction and clustering must preserve
+content exactly and hit the planned file counts; clustering must
+leave per-file manifest ranges that prune point lookups."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -21,149 +21,6 @@ def test_plan_output_files_math():
     assert mt.plan_output_files(256 * mb, 256) == 1
     assert mt.plan_output_files(256 * mb + 1, 256) == 2
     assert mt.plan_output_files(10 * 256 * mb, 256) == 10
-
-
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    """64-file ingest shape → compaction to the planned count with
-    exact content preservation and an honest audit dict."""
-    src = str(tmp_path / "frag")
-    dst = str(tmp_path / "compact")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(64).write.parquet(src)
-    frag = spark.read.parquet(src)
-    assert len(frag.inputFiles()) == 64
-
-    stats = mt.compact(spark, src, dst, target_mb=256)
-    assert stats["input_files"] == 64
-    assert stats["output_files"] == stats["planned_files"] == 1
-    assert _same_multiset(docs, spark.read.parquet(dst))
-
-
-def test_compact_respects_target_size(spark, sf_dir, tmp_path):
-    """A tiny target forces multiple output files: planned ==
-    ceil(bytes/target) and the writer delivers it."""
-    src = str(tmp_path / "frag2")
-    dst = str(tmp_path / "compact2")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(16).write.parquet(src)
-    stats = mt.compact(spark, src, dst, target_mb=0.01)
-    assert stats["planned_files"] >= 2
-    assert stats["output_files"] == stats["planned_files"]
-    assert _same_multiset(docs, spark.read.parquet(dst))
-
-
-def test_cluster_by_disjoint_file_ranges(spark, sf_dir, tmp_path):
-    """After cluster_by(doc_id): content identical, and every output
-    file's [min,max] doc_id footer range is disjoint from every
-    other's — whole-file pruning for any doc_id predicate."""
-    src = str(tmp_path / "unclustered")
-    dst = str(tmp_path / "clustered")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # scatter rows so input files have overlapping id ranges
-    docs.repartition(8, F.col("text")).write.parquet(src)
-
-    mt.cluster_by(spark, src, dst, "doc_id", n_files=4)
-    out = spark.read.parquet(dst)
-    assert _same_multiset(docs, out)
-
-    ranges = sorted(
-        mt.file_ranges(dst, "doc_id"), key=lambda r: r[1]
-    )
-    assert len(ranges) >= 2  # clustering actually produced spread
-    for (_, _, hi_prev), (_, lo_next, _) in zip(ranges, ranges[1:]):
-        assert hi_prev < lo_next  # pairwise disjoint, strictly
-
-    # and the unclustered layout would NOT prune: at least one pair of
-    # source files overlaps on doc_id (sanity that the test is real)
-    src_ranges = sorted(
-        mt.file_ranges(src, "doc_id"), key=lambda r: r[1]
-    )
-    overlaps = any(
-        a[2] >= b[1]
-        for a, b in zip(src_ranges, src_ranges[1:])
-    )
-    assert overlaps
-
-
-def test_cluster_by_prunes_at_scan(spark, sf_dir, tmp_path):
-    """The executed scan over the clustered layout must read FEWER
-    files for a selective doc_id predicate than the scattered layout —
-    pruning observed at the plan level, not inferred."""
-    src = str(tmp_path / "unclustered_p")
-    dst = str(tmp_path / "clustered_p")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.repartition(8, F.col("text")).write.parquet(src)
-    mt.cluster_by(spark, src, dst, "doc_id", n_files=8)
-
-    # probe a MID-range id: scattered files are random id subsets, so
-    # every file's [min,max] straddles the median; clustered files are
-    # disjoint ranges, so exactly one can contain it. (A global-min
-    # probe would prune in both layouts — only the file holding the
-    # minimum has min <= lo.)
-    mid = docs.approxQuantile("doc_id", [0.5], 0.0)[0]
-
-    def candidate_files(path):
-        # footer-range candidacy — the statistics predicate pushdown
-        # consults: files whose range excludes `mid` cannot contribute
-        return sum(
-            1
-            for (_, mn, mx) in mt.file_ranges(path, "doc_id")
-            if mn <= mid <= mx
-        )
-
-    assert candidate_files(dst) == 1
-    assert candidate_files(src) == 8  # every scattered file straddles
-
-
-def test_zvalue_interleave_golden(spark):
-    # a=0b101, b=0b011, bits=3: a-bits land at even positions,
-    # b-bits at odd -> z = 1|2|8|16 = 27
-    row = spark.createDataFrame([(5, 3)], "a long, b long").select(
-        mt._zvalue_col([F.col("a"), F.col("b")], 3).alias("z")
-    ).first()
-    assert row.z == 27
-
-
-def test_zorder_prunes_on_both_columns(spark, tmp_path):
-    """The lakehouse-ZORDER contract: on a 64x64 uniform grid split
-    into 16 z-ordered files, a point predicate on EITHER column keeps
-    only the files whose footer range covers it (~1/4 of files for
-    either dimension), while single-column clustering prunes one
-    dimension perfectly and the other not at all."""
-    src = str(tmp_path / "grid")
-    zdst = str(tmp_path / "zordered")
-    cdst = str(tmp_path / "xclustered")
-    grid = spark.range(4096).select(
-        (F.col("id") % 64).alias("x"), (F.col("id") / 64).cast("long").alias("y")
-    )
-    grid.repartition(8).write.parquet(src)
-    base = spark.read.parquet(src)
-
-    mt.zorder_by(spark, src, zdst, ["x", "y"], n_files=16)
-    out = spark.read.parquet(zdst)
-    assert base.exceptAll(out).count() == 0 and out.exceptAll(base).count() == 0
-
-    mt.cluster_by(spark, src, cdst, "x", n_files=16)
-
-    def candidates(path, col, val):
-        return sum(
-            1 for (_, mn, mx) in mt.file_ranges(path, col) if mn <= val <= mx
-        )
-
-    # scattered: every file straddles both mids (100% candidacy)
-    assert candidates(src, "x", 31) == 8
-    assert candidates(src, "y", 31) == 8
-    # z-order: BOTH dimensions prune. The file rectangles are aligned
-    # only up to repartitionByRange's sampled boundaries (the same
-    # jitter Delta's ZORDER has), so the bound is a fraction, not the
-    # ideal sqrt(n_files): observed 7-9 of 16 at this shape.
-    zx, zy = candidates(zdst, "x", 31), candidates(zdst, "y", 31)
-    assert 1 <= zx <= 11 and 1 <= zy <= 11
-    # x-clustering: perfect on x, useless on y
-    cx, cy = candidates(cdst, "x", 31), candidates(cdst, "y", 31)
-    assert cx <= 2
-    assert cy >= 12  # nearly every file straddles y
-    assert zy < cy  # the reason zorder exists
 
 
 # ----------------------------------------------------------- snapshots
@@ -219,9 +76,7 @@ def test_snapshot_manifest_is_the_commit_point(spark, sf_dir, tmp_path):
     assert mt.snapshot_read(spark, tdir).count() == 50  # orphan invisible
 
 
-def test_snapshot_compact_and_vacuum(spark, sf_dir, tmp_path):
-    import os
-
+def test_snapshot_compact(spark, sf_dir, tmp_path):
     from teste_carga_avro_vs_json_spark.operators import maintenance as mt
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -248,13 +103,6 @@ def test_snapshot_compact_and_vacuum(spark, sf_dir, tmp_path):
 
     # pinned reader on v3 still works after compaction
     assert _sums(mt.snapshot_read(spark, tdir, 3)) == before
-
-    removed = mt.snapshot_vacuum(tdir, keep_last=1, grace_sec=0)
-    assert mt.snapshot_versions(tdir) == [4]
-    assert _sums(mt.snapshot_read(spark, tdir)) == before  # latest intact
-    assert len(removed) >= 24  # every pre-compaction file reclaimed
-    for path in removed:
-        assert not os.path.exists(path)
 
 
 def test_snapshot_concurrent_appends_both_commit(spark, sf_dir, tmp_path):
@@ -745,10 +593,7 @@ def test_delete_on_evolved_table_sees_union_schema(
 def test_snapshot_delete_where_copy_on_write(spark, sf_dir, tmp_path):
     """Copy-on-write DELETE: only files containing matches rewrite;
     time travel keeps pre-delete versions (the documented erasure
-    caveat), and snapshot_vacuum completes the erasure by retiring
-    them; a no-match condition publishes nothing."""
-    import pytest
-
+    caveat); a no-match condition publishes nothing."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     ).limit(200)
@@ -768,12 +613,6 @@ def test_snapshot_delete_where_copy_on_write(spark, sf_dir, tmp_path):
     assert latest.where(F.col("doc_id").isin(low3)).count() == 0
     # time travel: erased rows still in v1 (the point of snapshots)
     assert mt.snapshot_read(spark, tdir, v1).count() == 200
-    # ... until vacuum retires pre-delete versions (compliance step)
-    mt.snapshot_vacuum(tdir, keep_last=1, grace_sec=0)
-    assert mt.snapshot_versions(tdir) == [res["version"]]
-    with pytest.raises(ValueError):
-        mt.snapshot_read(spark, tdir, v1)
-    assert mt.snapshot_read(spark, tdir).count() == 197
 
     # no-match delete: nothing published, same head
     res2 = mt.snapshot_delete(spark, tdir, "doc_id = -42")
@@ -934,39 +773,6 @@ def test_snapshot_merge_rewrites_carry_fresh_stats(spark, sf_dir, tmp_path):
     # pruned point-read sees the merged row
     got = mt.snapshot_read(spark, tdir, prune={"doc_id": 2}).collect()
     assert [r.text for r in got] == ["recrawled"]
-
-
-def test_snapshot_zorder_prunes_both_columns(spark, tmp_path):
-    """OPTIMIZE ZORDER over the manifest log: after snapshot_zorder_by
-    on (x, y), manifest-stats pruning skips files on EACH column alone
-    and more on both together — with exact results throughout."""
-    grid = (
-        spark.range(100)
-        .selectExpr("id as x")
-        .crossJoin(spark.range(100).selectExpr("id as y"))
-        .selectExpr("x", "y", "x * 100 + y as payload")
-    )
-    tdir = str(tmp_path / "ztable")
-    mt.snapshot_commit(grid.repartition(8), tdir)
-    res = mt.snapshot_zorder_by(spark, tdir, ["x", "y"], n_files=16)
-    assert res["output_files"] == 16
-    rx = mt.snapshot_prune_report(tdir, {"x": (10, 19)})
-    ry = mt.snapshot_prune_report(tdir, {"y": (10, 19)})
-    rxy = mt.snapshot_prune_report(tdir, {"x": (10, 19), "y": (10, 19)})
-    # each single-column slice skips at least half the files; the
-    # 2-d cell keeps no more than either marginal
-    assert rx["n_kept"] <= 8 and ry["n_kept"] <= 8
-    assert rxy["n_kept"] <= min(rx["n_kept"], ry["n_kept"])
-    got = mt.snapshot_read(
-        spark, tdir, prune={"x": (10, 19), "y": (10, 19)}
-    )
-    want = mt.snapshot_read(spark, tdir).where(
-        "x between 10 and 19 and y between 10 and 19"
-    )
-    assert _same_multiset(got, want)
-    assert got.count() == 100
-    # time travel intact: v1 (pre-zorder) still reads the full grid
-    assert mt.snapshot_read(spark, tdir, 1).count() == 10000
 
 
 # ---------------------------------------------------------------- blooms
@@ -1234,15 +1040,9 @@ def test_snapshot_mor_composes_with_prune_append_and_merge(
     assert mt.snapshot_read(spark, tdir).where("doc_id = 42").count() == 1
 
 
-def test_snapshot_mor_compact_folds_dv_and_vacuum_retires(
-    spark, sf_dir, tmp_path
-):
+def test_snapshot_mor_compact_folds_dv(spark, sf_dir, tmp_path):
     """Compaction rewrites from the DV-applied read: the new version
-    has NO dv and the same rows; vacuum keeps DV files referenced by
-    retained manifests and removes them once retired."""
-    import glob as _glob
-    import os as _os
-
+    has NO dv and the same rows."""
     tdir = str(tmp_path / "table")
     mt.snapshot_commit(_docs(spark, sf_dir), tdir)
     mt.snapshot_delete(spark, tdir, "doc_id % 5 = 0", mode="mor")
@@ -1254,14 +1054,6 @@ def test_snapshot_mor_compact_folds_dv_and_vacuum_retires(
     got = mt.snapshot_read(spark, tdir)
     assert got.count() == n_live
     assert got.where("doc_id % 5 = 0").count() == 0
-    # vacuum keeping v2+v3: v2 still references the DV file -> kept
-    mt.snapshot_vacuum(tdir, keep_last=2, grace_sec=0)
-    assert _glob.glob(_os.path.join(tdir, "deletes", "*", "*.parquet"))
-    # vacuum to just v3: DV file now unreferenced -> removed
-    removed = mt.snapshot_vacuum(tdir, keep_last=1, grace_sec=0)
-    assert any(_os.sep + "deletes" + _os.sep in p for p in removed)
-    assert not _glob.glob(_os.path.join(tdir, "deletes", "*", "*.parquet"))
-    assert mt.snapshot_read(spark, tdir).count() == n_live
 
 
 def test_snapshot_cow_delete_on_dv_table_no_resurrection(
@@ -1487,21 +1279,13 @@ def test_changes_vacuum_interaction(spark, sf_dir, tmp_path):
     mt.snapshot_commit(
         docs.filter("doc_id >= 100 and doc_id < 120"), tdir, mode="append"
     )
-    # keep the last two manifests: v2 (merge, with cdf) + v3
-    mt.snapshot_vacuum(tdir, keep_last=2, grace_sec=0)
-    # v2's change files survived (its manifest is retained)...
-    m2 = mt._read_manifest(tdir, 2)
-    for f in m2["cdf"]["files"]:
-        assert _os.path.exists(_os.path.join(tdir, f["path"]))
-    # ...and the feed over the retained range still works; v1 is gone
+    # retire v1: the feed over the retained range (v2 merge with its
+    # change files, v3 append) still works; a range starting before
+    # the retained history raises
+    _os.remove(mt._manifest_path(tdir, 1))
     assert mt.snapshot_changes(spark, tdir, 2).count() == 20
     with pytest.raises(ValueError, match="vacuum"):
         mt.snapshot_changes(spark, tdir, 0)
-    # vacuum everything down to the head: the merge cdf files become
-    # orphans and are removed
-    mt.snapshot_commit(docs.limit(3), tdir, mode="append")
-    removed = mt.snapshot_vacuum(tdir, keep_last=1, grace_sec=0)
-    assert any(_os.sep + "changes" + _os.sep in p for p in removed)
 
 
 # ---------------------------------------- merge deletes + replication
@@ -1887,115 +1671,6 @@ def test_delete_rebases_past_disjoint_file_merge(
         mt.snapshot_delete(spark, tdir2, "doc_id >= 90", mode="cow")
 
 
-def test_merge_rebased_past_constraint_add_revalidates(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """r12 (ADVICE + VERDICT order #7): a zero-file ADD CONSTRAINT
-    commit is a pure append that rebases structurally — the rebased
-    merge must ADOPT the new constraint set (not publish the parent's
-    stale one) and REVALIDATE its delta against it: a violating delta
-    publishes nothing."""
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "table")
-    mt.snapshot_commit(docs.filter("doc_id < 100"), tdir)
-    _land_between(
-        monkeypatch,
-        lambda: mt.snapshot_add_constraint(
-            spark, tdir, "text_not_m", "text <> 'm'"
-        ),
-    )
-    delta = docs.filter("doc_id < 5").withColumn("text", F.lit("m"))
-    with pytest.raises(mt.ConstraintViolationError, match="text_not_m"):
-        mt.snapshot_merge(delta, tdir, keys=["doc_id"])
-    # the winner's constraint commit is the head; the merge published
-    # NOTHING and no 'm' row exists
-    assert mt.snapshot_versions(tdir)[-1] == 2
-    assert mt.snapshot_read(spark, tdir).where("text = 'm'").count() == 0
-
-    # a delta SATISFYING the concurrently added constraint rebases,
-    # and the published manifest carries the ADOPTED set (both the
-    # pre-existing and the raced-in constraint)
-    _land_between(
-        monkeypatch,
-        lambda: mt.snapshot_add_constraint(
-            spark, tdir, "doc_nonneg", "doc_id >= 0"
-        ),
-    )
-    r = mt.snapshot_merge(
-        docs.filter("doc_id < 5").withColumn("text", F.lit("ok")),
-        tdir, keys=["doc_id"],
-    )
-    assert r["version"] == 4
-    assert set(mt.snapshot_constraints(tdir)) == {
-        "text_not_m", "doc_nonneg"
-    }
-    # and the adopted set now gates future commits
-    with pytest.raises(mt.ConstraintViolationError, match="doc_nonneg"):
-        mt.snapshot_commit(
-            docs.filter("doc_id < 2").withColumn(
-                "doc_id", F.lit(-1).cast("long")
-            ),
-            tdir, mode="append",
-        )
-
-
-def test_merge_rebased_past_constraint_drop_adopts(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """The DROP direction: a merge racing a drop-constraint commit
-    must not resurrect the dropped constraint as a table property."""
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "table")
-    mt.snapshot_commit(docs.filter("doc_id < 100"), tdir)
-    mt.snapshot_add_constraint(spark, tdir, "doc_nonneg", "doc_id >= 0")
-    _land_between(
-        monkeypatch,
-        lambda: mt.snapshot_drop_constraint(tdir, "doc_nonneg"),
-    )
-    r = mt.snapshot_merge(
-        docs.filter("doc_id < 5").withColumn("text", F.lit("ok")),
-        tdir, keys=["doc_id"],
-    )
-    assert r["version"] == 4
-    assert mt.snapshot_constraints(tdir) == {}
-
-
-def test_delete_rebases_past_constraint_add(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """A cow delete racing ADD CONSTRAINT adopts with no revalidation
-    (its survivors are a subset of rows the constraint's own
-    full-table validation already passed) — and a folded APPEND
-    winner's rows are covered by the same interleaving argument: an
-    append before the ADD was validated by the ADD's scan, one after
-    it enforced the new set at its own commit."""
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "table")
-    mt.snapshot_commit(docs.filter("doc_id < 100"), tdir)
-    appended = docs.filter("doc_id < 10").withColumn(
-        "doc_id", F.col("doc_id") + 1000
-    )
-
-    def two_winners():
-        mt.snapshot_commit(appended, tdir, mode="append")
-        mt.snapshot_add_constraint(
-            spark, tdir, "doc_nonneg", "doc_id >= 0"
-        )
-
-    _land_between(monkeypatch, two_winners)
-    r = mt.snapshot_delete(spark, tdir, "doc_id < 10", mode="cow")
-    assert r["version"] == 4 and r["rows_deleted"] == 10
-    got = mt.snapshot_read(spark, tdir)
-    assert got.count() == 100  # 100 - 10 deleted + 10 appended
-    assert "doc_nonneg" in mt.snapshot_constraints(tdir)
-    # had the folded append's rows violated, the ADD itself would
-    # have refused (full-table validation at ITS commit)
-    with pytest.raises(mt.ConstraintViolationError):
-        mt.snapshot_add_constraint(
-            spark, tdir, "doc_small", "doc_id < 500"
-        )
-
-
 def test_replicate_duplicate_rows_in_one_commit_is_deterministic(
     spark, sf_dir, tmp_path
 ):
@@ -2027,104 +1702,6 @@ def test_replicate_duplicate_rows_in_one_commit_is_deterministic(
     assert len(first) == 1  # net outcome: one row per key
     for n in (1, 2):
         assert run(n) == first
-
-
-# ------------------------------------------------- CHECK constraints
-def test_check_constraints_gate_commits_and_merges(
-    spark, sf_dir, tmp_path
-):
-    """r11: ALTER TABLE ADD CONSTRAINT over the manifest log — adding
-    validates existing rows once; afterwards every commit/merge delta
-    is gated O(delta); UNKNOWN passes (standard SQL); constraints ride
-    reorg commits; drop re-opens the gate."""
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "table")
-    mt.snapshot_commit(docs.filter("doc_id < 50"), tdir)
-
-    v = mt.snapshot_add_constraint(
-        spark, tdir, "doc_id_nonneg", "doc_id >= 0"
-    )
-    assert mt.snapshot_constraints(tdir) == {
-        "doc_id_nonneg": "doc_id >= 0"
-    }
-    # the constraint commit added no files: content unchanged
-    assert mt.snapshot_read(spark, tdir).count() == 50
-
-    # commits of violating rows refuse and publish NOTHING
-    bad = docs.filter("doc_id < 3").withColumn(
-        "doc_id", -F.col("doc_id") - 1
-    )
-    with pytest.raises(mt.ConstraintViolationError, match="doc_id_nonneg"):
-        mt.snapshot_commit(bad, tdir, mode="append")
-    assert mt.snapshot_versions(tdir)[-1] == v
-    # valid rows pass
-    mt.snapshot_commit(
-        docs.filter("doc_id >= 50 and doc_id < 60"), tdir, mode="append"
-    )
-
-    # merge deltas are gated too
-    with pytest.raises(mt.ConstraintViolationError, match="merge delta"):
-        mt.snapshot_merge(bad, tdir, keys=["doc_id"])
-    mt.snapshot_merge(
-        docs.filter("doc_id < 5").withColumn("text", F.lit("ok")),
-        tdir, keys=["doc_id"],
-    )
-
-    # UNKNOWN passes: a NULL in the checked column is not a violation
-    nullish = docs.filter("doc_id = 7").select(
-        F.lit(None).cast("long").alias("doc_id"), "lang", "text"
-    )
-    mt.snapshot_commit(nullish, tdir, mode="append")
-
-    # reorg commits carry the property and skip re-validation
-    mt.snapshot_compact(spark, tdir)
-    assert "doc_id_nonneg" in mt.snapshot_constraints(tdir)
-
-    # adding over existing violations refuses and publishes nothing
-    head = mt.snapshot_versions(tdir)[-1]
-    with pytest.raises(mt.ConstraintViolationError, match="existing rows"):
-        mt.snapshot_add_constraint(
-            spark, tdir, "lang_known", "lang = 'xx'"
-        )
-    assert mt.snapshot_versions(tdir)[-1] == head
-    # duplicate names refuse; unknown drops refuse
-    with pytest.raises(ValueError, match="already exists"):
-        mt.snapshot_add_constraint(spark, tdir, "doc_id_nonneg", "1=1")
-    with pytest.raises(ValueError, match="no constraint"):
-        mt.snapshot_drop_constraint(tdir, "nope")
-
-    # drop re-opens the gate
-    mt.snapshot_drop_constraint(tdir, "doc_id_nonneg")
-    assert mt.snapshot_constraints(tdir) == {}
-    mt.snapshot_commit(bad, tdir, mode="append")  # now allowed
-
-
-def test_check_constraints_enforced_by_arrow_writer(
-    spark, sf_dir, tmp_path
-):
-    """The format('snapshot') write surface enforces constraints
-    EXECUTOR-side per Arrow batch (DuckDB evaluation of the portable
-    SQL expr): a violating job fails before any manifest publish, a
-    clean job commits and inherits the property."""
-    from teste_carga_avro_vs_json_spark.sources import snapshot_source as ss
-
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "table")
-    mt.snapshot_commit(docs.filter("doc_id < 30"), tdir)
-    mt.snapshot_add_constraint(
-        spark, tdir, "text_nonempty", "length(text) > 0"
-    )
-    ss.register(spark)
-    head = mt.snapshot_versions(tdir)[-1]
-    bad = docs.filter("doc_id < 5").withColumn("text", F.lit(""))
-    with pytest.raises(Exception, match="text_nonempty"):
-        bad.write.format("snapshot").mode("append").save(tdir)
-    assert mt.snapshot_versions(tdir)[-1] == head  # nothing published
-    good = docs.filter("doc_id >= 30 and doc_id < 40")
-    good.write.format("snapshot").mode("append").save(tdir)
-    assert mt.snapshot_read(spark, tdir).count() == 40
-    # the writer's commit inherited the property
-    assert "text_nonempty" in mt.snapshot_constraints(tdir)
 
 
 # ------------------------------------------------- auto-maintenance
@@ -2193,102 +1770,6 @@ def test_merge_when_not_matched_by_source_deletes(spark, sf_dir, tmp_path):
         mt.snapshot_merge(
             delta, tdir, keys=["doc_id"], not_matched_by_source="nuke"
         )
-    with pytest.raises(ValueError, match="source_keys only applies"):
-        mt.snapshot_merge(
-            delta, tdir, keys=["doc_id"],
-            source_keys=delta.select("doc_id"),
-        )
-    with pytest.raises(ValueError, match="source_keys must cover"):
-        mt.snapshot_merge(
-            delta, tdir, keys=["doc_id"],
-            not_matched_by_source="delete",
-            source_keys=delta.filter("doc_id < 10").select("doc_id"),
-        )
-
-
-def test_snapshot_mirror_syncs_drifted_replica(spark, sf_dir, tmp_path):
-    """r12 (VERDICT r11 order #6 done-criterion): mirror-merge of a
-    source snapshot onto a drifted dst yields multiset equality with
-    only drift-touched files rewritten; CDF emits the deletes; an
-    already-identical replica commits NOTHING."""
-    docs = _docs(spark, sf_dir)
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    base = docs.filter("doc_id < 100")
-    mt.snapshot_commit(base, src)
-    mt.snapshot_commit(base, dst)
-    mt.snapshot_cluster_by(spark, dst, "doc_id", n_files=10)
-    # drift: a modified row, a missing row, an alien extra key
-    mt.snapshot_merge(
-        docs.filter("doc_id = 7").withColumn("text", F.lit("drift")),
-        dst, keys=["doc_id"],
-    )
-    mt.snapshot_delete(spark, dst, "doc_id = 55", mode="cow")
-    mt.snapshot_commit(
-        docs.filter("doc_id = 1").withColumn(
-            "doc_id", F.lit(5000).cast("long")
-        ),
-        dst, mode="append",
-    )
-    n_files = len(
-        mt._read_manifest(dst, mt.snapshot_versions(dst)[-1])["files"]
-    )
-    r = mt.snapshot_mirror(spark, src, dst, keys=["doc_id"])
-    assert _same_multiset(
-        mt.snapshot_read(spark, dst), mt.snapshot_read(spark, src)
-    )
-    assert r["rows_deleted"] == 1  # the alien key only
-    assert 0 < r["files_rewritten"] < n_files  # drift-bounded rewrite
-    ch = mt.snapshot_changes(spark, dst, r["version"] - 1, r["version"])
-    assert ch.where(
-        "_change_type = 'delete' and doc_id = 5000"
-    ).count() == 1
-    # identical replicas: no new version, nothing rewritten
-    r2 = mt.snapshot_mirror(spark, src, dst, keys=["doc_id"])
-    assert r2["version"] == r["version"]
-    assert r2["files_rewritten"] == 0 and r2["rows_deleted"] == 0
-
-
-# ------------------------------------------ vacuum retention (r12)
-def test_vacuum_grace_window_protects_inflight_commit(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """A vacuum racing a commit that has MATERIALIZED its data files
-    but not yet published its manifest must not delete them (the
-    Delta retention check): without the grace window the commit would
-    publish a manifest pointing at deleted files — silent corruption
-    on the next read. Aged orphans still get reclaimed."""
-    import os as _os
-
-    docs = _docs(spark, sf_dir)
-    tdir = str(tmp_path / "t")
-    mt.snapshot_commit(docs.filter("doc_id < 50"), tdir)
-    appended = docs.filter("doc_id >= 50 and doc_id < 60")
-    real_pub = mt._publish_files
-
-    def racing_pub(*args, **kw):
-        monkeypatch.setattr(mt, "_publish_files", real_pub)
-        # the appender's files exist; its manifest does not
-        mt.snapshot_vacuum(tdir, keep_last=2)
-        return real_pub(*args, **kw)
-
-    monkeypatch.setattr(mt, "_publish_files", racing_pub)
-    mt.snapshot_commit(appended, tdir, mode="append")
-    got = mt.snapshot_read(spark, tdir)
-    assert got.count() == 60  # the in-flight commit survived intact
-
-    # a stale orphan (failed attempt debris): the grace window keeps
-    # it while fresh, reclaims it once aged
-    orphan = _os.path.join(tdir, "data", "c-orphan", "part-0.parquet")
-    _os.makedirs(_os.path.dirname(orphan), exist_ok=True)
-    with open(orphan, "wb") as f:
-        f.write(b"not a real parquet")
-    assert orphan not in mt.snapshot_vacuum(tdir, keep_last=2)
-    assert _os.path.exists(orphan)
-    _os.utime(orphan, (1, 1))  # age it past any grace window
-    assert _os.path.normpath(orphan) in mt.snapshot_vacuum(
-        tdir, keep_last=2
-    )
-    assert not _os.path.exists(orphan)
 
 
 # ------------------------------------------------- r13 DV-aware rebase
@@ -2464,39 +1945,6 @@ def test_replicate_maintain_keeps_rewrite_fraction_bounded(
     assert _same_multiset(
         mt.snapshot_read(spark, dst_a), mt.snapshot_read(spark, src)
     )
-
-
-def test_mirror_maintain_reclusters_after_heavy_drift(
-    spark, sf_dir, tmp_path
-):
-    docs = _docs(spark, sf_dir)
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    mt.snapshot_commit(docs.filter("doc_id < 200"), src)
-    # drifted replica: every row's text diverged -> the mirror merge
-    # rewrites every dst file (scatter-degraded sync)
-    mt.snapshot_commit(
-        docs.filter("doc_id < 200").withColumn(
-            "text", F.concat(F.lit("drift:"), F.col("text"))
-        ),
-        dst,
-    )
-    r = mt.snapshot_mirror(
-        spark, src, dst, keys=["doc_id"],
-        maintain_cluster_col="doc_id", target_mb=0.01,
-    )
-    assert r["maintain"]["acted"]
-    assert r["maintain"]["reason"] == "rewrite_fraction"
-    assert _same_multiset(
-        mt.snapshot_read(spark, dst), mt.snapshot_read(spark, src)
-    )
-    # a subsequent no-drift mirror is a no-op with no maintain entry
-    r2 = mt.snapshot_mirror(
-        spark, src, dst, keys=["doc_id"],
-        maintain_cluster_col="doc_id", target_mb=0.01,
-    )
-    assert r2["rows_replaced" if "rows_replaced" in r2 else "files_new"] == 0
-    assert "maintain" not in r2
 
 
 def test_snapshot_read_as_of_ts(spark, sf_dir, tmp_path):

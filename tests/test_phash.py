@@ -181,80 +181,6 @@ def test_phash_neardup_plan_shape(spark, sf_dir):
     assert "ReusedExchange" in executed
 
 
-# ---------------------------------------------------------- audio twin
-def _wav_bytes(samples, rate=8000):
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(
-            b"".join(struct.pack("<h", s) for s in samples)
-        )
-    return buf.getvalue()
-
-
-def _synth_samples(seed: int, n=650):
-    # deterministic pseudo-audio: LCG over s16 range
-    x, out = seed * 2654435761 % (2**31), []
-    for _ in range(n):
-        x = (1103515245 * x + 12345) % (2**31)
-        out.append(x % 65536 - 32768)
-    return out
-
-
-def test_audio_fingerprint_goldens():
-    assert ph.audio_fingerprint64([0] * 650) == 0
-    # strictly rising |amplitude| ramp: every chunk's floor-mean
-    # energy is below the next -> all 64 bits set -> signed -1
-    ramp = [i * 50 for i in range(650)]
-    assert ph.audio_fingerprint64(ramp) == -1
-    # empty stream is defined, not an error
-    assert ph.audio_fingerprint64([]) == 0
-
-
-def test_audio_neardup_equals_bruteforce_with_planted_edit(spark):
-    rows = []
-    for i in range(30):
-        samples = _synth_samples(i + 1)
-        rows.append((i, _wav_bytes(samples), "wav"))
-        if i < 6:
-            # local edit: zero the last 2% of samples — flips only
-            # bits whose chunks overlap the tail
-            edited = samples[:-13] + [0] * 13
-            rows.append((i + 100000, _wav_bytes(edited), "wav"))
-    media = spark.createDataFrame(
-        rows, "doc_id long, payload binary, format string"
-    ).persist()
-
-    hashes = {
-        r["doc_id"]: r["dhash"] & ((1 << 64) - 1)
-        for r in ph.audio_dhash(media).collect()
-    }
-    # UDF vs driver recompute
-    for r in media.collect():
-        want = ph.audio_fingerprint64(
-            ph._wav_samples(bytes(r["payload"]))
-        ) & ((1 << 64) - 1)
-        assert hashes[r["doc_id"]] == want
-    # banded join == brute force
-    got = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in ph.audio_neardup(
-            media, max_hamming=3, max_band_df=None
-        ).collect()
-    }
-    assert got == _brute_pairs(hashes, 3)
-    # the planted tail-edits register as near-dups
-    planted_found = {a for a, b, _ in got if b - a == 100000}
-    assert len(planted_found) >= 4
-    media.unpersist()
-
-
 # ---------------------------------------------------------- video twin
 def test_split_bmp_stream_roundtrip(spark, sf_dir):
     media = ph.synth_bmp_video(_docs(spark, sf_dir, 10), n_frames=5)
@@ -268,56 +194,6 @@ def test_split_bmp_stream_roundtrip(spark, sf_dir):
 
     with pytest.raises(NotImplementedError):
         ph.split_bmp_stream(b"XX123456")
-
-
-def test_video_neardup_equals_bruteforce_with_planted_reupload(
-    spark, sf_dir
-):
-    docs = _docs(spark, sf_dir, 20)
-    media = ph.synth_bmp_video(docs, n_frames=6).persist()
-    # planted re-uploads: same video with the LAST 2 frames replaced
-    # by truncation+re-append of frame 0 (4 of 6 frames survive)
-    planted = []
-    for r in media.limit(5).collect():
-        frames = ph.split_bmp_stream(bytes(r["payload"]))
-        edited = frames[:4] + [frames[0], frames[0]]
-        planted.append(
-            (r["doc_id"] + 100000, b"".join(edited), "bmpstream")
-        )
-    extra = spark.createDataFrame(
-        planted, "doc_id long, payload binary, format string"
-    )
-    corpus = media.unionByName(extra).persist()
-
-    # brute force on driver-side frame hashes, same pair-count rule
-    fh = {}
-    for r in ph.video_frame_hashes(corpus).collect():
-        fh.setdefault(r["doc_id"], []).append(r["dhash"] & ((1 << 64) - 1))
-    import itertools
-
-    want = {}
-    for da, db in itertools.combinations(sorted(fh), 2):
-        n = sum(
-            1
-            for ha in fh[da]
-            for hb in fh[db]
-            if bin(ha ^ hb).count("1") <= 3
-        )
-        if n >= 2:
-            want[(da, db)] = n
-    got = {
-        (r["doc_a"], r["doc_b"]): r["shared_frames"]
-        for r in ph.video_neardup(
-            corpus, max_hamming=3, min_shared_frames=2, max_band_df=None
-        ).collect()
-    }
-    assert got == want
-    # every planted re-upload pairs with its original
-    for r in media.limit(5).collect():
-        assert (r["doc_id"], r["doc_id"] + 100000) in got
-        assert got[(r["doc_id"], r["doc_id"] + 100000)] >= 4
-    corpus.unpersist()
-    media.unpersist()
 
 
 # ----------------------------------------------------------- AVI/MJPEG
@@ -381,46 +257,6 @@ def test_avi_boundaries_raise():
         mm.decode_avi_mjpeg(bloated)
 
 
-def test_video_neardup_detects_avi_reencode_of_bmp_video(spark, sf_dir):
-    """The actual use case: the SAME clip stored as a BMP frame
-    stream and as an AVI/MJPEG re-encode must surface as a near-dup
-    pair — MJPEG loss keeps per-frame dHashes within the Hamming
-    budget, not equal."""
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-
-    docs = _docs(spark, sf_dir, 6)
-    media = ph.synth_bmp_video(docs, n_frames=4).persist()
-    rows = media.limit(3).collect()
-    planted = []
-    for r in rows:
-        frames = ph.split_bmp_stream(bytes(r["payload"]))
-        rgbs = []
-        w = h = None
-        for fb in frames:
-            # gray RGB from the luminance rows: BT.601 of (l,l,l) is
-            # exactly l, so the dHash grid matches the BMP original
-            # up to MJPEG loss — the property under test
-            w, h, lum = ph._bmp_lum_rows(fb)
-            rgbs.append(
-                bytes(b for row in lum for v in row for b in (v, v, v))
-            )
-        avi = mm.encode_avi_mjpeg(w, h, rgbs, quality=95)
-        planted.append((r["doc_id"] + 100000, avi, "avi"))
-    corpus = media.unionByName(
-        spark.createDataFrame(
-            planted, "doc_id long, payload binary, format string"
-        )
-    )
-    pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in ph.video_neardup(
-            corpus, max_hamming=6, min_shared_frames=2, max_band_df=None
-        ).collect()
-    }
-    for r in rows:
-        assert (r["doc_id"], r["doc_id"] + 100000) in pairs
-
-
 # ------------------------------------------------------- MP4 probe
 def test_mp4_probe_roundtrips_skeleton():
     from teste_carga_avro_vs_json_spark.operators import multimodal as mm
@@ -456,23 +292,6 @@ def test_mp4_probe_roundtrips_skeleton():
     bad[moov_at : moov_at + 4] = struct.pack(">I", 4)
     with pytest.raises(NotImplementedError):
         mm.probe_mp4(bytes(bad))
-
-
-def test_mp4_probe_spark_frame(spark):
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-
-    good = mm.build_mp4_skeleton(
-        [{"handler": "vide", "codec": "hvc1", "width": 1280,
-          "height": 720, "n_samples": 60, "duration_s": 4.0}],
-        duration_s=4.0,
-    )
-    rows = [(1, good), (2, b"garbage bytes"), (3, None)]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r.doc_id: r for r in mm.probe_video_mp4(media).collect()}
-    assert out[1].video_codec == "hvc1" and out[1].width == 1280
-    assert out[1].duration_s == 4.0 and out[1].error is None
-    assert out[2].error == "NotImplementedError"
-    assert out[3].error == "NotImplementedError"
 
 
 # ------------------------------------------------------ ogg / mp3 probes
@@ -568,27 +387,6 @@ def test_mp3_probe_boundaries_raise():
         mm.probe_mp3(blob[:-10])
 
 
-def test_probe_audio_stream_spark_frame(spark):
-    rows = [
-        (1, mm.build_ogg(codec="opus", duration_s=3.0,
-                         tags={"TITLE": "um", "ARTIST": "a"})),
-        (2, mm.build_mp3(n_frames=38, tags={"TIT2": "dois", "TPE1": "b"})),
-        (3, b"definitely not audio bytes"),
-        (4, None),
-    ]
-    media = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {
-        r["doc_id"]: r
-        for r in mm.probe_audio_stream(media).collect()
-    }
-    assert got[1]["container"] == "ogg" and got[1]["codec"] == "opus"
-    assert got[1]["duration_s"] == 3.0 and got[1]["title"] == "um"
-    assert got[2]["container"] == "mp3" and got[2]["artist"] == "b"
-    assert got[2]["duration_s"] == round(38 * 1152 / 44100, 3)
-    assert got[3]["error"] and got[3]["container"] is None
-    assert got[4]["error"]
-
-
 # ---------------------------------------------------------------- TIFF
 def test_tiff_codec_endianness_strips_and_dhash_parity():
     """Classic-TIFF subset: MM (big-endian) and multi-strip crafted
@@ -652,44 +450,6 @@ def test_tiff_codec_endianness_strips_and_dhash_parity():
     with pytest.raises(NotImplementedError, match="strip"):
         trunc = bytes(out)[: d1_at + 5]
         mm._tiff_decode_pixels(trunc)
-
-
-def test_probe_image_stream_header_only_facts(spark):
-    """probe_image_stream: dims for all five stdlib formats from
-    HEADERS only, malformed payloads land as error rows."""
-    from teste_carga_avro_vs_json_spark.operators import jpeg_codec as jc
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-
-    w, h = 21, 13
-    rgb = bytes(((i * 41) ^ (i >> 3)) & 0xFF for i in range(w * h * 3))
-    pal = bytes([0, 0, 0, 255, 255, 255])
-    payloads = [
-        (0, mm.encode_bmp_stdlib(w, h, rgb)),
-        (1, mm.encode_png_stdlib(w, h, rgb)),
-        (2, mm.encode_tiff_stdlib(w, h, rgb)),
-        (3, jc.encode_jpeg(w, h, rgb)),
-        (4, mm.encode_gif_stdlib(
-            w, h, [bytes(i % 2 for i in range(w * h))], pal
-        )),
-        (5, b"\x00not an image"),
-        (6, None),
-    ]
-    df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    got = {
-        r.doc_id: r for r in mm.probe_image_stream(df).collect()
-    }
-    fmts = {0: "bmp", 1: "png", 2: "tiff", 3: "jpeg", 4: "gif"}
-    for i, fmt in fmts.items():
-        assert got[i].format == fmt and got[i].error is None
-        assert (got[i].width, got[i].height) == (w, h)
-    for i in (5, 6):
-        assert got[i].error is not None and got[i].format is None
-    # shuffle-free plan (the probe family rule)
-    plan = (
-        mm.probe_image_stream(df)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "Exchange" not in plan
 
 
 def test_probe_image_tiff_rejects_multi_count_dims():

@@ -13,7 +13,6 @@ from teste_carga_avro_vs_json_spark.operators import (
     lm,
     text,
 )
-from teste_carga_avro_vs_json_spark.operators import quality_model as qm
 
 
 def test_full_corpus_pipeline(spark, sf_dir):
@@ -143,16 +142,6 @@ def test_full_corpus_pipeline(spark, sf_dir):
     assert toks.count() == n_mixed
     assert toks.filter(F.col("n_bpe_tokens") <= 0).count() == 0
 
-    # 9b. the OTHER tokenizer family on the same corpus: unigram-LM
-    # (SentencePiece) — both train on identical pretokens, so a build
-    # can A/B vocabularies on one cleaned mix
-    from teste_carga_avro_vs_json_spark.operators import unigram
-
-    pieces = unigram.unigram_learn(final, vocab_size=150, seed_size=400)
-    utoks = unigram.unigram_tokenize(final, pieces)
-    assert utoks.count() == n_mixed
-    assert utoks.filter(F.col("n_pieces") <= 0).count() == 0
-
     # 10. token-space ExactSubstr over the tokenized corpus (the
     # published Lee et al. shape: dedup spans in BPE-token space)
     from teste_carga_avro_vs_json_spark.operators import substr_dedup
@@ -164,42 +153,6 @@ def test_full_corpus_pipeline(spark, sf_dir):
 
     # the funnel must actually funnel
     assert n_mixed < n0
-
-
-def test_learned_filter_composes_with_pipeline(spark, sf_dir):
-    """The trained classifier slots into the same chain: train on
-    corpus-vs-junk, gate the corpus, and the survivors still flow into
-    packing."""
-    from teste_carga_avro_vs_json_spark.functions.portable import rand_text
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    junk = spark.range(200).select(
-        (F.col("id") + 5_000_000).alias("doc_id"),
-        F.concat_ws(
-            " ",
-            *[rand_text(F.concat(F.lit(f"p{i}-"), F.col("id")), 8)
-              for i in range(25)],
-        ).alias("text"),
-    )
-    labeled = docs.withColumn("y", F.lit(1)).unionByName(
-        junk.withColumn("y", F.lit(0))
-    )
-    wts = qm.train_quality_model(labeled, "y", n_features=1024, epochs=6)
-    kept = qm.score_with_model(labeled, wts).filter("keep")
-    survivors = labeled.join(kept.select("doc_id"), "doc_id")
-    n_kept = survivors.count()
-    assert 0 < n_kept < labeled.count()
-    # the gate must favor corpus over junk decisively (the >=95%
-    # separation strength at the 2048-feature config is pinned in
-    # test_quality_model; here the subject is COMPOSITION)
-    junk_kept = survivors.filter(F.col("doc_id") >= 5_000_000).count()
-    good_kept = n_kept - junk_kept
-    assert junk_kept / 200 < 0.3
-    assert good_kept / docs.count() > 0.7
-    packed = corpus.pack_sequences(survivors, seq_len=512)
-    assert packed.count() == n_kept
 
 
 def test_media_sidecar_dedup_composes(spark, sf_dir):
@@ -295,56 +248,3 @@ def test_mixed_container_media_dedup_composes(spark, sf_dir):
     kept = corpus.join(drop, "doc_id", "left_anti")
     assert kept.filter(F.col("doc_id") >= 1_000_000).count() == 0
     corpus.unpersist()
-
-
-def test_incremental_ingest_composes(spark, sf_dir, tmp_path):
-    """The r8 incremental-ingest story end to end: an initial corpus
-    is built, committed as a snapshot, and compressed into a Bloom
-    seen-set; a NEW crawl batch (half re-crawls, half fresh) is gated
-    by the filter with zero joins against history, and only the fresh
-    survivors are appended as the next snapshot version — time travel
-    shows both states, and no true duplicate ever lands (zero false
-    negatives is the Bloom guarantee)."""
-    from teste_carga_avro_vs_json_spark.operators import dedup
-    from teste_carga_avro_vs_json_spark.operators import maintenance as mt
-
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", "text")
-    )
-    history = docs.filter("doc_id % 2 = 0").persist()
-    tdir = str(tmp_path / "corpus")
-
-    # epoch 1: commit history, build the seen-set
-    v1 = mt.snapshot_commit(history, tdir)
-    bloom = dedup.bloom_build(mt.snapshot_read(spark, tdir, v1), fpp=0.01)
-
-    # epoch 2: new batch = re-crawls of history + genuinely fresh docs
-    recrawls = history.limit(40).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"), "text"
-    )
-    fresh = docs.filter("doc_id % 2 = 1").limit(60)
-    batch = recrawls.unionByName(fresh)
-    gated = dedup.bloom_dedup(batch, bloom).persist()
-
-    # every re-crawl is caught (zero false negatives)
-    assert gated.where(
-        (F.col("doc_id") >= 1_000_000) & ~F.col("probably_seen")
-    ).count() == 0
-    survivors = gated.where(~F.col("probably_seen")).select("doc_id", "text")
-    n_survivors = survivors.count()
-    assert n_survivors > 0  # FPs may eat a few fresh docs, never all
-
-    v2 = mt.snapshot_commit(survivors, tdir, mode="append")
-    # time travel: v1 is untouched history; v2 = history + survivors
-    assert mt.snapshot_read(spark, tdir, v1).count() == history.count()
-    assert (
-        mt.snapshot_read(spark, tdir, v2).count()
-        == history.count() + n_survivors
-    )
-    # and the appended corpus still has no EXACT duplicate texts from
-    # the re-crawl class (the whole point of the gate)
-    v2_df = mt.snapshot_read(spark, tdir, v2)
-    assert v2_df.groupBy("text").count().where("count > 1").count() == 0
-    gated.unpersist()
-    history.unpersist()

@@ -219,20 +219,6 @@ def test_pcf_primitives_unions_enums_fixed():
     )
 
 
-def test_rabin_fingerprint_spec_seed_and_stability():
-    """CRC-64-AVRO over PCF strings: deterministic, PCF-variant
-    invariant (same fingerprint for doc/default/order variants), and
-    distinct across genuinely different schemas."""
-    fp = schema_registry.rabin_fingerprint
-    pcf = schema_registry.parsing_canonical_form
-    a = fp(pcf(SCHEMA))
-    assert a == fp(pcf(SCHEMA_REORDERED)) == fp(pcf(SCHEMA_DOCED))
-    assert a != fp(pcf(OTHER))
-    assert 0 <= a < 2**64
-    # empty input returns the spec's EMPTY seed itself
-    assert fp("") == 0xC15D213AA4D7A795
-
-
 def _loopback_registry_server():
     """Minimal in-process Schema Registry speaking the two REST
     endpoints the client uses, with Confluent id semantics."""
@@ -429,12 +415,10 @@ def test_http_compatibility_endpoint_contract():
         bad.test_compatibility("t", SCHEMA)
 
 
-def test_pcf_and_rabin_match_apache_avro_java(spark):
-    """Parsing Canonical Form and the 64-bit Rabin fingerprint pinned
-    against the reference implementation (org.apache.avro
-    SchemaNormalization in the avro-1.12 jar): strings must be equal
-    and fingerprints must agree (Java returns signed long). Caught a
-    real bug: the byte step shifted by 1 instead of 8."""
+def test_pcf_matches_apache_avro_java(spark):
+    """Parsing Canonical Form pinned against the reference
+    implementation (org.apache.avro SchemaNormalization in the
+    avro-1.12 jar): the strings must be equal."""
     jvm = spark._jvm
 
     from teste_carga_avro_vs_json_spark.schemas import MENSAGEM_CARGA_AVSC
@@ -454,88 +438,7 @@ def test_pcf_and_rabin_match_apache_avro_java(spark):
     for s in cases:
         sch = jvm.org.apache.avro.Schema.Parser().parse(s)
         jpcf = jvm.org.apache.avro.SchemaNormalization.toParsingForm(sch)
-        jfp = jvm.org.apache.avro.SchemaNormalization.parsingFingerprint64(sch)
-        ours = schema_registry.parsing_canonical_form(s)
-        assert ours == jpcf, s
-        assert schema_registry.rabin_fingerprint(ours) == jfp % (1 << 64), s
-
-
-def test_single_object_encoding_roundtrip_and_evolution(spark):
-    """Avro single-object encoding: C3 01 magic + little-endian Rabin
-    fingerprint + body. The fingerprint identifies the WRITER schema
-    registry-lessly; combined with the generic resolver the consumer
-    reads any known writer version into its own shape. Frame header
-    pinned against Java's own fingerprint bytes."""
-    from teste_carga_avro_vs_json_spark.functions import avro_generic as ag
-    from teste_carga_avro_vs_json_spark.functions.schema_registry import (
-        fingerprint_store,
-        single_object_unwrap,
-        single_object_wrap,
-    )
-
-    v1 = '{"type":"record","name":"D","fields":[{"name":"a","type":"int"}]}'
-    v2 = ('{"type":"record","name":"D","fields":[{"name":"a","type":"int"},'
-          '{"name":"b","type":"string","default":"x"}]}')
-    reader = ('{"type":"record","name":"D","fields":[{"name":"a","type":"long"},'
-              '{"name":"b","type":"string","default":"x"}]}')
-    store = fingerprint_store(v1, v2)
-    frames = [
-        single_object_wrap(ag.encode(v1, {"a": 1}), v1),
-        single_object_wrap(ag.encode(v2, {"a": 2, "b": "y"}), v2),
-    ]
-    out = []
-    for f in frames:
-        writer, body = single_object_unwrap(f, store)
-        out.append(ag.decode_resolved(writer, reader, body))
-    assert out == [{"a": 1, "b": "x"}, {"a": 2, "b": "y"}]
-    # header matches Java's fingerprint, little-endian, after the magic
-    jvm = spark._jvm
-    sch = jvm.org.apache.avro.Schema.Parser().parse(v1)
-    jfp = jvm.org.apache.avro.SchemaNormalization.parsingFingerprint64(sch)
-    assert frames[0][:2] == b"\xc3\x01"
-    assert frames[0][2:10] == (jfp % (1 << 64)).to_bytes(8, "little")
-    with pytest.raises(ValueError, match="magic"):
-        single_object_unwrap(b"\x00\x01" + frames[0][2:], store)
-    with pytest.raises(KeyError):
-        single_object_unwrap(
-            single_object_wrap(b"", '"int"'), store
-        )
-
-
-def test_single_object_column_wrappers(spark):
-    """JVM-side single-object framing: wrap is one literal concat,
-    fingerprint extraction is hex/conv arithmetic — zero Python; a
-    consumer can route frames to writer schemas by fingerprint with a
-    plain filter/join."""
-    import pyspark.sql.functions as F
-
-    from teste_carga_avro_vs_json_spark.functions import avro_generic as ag
-    from teste_carga_avro_vs_json_spark.functions.schema_registry import (
-        parsing_canonical_form,
-        rabin_fingerprint,
-        single_object_fingerprint_col,
-        single_object_unwrap,
-        single_object_wrap_col,
-        fingerprint_store,
-    )
-
-    v1 = '{"type":"record","name":"D","fields":[{"name":"a","type":"int"}]}'
-    df = spark.range(5).select(
-        ag.to_avro_any(F.struct(F.col("id").cast("int").alias("a")), v1).alias("body")
-    )
-    framed = df.select(single_object_wrap_col(F.col("body"), v1).alias("frame"))
-    fp = rabin_fingerprint(parsing_canonical_form(v1))
-    out = framed.select(
-        single_object_fingerprint_col(F.col("frame")).alias("fp"), "frame"
-    ).collect()
-    assert all(r.fp == str(fp) for r in out)
-    # frames parse back through the scalar unwrap + generic decode
-    store = fingerprint_store(v1)
-    vals = sorted(
-        ag.decode(*single_object_unwrap(bytes(r.frame), store))["a"]
-        for r in out
-    )
-    assert vals == [0, 1, 2, 3, 4]
+        assert schema_registry.parsing_canonical_form(s) == jpcf, s
 
 
 def test_http_set_compatibility_contract():

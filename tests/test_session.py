@@ -5,7 +5,6 @@ TESTDATA.md)."""
 
 import datetime
 
-import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark.session import normalize_events_ts
 
@@ -72,31 +71,6 @@ def test_long_ts_passthrough(spark):
     df = spark.createDataFrame([(_WANT_NANOS,)], "ts long")
     [row] = normalize_events_ts(df).collect()
     assert row.ts == _WANT_NANOS
-
-
-def test_register_views_sql_surface(spark, sf_dir):
-    """All ten testdata tables become spark.sql-addressable, with the
-    events clock normalized to epoch-nanos long (same contract as
-    load_table)."""
-    from teste_carga_avro_vs_json_spark.session import (
-        TESTDATA_TABLES,
-        register_views,
-    )
-
-    register_views(spark, sf_dir)
-    for t in TESTDATA_TABLES:
-        assert spark.sql(f"SELECT * FROM {t} LIMIT 1").count() >= 0
-    [row] = spark.sql(
-        "SELECT COUNT(*) AS n, MAX(ts div 1000000) AS mx_ms FROM events"
-    ).collect()
-    assert row.n > 0 and row.mx_ms > 1_600_000_000_000  # epoch-ms scale
-    [j] = spark.sql(
-        """
-        SELECT COUNT(*) AS n
-        FROM nation n JOIN region r ON n.n_regionkey = r.r_regionkey
-        """
-    ).collect()
-    assert j.n == 25
 
 
 def test_configure_warns_once_per_session_on_static_conf():

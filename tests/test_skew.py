@@ -1,4 +1,4 @@
-"""Salted aggregation / salted join: result-equivalence with the plain
+"""Salted aggregation: result-equivalence with the plain
 shapes, plus the two-exchange plan contract."""
 
 import pyspark.sql.functions as F
@@ -56,25 +56,3 @@ def test_salted_agg_two_phase_plan(spark, sf_dir):
     )
     plan = compact_plan(out)
     assert plan.count("Exchange") == 2  # (key,salt) then key
-
-
-def test_salted_broadcast_join_equals_plain(spark, sf_dir):
-    big = _events(spark, sf_dir)
-    small = spark.createDataFrame(
-        [("click", 1.0), ("view", 0.5), ("error", 0.0)], "event_type string, w double"
-    )
-    plain = {
-        tuple(r)
-        for r in big.join(small, "event_type")
-        .select("event_type", "user_id", "nbytes", "w")
-        .collect()
-    }
-    salted = {
-        tuple(r)
-        for r in skew.salted_broadcast_join(big, small, "event_type")
-        .select("event_type", "user_id", "nbytes", "w")
-        .collect()
-    }
-    assert salted == plain
-    plan = compact_plan(skew.salted_broadcast_join(big, small, "event_type"))
-    assert "BroadcastHashJoin" in plan

@@ -3,6 +3,8 @@ Pinned by stream==batch equality (the documented
 convention for streaming surfaces: no SQL oracle, DuckDB has no
 streaming)."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -141,7 +143,7 @@ def test_rewrite_commit_fails_by_default_and_skips_on_option(
 
 
 def test_reorg_commits_are_stream_transparent(spark, sf_dir, tmp_path):
-    """compact/cluster_by/zorder_by preserve content exactly and stamp
+    """compact/cluster_by preserve content exactly and stamp
     extra.reorg (Delta's dataChange=false) — the stream passes over
     them WITHOUT on_rewrite='skip', emitting nothing for them."""
     docs = _docs(spark, sf_dir)
@@ -214,6 +216,13 @@ def test_max_versions_per_batch_paces_batches(spark, sf_dir, tmp_path):
     assert batch_rows({"version": 3}, {"version": 3}) == []
 
 
+def _retire(tdir, *versions):
+    """Retire versions the way a retention process does: their
+    manifests go."""
+    for v in versions:
+        os.remove(mt._manifest_path(tdir, v))
+
+
 def test_vacuumed_parent_raises(spark, sf_dir, tmp_path):
     docs = _docs(spark, sf_dir)
     tdir = str(tmp_path / "table")
@@ -221,7 +230,7 @@ def test_vacuumed_parent_raises(spark, sf_dir, tmp_path):
         mt.snapshot_commit(
             docs.filter(f"doc_id % 4 = {i}"), tdir, mode="append"
         )
-    mt.snapshot_vacuum(tdir, keep_last=2, grace_sec=0)  # retires v1, v2
+    _retire(tdir, 1, 2)
     reader = ss.SnapshotStreamReader({"path": tdir})
     with pytest.raises(Exception, match="vacuum"):
         reader.partitions({"version": 2}, {"version": 4})
@@ -244,7 +253,7 @@ def test_vacuumed_parent_only_gates_ops_that_need_it(
     mt.snapshot_commit(                                            # v3
         docs.filter("doc_id >= 60 and doc_id < 80"), tdir, mode="append"
     )
-    mt.snapshot_vacuum(tdir, keep_last=2, grace_sec=0)  # retires v1 — v2's parent
+    _retire(tdir, 1)  # v2's parent
     reader = ss.SnapshotStreamReader(
         {"path": tdir, "read_changes": "true"}
     )
@@ -257,7 +266,7 @@ def test_vacuumed_parent_only_gates_ops_that_need_it(
     mt.snapshot_commit(
         docs.filter("doc_id >= 80 and doc_id < 90"), tdir, mode="append"
     )                                                              # v4
-    mt.snapshot_vacuum(tdir, keep_last=2, grace_sec=0)  # retires v2 — v3's parent
+    _retire(tdir, 2)  # v3's parent
     with pytest.raises(Exception, match="vacuum"):
         reader._change_plan(3)
     with pytest.raises(Exception, match="vacuum"):

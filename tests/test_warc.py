@@ -4,7 +4,6 @@ truncation handling, and the full crawl→corpus chain
 (write_warc → read_warc_responses → extract_text == fixture text)."""
 
 import gzip
-import zlib
 
 import pytest
 
@@ -83,18 +82,14 @@ def test_tolerant_truncation():
 def test_gzip_members_are_records_and_seekable():
     rows = [(i, f"https://ex.com/{i}", f"<p>doc {i}</p>") for i in range(5)]
     blob = W.docs_to_warc_bytes(rows, gz=True)
-    offsets = W.gzip_member_offsets(blob)
+    members = list(W.iter_gzip_members(blob))
     # one member per record: warcinfo + 5 responses
-    assert len(offsets) == 6
-    # CDX splittability: EVERY member decompresses independently
-    # starting at its recorded offset — this is what lets a 1000-task
-    # reader (or a CDX random-access lookup) enter mid-shard.
-    for off, ln in offsets:
-        member = gzip.decompress(blob[off : off + ln])
+    assert len(members) == 6
+    # EVERY member is one whole record — what lets a reader (or a
+    # CDX random-access lookup) enter mid-shard at a member boundary
+    for member in members:
         recs, bad = W.parse_warc(member)
         assert bad == 0 and len(recs) == 1
-    # offsets derive from real DEFLATE framing, not magic-byte scans
-    assert offsets[0][0] == 0 and sum(l for _, l in offsets) == len(blob)
     # deterministic bytes (fixed date, mtime=0): rebuild == build
     assert W.docs_to_warc_bytes(rows, gz=True) == blob
 
@@ -184,8 +179,6 @@ def test_plain_warc_and_bad_member():
     assert bad == 0 and len(recs) == 2
     with pytest.raises(W.WarcFormatError):
         list(W.iter_gzip_members(gzip.compress(b"x")[:-4]))
-    with pytest.raises(W.WarcFormatError):
-        W.gzip_member_offsets(b"\x1f\x8b" + b"\x00" * 10)
 
 
 def test_header_injection_sanitized():
@@ -205,83 +198,3 @@ def test_header_injection_sanitized():
     assert r.target_uri == "https://e/xWARC-Type: injectedpath"
     assert r.headers.get("X-Meta") == "abc"
     assert r.payload == body
-
-
-def test_warc_pdf_chain(spark, sf_dir, tmp_path):
-    """The CommonCrawl PDF path: synth PDFs → WARC shards with
-    application/pdf payloads → read_warc_pdfs → extract_text_pdf ==
-    the fixture 8-word-line structure, plus content-type filtering
-    proven on a mixed shard (HTML records excluded scan-locally)."""
-    from teste_carga_avro_vs_json_spark.operators import (
-        html_extract as hx,
-        pdf_extract as px,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    ).limit(60)
-    pdfs = px.synth_pdf(docs).select(
-        "doc_id",
-        F.concat(F.lit("https://e/pdf/"), F.col("doc_id")).alias("url"),
-        F.col("pdf").alias("html"),  # write_warc's payload column
-    )
-    out = str(tmp_path / "warc_pdf")
-    W.write_warc(pdfs, out, num_files=4, content_type="application/pdf")
-    # add an HTML shard into the same directory (mixed corpus)
-    html_pages = hx.synth_html(docs.limit(10)).select(
-        "doc_id",
-        F.concat(F.lit("https://e/html/"), F.col("doc_id")).alias("url"),
-        "html",
-    )
-    W.write_warc(html_pages, str(tmp_path / "warc_pdf" / "html_sub"), num_files=1)
-    import shutil
-
-    for f in (tmp_path / "warc_pdf" / "html_sub").glob("*.warc.gz"):
-        shutil.move(str(f), str(tmp_path / "warc_pdf" / ("html-" + f.name)))
-
-    got = px.extract_text_pdf(W.read_warc_pdfs(spark, out))
-    rows = {r.doc_id: r for r in got.collect()}
-    assert len(rows) == 60  # html records filtered scan-locally
-    src = {r.doc_id: r.text for r in docs.collect()}
-    for doc_id, r in rows.items():
-        assert r.error is None
-        words = (src[doc_id] or "").split()
-        expect = "\n".join(
-            " ".join(words[i : i + 8])
-            for i in range(0, max(len(words), 1), 8)
-        ).strip()
-        assert r.text == expect
-    # and the text twin still reads only the HTML records
-    html_read = W.read_warc_payloads(spark, out, "text/html")
-    assert html_read.count() == 10
-
-
-def test_read_warc_payloads_generic_crawl_without_doc_ids(spark, tmp_path):
-    """Generic (non-our-sink) crawl data: records lack the
-    WARC-X-Spark-Doc-Id extension header, so doc_id is NULL and
-    consumers key on target_uri — the real CommonCrawl shape."""
-    from teste_carga_avro_vs_json_spark.operators import pdf_extract as px
-
-    pdf_bytes = px.build_pdf([["generic crawl pdf"]])
-    recs = b""
-    for i, (url, ctype, body) in enumerate(
-        [
-            ("https://x/a.pdf", "application/pdf", pdf_bytes),
-            ("https://x/b.html", "text/html", b"<p>ola</p>"),
-        ]
-    ):
-        http = W.build_http_response(body, content_type=ctype)
-        recs += W.build_record(
-            "response", http, target_uri=url,
-            content_type="application/http; msgtype=response",
-        )
-    out = tmp_path / "generic"
-    out.mkdir()
-    (out / "shard.warc").write_bytes(recs)
-
-    pdfs = W.read_warc_pdfs(spark, str(out)).collect()
-    assert len(pdfs) == 1
-    assert pdfs[0].doc_id is None
-    assert pdfs[0].url == "https://x/a.pdf"
-    text, _ = px.extract_pdf(bytes(pdfs[0].pdf))
-    assert text == "generic crawl pdf"

@@ -84,9 +84,6 @@ into the driver window (registry.py carries their fixtures now);
 r12 promoted q_hard_negatives + q_cluster_sample the same way;
 r13 promoted q_ivf_pq_topk (an r12 extra) the same way.
 
-``incremental_dedup`` stays pytest-only: its xxhash64 fingerprints are
-not DuckDB-expressible (same reason exact_dedup_scale has no oracle).
-
 Usage: python tools/check_retired.py [sf_dir] [query ...] [--json OUT]
 """
 
