@@ -88,6 +88,10 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
         kafka_wire_source.register(spark)
         is_json = app.endswith("JSON")
         topic = cfg.topico_json if is_json else cfg.topico_avro
+        # kafka_security()'s keys are the source's option names
+        conn = dict(
+            bootstrap=cfg.bootstrap_servers, topic=topic, **cfg.kafka_security()
+        )
         if app.startswith("PRODUTOR"):
             msgs = generator.mensagens(spark, total, kb)
             struct = F.struct("id", "timestamp", "sequencia", "dados", "versao")
@@ -97,8 +101,7 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
             wire = io_kafka.to_wire_frame(msgs, value, P)
             (
                 wire.write.format("kafka_wire")
-                .option("bootstrap", cfg.bootstrap_servers)
-                .option("topic", topic)
+                .options(**conn, compression=cfg.compression_type)
                 .mode("append")
                 .save()
             )
@@ -132,8 +135,10 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
                     "partition int, offset long, key binary, value binary",
                 )
             else:
-                raw = io_kafka.read_kafka_wire_batch(
-                    spark, cfg.bootstrap_servers, topic, target_total=total
+                raw = (
+                    spark.read.format("kafka_wire")
+                    .options(**conn, target_total=total)
+                    .load()
                 )
             if cfg.bench_mode == "TRANSPORTE":
                 src = raw.select(

@@ -36,16 +36,11 @@ from teste_carga_avro_vs_json_spark.functions.avro_codec import (
 from teste_carga_avro_vs_json_spark.schemas import MENSAGEM_CARGA_AVSC
 
 MAGIC = b"Obj\x01"
+_SCHEMA_JSON = json.dumps(MENSAGEM_CARGA_AVSC, separators=(",", ":"))
 
 
-def _schema_json(schema_json: str | None = None) -> str:
-    if schema_json is not None:
-        return schema_json
-    return json.dumps(MENSAGEM_CARGA_AVSC, separators=(",", ":"))
-
-
-def sync_marker(token: str = "", schema_json: str | None = None) -> bytes:
-    return hashlib.md5((_schema_json(schema_json) + token).encode()).digest()
+def sync_marker(token: str = "") -> bytes:
+    return hashlib.md5((_SCHEMA_JSON + token).encode()).digest()
 
 
 def _write_bytes(buf: bytearray, raw: bytes) -> None:
@@ -58,20 +53,17 @@ def write_ocf(
     codec: str = "null",
     block_records: int = 1000,
     sync_token: str = "",
-    schema_json: str | None = None,
 ) -> bytes:
-    """Serialize pre-encoded Avro record bytes into one OCF byte
-    string. ``schema_json`` embeds a caller schema (default: the
-    reference's MensagemCarga) — with :mod:`functions.avro_generic`
-    this writes standard container files for ANY schema."""
+    """Serialize pre-encoded MensagemCarga record bytes into one OCF
+    byte string."""
     if codec not in ("null", "deflate"):
         raise ValueError(f"unsupported avro.codec: {codec!r}")
-    sync = sync_marker(sync_token, schema_json)
+    sync = sync_marker(sync_token)
     buf = bytearray(MAGIC)
     # metadata map: one block of 2 entries, then end-of-map 0
     _write_long(buf, 2)
     _write_bytes(buf, b"avro.schema")
-    _write_bytes(buf, _schema_json(schema_json).encode())
+    _write_bytes(buf, _SCHEMA_JSON.encode())
     _write_bytes(buf, b"avro.codec")
     _write_bytes(buf, codec.encode())
     _write_long(buf, 0)

@@ -185,7 +185,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from teste_carga_avro_vs_json_spark.streaming import (
-        run_bounded_append,
+        run_bounded,
         stream_dedup,
     )
 
@@ -210,7 +210,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_dedup(stream, ["fp"], "ev", delay="30 days").select(
         "doc_id", "fp"
     )
-    return run_bounded_append(out, query_name="q_stream_dedup")
+    return run_bounded(out, query_name="q_stream_dedup", output_mode="append")
 
 
 def _stream_dedup_sql() -> str:
@@ -232,7 +232,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from teste_carga_avro_vs_json_spark.streaming import (
-        run_bounded_append,
+        run_bounded,
         stream_stream_join,
     )
 
@@ -261,7 +261,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         p, c, "user_id", "p_ts", "c_ts", max_gap="24 hours", delay="30 days"
     )
     out = joined.select("purchase_id", "user_id", "click_id", "p_ms", "c_ms")
-    return run_bounded_append(out, query_name="q_stream_stream_join")
+    return run_bounded(
+        out, query_name="q_stream_stream_join", output_mode="append"
+    )
 
 
 def _stream_stream_join_sql() -> str:
@@ -303,7 +305,7 @@ def q_stream_sequence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.window import Window
 
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_update
+    from teste_carga_avro_vs_json_spark.streaming import run_bounded
     from teste_carga_avro_vs_json_spark.streaming.stateful import (
         auditoria_sequencia,
     )
@@ -314,9 +316,10 @@ def q_stream_sequence_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="seq_audit_")
     routed.coalesce(1).write.mode("overwrite").parquet(path)
     stream = spark.readStream.schema("particao int, sequencia long").parquet(path)
-    out = run_bounded_update(
+    out = run_bounded(
         auditoria_sequencia(stream, ROUTE_PARTS),
         query_name="q_stream_sequence_audit",
+        output_mode="update",
     )
     # update mode emits one row per key per micro-batch; keep the final
     # (largest-total) state per partition.
@@ -775,7 +778,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window)."""
     import tempfile
 
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
+    from teste_carga_avro_vs_json_spark.streaming import run_bounded
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("ts div 1000000").alias("ts_ms")
@@ -796,7 +799,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", F.session_window("evt", "30 minutes"))
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = run_bounded_append(sess, query_name="q_stream_sessionize")
+    out = run_bounded(sess, query_name="q_stream_sessionize", output_mode="append")
     return (
         out.filter(F.col("user_id") >= 0)
         .select(

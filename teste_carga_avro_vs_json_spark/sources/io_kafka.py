@@ -1,10 +1,11 @@
 """Kafka batch/streaming IO (reference O7/O8/O9/O17) — connector plumbing.
 
-No broker ships in this container, so nothing here is exercised against
-a live cluster; the DataFrame plumbing and the offset arithmetic are the
-engine's real code paths and are unit-tested (the arithmetic is pure).
-On a real cluster the Spark Kafka connector
-(spark-sql-kafka-0-10) provides ``format("kafka")`` batch + streaming.
+With the Spark Kafka connector (spark-sql-kafka-0-10) on the classpath,
+``format("kafka")`` serves batch + streaming; its option dicts are pure
+builders pinned by tests. Without the jar, bounded reads go through
+``format("kafka_wire")`` (:mod:`sources.kafka_wire_source`) over the
+stdlib wire client; that path and the wire offset helpers here run
+over real sockets against ``kafka_wire.StubBroker`` in the tests.
 
 Mappings:
 
@@ -31,6 +32,22 @@ from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark.operators import routing
+from teste_carga_avro_vs_json_spark.sources.kafka_wire import (
+    EARLIEST,
+    LATEST,
+    WireKafkaClient,
+)
+
+# the wire offset helpers run inside format("kafka_wire") tasks:
+# pickle-by-value, so executors don't need the repo on PYTHONPATH
+try:
+    import sys as _sys
+
+    from pyspark import cloudpickle as _cloudpickle
+
+    _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+except Exception:  # noqa: BLE001
+    pass
 
 
 # ----------------------------------------------------- offset arithmetic
@@ -78,124 +95,6 @@ def fetch_offsets(bootstrap_servers: str, topic: str) -> tuple[dict, dict]:
     )
 
 
-def read_kafka_wire_batch(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    target_total: int | None = None,
-    offsets: tuple[dict[int, int], dict[int, int]] | None = None,
-    max_bytes: int = 1 << 20,
-    security: dict | None = None,
-    group: str | None = None,
-) -> DataFrame:
-    """Distributed batch consume over the stdlib wire-protocol client —
-    a working Kafka SOURCE with zero non-stdlib dependencies, for
-    environments without the spark-sql-kafka jar (this container; any
-    bare PySpark install).
-
-    Execution model mirrors the real connector (O8, parallel source):
-    the driver discovers per-partition [start, end) bounds (tail-N
-    arithmetic when ``target_total`` is given — O9), builds one plan
-    row per TopicPartition, and ``mapInPandas`` fetches each partition
-    executor-side over its own socket — one task per TopicPartition,
-    records streamed out in Arrow batches, no driver traffic. Output
-    columns match ``format("kafka")``: (topic, partition, offset, key,
-    value) with binary key/value.
-
-    ``security`` kwargs are forwarded to ``WireKafkaClient`` on every
-    socket (driver offset discovery AND executor fetches) — SASL PLAIN
-    and TLS are supported (the reference's SASL_SSL setup,
-    ConfiguracaoKafka.java:134-138); note an ``ssl_context`` in
-    ``security`` must be constructible executor-side (pass cert PATHS
-    via a loader, not a live SSLContext, on a real cluster).
-
-    ``group`` (r9) gives bounded reads RESUME semantics over
-    broker-stored offsets: starts are overridden by the group's
-    committed offsets where present (uncommitted partitions keep the
-    computed start — auto.offset.reset=earliest, the reference's
-    setting), and the caller commits the frontier back explicitly via
-    :func:`commit_offsets_wire` AFTER materializing — a batch read
-    must never auto-commit offsets for data that may not have been
-    consumed.
-
-    On a cluster the JVM connector remains the production choice
-    (SCALE.md) — it adds rack-aware replica fetching and group
-    REBALANCE (JoinGroup/SyncGroup) this client deliberately skips:
-    Spark sources assign partitions statically, so only the offset
-    store is needed."""
-    from itertools import islice
-
-    import pandas as pd
-
-    from teste_carga_avro_vs_json_spark.sources.kafka_wire import WireKafkaClient
-
-    security = security or {}
-    begins, ends = offsets if offsets is not None else fetch_offsets_wire(
-        bootstrap_servers, topic, security=security
-    )
-    starts = (
-        tail_n_offsets(begins, ends, target_total)
-        if target_total is not None
-        else {p: begins.get(p, 0) for p in ends}
-    )
-    if group is not None:
-        # resume semantics: a committed offset (the NEXT offset to
-        # read, Kafka convention) overrides the computed start for its
-        # partition; partitions with no commit keep theirs
-        # (auto.offset.reset=earliest — the reference's setting,
-        # ConfiguracaoKafka.java:171). Committing back after the read
-        # is the CALLER's explicit step (commit_offsets_wire) — batch
-        # reads must not auto-commit offsets for data the caller may
-        # never have materialized.
-        committed = fetch_committed_offsets_wire(
-            bootstrap_servers, group, topic, sorted(ends), security=security
-        )
-        starts = {p: committed.get(p, s0) for p, s0 in starts.items()}
-    plan = [(p, int(starts.get(p, 0)), int(end)) for p, end in sorted(ends.items())]
-
-    def _fetch(batches):
-        client = None
-        try:
-            for pdf in batches:
-                for p, start, end in zip(pdf["partition"], pdf["start"], pdf["end"]):
-                    p, offset, end = int(p), int(start), int(end)
-                    if offset >= end:
-                        continue
-                    if client is None:
-                        # multi-host bootstrap with failover (r7)
-                        client = WireKafkaClient.connect(
-                            bootstrap_servers, **security
-                        )
-                    # fetch_until retries transient empty fetches and
-                    # raises instead of silently truncating the bounded
-                    # read (r7, ADVICE fix)
-                    it = client.fetch_until(topic, p, offset, end, max_bytes)
-                    while True:
-                        recs = list(islice(it, 10_000))
-                        if not recs:
-                            break
-                        yield pd.DataFrame(
-                            {
-                                "topic": topic,
-                                "partition": p,
-                                "offset": [o for o, _, _ in recs],
-                                "key": [k for _, k, _ in recs],
-                                "value": [v for _, _, v in recs],
-                            }
-                        )
-        finally:
-            if client is not None:
-                client.close()
-
-    plan_df = spark.createDataFrame(
-        plan, "partition int, start long, end long"
-    ).repartition(max(len(plan), 1), "partition")
-    return plan_df.mapInPandas(
-        _fetch,
-        "topic string, partition int, offset long, key binary, value binary",
-    )
-
-
 def fetch_committed_offsets_wire(
     bootstrap_servers: str,
     group: str,
@@ -205,9 +104,7 @@ def fetch_committed_offsets_wire(
 ) -> dict[int, int]:
     """Broker-stored committed offsets for ``group`` (OffsetFetch v1)
     — partitions with no commit are absent."""
-    from teste_carga_avro_vs_json_spark.sources import kafka_wire
-
-    client = kafka_wire.WireKafkaClient.connect(
+    client = WireKafkaClient.connect(
         bootstrap_servers, **(security or {})
     )
     try:
@@ -225,11 +122,9 @@ def commit_offsets_wire(
 ) -> None:
     """Commit {partition: next_offset} for ``group`` (OffsetCommit v2)
     — the explicit post-materialization step that makes bounded batch
-    reads resumable (`read_kafka_wire_batch(group=...)` starts from
-    these)."""
-    from teste_carga_avro_vs_json_spark.sources import kafka_wire
-
-    client = kafka_wire.WireKafkaClient.connect(
+    reads resumable (``format("kafka_wire")`` with a ``group`` option
+    starts from these)."""
+    client = WireKafkaClient.connect(
         bootstrap_servers, **(security or {})
     )
     try:
@@ -246,18 +141,16 @@ def fetch_offsets_wire(
     """Begin/end offsets via the stdlib Kafka wire-protocol client
     (Metadata v1 + ListOffsets v1) — no third-party dependency; the
     loopback broker test drives this against a real socket."""
-    from teste_carga_avro_vs_json_spark.sources import kafka_wire
-
-    client = kafka_wire.WireKafkaClient.connect(
+    client = WireKafkaClient.connect(
         bootstrap_servers, **(security or {})
     )
     try:
         parts = client.partitions_for(topic)
         begins = {
-            p: client.list_offset(topic, p, kafka_wire.EARLIEST) for p in parts
+            p: client.list_offset(topic, p, EARLIEST) for p in parts
         }
         ends = {
-            p: client.list_offset(topic, p, kafka_wire.LATEST) for p in parts
+            p: client.list_offset(topic, p, LATEST) for p in parts
         }
         return begins, ends
     finally:
@@ -352,30 +245,31 @@ def read_kafka_tail_n(
     topic: str,
     target_total: int,
     min_partitions: int | None = None,
-    offsets: tuple[dict[int, int], dict[int, int]] | None = None,
 ) -> DataFrame:
     """Batch consume of the last ~target_total records (O9): compute
     end-N offsets driver-side, then a bounded Kafka scan. One task per
     TopicPartition (O8); raw bytes come back — decode with
-    operators/serde or functions/avro_codec downstream. ``offsets``
-    (begins, ends) skips the live AdminClient fetch when the caller
-    already knows them.
+    operators/serde or functions/avro_codec downstream.
 
     Connector autodetect (r6): uses the JVM connector
     (spark-sql-kafka-0-10) when its jar is on the classpath — the
-    production path — else falls back to the wire-protocol source
-    (:func:`read_kafka_wire_batch`, same partition-parallel shape, no
-    dependencies), so this API works against any broker on a bare
-    PySpark install. Column sets match except the JVM connector's extra
-    timestamp/timestampType columns."""
+    production path — else reads through ``format("kafka_wire")``
+    (same partition-parallel shape, no dependencies), so this API works
+    against any broker on a bare PySpark install. Column sets match
+    except the JVM connector's extra timestamp/timestampType columns."""
     if not _jvm_kafka_connector_available(spark):
-        return read_kafka_wire_batch(
-            spark, bootstrap_servers, topic,
-            target_total=target_total, offsets=offsets,
+        from teste_carga_avro_vs_json_spark.sources import kafka_wire_source
+
+        kafka_wire_source.register(spark)
+        return (
+            spark.read.format("kafka_wire")
+            .options(
+                bootstrap=bootstrap_servers, topic=topic,
+                target_total=target_total,
+            )
+            .load()
         )
-    begins, ends = offsets if offsets is not None else fetch_offsets(
-        bootstrap_servers, topic
-    )
+    begins, ends = fetch_offsets(bootstrap_servers, topic)
     return (
         spark.read.format("kafka")
         .options(

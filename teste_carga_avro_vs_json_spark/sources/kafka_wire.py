@@ -37,6 +37,8 @@ import struct
 import threading
 import time
 
+from teste_carga_avro_vs_json_spark.sources import compression
+
 try:  # pickle-by-value: executors don't need the repo on PYTHONPATH
     import sys as _sys
 
@@ -249,8 +251,6 @@ def encode_record_batch(
     if codec is None or codec == "none":
         attributes = 0
     else:
-        from teste_carga_avro_vs_json_spark.sources import compression
-
         if codec not in compression.KAFKA_CODEC_IDS:
             raise NotImplementedError(
                 f"unsupported compression codec {codec!r}"
@@ -409,8 +409,6 @@ def _decode_batches_meta(data: bytes, check_crc: bool):
         count = rr.i32()
         comp = attributes & 0x07
         if comp:  # gzip(1)/snappy(2)/lz4(3)/zstd(4)
-            from teste_carga_avro_vs_json_spark.sources import compression
-
             name = compression.KAFKA_CODECS.get(comp)
             if name is None:
                 raise NotImplementedError(
@@ -1925,14 +1923,11 @@ class _PartitionLog:
     (sequences advance by RECORD count, not batch count);
     ``recent[pid]`` maps the last 5 batches' base_sequence -> original
     base offset for duplicate acks, mirroring the real broker's
-    5-deep ProducerStateManager cache. ``seen_seq`` is the legacy
-    map-lookup dedupe used only when the broker runs with
-    ``strict_sequences=False`` (stub-only replay mode)."""
+    5-deep ProducerStateManager cache."""
 
     def __init__(self):
         self.batches: list[tuple[int, bytes]] = []
         self.next_offset = 0
-        self.seen_seq: dict[tuple[int, int], int] = {}
         self.next_seq: dict[int, int] = {}
         self.recent: dict[int, dict[int, int]] = {}
         #: ABORTED transaction ranges (producer_id, first_offset,
@@ -2025,23 +2020,18 @@ class StubBroker:
         self,
         num_partitions: int = 3,
         host: str = "127.0.0.1",
-        strict_sequences: bool = True,
         sasl_plain: dict[str, str] | None = None,
         sasl_scram: dict[str, str] | None = None,
         ssl_context: "ssl.SSLContext | None" = None,
         initial_rebalance_delay_ms: int = 200,
     ):
-        """``strict_sequences`` (default, real-broker semantics) enforces
-        per-(producer, partition) sequence contiguity per KIP-98: a new
-        pid may start anywhere (KIP-360-style state reset), each batch
-        must then continue at last_seq + record_count, one of the last 5
+        """Idempotent produce follows real-broker semantics: per-
+        (producer, partition) sequence contiguity per KIP-98 — a new pid
+        may start anywhere (KIP-360-style state reset), each batch must
+        then continue at last_seq + record_count, one of the last 5
         batches re-sent acks with its original offset, and anything else
-        fails with OUT_OF_ORDER_SEQUENCE_NUMBER (45). ``False`` keeps
-        the pre-r7 map-lookup dedupe that accepts ANY unseen sequence —
-        needed only by the stub-only ``sequence_mode=replay`` produce
-        path, which a real broker would reject."""
+        fails with OUT_OF_ORDER_SEQUENCE_NUMBER (45)."""
         self.num_partitions = num_partitions
-        self.strict_sequences = strict_sequences
         # ``sasl_plain={user: password}`` makes the broker REQUIRE a
         # SaslHandshake/SaslAuthenticate exchange before any API other
         # than ApiVersions, like a real SASL listener: out-of-order
@@ -3107,27 +3097,20 @@ class StubBroker:
                     log.next_seq.pop(pid, None)
                     log.recent.pop(pid, None)
             if pid >= 0 and seq >= 0:
-                if self.strict_sequences:
-                    expected = log.next_seq.get(pid)
-                    recent = log.recent.setdefault(pid, {})
-                    if seq in recent:  # last-5 window: duplicate ack
-                        return 0, recent[seq]
-                    if expected is not None and seq != expected:
-                        return ERR_OUT_OF_ORDER_SEQUENCE, -1
-                    # new pid: any start (state reset); else contiguous
-                    log.next_seq[pid] = seq + n_records
-                    recent[seq] = log.next_offset
-                    while len(recent) > 5:
-                        recent.pop(next(iter(recent)))
-                else:
-                    dup = log.seen_seq.get((pid, seq))
-                    if dup is not None:
-                        return 0, dup  # retry: ack the ORIGINAL offset
+                expected = log.next_seq.get(pid)
+                recent = log.recent.setdefault(pid, {})
+                if seq in recent:  # last-5 window: duplicate ack
+                    return 0, recent[seq]
+                if expected is not None and seq != expected:
+                    return ERR_OUT_OF_ORDER_SEQUENCE, -1
+                # new pid: any start (state reset); else contiguous
+                log.next_seq[pid] = seq + n_records
+                recent[seq] = log.next_offset
+                while len(recent) > 5:
+                    recent.pop(next(iter(recent)))
             base = log.next_offset
             # re-base the batch so stored offsets are the real ones
             rebased = struct.pack(">q", base) + record_set[8:]
             log.batches.append((base, rebased))
             log.next_offset = base + n_records
-            if pid >= 0 and seq >= 0 and not self.strict_sequences:
-                log.seen_seq[(pid, seq)] = base
         return 0, base

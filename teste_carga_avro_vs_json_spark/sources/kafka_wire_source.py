@@ -17,16 +17,20 @@ standard reader/writer API with zero non-stdlib dependencies:
   (flow control, O17 — the ``maxOffsetsPerTrigger`` analogue).
 
 Options: ``bootstrap`` (host:port, required), ``topic`` (required),
-``target_total`` (tail-N bound, batch read), ``max_bytes`` (per fetch),
-``maxRecordsPerBatch`` (streaming), ``batch_size`` (write).
+``target_total`` (tail-N bound, batch read), ``group`` (resume from
+the group's committed offsets, batch read), ``max_bytes`` (per fetch),
+``maxRecordsPerBatch`` (streaming), ``batch_size`` and ``compression``
+(write), ``idempotent`` (streaming write), and the security options
+read by ``_security``.
 
-Scale notes: on a real cluster the JVM connector
-(spark-sql-kafka-0-10) remains the production path — SSL/SASL, replica
-fetching, offset commit. This source is the no-dependency fallback and
-the loopback test surface; its *shape* (partition-parallel fetch, no
-driver traffic on the data path) is the connector's. Python data
-sources pay one Python worker hop per task — the same cost class as
-this environment's Avro codec path.
+Scale notes: this source speaks SSL, SASL (PLAIN, SCRAM) and the
+group offset store (commit-back is the caller's explicit
+``io_kafka.commit_offsets_wire``). What the JVM connector
+(spark-sql-kafka-0-10) adds on a cluster is rack-aware replica
+fetching and JVM-side tasks. The *shape* is the connector's
+(partition-parallel fetch, no driver traffic on the data path); Python
+data sources pay one Python worker hop per task — the same cost class
+as the engine's Avro codec path.
 
 Reference parity: ConsumidorAvro.java:57-180 (bounded tail-N consume),
 ProdutorAvro.java:67-95 (keyed, partition-routed produce).
@@ -44,7 +48,17 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-try:  # pickle-by-value: executors don't need the repo on PYTHONPATH
+from teste_carga_avro_vs_json_spark.sources.io_kafka import (
+    fetch_committed_offsets_wire,
+    fetch_offsets_wire,
+    tail_n_offsets,
+)
+from teste_carga_avro_vs_json_spark.sources.kafka_wire import WireKafkaClient
+
+# pickle-by-value, and every helper a task calls comes from a module that
+# is pickled by value too (io_kafka, kafka_wire): executors don't need
+# the repo on PYTHONPATH
+try:
     import sys as _sys
 
     from pyspark import cloudpickle as _cloudpickle
@@ -57,8 +71,6 @@ _SCHEMA = "topic string, partition int, offset long, key binary, value binary"
 
 
 def _client(options):
-    from teste_carga_avro_vs_json_spark.sources.kafka_wire import WireKafkaClient
-
     # standard multi-host bootstrap ("h1:9092,h2:9092") with failover
     return WireKafkaClient.connect(
         options["bootstrap"], **_security(options)
@@ -110,11 +122,6 @@ class KafkaWireBatchReader(DataSourceReader):
         self.max_bytes = int(options.get("max_bytes", 1 << 20))
 
     def partitions(self):
-        from teste_carga_avro_vs_json_spark.sources.io_kafka import (
-            fetch_offsets_wire,
-            tail_n_offsets,
-        )
-
         begins, ends = fetch_offsets_wire(
             self.options["bootstrap"], self.topic,
             security=_security(self.options),
@@ -130,10 +137,6 @@ class KafkaWireBatchReader(DataSourceReader):
             # resume from the group's broker-stored offsets (r9) —
             # commit-back stays the caller's explicit step, see
             # io_kafka.commit_offsets_wire
-            from teste_carga_avro_vs_json_spark.sources.io_kafka import (
-                fetch_committed_offsets_wire,
-            )
-
             committed = fetch_committed_offsets_wire(
                 self.options["bootstrap"], group, self.topic,
                 sorted(ends), security=_security(self.options),
@@ -164,35 +167,19 @@ class _Committed(WriterCommitMessage):
         self.n = n
 
 
-def _produce_rows(
-    options,
-    rows,
-    idempotent: bool = False,
-    replay_producer: tuple[int, int] | None = None,
-) -> "_Committed":
+def _produce_rows(options, rows, idempotent: bool = False) -> "_Committed":
     """Shared per-task produce: group rows by their ``partition``
     column (missing/null → partition 0), send one record batch per
     ``batch_size`` rows per partition; ``compression`` option applies
     the reference's codec matrix (none/gzip/snappy/lz4/zstd).
 
-    Idempotence (KIP-98), two modes:
-
-    - **task** (default with ``idempotent``): the task opens its own
-      producer session — InitProducerId on first send, then per-
-      partition sequences contiguous from 0 advancing by record count.
-      This is exactly what a real broker's ProducerStateManager
-      enforces and what the JVM connector's idempotent producer does:
-      wire-level re-sends within the session dedupe; a Spark TASK retry
-      is a new session and appends again (at-least-once).
-    - **replay** (``replay_producer`` given): the r6 scheme — one
-      driver-assigned pid for the whole query, base_sequence packed
-      from (micro-batch id 11b, task partition 10b, chunk 10b), stable
-      across task retries so a replayed task acks at the original
-      offsets. STUB-ONLY: sequences are not contiguous, so only the
-      StubBroker's ``strict_sequences=False`` map-lookup dedupe accepts
-      them — a real broker rejects the first batch with
-      OUT_OF_ORDER_SEQUENCE_NUMBER. Kept for loopback exactly-once
-      tests; never claim it against a real cluster."""
+    With ``idempotent`` (KIP-98) the task opens its own producer
+    session — InitProducerId on first send, then per-partition
+    sequences contiguous from 0 advancing by record count. This is
+    exactly what a real broker's ProducerStateManager enforces and what
+    the JVM connector's idempotent producer does: wire-level re-sends
+    within the session dedupe; a Spark TASK retry is a new session and
+    appends again (at-least-once)."""
     topic = options["topic"]
     batch_size = int(options.get("batch_size", 500))
     codec = options.get("compression") or None
@@ -201,34 +188,8 @@ def _produce_rows(
     client = None
     pending: dict[int, list] = {}
     n = 0
-
     producer_id = producer_epoch = -1
-    seq_next: dict[int, int] = {}  # task mode: contiguous per partition
-    chunk_idx: dict[int, int] = {}  # replay mode: per-partition chunk
-    batch_id = task_pid = -1
-    if replay_producer is not None:
-        producer_id, producer_epoch = replay_producer
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        if tc is not None:
-            batch_id = int(tc.getLocalProperty("streaming.sql.batchId") or -1)
-            task_pid = tc.partitionId()
-
-    def seq_for(p: int, count: int) -> int:
-        if replay_producer is not None:
-            if batch_id < 0:
-                return -1
-            c = chunk_idx.get(p, 0)
-            chunk_idx[p] = c + 1
-            return (
-                ((batch_id & 0x7FF) << 20) | ((task_pid & 0x3FF) << 10) | (c & 0x3FF)
-            )
-        if producer_id < 0:
-            return -1
-        s = seq_next.get(p, 0)
-        seq_next[p] = s + count  # sequences advance by RECORD count
-        return s
+    seq_next: dict[int, int] = {}
 
     def as_bytes(v):
         if isinstance(v, (bytes, bytearray)):
@@ -239,15 +200,18 @@ def _produce_rows(
         nonlocal client, producer_id, producer_epoch
         if client is None:
             client = _client(options)
-            if idempotent and replay_producer is None:
-                # task mode: one producer session per task
+            if idempotent:
                 producer_id, producer_epoch = client.init_producer_id()
+        seq = -1
+        if producer_id >= 0:
+            seq = seq_next.get(p, 0)
+            seq_next[p] = seq + len(recs)  # sequences advance by RECORD count
         client.produce(
             topic, p, recs,
             codec=codec,
             producer_id=producer_id,
             producer_epoch=producer_epoch,
-            base_sequence=seq_for(p, len(recs)),
+            base_sequence=seq,
         )
 
     try:
@@ -281,51 +245,24 @@ class KafkaWireStreamWriter(DataSourceStreamWriter):
     The reference's continuous producer loop (ProdutorAvro.java:67-95)
     as a Structured Streaming sink.
 
-    Semantics (default ``idempotent=true``, ``sequence_mode=task``):
-    each task opens its own KIP-98 producer session (InitProducerId +
-    per-partition sequences contiguous from 0) — valid against a REAL
-    broker's sequence enforcement, and matching the JVM connector's
-    idempotent (non-transactional) producer: wire-level re-sends within
-    a session dedupe; task retries and query restarts append again, so
-    the end-to-end contract is AT-LEAST-ONCE — pair with the engine's
-    streaming dedup downstream for exactly-once.
-
-    ``sequence_mode=replay`` keeps the r6 deterministic-sequence scheme
-    that also dedupes whole task retries — STUB-ONLY: it requires
-    ``StubBroker(strict_sequences=False)``; a real broker rejects its
-    non-contiguous sequences with OUT_OF_ORDER_SEQUENCE_NUMBER (see
-    ``_produce_rows``). ``idempotent=false`` opts out entirely."""
+    Semantics (default ``idempotent=true``): each task opens its own
+    KIP-98 producer session (InitProducerId + per-partition sequences
+    contiguous from 0) — valid against a REAL broker's sequence
+    enforcement, and matching the JVM connector's idempotent
+    (non-transactional) producer: wire-level re-sends within a session
+    dedupe; task retries and query restarts append again, so the
+    end-to-end contract is AT-LEAST-ONCE — pair with the engine's
+    streaming dedup downstream for exactly-once. ``idempotent=false``
+    opts out entirely."""
 
     def __init__(self, options):
         self.options = options
         self.idempotent = (
             str(options.get("idempotent", "true")).lower() != "false"
         )
-        self.sequence_mode = options.get("sequence_mode", "task")
-        if self.sequence_mode not in ("task", "replay"):
-            raise ValueError(
-                f"sequence_mode must be task|replay, got {self.sequence_mode!r}"
-            )
-        self.producer_id = -1
-        self.producer_epoch = -1
-        if self.idempotent and self.sequence_mode == "replay":
-            client = _client(options)  # driver-side, once per query run
-            try:
-                self.producer_id, self.producer_epoch = client.init_producer_id()
-            finally:
-                client.close()
 
     def write(self, rows):
-        return _produce_rows(
-            self.options,
-            rows,
-            idempotent=self.idempotent,
-            replay_producer=(
-                (self.producer_id, self.producer_epoch)
-                if self.idempotent and self.sequence_mode == "replay"
-                else None
-            ),
-        )
+        return _produce_rows(self.options, rows, idempotent=self.idempotent)
 
     def commit(self, messages, batchId) -> None:
         # appends are already durable in the broker; nothing to finalize
@@ -351,10 +288,6 @@ class KafkaWireStreamReader(SimpleDataSourceStreamReader):
         self.per_batch = int(options.get("maxRecordsPerBatch", 10_000))
 
     def initialOffset(self) -> dict:
-        from teste_carga_avro_vs_json_spark.sources.io_kafka import (
-            fetch_offsets_wire,
-        )
-
         begins, ends = fetch_offsets_wire(
             self.options["bootstrap"], self.topic,
             security=_security(self.options),

@@ -5,8 +5,6 @@ from teste_carga_avro_vs_json_spark.streaming.pipeline import (  # noqa: F401
     json_wire_stream,
     metricas_stream,
     run_bounded,
-    run_bounded_append,
-    run_bounded_update,
     stream_dedup,
     stream_stream_join,
 )

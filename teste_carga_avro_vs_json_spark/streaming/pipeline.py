@@ -167,14 +167,20 @@ def stream_stream_join(
 
 
 def run_bounded(
-    sdf: DataFrame, query_name: str = "bounded_run", timeout_s: int = 300
+    sdf: DataFrame,
+    query_name: str = "bounded_run",
+    output_mode: str = "complete",
+    timeout_s: int = 300,
 ) -> DataFrame:
     """Drain everything available, then stop (O16) — returns the final
     result as a batch frame from the memory sink.
 
-    complete output mode: global aggs keep running state exactly like
-    the reference's shared counters, minus the data race
-    (ConsumidorAvro.java:48,97).
+    ``output_mode``: ``complete`` for global aggs, which keep running
+    state exactly like the reference's shared counters, minus the data
+    race (ConsumidorAvro.java:48,97); ``append`` for non-aggregated
+    streams (transport mode, decode-only, dedup, joins); ``update`` for
+    stateful operators (applyInPandasWithState emits updated rows per
+    micro-batch).
     """
     spark = sdf.sparkSession
     for q in spark.streams.active:
@@ -183,7 +189,7 @@ def run_bounded(
     query = (
         sdf.writeStream.format("memory")
         .queryName(query_name)
-        .outputMode("complete" if sdf.isStreaming else "append")
+        .outputMode(output_mode)
         .trigger(availableNow=True)
         .start()
     )
@@ -243,45 +249,3 @@ def with_live_metrics(sdf: DataFrame, name: str = "metricas") -> DataFrame:
         F.sum(F.col("tamanho_bytes")).alias("bytes"),
         F.count_if(F.col("sucesso")).alias("sucesso"),
     )
-
-
-def run_bounded_append(
-    sdf: DataFrame, query_name: str = "bounded_rows", timeout_s: int = 300
-) -> DataFrame:
-    """Append-mode bounded drain for non-aggregated streams (transport
-    mode / decode-only pipelines)."""
-    spark = sdf.sparkSession
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_s)
-    query.stop()
-    return spark.table(query_name)
-
-
-def run_bounded_update(
-    sdf: DataFrame, query_name: str = "bounded_update", timeout_s: int = 300
-) -> DataFrame:
-    """Update-mode bounded drain — required by stateful operators
-    (applyInPandasWithState emits updated rows per micro-batch)."""
-    spark = sdf.sparkSession
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_s)
-    query.stop()
-    return spark.table(query_name)

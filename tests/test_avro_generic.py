@@ -747,32 +747,42 @@ def test_property_random_schemas_byte_canonical_vs_java(spark):
 
 
 def test_ocf_files_readable_by_apache_avro_java(spark):
-    """The 'readable by any Avro tooling' claim, proven: container
-    files from write_ocf open in Java's DataFileReader (magic, metadata
-    map, sync markers, deflate codec, multi-block) and yield the same
-    records in order."""
+    """The 'readable by any Avro tooling' claim, proven: MensagemCarga
+    container files from write_ocf open in Java's DataFileReader
+    (magic, metadata map, sync markers, deflate codec, multi-block)
+    and yield the same records in order."""
     jvm = spark._jvm
     from teste_carga_avro_vs_json_spark.functions import avro_ocf
-
-    v1 = json.dumps(
-        {
-            "type": "record", "name": "Pt", "fields": [
-                {"name": "x", "type": "int"},
-                {"name": "tag", "type": "string"},
-            ],
-        }
+    from teste_carga_avro_vs_json_spark.functions.avro_codec import (
+        encode_mensagem,
     )
-    recs = [{"x": i, "tag": f"t{i}"} for i in range(10)]
+    from teste_carga_avro_vs_json_spark.schemas import MENSAGEM_CARGA_AVSC
+
+    recs = [
+        {
+            "id": f"id-{i}", "timestamp": 1_700_000_000_000 + i,
+            "sequencia": i,
+            "dados": [
+                {"indice": j, "texto": f"t{i}-{j}", "numero": j + 0.5,
+                 "timestamp": -j, "uuid": f"u{i}{j}"}
+                for j in range(i % 3)
+            ],
+            "versao": "1.0",
+        }
+        for i in range(10)
+    ]
+    want_schema = jvm.org.apache.avro.Schema.Parser().parse(
+        json.dumps(MENSAGEM_CARGA_AVSC)
+    )
     for codec in ("null", "deflate"):
         blob = avro_ocf.write_ocf(
-            [ag.encode(v1, r) for r in recs],
-            codec=codec, block_records=4, schema_json=v1,
+            [encode_mensagem(r) for r in recs], codec=codec, block_records=4
         )
         sin = jvm.org.apache.avro.file.SeekableByteArrayInput(blob)
         jreader = jvm.org.apache.avro.file.DataFileReader(
             sin, jvm.org.apache.avro.generic.GenericDatumReader()
         )
-        assert json.loads(jreader.getSchema().toString()) == json.loads(v1)
+        assert jreader.getSchema().equals(want_schema)
         out = []
         while jreader.hasNext():
             out.append(json.loads(jreader.next().toString()))

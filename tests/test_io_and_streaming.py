@@ -120,13 +120,13 @@ def test_stream_json_wire_decode(spark, tmp_path):
         json_wire_stream,
         run_bounded,
     )
-    from teste_carga_avro_vs_json_spark.streaming.pipeline import run_bounded_append
 
     msgs = _msgs(spark, 12)
     path = str(tmp_path / "wire")
     io_files.write_json(msgs, path, num_particoes=3)
-    decoded = run_bounded_append(
-        json_wire_stream(spark, path), query_name="t_stream_decode"
+    decoded = run_bounded(
+        json_wire_stream(spark, path), query_name="t_stream_decode",
+        output_mode="append",
     )
     assert _flat_set(decoded) == _flat_set(msgs)
 
@@ -266,7 +266,7 @@ def test_stateful_sequence_audit(spark, tmp_path):
 
     from teste_carga_avro_vs_json_spark.streaming.pipeline import (
         json_wire_stream,
-        run_bounded_update,
+        run_bounded,
     )
     from teste_carga_avro_vs_json_spark.streaming.stateful import (
         auditoria_sequencia,
@@ -281,8 +281,9 @@ def test_stateful_sequence_audit(spark, tmp_path):
         F.pmod(F.col("sequencia") - 1, F.lit(P)).cast("int").alias("particao"),
         "sequencia",
     )
-    out = run_bounded_update(
-        auditoria_sequencia(decoded, num_particoes=P), query_name="t_audit"
+    out = run_bounded(
+        auditoria_sequencia(decoded, num_particoes=P), query_name="t_audit",
+        output_mode="update",
     )
     # update mode may emit once per batch; keep the final row per particao
     final = {}
@@ -429,10 +430,11 @@ def test_write_kafka_reaches_connector_boundary(spark):
 def test_read_kafka_reaches_connector_boundary(spark):
     """Read-side twin of the write boundary test. Since r6
     read_kafka_tail_n AUTODETECTS the missing JVM connector and falls
-    back to the wire source, so the plan composes lazily against the
-    given offsets; the failure surface moved from data-source
-    resolution to the socket connect at execution time (there is no
-    broker at this address) — the API itself is total now."""
+    back to format("kafka_wire"), so the plan composes lazily; offset
+    discovery happens when the scan is planned, so the failure surface
+    moved from data-source resolution to the socket connect at
+    execution time (there is no broker at this address) — the API
+    itself is total now."""
     from teste_carga_avro_vs_json_spark.sources import io_kafka
 
     df = io_kafka.read_kafka_tail_n(
@@ -440,7 +442,6 @@ def test_read_kafka_reaches_connector_boundary(spark):
         "127.0.0.1:1",  # nothing listens here
         "t",
         target_total=100,
-        offsets=({0: 0, 1: 0}, {0: 500, 1: 500}),
     )
     assert df.columns == ["topic", "partition", "offset", "key", "value"]
     with pytest.raises(Exception) as ei:

@@ -10,11 +10,20 @@ from __future__ import annotations
 
 import pytest
 
-from teste_carga_avro_vs_json_spark.sources import io_kafka
+from teste_carga_avro_vs_json_spark.sources import io_kafka, kafka_wire_source
 from teste_carga_avro_vs_json_spark.sources.kafka_wire import (
     StubBroker,
     WireKafkaClient,
 )
+
+
+def _read(spark, bootstrap, **opts):
+    kafka_wire_source.register(spark)
+    return (
+        spark.read.format("kafka_wire")
+        .options(bootstrap=bootstrap, topic="carga", **opts)
+        .load()
+    )
 
 
 def test_offset_commit_fetch_roundtrip():
@@ -54,9 +63,7 @@ def test_batch_read_resumes_from_committed(spark):
         finally:
             c.close()
 
-        first = io_kafka.read_kafka_wire_batch(
-            spark, bootstrap, "carga", group="g1"
-        )
+        first = _read(spark, bootstrap, group="g1")
         rows = first.collect()
         assert len(rows) == 12
         # commit the frontier (next offset per partition)
@@ -78,22 +85,16 @@ def test_batch_read_resumes_from_committed(spark):
         finally:
             c.close()
 
-        second = io_kafka.read_kafka_wire_batch(
-            spark, bootstrap, "carga", group="g1"
-        )
+        second = _read(spark, bootstrap, group="g1")
         got = sorted(bytes(r.value).decode() for r in second.collect())
         assert got == sorted(
             f"w{p}-{i}" for p in (0, 1) for i in range(3)
         )
         # a different group still reads everything (earliest)
-        full = io_kafka.read_kafka_wire_batch(
-            spark, bootstrap, "carga", group="fresh"
-        )
+        full = _read(spark, bootstrap, group="fresh")
         assert full.count() == 18
         # and no group at all is unchanged behavior
-        assert io_kafka.read_kafka_wire_batch(
-            spark, bootstrap, "carga"
-        ).count() == 18
+        assert _read(spark, bootstrap).count() == 18
 
 
 def test_group_offsets_require_auth_when_sasl_enabled():
@@ -120,11 +121,6 @@ def test_group_offsets_require_auth_when_sasl_enabled():
 
 
 def test_format_kafka_wire_group_option(spark):
-    from teste_carga_avro_vs_json_spark.sources.kafka_wire_source import (
-        register,
-    )
-
-    register(spark)
     with StubBroker(num_partitions=1) as b:
         bootstrap = f"{b.addr[0]}:{b.addr[1]}"
         c = WireKafkaClient(*b.addr)
@@ -133,13 +129,7 @@ def test_format_kafka_wire_group_option(spark):
             c.offset_commit("g1", {("carga", 0): 1})
         finally:
             c.close()
-        df = (
-            spark.read.format("kafka_wire")
-            .option("bootstrap", bootstrap)
-            .option("topic", "carga")
-            .option("group", "g1")
-            .load()
-        )
+        df = _read(spark, bootstrap, group="g1")
         assert [bytes(r.value) for r in df.collect()] == [b"v1"]
 
 

@@ -315,11 +315,13 @@ def test_config_bad_protocol_rejected():
 
 
 # ------------------------------------------- Spark surfaces over SASL
-def test_read_kafka_wire_batch_over_sasl(spark):
-    """The distributed mapInPandas source authenticates on every
-    socket (driver offset discovery AND executor fetch tasks)."""
-    from teste_carga_avro_vs_json_spark.sources import io_kafka
+def test_kafka_wire_multi_partition_read_over_sasl(spark):
+    """format("kafka_wire") authenticates on every socket (offset
+    discovery in partition planning AND every fetch task), and a read
+    without credentials fails."""
+    from teste_carga_avro_vs_json_spark.sources import kafka_wire_source
 
+    kafka_wire_source.register(spark)
     with StubBroker(num_partitions=2, sasl_plain=CREDS) as b:
         c = _sasl_client(b)
         try:
@@ -328,21 +330,20 @@ def test_read_kafka_wire_batch_over_sasl(spark):
         finally:
             c.close()
         bootstrap = f"{b.addr[0]}:{b.addr[1]}"
-        sec = {
-            "security_protocol": "SASL_PLAINTEXT",
-            "sasl_username": "api-key-123",
-            "sasl_password": "api-secret-456",
-        }
-        df = io_kafka.read_kafka_wire_batch(
-            spark, bootstrap, "carga", security=sec
-        )
+        df = spark.read.format("kafka_wire").options(
+            bootstrap=bootstrap,
+            topic="carga",
+            security_protocol="SASL_PLAINTEXT",
+            sasl_username="api-key-123",
+            sasl_password="api-secret-456",
+        ).load()
         got = sorted(bytes(r.value) for r in df.collect())
         assert got == [b"v0", b"v1", b"v2"]
         # and without credentials the read fails loudly
         with pytest.raises(Exception):
-            io_kafka.read_kafka_wire_batch(
-                spark, bootstrap, "carga"
-            ).collect()
+            spark.read.format("kafka_wire").options(
+                bootstrap=bootstrap, topic="carga"
+            ).load().collect()
 
 
 def test_format_kafka_wire_datasource_over_sasl(spark):
@@ -370,6 +371,43 @@ def test_format_kafka_wire_datasource_over_sasl(spark):
         )
         rows = df.collect()
         assert [bytes(r.value) for r in rows] == [b"hello-sasl"]
+
+
+def test_cli_kafka_mode_passes_security_and_compression(spark):
+    """The cli Kafka apps connect with the config's SASL credentials
+    (producer write AND static consumer read) and produce with its
+    COMPRESSION_TYPE: against a broker that REQUIRES SASL the producer
+    and consumer reports agree, and every stored batch carries the
+    configured codec bits."""
+    import struct
+
+    from teste_carga_avro_vs_json_spark.cli import run_app
+    from teste_carga_avro_vs_json_spark.sources.compression import (
+        KAFKA_CODEC_IDS,
+    )
+
+    with StubBroker(num_partitions=3, sasl_plain=CREDS) as b:
+        cfg = EngineConfig(
+            total_mensagens=12, tamanho_mensagem_kb=1, num_particoes=3,
+            bootstrap_servers=f"{b.addr[0]}:{b.addr[1]}",
+            security_protocol="SASL_PLAINTEXT",
+            cluster_api_key="api-key-123",
+            cluster_api_secret="api-secret-456",
+            compression_type="gzip",
+        )
+        prod = run_app("PRODUTOR_AVRO", "", cfg, spark)
+        cons = run_app("CONSUMIDOR_AVRO", "", cfg, spark)
+        batches = [
+            batch
+            for p in range(3)
+            for _base, batch in b._log(cfg.topico_avro, p).batches
+        ]
+    assert prod["total_mensagens"] == cons["total_mensagens"] == 12
+    assert prod["total_bytes"] == cons["total_bytes"]
+    # record batch v2 attributes (bytes 21:23), low 3 bits = codec
+    assert batches and {
+        struct.unpack(">h", batch[21:23])[0] & 0x07 for batch in batches
+    } == {KAFKA_CODEC_IDS["gzip"]}
 
 
 # ---------------------------------------------------------------- SCRAM

@@ -306,14 +306,20 @@ def test_tail_n_consume_end_to_end(spark):
     assert keys == {f"msg-{s}" for s in expected}
 
 
-def test_read_kafka_wire_batch_distributed_source(spark):
-    """The wire client as a DISTRIBUTED Spark source: one plan row per
-    TopicPartition, mapInPandas fetches executor-side over its own
-    socket, output contract matches format(\"kafka\"). Tail-N bounds
-    (O9) and the full read both verified against produced data."""
+def test_kafka_wire_distributed_source(spark):
+    """The wire client as a DISTRIBUTED Spark source through
+    format("kafka_wire"): one input partition per TopicPartition, each
+    task fetches over its own socket, output contract matches
+    format("kafka"). Tail-N bounds (O9) and the full read both
+    verified against produced data."""
     from teste_carga_avro_vs_json_spark.functions.avro_codec import to_avro
     from teste_carga_avro_vs_json_spark.operators import serde
-    from teste_carga_avro_vs_json_spark.sources import generator
+    from teste_carga_avro_vs_json_spark.sources import (
+        generator,
+        kafka_wire_source,
+    )
+
+    kafka_wire_source.register(spark)
 
     n, parts = 54, 6
     msgs = generator.mensagens(spark, n, tamanho_kb=1)
@@ -336,7 +342,8 @@ def test_read_kafka_wire_batch_distributed_source(spark):
             c.close()
         bootstrap = f"{broker.addr[0]}:{broker.addr[1]}"
 
-        full = io_kafka.read_kafka_wire_batch(spark, bootstrap, "carga")
+        opts = {"bootstrap": bootstrap, "topic": "carga"}
+        full = spark.read.format("kafka_wire").options(**opts).load()
         assert full.columns == ["topic", "partition", "offset", "key", "value"]
         got = full.collect()
         assert len(got) == n
@@ -347,8 +354,10 @@ def test_read_kafka_wire_batch_distributed_source(spark):
             assert offs == list(range(len(by_part[p])))
 
         # tail-N bounded read decodes through the engine codec
-        tail = io_kafka.read_kafka_wire_batch(
-            spark, bootstrap, "carga", target_total=18
+        tail = (
+            spark.read.format("kafka_wire")
+            .options(**opts, target_total=18)
+            .load()
         )
         # rename value -> valor_avro for the serde contract
         tail2 = tail.withColumnRenamed("value", "valor_avro")

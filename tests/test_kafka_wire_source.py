@@ -98,13 +98,72 @@ def test_batch_write_routes_by_partition_column(spark):
         assert bytes(r.value).decode() == f"payload-{seq}"
 
 
+def test_reader_and_writer_run_without_the_package_on_the_path(tmp_path):
+    """Python data-source tasks run in worker processes that need not
+    have the repo on their path: a pickled reader and writer must run
+    ``write()``/``partitions()``/``read()`` in a fresh interpreter that
+    cannot import the package (cwd outside the repo, no PYTHONPATH),
+    including the lz4 codec the cli producer writes with."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    from pyspark import cloudpickle
+    from pyspark.sql import Row
+
+    rows = [
+        Row(key=b"k%d" % i, value=b"v%d" % i, partition=i % 2)
+        for i in range(10)
+    ]
+    script = textwrap.dedent(
+        """
+        import importlib.util, pickle, sys
+        assert importlib.util.find_spec("teste_carga_avro_vs_json_spark") is None
+        with open("task.pkl", "rb") as f:
+            writer, reader, rows = pickle.load(f)
+        assert writer.write(iter(rows)).n == len(rows)
+        for part in reader.partitions():
+            for _topic, p, off, _key, value in reader.read(part):
+                print(p, off, value.decode())
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    with StubBroker(num_partitions=2) as broker:
+        opts = {
+            "bootstrap": f"{broker.addr[0]}:{broker.addr[1]}",
+            "topic": "exec",
+            "compression": "lz4",
+        }
+        (tmp_path / "task.pkl").write_bytes(
+            cloudpickle.dumps(
+                (
+                    kafka_wire_source.KafkaWireBatchWriter(opts),
+                    kafka_wire_source.KafkaWireBatchReader(
+                        dict(opts, target_total="4")
+                    ),
+                    rows,
+                )
+            )
+        )
+        done = subprocess.run(
+            [sys.executable, "-c", script], cwd=tmp_path, env=env,
+            capture_output=True, text=True, timeout=120,
+        )
+    assert done.returncode == 0, done.stderr
+    # tail-4 over 2 partitions: the last 2 records of each
+    assert done.stdout.split("\n")[:-1] == [
+        "0 3 v6", "0 4 v8", "1 3 v7", "1 4 v9",
+    ]
+
+
 def test_stream_relay_read_then_write(spark, tmp_path):
     """Streaming RELAY through both halves of the DataSource: readStream
     from topic 'in', writeStream to topic 'out' on the same broker —
     the reference's continuous produce/consume loop as one Structured
     Streaming query. Offsets checkpoint through the reader; the sink
-    runs the default IDEMPOTENT path (driver-assigned producer id,
-    batchId-derived sequences) so this also exercises KIP-98 framing
+    runs the default IDEMPOTENT path (one producer session per task,
+    contiguous sequences) so this also exercises KIP-98 framing
     end-to-end in real streaming tasks."""
     kafka_wire_source.register(spark)
     by_part = {
@@ -235,82 +294,12 @@ def test_idempotent_produce_dedupes_retries():
             c.close()
 
 
-def test_stream_writer_task_retry_no_duplicates(spark):
-    """sequence_mode=replay (STUB-ONLY, r7): calling the stream
-    writer's write() twice with the same rows (same batch, same task
-    partition) must leave ONE copy in the broker — the deterministic
-    (pid, sequence) dedupe at work. Requires the broker's lenient
-    map-lookup mode: a real broker rejects replay's non-contiguous
-    sequences (pinned in test_replay_mode_rejected_by_strict_broker).
-    A second query run (new writer => new pid) appends again."""
-    from pyspark.sql import Row
-
-    from teste_carga_avro_vs_json_spark.sources.kafka_wire import WireKafkaClient
-    from teste_carga_avro_vs_json_spark.sources.kafka_wire_source import (
-        KafkaWireStreamWriter,
-    )
-
-    rows = [Row(key=b"k%d" % i, value=b"v%d" % i, partition=0) for i in range(7)]
-    with StubBroker(num_partitions=1, strict_sequences=False) as broker:
-        opts = {
-            "bootstrap": f"{broker.addr[0]}:{broker.addr[1]}",
-            "topic": "retry",
-            "sequence_mode": "replay",
-        }
-        w = KafkaWireStreamWriter(opts)
-        assert w.producer_id >= 1000
-        # outside a real streaming task there is no batchId local
-        # property; pin one deterministically via a fake TaskContext?
-        # No — drive through a real micro-batch id by monkeypatching the
-        # local-property lookup is brittle; instead simulate the task
-        # body exactly: same writer, same rows, same (batch, task) ids.
-        import teste_carga_avro_vs_json_spark.sources.kafka_wire_source as kws
-
-        real_produce_rows = kws._produce_rows
-
-        class _FakeTC:
-            @staticmethod
-            def get():
-                class _T:
-                    def getLocalProperty(self, k):
-                        return "5" if k == "streaming.sql.batchId" else None
-
-                    def partitionId(self):
-                        return 3
-
-                return _T()
-
-        import pyspark
-
-        orig_tc = pyspark.TaskContext
-        pyspark.TaskContext = _FakeTC
-        try:
-            w.write(iter(rows))
-            w.write(iter(rows))  # the retry
-            c = WireKafkaClient(*broker.addr)
-            try:
-                assert c.list_offset("retry", 0, -1) == 7  # ONE copy
-            finally:
-                c.close()
-            # new query run: fresh pid -> appends (at-least-once across runs)
-            w2 = KafkaWireStreamWriter(opts)
-            assert w2.producer_id != w.producer_id
-            w2.write(iter(rows))
-            c = WireKafkaClient(*broker.addr)
-            try:
-                assert c.list_offset("retry", 0, -1) == 14
-            finally:
-                c.close()
-        finally:
-            pyspark.TaskContext = orig_tc
-
-
 def test_task_mode_contiguous_sequences_on_strict_broker():
-    """Default idempotent mode (r7): each _produce_rows call is one
+    """Idempotent produce (r7): each _produce_rows call is one
     producer session — own pid, per-partition sequences contiguous
     from 0 advancing by record count — valid against the broker's REAL
-    KIP-98 enforcement (strict_sequences=True default). A task retry is
-    a new session: appends again (at-least-once), never an error."""
+    KIP-98 enforcement. A task retry is a new session: appends again
+    (at-least-once), never an error."""
     from pyspark.sql import Row
 
     from teste_carga_avro_vs_json_spark.sources.kafka_wire import WireKafkaClient
@@ -337,48 +326,6 @@ def test_task_mode_contiguous_sequences_on_strict_broker():
             assert c.list_offset("strict", 1, -1) == 10
         finally:
             c.close()
-
-
-def test_replay_mode_rejected_by_strict_broker():
-    """The ADVICE finding, pinned: replay-mode sequences (batchId/task/
-    chunk packing) are NOT contiguous, so a broker enforcing real
-    KIP-98 rules rejects the produce with OUT_OF_ORDER_SEQUENCE_NUMBER
-    on the second chunk. This is why replay mode is stub-only."""
-    import pytest
-    from pyspark.sql import Row
-
-    import teste_carga_avro_vs_json_spark.sources.kafka_wire_source as kws
-
-    rows = [Row(key=b"k%d" % i, value=b"v%d" % i, partition=0) for i in range(6)]
-
-    class _FakeTC:
-        @staticmethod
-        def get():
-            class _T:
-                def getLocalProperty(self, k):
-                    return "1" if k == "streaming.sql.batchId" else None
-
-                def partitionId(self):
-                    return 0
-
-            return _T()
-
-    import pyspark
-
-    with StubBroker(num_partitions=1) as broker:  # strict by default
-        opts = {
-            "bootstrap": f"{broker.addr[0]}:{broker.addr[1]}",
-            "topic": "rej",
-            "batch_size": "2",  # 3 chunks: seqs S, S+1, S+2 (not S+2k)
-        }
-        w = kws.KafkaWireStreamWriter(dict(opts, sequence_mode="replay"))
-        orig_tc = pyspark.TaskContext
-        pyspark.TaskContext = _FakeTC
-        try:
-            with pytest.raises(ValueError, match="sequence"):
-                w.write(iter(rows))
-        finally:
-            pyspark.TaskContext = orig_tc
 
 
 def test_compressed_produce_fetch_roundtrip():

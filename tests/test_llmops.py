@@ -1493,7 +1493,7 @@ def test_stateless_gates_compose_with_streams(spark, tmp_path):
     they must run UNCHANGED on a streaming frame (stream == batch) —
     the ingest-gate deployment shape."""
     from teste_carga_avro_vs_json_spark.operators import corpus
-    from teste_carga_avro_vs_json_spark.streaming import run_bounded_append
+    from teste_carga_avro_vs_json_spark.streaming import run_bounded
 
     good = "this line has plenty of words and ends properly."
     rows = [
@@ -1510,7 +1510,10 @@ def test_stateless_gates_compose_with_streams(spark, tmp_path):
     )
     for op in (corpus.c4_line_filter, corpus.blocklist_filter):
         want = {tuple(r) for r in op(docs).collect()}
-        got = {tuple(r) for r in run_bounded_append(op(stream)).collect()}
+        got = {
+            tuple(r)
+            for r in run_bounded(op(stream), output_mode="append").collect()
+        }
         assert got == want, op.__name__
 
 
