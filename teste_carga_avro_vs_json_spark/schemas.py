@@ -15,7 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     IntegerType,
     LongType,
@@ -71,16 +70,3 @@ MENSAGEM_CARGA_AVSC: dict = {
         {"name": "versao", "type": "string", "default": "1.0"},
     ],
 }
-
-# Kafka-record-shaped transport view (SURVEY.md §1.1): what a consumer in
-# TRANSPORTE mode sees (ConfiguracaoKafka.java:187-190) — raw bytes plus
-# routing metadata.
-TRANSPORTE = StructType(
-    [
-        StructField("particao", IntegerType(), False),
-        StructField("offset", LongType(), False),
-        StructField("chave", StringType(), False),
-        StructField("valor", BinaryType(), False),
-        StructField("tamanho_bytes", LongType(), False),
-    ]
-)

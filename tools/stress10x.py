@@ -210,31 +210,6 @@ def main() -> None:
         ess.dup_toks / max(ess.toks, 1), 4
     )
 
-    # ---- BPE-token ExactSubstr (r8): the published Lee et al. shape —
-    # L=50 BPE tokens. Merges learned once on the base corpus (the
-    # iterative learner is corpus-scan-bounded, not replica-bounded);
-    # tokenization + span dedup then run at Nx in token space.
-    from teste_carga_avro_vs_json_spark.operators import bpe
-
-    t0 = time.perf_counter()
-    merges = bpe.bpe_learn(docs, num_merges=30)
-    out["bpe_learn_sec"] = round(time.perf_counter() - t0, 2)
-    t0 = time.perf_counter()
-    btoks = bpe.bpe_tokenize(corpus10, merges).select("doc_id", "tokens")
-    bess = substr_dedup.exact_substring_spans(
-        btoks, min_len=50, token_col="tokens", scale=True
-    ).agg(
-        F.count(F.lit(1)).alias("docs"),
-        F.sum(F.when(F.col("n_spans") > 0, 1).otherwise(0)).alias("hit"),
-        F.sum("n_dup_tokens").alias("dup_toks"),
-        F.sum("n_tokens").alias("toks"),
-    ).first()
-    out["bpe_exact_substring_sec"] = round(time.perf_counter() - t0, 2)
-    out["bpe_exact_substring_docs_with_spans"] = int(bess.hit)
-    out["bpe_exact_substring_dup_token_share"] = round(
-        bess.dup_toks / max(bess.toks, 1), 4
-    )
-
     # ---- LM / selection / passage operators at Nx rows (r7-late) ---
     from teste_carga_avro_vs_json_spark.operators import lm as lm_ops
 
