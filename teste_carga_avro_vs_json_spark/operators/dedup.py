@@ -594,55 +594,3 @@ def simhash_sql(table: str = "documents", bits: int = 16) -> str:
         WITH base AS (SELECT doc_id, list_distinct({t}) AS toks FROM {table})
         SELECT doc_id, ({terms})::BIGINT AS simhash FROM base
     """
-
-
-# ------------------------------------------------------------- bloom
-#
-# The per-file manifest Bloom filters of operators/maintenance.py
-# (equality data skipping) are built and probed with this filter.
-
-
-class BloomFilter:
-    """Immutable double-hash Bloom filter over text fingerprints.
-    k positions derive from two xxhash64-compatible md5 halves via the
-    standard Kirsch-Mitzenmacher construction h1 + i*h2 (published
-    result: asymptotically as good as k independent hashes)."""
-
-    __slots__ = ("m_bits", "k", "bits")
-
-    def __init__(self, m_bits: int, k: int, bits: bytes) -> None:
-        self.m_bits = m_bits
-        self.k = k
-        self.bits = bits
-
-    @staticmethod
-    def params(n_items: int, fpp: float) -> tuple[int, int]:
-        """Textbook sizing: m = -n·ln p / ln²2 (rounded up to a byte
-        boundary), k = (m/n)·ln 2."""
-        import math
-
-        n = max(1, n_items)
-        m = int(math.ceil(-n * math.log(fpp) / (math.log(2) ** 2)))
-        m = ((m + 7) // 8) * 8
-        k = max(1, round(m / n * math.log(2)))
-        return m, k
-
-    def contains(self, text: str) -> bool:
-        h1, h2 = _bloom_h(text)
-        for i in range(self.k):
-            pos = (h1 + i * h2) % self.m_bits
-            if not (self.bits[pos >> 3] >> (pos & 7)) & 1:
-                return False
-        return True
-
-
-def _bloom_h(text: str) -> tuple[int, int]:
-    """Two 64-bit hash halves from one md5 (the portable-hash
-    discipline — deterministic across engines/partitionings)."""
-    import hashlib
-
-    d = hashlib.md5((text or "").encode("utf-8")).digest()
-    return (
-        int.from_bytes(d[:8], "little"),
-        int.from_bytes(d[8:], "little") | 1,  # odd => full-cycle stride
-    )

@@ -40,14 +40,12 @@ _SLOW_MODULES = {
     "test_kafka_sasl",
     "test_avro_vec",
     "test_crawl",
-    "test_maintenance",
     "test_warc",
     "test_ivfpq",
     "test_kafka_txn",
     "test_kafka_txn_offsets",
     "test_kafka_groups",
     "test_kafka_rebalance",
-    "test_snapshot_source",
     "test_bench_lanes",
 }
 
