@@ -143,8 +143,9 @@ def corpus_clean(
     """
     # The survivor set feeds BOTH near-dup candidate generation and the
     # final anti-join; without a persist the whole score→dedup→gate
-    # subtree runs twice (measured 2x at sf0.1). ContextCleaner drops
-    # the cache when the returned plan is garbage collected.
+    # subtree runs twice (measured 2x at sf0.1). The cache outlives the
+    # call: the session's CacheManager holds it until someone calls
+    # unpersist (or clearCache), whatever happens to the returned plan.
     uniq = gated_unique(docs, lang, min_quality).persist()
     clusters = dedup.neardup_clusters(
         uniq.select("doc_id", "text"), threshold=neardup_threshold, scale=scale

@@ -201,10 +201,12 @@ def minhash_signature_sx(sh: str, num_hashes: int = 12) -> str:
 
 def _banded_jaccard(
     base: DataFrame, mh: Column, num_hashes: int, bands: int, threshold: float
-) -> DataFrame:
+) -> tuple[DataFrame, tuple[DataFrame, DataFrame]]:
     """Shared LSH tail: band the signature, self-join doc IDS on
     band_key, dedupe pairs, then re-fetch shingle arrays for the
-    surviving candidates and verify with exact Jaccard.
+    surviving candidates and verify with exact Jaccard. Returns the
+    verified pairs and the two frames it persisted, for a caller that
+    materializes the pairs to release.
 
     Plan shape (the part that must survive 100 TB):
 
@@ -289,7 +291,7 @@ def _banded_jaccard(
     y = base.select(
         F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
     ).hint("shuffle_hash")
-    return (
+    pairs = (
         cand.join(x, "doc_a")
         .select("doc_a", F.explode("doc_bs").alias("doc_b"), "sh_a")
         .join(y, "doc_b")
@@ -300,6 +302,7 @@ def _banded_jaccard(
         )
         .filter(F.col("jaccard") >= threshold)
     )
+    return pairs, (base, banded)
 
 
 def minhash_lsh_candidates(
@@ -321,7 +324,7 @@ def minhash_lsh_candidates(
         num_hashes,
         bands,
         threshold,
-    )
+    )[0]
 
 
 def minhash_lsh_candidates_scale(
@@ -337,8 +340,17 @@ def minhash_lsh_candidates_scale(
     verification on candidates. Not DuckDB-expressible (no xxhash64);
     pytest asserts pair-set agreement with the md5 portability path.
     """
+    return _banded_jaccard(
+        _shingled(docs, k),
+        F.expr(_xxhash_signature_sx(num_hashes)),
+        num_hashes,
+        bands,
+        threshold,
+    )[0]
 
-    base = _shingled(docs, k)
+
+def _xxhash_signature_sx(num_hashes: int) -> str:
+    """The seeded xxhash64 min-hash signature of the ``sh`` column."""
     # One expensive hash pass: xxhash64 over each variable-length shingle
     # STRING happens once, not num_hashes times. The per-family values are
     # derived by re-hashing the resulting fixed-width LONG with the family
@@ -356,9 +368,7 @@ def minhash_lsh_candidates_scale(
         f"array_min(transform({hashed}, h -> xxhash64({i}, h)))"
         for i in range(num_hashes)
     )
-    return _banded_jaccard(
-        base, F.expr(f"array({mins})"), num_hashes, bands, threshold
-    )
+    return f"array({mins})"
 
 
 def minhash_lsh_sql(
@@ -458,8 +468,11 @@ def neardup_clusters(
     (doc_id, cluster_id, is_canonical) for every doc that has at least
     one near-dup partner.
     """
-    candidates = minhash_lsh_candidates_scale if scale else minhash_lsh_candidates
-    pairs = candidates(docs, k, num_hashes, bands, threshold)
+    mh = _xxhash_signature_sx(num_hashes) if scale \
+        else minhash_signature_sx("sh", num_hashes)
+    pairs, cached = _banded_jaccard(
+        _shingled(docs, k), F.expr(mh), num_hashes, bands, threshold
+    )
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
@@ -512,7 +525,9 @@ def neardup_clusters(
             break
     if stats is not None:
         stats["rounds"] = rounds
-    edges.unpersist()
+    # the probes filled the label checkpoints: the caches are done
+    for frame in (edges, *cached):
+        frame.unpersist()
     return labels.withColumn(
         "is_canonical", F.col("doc_id") == F.col("cluster_id")
     )

@@ -151,7 +151,24 @@ def perplexity_score(
     :func:`train_bigram_lm` — contexts/vocab derive from the persisted
     tiny bigram table, never a token-level cache), one feeds the
     scoring probe."""
-    bigrams, contexts, vocab = train_bigram_lm(docs, text_col)
+    return _perplexity(
+        docs, train_bigram_lm(docs, text_col), text_col, keep_nll,
+        keep_frac, smoothing, discount,
+    )
+
+
+def _perplexity(
+    docs: DataFrame,
+    model: tuple[DataFrame, DataFrame, int],
+    text_col: str = "text",
+    keep_nll: float = 3.4,
+    keep_frac: float | None = None,
+    smoothing: str = "addone",
+    discount: float = 0.75,
+) -> DataFrame:
+    """:func:`perplexity_score` over a trained ``model``; the caller
+    owns the model's cached bigram table."""
+    bigrams, contexts, vocab = model
     bg = _doc_bigrams(docs, text_col)
     if smoothing == "addone":
         nll = -F.log(

@@ -188,8 +188,9 @@ def _clean_stages(
     # 5. Perplexity QUANTILE gate (CCNet's actual recipe — the
     # absolute-threshold mode is the documented footgun)
     t0 = time.perf_counter()
+    model = lm.train_bigram_lm(cur)
     ppl_ids = (
-        lm.perplexity_score(cur, keep_frac=keep_frac)
+        lm._perplexity(cur, model, keep_frac=keep_frac)
         .where("keep")
         .select("doc_id")
     )
@@ -198,6 +199,7 @@ def _clean_stages(
         cur.join(ppl_ids, "doc_id", "left_semi"),
         t0,
     )
+    model[0].unpersist()  # the stage is checkpointed
 
     # 6. Exact dedup (hash-agg keyed on text; min doc_id survives)
     t0 = time.perf_counter()

@@ -103,3 +103,14 @@ def test_packing_plan_is_contiguous(spark, sf_dir):
     for r in rows:
         assert r["start_tok"] == pos  # end-to-end layout, no holes
         pos += r["n_tokens"]
+
+
+def test_build_releases_its_cached_frames(spark, sf_dir):
+    """The near-dup candidate caches and the bigram model are released
+    once their stages are checkpointed: a build leaves the session's
+    cache as empty as it found it."""
+    spark.catalog.clearCache()
+    pipelines.build_training_corpus(
+        _docs(spark, sf_dir, 120), None, seq_len=256, line_filter=False
+    )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
