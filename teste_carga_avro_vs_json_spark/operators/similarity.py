@@ -42,53 +42,72 @@ def _dlit(x: float) -> str:
     return repr(float(x)) + "D"
 
 
-def _lit_mat(mat: list[list[float]]) -> Column:
-    """Nested double-array literal via ONE ``F.expr`` parse (r13-opt).
-    ``F.lit`` converts element-by-element over py4j (0.97 s for a 16×64
-    centroid matrix), and building the old fully unrolled per-element
-    trees was the dominant cost of q_ivf_pq_topk (OPTIMIZATION_r13.md
-    #1). The parse is not free either: Spark's SQL lexer re-simulates
-    every decimal token, so the 45×64 matrix ``ivf_pq_topk`` builds at
-    2,000 vectors took 0.33-0.69 s warm and 1.3-2.0 s on first use (4
-    vCPUs, Spark 4.1.2). Values are bit-identical either way, so every
-    k-means/ANN oracle is unchanged."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(_dlit(x) for x in row) + ")" for row in mat
-        )
-        + ")"
+def _mat_sx(mat: list[list[float]]) -> str:
+    """Nested double-array literal as ONE ``from_json`` over a JSON
+    string of ``repr``-printed doubles. ``F.lit`` converts
+    element-by-element over py4j, and an ``array(array(…))`` of SQL
+    decimal literals is slow to parse: Spark's SQL lexer re-simulates
+    every decimal token (the 45×64 matrix ``ivf_pq_topk`` builds at
+    2,000 vectors took 0.33-0.69 s warm and 1.3-2.0 s cold, 4 vCPUs,
+    Spark 4.1.2), where one string token parses in 0.02-0.05 s. ``repr``
+    is the shortest decimal that round-trips to the same float64 and the
+    JSON parser rounds correctly, so the values are bit-identical and
+    every k-means/ANN oracle is unchanged; the call folds to a constant
+    at optimization."""
+    body = ",".join(
+        "[" + ",".join(repr(float(x)) for x in row) + "]" for row in mat
     )
+    return f"from_json('[{body}]', 'array<array<double>>')"
 
 
-def _lit_ints(xs: list[int]) -> Column:
-    """int-array literal via one ``F.expr`` parse (see _lit_mat)."""
-    return F.expr("array(" + ",".join(str(int(x)) for x in xs) + ")")
+def _ints_sx(xs: list[int]) -> str:
+    return "array(" + ",".join(str(int(x)) for x in xs) + ")"
 
 
-def _dot(a: Column, b: Column) -> Column:
+# The vector folds below are parsed SQL fragments (the ``_sx``
+# discipline of text.tokens_sx): one ``F.expr`` parse instead of one
+# py4j round trip per Column node and lambda. Each is the same
+# left-to-right IEEE-754 fold the DuckDB twins replay (``_dot_sql``,
+# ``_l2_sql``), with ``_``-prefixed lambda names that no column shadows.
+def _dot_sx(a: str, b: str) -> str:
     """Sequential-fold dot product (left-to-right, double)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return (
+        f"aggregate(zip_with({a}, {b}, (_x, _y) -> _x * _y), 0.0D, "
+        "(_acc, _e) -> _acc + _e)"
     )
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(_dot(a, a))
+def _l2_sx(a: str, b: str) -> str:
+    """Sequential-fold squared L2 distance (left-to-right, double)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (_x, _y) -> (_x - _y) * (_x - _y)), "
+        "0.0D, (_acc, _e) -> _acc + _e)"
+    )
 
 
-def cosine(a: Column, b: Column) -> Column:
+def _q9_sx(x: str) -> str:
+    """A distance quantized to an exact long at 1e-9."""
+    return f"CAST(floor({x} * 1.0E9D + 0.5D) AS BIGINT)"
+
+
+def cosine_sx(a: str, b: str) -> str:
     """Cosine similarity, DEFINED AS 0.0 when either vector has zero
     norm. The naive dot/(|a|·|b|) raises DIVIDE_BY_ZERO under Spark 4's
     default ANSI mode the moment a 100 TB corpus contains one zero
     embedding (r5 ADVICE; the conditional keeps the division in the
-    guarded branch, which Spark's If evaluates lazily per row), and the
-    0.0 convention is portable: no NaN-vs-NULL ordering divergence
+    guarded branch, which Spark's CASE evaluates lazily per row), and
+    the 0.0 convention is portable: no NaN-vs-NULL ordering divergence
     between Spark, DuckDB, and the numpy fast path."""
-    denom = _norm(a) * _norm(b)
-    return F.when(denom != 0.0, _dot(a, b) / denom).otherwise(F.lit(0.0))
+    denom = f"(sqrt({_dot_sx(a, a)}) * sqrt({_dot_sx(b, b)}))"
+    return (
+        f"CASE WHEN {denom} != 0.0D THEN {_dot_sx(a, b)} / {denom} "
+        "ELSE 0.0D END"
+    )
+
+
+def _cos_sim(a: str, b: str) -> Column:
+    """:func:`cosine_sx` rounded to 9 dp, the form every top-k ranks by."""
+    return F.expr(f"round({cosine_sx(a, b)}, 9)")
 
 
 _DOT_SQL = (
@@ -101,7 +120,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _cosine_sql(a: str, b: str) -> str:
-    # zero-norm convention mirrors :func:`cosine`: CASE keeps DuckDB's
+    # zero-norm convention mirrors :func:`cosine_sx`: CASE keeps DuckDB's
     # IEEE 0/0 -> NaN out of the hash comparison
     denom = f"(sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
     return (
@@ -131,7 +150,7 @@ def cosine_topk(
     scored = v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         "vec_id",
-        F.round(cosine(F.col("qvec"), F.col("vec")), 9).alias("cos_sim"),
+        _cos_sim("qvec", "vec").alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
@@ -193,7 +212,7 @@ def cosine_topk_scale(
     scored = v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         "vec_id",
-        F.round(cosine(F.col("qvec"), F.col("vec")), 9).alias("cos_sim"),
+        _cos_sim("qvec", "vec").alias("cos_sim"),
         F.pmod(F.xxhash64("vec_id"), F.lit(salt_buckets)).alias("_salt"),
     )
     w1 = Window.partitionBy("query_id", "_salt").orderBy(
@@ -288,7 +307,7 @@ def cosine_topk_np(
         return pa.ListArray.from_arrays(offsets, pa.array(s.ravel()))
 
     # ONE parsed bigint-array literal (r14; the unrolled F.lit form cost
-    # ~2 py4j round trips per query id — see _lit_mat). F.lit(int) maps
+    # ~2 py4j round trips per query id — see _mat_sx). F.lit(int) maps
     # to LongType, so the parsed twin needs the L suffix to match.
     qid_arr = F.expr(
         "array(" + ",".join(f"{int(q)}L" for q in qids) + ")"
@@ -327,7 +346,7 @@ def embedding_neardup(
         .select(
             "vec_a",
             "vec_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 9).alias("cos_sim"),
+            _cos_sim("va", "vb").alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
     )
@@ -463,42 +482,38 @@ def ivf_centroids(
     return multi_kmeans(emb, [(n_centroids, 0, None)], iters)[0]
 
 
-def _scored_structs(
-    vec: Column, centroids: list[tuple[int, list[float]]]
-) -> Column:
+def _scored_sx(vec: str, centroids: list[tuple[int, list[float]]]) -> str:
     """array<struct<dist,idx>> of squared-L2 distances to every
-    centroid — the shared body of :func:`_nearest` and the probe
-    selection in :func:`ivf_topk`/:func:`ivf_pq_topk`.
-
-    r13-opt: the centroid matrix enters the plan as ONE nested-array
-    literal and the per-centroid folds run inside a single zip_with.
-    Each element's fold is the same left-to-right IEEE-754 sequence as
-    the old per-centroid unrolled expression (values bit-identical;
-    every k-means oracle re-swept green), but construction is O(1)
-    py4j round trips instead of O(k·d) — building the unrolled trees
-    was the dominant cost of q_ivf_pq_topk (9.2 s driver time for the
-    8×16-codeword encode alone; OPTIMIZATION_r13.md #1), and the
-    compact tree also codegens smaller (task binaries 1.4 MiB → KB)."""
-    cmat = _lit_mat([cvec for _, cvec in centroids])
-    cidx = _lit_ints([idx for idx, _ in centroids])
-    return F.zip_with(
-        cmat,
-        cidx,
-        lambda cv, ix: F.struct(
-            F.aggregate(
-                F.zip_with(vec, cv, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("dist"),
-            ix.alias("idx"),
-        ),
+    centroid — the shared body of :func:`_nearest` and the probe lists
+    of :func:`ivf_topk`/:func:`ivf_pq_topk`. The centroid matrix enters
+    the plan as ONE literal and the per-centroid folds run inside a
+    single zip_with: each fold is the same left-to-right IEEE-754
+    sequence as the per-centroid unrolled form (values bit-identical),
+    but construction is one parse instead of O(k·d) py4j round trips,
+    and the compact tree codegens smaller."""
+    cmat = _mat_sx([cvec for _, cvec in centroids])
+    cidx = _ints_sx([idx for idx, _ in centroids])
+    return (
+        f"zip_with({cmat}, {cidx}, (_c, _i) -> named_struct("
+        f"'dist', {_l2_sx(vec, '_c')}, 'idx', _i))"
     )
 
 
-def _nearest(vec: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """argmin_c ||vec - c||² as an expression: min over (dist, idx)
-    structs — deterministic ties by centroid index."""
-    return F.array_min(_scored_structs(vec, centroids))["idx"]
+def _nearest(vec: str, centroids: list[tuple[int, list[float]]]) -> Column:
+    """argmin_c ||vec - c||² of the SQL expression ``vec``: min over
+    (dist, idx) structs — deterministic ties by centroid index."""
+    return F.expr(f"array_min({_scored_sx(vec, centroids)}).idx")
+
+
+def _probe_sx(
+    qvec: str, centroids: list[tuple[int, list[float]]], n_probe: int
+) -> str:
+    """The ``n_probe`` nearest centroid ids of ``qvec`` (a query's
+    probe list)."""
+    return (
+        f"transform(slice(array_sort({_scored_sx(qvec, centroids)}), 1, "
+        f"{n_probe}), _s -> _s.idx)"
+    )
 
 
 def _assign_multi(
@@ -713,25 +728,14 @@ def ivf_topk(
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     ).withColumn(
-        "cluster", F.coalesce(_nearest(F.col("vec"), cents), F.lit(-1))
+        "cluster", F.coalesce(_nearest("vec", cents), F.lit(-1))
     )
     q_base = v.filter(F.col("vec_id") % query_modulus == 0).select(
         F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
     )
-    # probe lists: n_probe nearest centroids per query (tiny explode;
-    # compact literal form — see _scored_structs)
+    # probe lists: n_probe nearest centroids per query (tiny explode)
     q = q_base.withColumn(
-        "cluster",
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.array_sort(_scored_structs(F.col("qvec"), cents)),
-                    1,
-                    n_probe,
-                ),
-                lambda s: s["idx"],
-            )
-        ),
+        "cluster", F.explode(F.expr(_probe_sx("qvec", cents, n_probe)))
     )
     cand = v.join(F.broadcast(q), "cluster").filter(
         F.col("vec_id") != F.col("query_id")
@@ -742,7 +746,7 @@ def ivf_topk(
     scored = cand.select(
         "query_id",
         "vec_id",
-        F.round(cosine(F.col("qvec"), F.col("vec")), 9).alias("cos_sim"),
+        _cos_sim("qvec", "vec").alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("vec_id").asc()
@@ -937,17 +941,17 @@ def pq_encode(
     else:
         codes = F.array(
             *[
-                _nearest(F.slice(F.col(vec_col), j * dsub + 1, dsub), cb)
+                _nearest(f"slice({vec_col}, {j * dsub + 1}, {dsub})", cb)
                 for j, cb in enumerate(books)
             ]
         )
     return v.withColumn("codes", codes)
 
 
-def _pq_lut(
-    qvec: Column,
+def _pq_lut_sx(
+    qvec: str,
     books: list[list[tuple[int, list[float]]]],
-) -> Column:
+) -> str:
     """Per-QUERY ADC lookup table (Jégou, Douze, Schmid 2011 §IV-A —
     the classic IVFADC optimization): ``lut[j][c]`` = the quantized
     squared L2 distance between the query's j-th sub-vector and
@@ -958,52 +962,32 @@ def _pq_lut(
     HOF folds. Each entry is the SAME fixed left-fold IEEE-754
     sequence + 1e-9-long quantization the per-candidate form used
     (shape of :func:`_nearest`), so the exact integer sum — and the
-    DuckDB oracle — stay bit-identical. Gap slots (Lloyd dropped an
-    empty cluster) hold 0; no code ever references them."""
+    DuckDB oracle — stay bit-identical. Each codebook is ONE literal;
+    gap slots (Lloyd dropped an empty cluster) are flagged 0 and hold
+    a 0 long — no code ever references them."""
     dsub = len(books[0][0][1])
     luts = []
     for j, cb in enumerate(books):
-        qsub = F.slice(qvec, j * dsub + 1, dsub)
+        qsub = f"slice({qvec}, {j * dsub + 1}, {dsub})"
         by_idx = {i: v for i, v in cb}
-        # compact literal form (see _scored_structs): the codebook is
-        # ONE nested-array literal; gap slots (Lloyd dropped an empty
-        # cluster) are flagged 0 and hold the same lit(0) long the
-        # unrolled form emitted — no code ever references them.
         width = max(by_idx) + 1
-        cmat = _lit_mat([by_idx.get(i, [0.0] * dsub) for i in range(width)])
-        flags = _lit_ints([1 if i in by_idx else 0 for i in range(width)])
+        cmat = _mat_sx([by_idx.get(i, [0.0] * dsub) for i in range(width)])
+        flags = _ints_sx([1 if i in by_idx else 0 for i in range(width)])
         luts.append(
-            F.zip_with(
-                cmat,
-                flags,
-                lambda cv, ok: F.when(
-                    ok == F.lit(1),
-                    F.floor(
-                        F.aggregate(
-                            F.zip_with(
-                                qsub, cv, lambda a, b: (a - b) * (a - b)
-                            ),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        * F.lit(1e9)
-                        + F.lit(0.5)
-                    ).cast("long"),
-                ).otherwise(F.lit(0).cast("long")),
-            )
+            f"zip_with({cmat}, {flags}, (_c, _ok) -> CASE WHEN _ok = 1 "
+            f"THEN {_q9_sx(_l2_sx(qsub, '_c'))} ELSE CAST(0 AS BIGINT) END)"
         )
-    return F.array(*luts)
+    return f"array({', '.join(luts)})"
 
 
-def _adc_from_lut(lut: Column, codes: Column, m: int) -> Column:
+def _adc_sx(lut: str, codes: str, m: int) -> str:
     """O(m) asymmetric distance: exact integer sum of m LUT lookups —
     partial order can never perturb it (the repo's float-derived-metric
     discipline, operators/lm.py)."""
-    total = None
-    for j in range(m):
-        t = F.element_at(F.element_at(lut, j + 1), codes[j] + F.lit(1))
-        total = t if total is None else total + t
-    return total
+    return " + ".join(
+        f"element_at(element_at({lut}, {j + 1}), {codes}[{j}] + 1)"
+        for j in range(m)
+    )
 
 
 def auto_n_centroids(n: int, floor: int = 16) -> int:
@@ -1057,7 +1041,7 @@ def ivf_pq_topk(
     the finer lists improve candidate quality at the same cost.
 
     Scoring is O(m) per candidate via a per-query ADC lookup table
-    (:func:`_pq_lut`) carried on the broadcast probe side — m×ksub
+    (:func:`_pq_lut_sx`) carried on the broadcast probe side — m×ksub
     longs ≈ 1 KB per query at m=8/ksub=16; the r12 form re-ran O(d)
     folds per candidate row (VERDICT r12 #1).
 
@@ -1118,7 +1102,7 @@ def ivf_pq_topk(
     else:
         v = base.withColumn(
             # coalesce marks the join key non-nullable (see ivf_topk)
-            "cluster", F.coalesce(_nearest(F.col("vec"), cents), F.lit(-1))
+            "cluster", F.coalesce(_nearest("vec", cents), F.lit(-1))
         )
         # codes computed once per corpus row; the vec column is DROPPED
         # before the join — only (vec_id, cluster, codes) shuffles
@@ -1130,19 +1114,9 @@ def ivf_pq_topk(
         F.col("embedding").cast("array<double>").alias("qvec"),
     ).filter(F.col("query_id") % query_modulus == 0)
     q = (
-        q_base.withColumn("lut", _pq_lut(F.col("qvec"), books))
+        q_base.withColumn("lut", F.expr(_pq_lut_sx("qvec", books)))
         .withColumn(
-            "cluster",
-            F.explode(
-                F.transform(
-                    F.slice(
-                        F.array_sort(_scored_structs(F.col("qvec"), cents)),
-                        1,
-                        n_probe,
-                    ),
-                    lambda s: s["idx"],
-                )
-            ),
+            "cluster", F.explode(F.expr(_probe_sx("qvec", cents, n_probe)))
         )
         # qvec is DROPPED here — the broadcast probe side carries only
         # (query_id, cluster, lut); refine re-reads qvec from q_base
@@ -1160,7 +1134,7 @@ def ivf_pq_topk(
     scored = cand.select(
         "query_id",
         "vec_id",
-        _adc_from_lut(F.col("lut"), F.col("codes"), m).alias("adc_dist"),
+        F.expr(_adc_sx("lut", "codes", m)).alias("adc_dist"),
     )
     w_adc = Window.partitionBy("query_id").orderBy(
         F.col("adc_dist").asc(), F.col("vec_id").asc()
@@ -1185,16 +1159,7 @@ def ivf_pq_topk(
     fetched = corpus_vec.join(F.broadcast(shortlist), "vec_id").join(
         F.broadcast(q_base), "query_id"
     )
-    exact = F.floor(
-        F.aggregate(
-            F.zip_with(
-                F.col("qvec"), F.col("cvec2"),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ) * F.lit(1e9) + F.lit(0.5)
-    ).cast("long")
+    exact = F.expr(_q9_sx(_l2_sx("qvec", "cvec2")))
     w = Window.partitionBy("query_id").orderBy(
         F.col("dist").asc(), F.col("vec_id").asc()
     )
@@ -1338,7 +1303,7 @@ def lsh_bucket(
     index size for recall. The signature computation is one projection
     (no shuffle); bucketing a 100 TB corpus costs a single scan."""
     # ONE parsed expression for all L tables x H planes (r13-opt, see
-    # _lit_mat / text.tokens_sx): the repeated cast fragment mirrors the
+    # _mat_sx / text.tokens_sx): the repeated cast fragment mirrors the
     # old duplicated Column subtree (codegen CSE evaluates it once).
     v = "CAST(embedding AS ARRAY<DOUBLE>)"
     structs = []
@@ -1475,7 +1440,7 @@ def lsh_ann_topk(
         .select(
             "query_id",
             "vec_id",
-            F.round(cosine(F.col("qvec"), F.col("vec")), 9).alias("cos_sim"),
+            _cos_sim("qvec", "vec").alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(
@@ -1578,7 +1543,7 @@ def _semdedup_assigned(
     if vectorized:
         return assign_np(base, cents)
     return base.withColumn(
-        "cluster", F.coalesce(_nearest(F.col("vec"), cents), F.lit(-1))
+        "cluster", F.coalesce(_nearest("vec", cents), F.lit(-1))
     )
 
 
@@ -1633,7 +1598,7 @@ def semantic_dedup(
         (F.col("a.cluster") == F.col("b.cluster"))
         & (F.col("b.vec_id") < F.col("a.vec_id"))
         & (
-            F.round(cosine(F.col("a.vec"), F.col("b.vec")), 9)
+            _cos_sim("a.vec", "b.vec")
             >= F.lit(threshold)
         ),
         "left",
@@ -1779,7 +1744,7 @@ def semantic_decontaminate(
         test.hint("shuffle_hash"),
         (F.col("cluster") == F.col("t_cluster"))
         & (
-            F.round(cosine(F.col("vec"), F.col("t_vec")), 9)
+            _cos_sim("vec", "t_vec")
             >= F.lit(threshold)
         ),
         "left",

@@ -318,7 +318,7 @@ def test_null_embedding_assigns_like_the_expression(spark, emb, emb_nulls):
     expr = {
         r.vec_id: (r.cluster, r.codes)
         for r in similarity.pq_encode(
-            v.withColumn("cluster", similarity._nearest(F.col("vec"), cents)),
+            v.withColumn("cluster", similarity._nearest("vec", cents)),
             books,
         ).collect()
     }

@@ -234,7 +234,7 @@ def test_assign_np_bit_identical_to_expression(spark, sf_dir):
     expr = {
         r.vec_id: r.cluster
         for r in v.withColumn(
-            "cluster", similarity._nearest(F.col("vec"), cents)
+            "cluster", similarity._nearest("vec", cents)
         ).collect()
     }
     vec = {

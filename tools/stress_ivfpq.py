@@ -224,7 +224,7 @@ def main() -> None:
         ).filter(F.col("query_id") % qmod == 0)
         qa = similarity.assign_np(
             q, cents, vec_col="qvec", out_col="cluster"
-        ).withColumn("lut", similarity._pq_lut(F.col("qvec"), books))
+        ).withColumn("lut", F.expr(similarity._pq_lut_sx("qvec", books)))
         # repartition to the core count: the corpus arrives as one
         # small local parquet (2 source splits); on a real cluster the
         # candidate stream is already distributed, and the A/B should
@@ -236,9 +236,7 @@ def main() -> None:
         n_cand = cand.count()
         t = time.time()
         s_lut = cand.select(
-            similarity._adc_from_lut(
-                F.col("lut"), F.col("codes"), m_sub
-            ).alias("d")
+            F.expr(similarity._adc_sx("lut", "codes", m_sub)).alias("d")
         ).agg(F.sum("d")).collect()[0][0]
         t_lut = round(time.time() - t, 2)
         t = time.time()
