@@ -90,7 +90,7 @@ def _q9_sx(x: str) -> str:
     return f"CAST(floor({x} * 1.0E9D + 0.5D) AS BIGINT)"
 
 
-def cosine_sx(a: str, b: str) -> str:
+def _cosine_sx(a: str, b: str) -> str:
     """Cosine similarity, DEFINED AS 0.0 when either vector has zero
     norm. The naive dot/(|a|·|b|) raises DIVIDE_BY_ZERO under Spark 4's
     default ANSI mode the moment a 100 TB corpus contains one zero
@@ -106,8 +106,8 @@ def cosine_sx(a: str, b: str) -> str:
 
 
 def _cos_sim(a: str, b: str) -> Column:
-    """:func:`cosine_sx` rounded to 9 dp, the form every top-k ranks by."""
-    return F.expr(f"round({cosine_sx(a, b)}, 9)")
+    """:func:`_cosine_sx` rounded to 9 dp, the form every top-k ranks by."""
+    return F.expr(f"round({_cosine_sx(a, b)}, 9)")
 
 
 _DOT_SQL = (
@@ -120,7 +120,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 def _cosine_sql(a: str, b: str) -> str:
-    # zero-norm convention mirrors :func:`cosine_sx`: CASE keeps DuckDB's
+    # zero-norm convention mirrors :func:`_cosine_sx`: CASE keeps DuckDB's
     # IEEE 0/0 -> NaN out of the hash comparison
     denom = f"(sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
     return (
@@ -1052,9 +1052,8 @@ def ivf_pq_topk(
         # ONE metadata job for (n, dim) — the count must scan anyway,
         # so the dim probe rides it for free (r14: was a separate
         # first() job per query; guide §1.2 #1, don't pay extra passes)
-        meta = emb.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.size("embedding")).alias("d"),
+        meta = emb.selectExpr(
+            "count(1) AS n", "min(size(embedding)) AS d"
         ).first()
         n_centroids, dim = auto_n_centroids(meta["n"]), meta["d"]
     else:
@@ -1078,9 +1077,9 @@ def ivf_pq_topk(
         iters,
     )
     cents, books = fused[0], fused[1:]
-    base = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    )
+    # The plan below is built from SQL strings (selectExpr/filter): one
+    # py4j round trip per DataFrame call instead of several per Column.
+    base = emb.selectExpr("vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS vec")
     if vectorized_encode:
         # Scale path (r14): coarse assignment + all m PQ codes in ONE
         # Arrow-batched pass (_assign_multi — the trainer's argmin
@@ -1093,11 +1092,11 @@ def ivf_pq_topk(
         va = base.withColumn(
             "asg", _assign_multi(F.col("vec"), resolved, [cents] + list(books))
         )
-        v = va.select(
+        v = va.selectExpr(
             "vec_id",
             # coalesce marks the join key non-nullable (see ivf_topk)
-            F.coalesce(F.col("asg")[0], F.lit(-1)).alias("cluster"),
-            F.slice(F.col("asg"), 2, m).alias("codes"),
+            "coalesce(asg[0], -1) AS cluster",
+            f"slice(asg, 2, {m}) AS codes",
         )
     else:
         v = base.withColumn(
@@ -1109,65 +1108,57 @@ def ivf_pq_topk(
         v = pq_encode(v, books, vectorized=False).select(
             "vec_id", "cluster", "codes"
         )
-    q_base = emb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qvec"),
-    ).filter(F.col("query_id") % query_modulus == 0)
-    q = (
-        q_base.withColumn("lut", F.expr(_pq_lut_sx("qvec", books)))
-        .withColumn(
-            "cluster", F.explode(F.expr(_probe_sx("qvec", cents, n_probe)))
-        )
-        # qvec is DROPPED here — the broadcast probe side carries only
-        # (query_id, cluster, lut); refine re-reads qvec from q_base
-        .select("query_id", "cluster", "lut")
+    q_base = emb.selectExpr(
+        "vec_id AS query_id", "CAST(embedding AS ARRAY<DOUBLE>) AS qvec"
+    ).filter(f"query_id % {query_modulus} = 0")
+    # lut is computed before the explode (once per query, not per probe);
+    # qvec is DROPPED with it — the broadcast probe side carries only
+    # (query_id, cluster, lut); refine re-reads qvec from q_base
+    q = q_base.selectExpr(
+        "query_id", "qvec", f"{_pq_lut_sx('qvec', books)} AS lut"
+    ).selectExpr(
+        "query_id",
+        f"explode({_probe_sx('qvec', cents, n_probe)}) AS cluster",
+        "lut",
     )
-    cand = v.join(F.broadcast(q), "cluster").filter(
-        F.col("vec_id") != F.col("query_id")
-    )
+    cand = v.join(F.broadcast(q), "cluster").filter("vec_id != query_id")
     # No pair dedup needed (r14, one exchange removed): each corpus row
     # carries exactly ONE cluster (argmin), and a query's probed
     # clusters are distinct (slice of an array_sort over per-centroid
     # structs), so the equi-join can emit a (query_id, vec_id) pair at
     # most once — unlike the banded LSH paths where one pair can
     # collide in several tables. Pinned by test_ivf_pq_candidates_unique.
-    scored = cand.select(
-        "query_id",
-        "vec_id",
-        F.expr(_adc_sx("lut", "codes", m)).alias("adc_dist"),
+    scored = cand.selectExpr(
+        "query_id", "vec_id", f"{_adc_sx('lut', 'codes', m)} AS adc_dist"
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col("vec_id").asc()
+    rank_adc = (
+        "row_number() OVER (PARTITION BY query_id ORDER BY adc_dist, vec_id)"
     )
     if refine is None:
-        return (
-            scored.withColumn("rank", F.row_number().over(w_adc))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id", "vec_id",
-                F.col("adc_dist").alias("dist"), "rank",
-            )
-        )
+        return scored.selectExpr(
+            "query_id", "vec_id", "adc_dist AS dist", f"{rank_adc} AS rank"
+        ).filter(f"rank <= {k}")
     shortlist = (
-        scored.withColumn("r0", F.row_number().over(w_adc))
-        .filter(F.col("r0") <= refine)
+        scored.selectExpr("query_id", "vec_id", f"{rank_adc} AS r0")
+        .filter(f"r0 <= {refine}")
         .select("query_id", "vec_id")
     )
-    corpus_vec = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("cvec2")
+    corpus_vec = emb.selectExpr(
+        "vec_id", "CAST(embedding AS ARRAY<DOUBLE>) AS cvec2"
     )
     fetched = corpus_vec.join(F.broadcast(shortlist), "vec_id").join(
         F.broadcast(q_base), "query_id"
     )
-    exact = F.expr(_q9_sx(_l2_sx("qvec", "cvec2")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("vec_id").asc()
-    )
     return (
-        fetched.select("query_id", "vec_id", exact.alias("dist"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "dist", "rank")
+        fetched.selectExpr(
+            "query_id", "vec_id", f"{_q9_sx(_l2_sx('qvec', 'cvec2'))} AS dist"
+        )
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY query_id ORDER BY dist, vec_id)"
+            " AS rank",
+        )
+        .filter(f"rank <= {k}")
     )
 
 
