@@ -276,7 +276,7 @@ def cosine_topk_np(
     qids = [int(r.vec_id) for r in qrows]
     Q = np.array([r.vec for r in qrows], dtype=np.float64)  # (m, dim)
     # zero-norm -> norm 1 so the zero vector scores 0.0 against
-    # everything — the same convention :func:`cosine` and the oracle
+    # everything — the same convention :func:`_cosine_sx` and the oracle
     # CASE implement (r5 ADVICE unified all three paths)
     qn = np.linalg.norm(Q, axis=1)
     qn[qn == 0.0] = 1.0
