@@ -82,7 +82,8 @@ def exact_substring_spans(
 
     ``token_col``: operate on a PRE-TOKENIZED ``array<string>`` column
     instead of whitespace-tokenizing ``text_col`` — the published
-    recipe runs on BPE tokens with L=50 (Lee et al. §4.1), and any
+    recipe runs on BPE tokens with L=50 (Lee et al. §4.1:
+    ``bpe.bpe_tokenize`` → this, see the chain pytest pin), and any
     external tokenization plugs in the same way.  Identical plan (the
     tokenizer is the only change, and it is row-local either way); the
     output additionally carries ``clean_tokens`` (the uncovered tokens

@@ -26,6 +26,7 @@ _SLOW_MODULES = {
     "test_io_and_streaming",
     "test_kafka_wire_source",
     "test_evolution_e2e",
+    "test_bpe",
     "test_avro_generic",
     "test_zstd_stdlib",
     "test_imageio_interop",

@@ -127,16 +127,27 @@ def test_full_corpus_pipeline(spark, sf_dir):
     assert agg.total == agg.hi  # gap-free tiling over the final corpus
     assert packed.count() == n_mixed
 
-    # 9. token-space ExactSubstr over the pre-tokenized final corpus
-    # (the Lee et al. shape: any external tokenization plugs in through
-    # token_col)
+    # 9. learn a BPE vocabulary from the FINAL corpus and tokenize it
+    # (the tokenizer-training step a real build runs on the cleaned
+    # mix). The final corpus is checkpointed first — BPE's merge loop
+    # would otherwise re-execute the whole 8-operator lineage per
+    # iteration, exactly the stage boundary a production build
+    # materializes.
+    from teste_carga_avro_vs_json_spark.operators import bpe
+
+    final = picked.select("doc_id", "text").localCheckpoint()
+    merges = bpe.bpe_learn(final, num_merges=10)
+    assert len(merges) > 0
+    toks = bpe.bpe_tokenize(final, merges)
+    assert toks.count() == n_mixed
+    assert toks.filter(F.col("n_bpe_tokens") <= 0).count() == 0
+
+    # 10. token-space ExactSubstr over the tokenized corpus (the
+    # published Lee et al. shape: dedup spans in BPE-token space)
     from teste_carga_avro_vs_json_spark.operators import substr_dedup
 
-    toks = picked.select(
-        "doc_id", F.split(F.trim("text"), r"\s+").alias("tokens")
-    )
     spans = substr_dedup.exact_substring_spans(
-        toks, min_len=20, token_col="tokens"
+        toks.select("doc_id", "tokens"), min_len=20, token_col="tokens"
     )
     assert spans.count() == n_mixed
 

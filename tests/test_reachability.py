@@ -79,6 +79,9 @@ ALLOWED: dict[str, tuple[str, ...]] = {
     "fixture": (
         "functions.avro_generic:encode",
         "operators.flac_codec:encode_flac",
+        # the token-space ExactSubstr tests feed it BPE tokens
+        "operators.bpe:bpe_learn",
+        "operators.bpe:bpe_tokenize",
         "operators.jpeg_codec:dct2d",
         "operators.jpeg_codec:encode_jpeg",
         "operators.jpeg_codec:encode_jpeg_progressive",

@@ -111,7 +111,7 @@ def test_duckdb_oracle_pin(spark, sf_dir):
 def test_token_col_path_equals_word_path(spark, sf_dir):
     """Feeding the whitespace tokens through token_col must reproduce
     the text path exactly (same plan, tokenizer swapped) — the pin that
-    makes an external tokenization trustworthy."""
+    makes the BPE chain trustworthy."""
     from teste_carga_avro_vs_json_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents").limit(300)
@@ -132,3 +132,37 @@ def test_token_col_path_equals_word_path(spark, sf_dir):
     assert all(
         " ".join(r.clean_tokens) == r.clean_text for r in got
     )
+
+
+def test_bpe_token_exact_substring_chain(spark):
+    """The Lee et al. shape end to end: learn BPE on the corpus,
+    tokenize, dedup spans in BPE-token space. A passage duplicated
+    across docs must be covered in token space; unique tails survive
+    as tokens."""
+    from teste_carga_avro_vs_json_spark.operators import bpe
+
+    passage = "the quick brown fox jumps over the lazy dog " * 3
+    rows = [
+        (1, passage + "unique ending one"),
+        (2, passage + "different closing words"),
+        (3, "entirely unrelated content with no repeats at all"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    merges = bpe.bpe_learn(docs, num_merges=30)
+    toks = bpe.bpe_tokenize(docs, merges).select("doc_id", "tokens")
+    out = {
+        r.doc_id: r
+        for r in substr_dedup.exact_substring_spans(
+            toks, min_len=8, token_col="tokens"
+        ).collect()
+    }
+    # the shared passage dominates docs 1/2: most tokens covered
+    assert out[1].n_dup_tokens > 0 and out[2].n_dup_tokens > 0
+    assert out[1].n_dup_tokens >= out[1].n_tokens // 2
+    # doc 3 has no >=8-token duplicated run anywhere in the corpus
+    assert out[3].n_dup_tokens == 0 and out[3].clean_tokens == [
+        t for t in out[3].clean_tokens
+    ]
+    # survivors are a subsequence of the doc's tokens
+    toks3 = {r.doc_id: r.tokens for r in toks.collect()}[3]
+    assert out[3].clean_tokens == toks3
