@@ -1,9 +1,8 @@
 """Pure-stdlib AES (FIPS-197) — the cipher behind the PDF standard
 security handler's /AESV2 (AES-128-CBC) and /AESV3 (AES-256-CBC)
 crypt filters, which the r10 RC4 work left as a documented boundary
-("no stdlib cipher"). This module closes it the same way
-``sources/zstd_stdlib.py`` closed the zstd lean: a from-the-published-
-spec implementation with an in-container foreign pin — the JVM's
+("no stdlib cipher"). This module closes it with a from-the-published-
+spec implementation and an in-container foreign pin — the JVM's
 ``javax.crypto`` AES is an independent implementation, so the
 established py4j interop net applies (``tests/test_aes_stdlib.py``
 pins every key size both directions, plus the FIPS-197 Appendix C

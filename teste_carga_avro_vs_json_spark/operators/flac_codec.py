@@ -1,6 +1,6 @@
 """Pure-stdlib FLAC codec (RFC 9639) — closes the ``flac`` half of the
-compressed-media boundary the same way ``sources/zstd_stdlib`` closed
-zstd: a real spec-conformant implementation on stdlib only, so
+compressed-media boundary: a real spec-conformant implementation on
+stdlib only, so
 genuinely compressed audio decodes in this container instead of
 behind the import-gated soundfile path.
 

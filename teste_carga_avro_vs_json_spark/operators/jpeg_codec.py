@@ -1,7 +1,7 @@
 """Pure-stdlib baseline JPEG codec (ITU-T T.81 / JFIF) — the image
 half of the compressed-media boundary, closed the same way
-``flac_codec`` closed audio and ``zstd_stdlib`` closed wire
-compression: a real spec implementation on stdlib only, so
+``flac_codec`` closed audio: a real spec implementation on stdlib
+only, so
 ``image_dhash`` runs on genuine JPEGs in this container instead of
 behind the import-gated Pillow path.
 

@@ -1,42 +1,47 @@
-"""Kafka wire-path compression codecs, dependency-free.
+"""Kafka wire-path compression codecs.
 
 The reference supports none/gzip/snappy/lz4/zstd and DEFAULTS to lz4
-(/root/reference/src/main/java/br/com/sandbox/kafka/util/
-ConfiguracaoKafka.java:112-118), so the r6 connector-less fallback
-(io_kafka.read_kafka_tail_n -> wire source) must decode what a real
-broker actually serves. This module implements the two formats whose
-specs are public and small enough to carry in pure Python:
+(ConfiguracaoKafka.java:112-118), so the wire producer must write, and
+the connector-less reader (io_kafka.read_kafka_tail_n -> wire source)
+must decode, what a real broker serves.
 
-- **LZ4 frame** (the format Kafka record-batch v2 uses for codec id 3):
-  block compress/decompress per the LZ4 block spec (token / literal /
-  match copy with overlap), frame wrap/unwrap per the LZ4 frame spec
-  (magic 0x184D2204, FLG/BD descriptor, xxHash32 header checksum,
-  independent <=64 KiB blocks, end mark). xxHash32 is implemented here
-  too (header + content checksums need it).
-- **Snappy, xerial-framed** (codec id 2): raw-block compress/decompress
-  per the Snappy format description (varint length preamble, literal /
-  copy1 / copy2 / copy4 elements), plus the xerial stream framing the
-  Java client's SnappyOutputStream writes (magic ``\\x82SNAPPY\\x00``,
-  BE version/compat words, BE-length-prefixed chunks).
-- **zstd** (codec id 4): no stdlib or hand-rolled path — gated on
-  pyarrow's bundled zstd. The frame header is parsed here only to
-  recover Frame_Content_Size so pyarrow's size-demanding decompress
-  can run; absent a content size the frame is decompressed by doubling
-  a size guess (bounded).
+Compression goes through pyarrow's bundled C codecs (the package
+requires pyarrow: ``functions/avro_vec`` imports it at module top).
+This module writes only the framing Kafka expects around them:
 
-Every codec is cross-validated in tests against pyarrow's bundled C
-implementations (compress ours -> decompress theirs and vice versa),
-so the bytes are the real formats, not a private dialect.
+- **LZ4 frame** (codec id 3): magic 0x184D2204, FLG/BD descriptor with
+  independent <=64 KiB blocks, xxHash32 header checksum, end mark; each
+  block is pyarrow ``lz4_raw``. pyarrow's own ``lz4`` frame codec
+  writes LINKED blocks, which is not Kafka's shape, so the frame is
+  written here. xxHash32 is implemented here for the checksums.
+- **Snappy, xerial-framed** (codec id 2): the stream framing the Java
+  client's SnappyOutputStream writes (magic ``\\x82SNAPPY\\x00``, BE
+  version/compat words, BE-length-prefixed chunks) around pyarrow
+  ``snappy`` raw blocks.
+- **zstd** (codec id 4): pyarrow both ways; decode reads the frame as
+  a stream, so frames without Frame_Content_Size decode too.
 
-Scale note: these pure-Python paths exist for the no-JVM-connector
-fallback and loopback tests. On a cluster the JVM Kafka connector
-decompresses batches natively (SCALE.md); nothing here sits in the
-100 TB hot path.
+The lz4 and snappy DECODERS stay pure Python: pyarrow's block and
+frame decoders demand the decompressed size up front, which Kafka's
+frames do not carry, and the LZ4 frame decoder here reads both linked
+and independent blocks. Every decoder is cross-validated in tests
+against pyarrow's output.
+
+Error contract: :func:`decompress` raises ``ValueError`` on malformed
+input for every codec (pinned by ``tests/test_fuzz_decoders.py``).
+
+Scale note: these paths serve the no-JVM-connector fallback and the
+loopback broker. On a cluster the JVM Kafka connector decompresses
+batches natively (SCALE.md); nothing here sits in the 100 TB hot path.
 """
 
 from __future__ import annotations
 
+import gzip
 import struct
+import zlib
+
+import pyarrow as pa
 
 try:  # pickle-by-value: executors don't need the repo on PYTHONPATH
     import sys as _sys
@@ -100,69 +105,6 @@ def xxh32(data: bytes, seed: int = 0) -> int:
 
 # ------------------------------------------------------------ LZ4 block
 _LZ4_MIN_MATCH = 4
-# spec: the last match must start >= 12 bytes before block end, and the
-# last 5 bytes are always literals
-_LZ4_MFLIMIT = 12
-
-
-def lz4_block_compress(src: bytes) -> bytes:
-    """Greedy single-pass LZ4 block compressor (hash table on 4-byte
-    windows). Always emits spec-valid output; ratio is within a few
-    percent of the reference compressor on text."""
-    n = len(src)
-    out = bytearray()
-    anchor = 0
-    if n >= _LZ4_MFLIMIT + 1:
-        table: dict[bytes, int] = {}
-        i = 0
-        match_limit = n - _LZ4_MFLIMIT
-        literal_end = n - 5
-        while i <= match_limit:
-            h = src[i : i + 4]
-            prev = table.get(h)
-            table[h] = i
-            if prev is not None and i - prev <= 0xFFFF:
-                # extend the match forward (never into the last 5 bytes)
-                mlen = 4
-                while (
-                    i + mlen < literal_end
-                    and src[prev + mlen] == src[i + mlen]
-                ):
-                    mlen += 1
-                _lz4_emit(out, src, anchor, i, i - prev, mlen)
-                i += mlen
-                anchor = i
-            else:
-                i += 1
-    # trailing literals (always the final sequence: no match part)
-    lit_len = n - anchor
-    token = min(lit_len, 15) << 4
-    out.append(token)
-    if lit_len >= 15:
-        _lz4_emit_len(out, lit_len - 15)
-    out += src[anchor:]
-    return bytes(out)
-
-
-def _lz4_emit_len(out: bytearray, rest: int) -> None:
-    while rest >= 255:
-        out.append(255)
-        rest -= 255
-    out.append(rest)
-
-
-def _lz4_emit(
-    out: bytearray, src: bytes, anchor: int, i: int, offset: int, mlen: int
-) -> None:
-    lit_len = i - anchor
-    m = mlen - _LZ4_MIN_MATCH
-    out.append((min(lit_len, 15) << 4) | min(m, 15))
-    if lit_len >= 15:
-        _lz4_emit_len(out, lit_len - 15)
-    out += src[anchor:i]
-    out += struct.pack("<H", offset)
-    if m >= 15:
-        _lz4_emit_len(out, m - 15)
 
 
 def _lz4_decompress_into(
@@ -230,16 +172,17 @@ def lz4_frame_compress(data: bytes) -> bytes:
     """LZ4 frame: FLG = version 01 + independent blocks, BD = 64 KiB
     max block, xxh32 header checksum, per-block compressed-or-stored
     choice, end mark. No content size/checksum (Kafka's writer omits
-    them too)."""
+    them too). Each block is compressed by pyarrow's ``lz4_raw``."""
     flg = (1 << 6) | (1 << 5)  # version 01, block independence
     bd = 4 << 4  # 64 KiB max block size
     desc = bytes([flg, bd])
     out = bytearray(struct.pack("<I", _LZ4_MAGIC))
     out += desc
     out.append((xxh32(desc) >> 8) & 0xFF)
+    raw = pa.Codec("lz4_raw")
     for pos in range(0, len(data), _LZ4_BLOCK_MAX):
         block = data[pos : pos + _LZ4_BLOCK_MAX]
-        comp = lz4_block_compress(block)
+        comp = raw.compress(block, asbytes=True)
         if len(comp) < len(block):
             out += struct.pack("<I", len(comp))
             out += comp
@@ -306,72 +249,6 @@ def lz4_frame_decompress(data: bytes, max_size: int = 1 << 30) -> bytes:
 
 
 # ------------------------------------------------------------- Snappy
-def _uvarint(out: bytearray, v: int) -> None:
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
-
-
-def snappy_block_compress(src: bytes) -> bytes:
-    """Greedy Snappy raw-block compressor: literal + copy-with-2-byte-
-    offset elements (copy2 covers every offset the format allows up to
-    65535; matches beyond 64 bytes split into multiple copies)."""
-    n = len(src)
-    out = bytearray()
-    _uvarint(out, n)
-    anchor = 0
-    if n >= 4:
-        table: dict[bytes, int] = {}
-        i = 0
-        while i + 4 <= n:
-            h = src[i : i + 4]
-            prev = table.get(h)
-            table[h] = i
-            if prev is not None and i - prev <= 0xFFFF:
-                mlen = 4
-                while i + mlen < n and src[prev + mlen] == src[i + mlen]:
-                    mlen += 1
-                _snappy_literal(out, src[anchor:i])
-                offset = i - prev
-                rest = mlen
-                while rest >= 4:
-                    # keep the remainder out of 1..3 (too short to copy)
-                    chunk = 60 if 64 < rest < 68 else min(rest, 64)
-                    # copy2: tag 0b10, len-1 in bits 2-7, LE16 offset
-                    out.append(((chunk - 1) << 2) | 0x02)
-                    out += struct.pack("<H", offset)
-                    rest -= chunk
-                # a 1-3 byte tail rejoins the literal stream
-                i += mlen - rest
-                anchor = i
-            else:
-                i += 1
-    _snappy_literal(out, src[anchor:])
-    return bytes(out)
-
-
-def _snappy_literal(out: bytearray, lit: bytes) -> None:
-    pos = 0
-    n = len(lit)
-    while pos < n:
-        chunk = lit[pos : pos + (1 << 24)]
-        ln = len(chunk) - 1
-        if ln < 60:
-            out.append(ln << 2)
-        elif ln < (1 << 8):
-            out.append(60 << 2)
-            out.append(ln)
-        elif ln < (1 << 16):
-            out.append(61 << 2)
-            out += struct.pack("<H", ln)
-        else:
-            out.append(62 << 2)
-            out += struct.pack("<I", ln)[:3]
-        out += chunk
-        pos += len(chunk)
-
-
 def snappy_block_decompress(src: bytes, max_size: int = 1 << 30) -> bytes:
     """Snappy raw-block decode per the format description: varint
     preamble then literal/copy elements; overlap copies repeat."""
@@ -430,7 +307,7 @@ def snappy_block_decompress(src: bytes, max_size: int = 1 << 30) -> bytes:
                 f"snappy length mismatch: {len(out)} != {expect}"
             )
         return bytes(out)
-    except IndexError as e:
+    except (IndexError, struct.error) as e:
         raise ValueError("truncated snappy block") from e
 
 
@@ -440,11 +317,13 @@ _XERIAL_MAGIC = b"\x82SNAPPY\x00"
 def snappy_xerial_compress(data: bytes, chunk: int = 32 << 10) -> bytes:
     """Xerial stream framing (what the Java client's SnappyOutputStream
     writes for Kafka batches): magic + BE version/compat + BE-length-
-    prefixed raw snappy chunks of <=32 KiB input each."""
+    prefixed raw snappy chunks of <=32 KiB input each, compressed by
+    pyarrow's ``snappy``."""
     out = bytearray(_XERIAL_MAGIC)
     out += struct.pack(">ii", 1, 1)
+    snap = pa.Codec("snappy")
     for pos in range(0, len(data), chunk):
-        block = snappy_block_compress(data[pos : pos + chunk])
+        block = snap.compress(data[pos : pos + chunk], asbytes=True)
         out += struct.pack(">i", len(block))
         out += block
     return bytes(out)
@@ -473,71 +352,31 @@ def snappy_xerial_decompress(data: bytes, max_size: int = 1 << 30) -> bytes:
 
 
 # -------------------------------------------------------------- zstd
-def zstd_compress(data: bytes) -> bytes:
-    """zstd: pyarrow's bundled libzstd when importable (the fast path —
-    real entropy coding), else the stdlib STORE-MODE encoder in
-    ``zstd_stdlib`` (spec-valid frame of raw blocks + xxh64 checksum;
-    any conformant zstd decodes it). The r7 "zstd needs pyarrow"
-    boundary is closed — both directions always work."""
-    try:
-        import pyarrow as pa
-    except ImportError:
-        from teste_carga_avro_vs_json_spark.sources import zstd_stdlib
+_ZSTD_READ = 1 << 20  # stream read size: bounds the overshoot past max_size
 
-        return zstd_stdlib.compress(data)
+
+def zstd_compress(data: bytes) -> bytes:
+    """zstd via pyarrow's bundled libzstd."""
     return pa.Codec("zstd").compress(data, asbytes=True)
 
 
-def _zstd_content_size(data: bytes) -> int | None:
-    """Parse a zstd frame header (RFC 8878 §3.1.1) far enough to read
-    Frame_Content_Size, if present."""
-    if len(data) < 5 or struct.unpack_from("<I", data, 0)[0] != 0xFD2FB528:
-        return None
-    fhd = data[4]
-    fcs_flag = fhd >> 6
-    single_segment = bool(fhd & 0x20)
-    pos = 5
-    if not single_segment:
-        pos += 1  # window descriptor
-    pos += (0, 1, 2, 4)[fhd & 0x03]  # dictionary id field
-    try:
-        if fcs_flag == 0:
-            return data[pos] if single_segment else None
-        if fcs_flag == 1:
-            return struct.unpack_from("<H", data, pos)[0] + 256
-        if fcs_flag == 2:
-            return struct.unpack_from("<I", data, pos)[0]
-        return struct.unpack_from("<Q", data, pos)[0]
-    except (struct.error, IndexError):
-        return None
-
-
 def zstd_decompress(data: bytes, max_size: int = 1 << 30) -> bytes:
-    """zstd via pyarrow (fast path). pyarrow demands the decompressed
-    size, so read Frame_Content_Size from the frame header; frames
-    without one (some streaming writers) fall back to a doubling size
-    guess. Without pyarrow: the full pure-stdlib RFC 8878 decoder
-    (``zstd_stdlib.decompress`` — Huffman/FSE, pinned against libzstd
-    output across levels 1-22 in pytest)."""
+    """zstd via pyarrow, read as a stream in 1 MiB chunks.
+    ``pa.Codec.decompress`` needs the exact output size, which frames
+    from streaming writers do not carry (Frame_Content_Size is
+    optional); the stream reader needs none, decodes concatenated
+    frames, and checks the cap after each chunk, so the output never
+    passes it by more than one chunk."""
+    out = bytearray()
     try:
-        import pyarrow as pa
-    except ImportError:
-        from teste_carga_avro_vs_json_spark.sources import zstd_stdlib
-
-        return zstd_stdlib.decompress(data, max_size)
-    codec = pa.Codec("zstd")
-    size = _zstd_content_size(data)
-    if size is not None:
-        if size > max_size:
-            raise ValueError("zstd decompressed size exceeds cap")
-        return codec.decompress(data, size, asbytes=True)
-    guess = 1 << 16
-    while guess <= max_size:
-        try:
-            return codec.decompress(data, guess, asbytes=True)
-        except Exception:  # noqa: BLE001 - buffer-too-small surfaces variously
-            guess <<= 2
-    raise ValueError("zstd frame without content size exceeds cap")
+        with pa.CompressedInputStream(pa.BufferReader(data), "zstd") as src:
+            while chunk := src.read(_ZSTD_READ):
+                out += chunk
+                if len(out) > max_size:
+                    raise ValueError("zstd decompressed size exceeds cap")
+    except OSError as e:  # libzstd errors surface as ArrowIOError
+        raise ValueError(f"corrupt zstd frame: {e}") from e
+    return bytes(out)
 
 
 # ------------------------------------------------- Kafka codec registry
@@ -548,8 +387,6 @@ KAFKA_CODEC_IDS = {v: k for k, v in KAFKA_CODECS.items()}
 
 def compress(codec: str, data: bytes) -> bytes:
     if codec == "gzip":
-        import gzip
-
         return gzip.compress(data)
     if codec == "snappy":
         return snappy_xerial_compress(data)
@@ -562,9 +399,10 @@ def compress(codec: str, data: bytes) -> bytes:
 
 def decompress(codec: str, data: bytes) -> bytes:
     if codec == "gzip":
-        import gzip
-
-        return gzip.decompress(data)
+        try:
+            return gzip.decompress(data)
+        except (OSError, EOFError, zlib.error) as e:
+            raise ValueError(f"corrupt gzip payload: {e}") from e
     if codec == "snappy":
         return snappy_xerial_decompress(data)
     if codec == "lz4":

@@ -229,9 +229,9 @@ def encode_record_batch(
     codec matrix, ConfiguracaoKafka.java:112-118; its DEFAULT is lz4)
     — the records section (everything after recordCount) is compressed
     as one blob and attributes bits 0-2 carry the codec id, per the
-    published format. gzip is stdlib; snappy (xerial-framed) and lz4
-    (frame format) are the pure-Python codecs in
-    :mod:`sources.compression`; zstd rides pyarrow's bundled codec."""
+    published format. gzip is stdlib; snappy (xerial-framed), lz4
+    (frame format, independent blocks) and zstd compress through
+    pyarrow's bundled codecs, framed by :mod:`sources.compression`."""
     body = bytearray()
     for i, (key, value) in enumerate(records):
         rec = bytearray()

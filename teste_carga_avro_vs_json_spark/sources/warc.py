@@ -8,8 +8,7 @@ crawl→corpus chain: ``read_warc_responses → extract_text →
 c4_line_filter → corpus_clean → …``.
 
 Pure-stdlib implementation (same convention as the PNG/BMP/WAV codecs
-in ``operators/multimodal`` and the zstd decoder in
-``sources/zstd_stdlib``): the record grammar is the published WARC/1.1
+in ``operators/multimodal``): the record grammar is the published WARC/1.1
 spec (version line, CRLF name:value headers, ``Content-Length`` octets
 of payload, CRLF CRLF trailer), HTTP/1.1 response payloads per RFC
 9112 (status line, headers, optional chunked transfer-encoding), and

@@ -28,7 +28,6 @@ _SLOW_MODULES = {
     "test_evolution_e2e",
     "test_bpe",
     "test_avro_generic",
-    "test_zstd_stdlib",
     "test_imageio_interop",
     "test_fuzz_decoders",
     "test_phash",

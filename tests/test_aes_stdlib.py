@@ -1,7 +1,7 @@
 """functions/aes_stdlib — the pure-stdlib FIPS-197 AES behind the PDF
 /AESV2 //AESV3 crypt filters.
 
-Pinning strategy (same ladder as zstd_stdlib / the image codecs):
+Pinning strategy (same ladder as the image codecs):
 1. the PUBLISHED FIPS-197 Appendix C known-answer vectors (one per
    key size — they exercise the S-box derivation, key schedule and
    both cipher directions end to end);

@@ -1,7 +1,8 @@
-"""Wire-path compression codecs (sources/compression.py): pure-Python
-LZ4 block+frame, Snappy block+xerial, xxHash32, zstd-via-pyarrow —
-every format cross-validated BOTH directions against pyarrow's bundled
-C implementations, so the bytes are the published formats, not a
+"""Wire-path compression codecs (sources/compression.py): the LZ4
+frame and xerial Snappy framing around pyarrow's block compressors,
+the pure-Python LZ4/Snappy decoders, xxHash32 and zstd-via-pyarrow —
+every format cross-validated against pyarrow's bundled C
+implementations, so the bytes are the published formats, not a
 private dialect. Reference parity: ConfiguracaoKafka.java:112-118
 (codec matrix none/gzip/snappy/lz4/zstd, default lz4)."""
 
@@ -9,6 +10,7 @@ from __future__ import annotations
 
 import os
 import random
+import struct
 
 import pytest
 
@@ -41,19 +43,13 @@ def test_xxh32_known_vectors():
 
 
 @pytest.mark.parametrize("i", range(len(CASES)))
-def test_lz4_block_cross_validated(i):
-    d = CASES[i]
-    pa = _pa()
-    raw = pa.Codec("lz4_raw")
-    assert raw.decompress(C.lz4_block_compress(d), len(d), asbytes=True) == d
-
-
-@pytest.mark.parametrize("i", range(len(CASES)))
 def test_lz4_frame_cross_validated(i):
     d = CASES[i]
     pa = _pa()
     frame = pa.Codec("lz4")  # pyarrow 'lz4' == LZ4 frame (linked blocks)
-    assert frame.decompress(C.lz4_frame_compress(d), len(d), asbytes=True) == d
+    ours = C.lz4_frame_compress(d)
+    assert ours[4] & 0x20  # FLG block independence: Kafka's frame shape
+    assert frame.decompress(ours, len(d), asbytes=True) == d
     assert C.lz4_frame_decompress(frame.compress(d, asbytes=True)) == d
 
 
@@ -62,11 +58,11 @@ def test_snappy_cross_validated(i):
     d = CASES[i]
     pa = _pa()
     snap = pa.Codec("snappy")
-    assert snap.decompress(C.snappy_block_compress(d), len(d), asbytes=True) == d
-    assert C.snappy_block_decompress(snap.compress(d, asbytes=True)) == d
+    block = snap.compress(d, asbytes=True)
+    assert C.snappy_block_decompress(block) == d
     # xerial framing round-trip (and bare-block fallback)
     assert C.snappy_xerial_decompress(C.snappy_xerial_compress(d)) == d
-    assert C.snappy_xerial_decompress(C.snappy_block_compress(d)) == d
+    assert C.snappy_xerial_decompress(block) == d
 
 
 @pytest.mark.parametrize("codec", ["gzip", "snappy", "lz4", "zstd"])
@@ -79,13 +75,29 @@ def test_registry_roundtrip_all_codecs(codec):
         C.decompress("brotli", b"x")
 
 
-def test_zstd_content_size_and_guess_path():
+def _zstd_raw_frame(payload: bytes) -> bytes:
+    """One zstd frame (RFC 8878) holding ``payload`` as a single raw
+    block, without Frame_Content_Size: the shape streaming writers
+    emit. FHD 0x00 = no single-segment, no checksum, no dictionary."""
+    assert len(payload) <= 1 << 17  # Block_Maximum_Size
+    header = struct.pack("<I", 0xFD2FB528) + bytes([0x00, 7 << 3])  # 128 KiB window
+    block = (1 | len(payload) << 3).to_bytes(3, "little")  # last, raw
+    return header + block + payload
+
+
+def test_zstd_frames_with_and_without_content_size():
     d = b"conteudo zstd " * 500
-    frame = C.zstd_compress(d)
-    assert C._zstd_content_size(frame) == len(d)
+    frame = C.zstd_compress(d)  # libzstd writes Frame_Content_Size
     assert C.zstd_decompress(frame) == d
     with pytest.raises(ValueError, match="cap"):
         C.zstd_decompress(frame, max_size=10)
+    d = bytes(random.Random(7).choices(range(256), k=90_000))
+    frame = _zstd_raw_frame(d)
+    assert frame[4] == 0x00 and len(d) >= 1 << 16
+    assert C.zstd_decompress(frame) == d
+    assert C.zstd_decompress(frame + frame) == d + d  # concatenated frames
+    with pytest.raises(ValueError, match="cap"):
+        C.zstd_decompress(frame, max_size=len(d) - 1)
 
 
 def test_hostile_input_is_valueerror_not_crash():
@@ -95,6 +107,7 @@ def test_hostile_input_is_valueerror_not_crash():
         b"\xff" * 40,
         os.urandom(64),
         C.lz4_frame_compress(b"ok")[:-3],  # truncated frame
+        bytes.fromhex("6e7fb7"),  # copy4 tag past the end of the input
     ):
         for fn in (
             C.lz4_frame_decompress,
@@ -119,10 +132,8 @@ def test_hostile_input_is_valueerror_not_crash():
 def test_lz4_frame_optional_fields():
     """Frames with content-size / content-checksum flags (lz4 CLI
     defaults) decode: build one by hand with the optional fields."""
-    import struct
-
     data = b"payload " * 100
-    block = C.lz4_block_compress(data)
+    block = _pa().Codec("lz4_raw").compress(data, asbytes=True)
     flg = (1 << 6) | (1 << 5) | 0x08 | 0x04  # +content size +checksum
     desc = bytes([flg, 4 << 4]) + struct.pack("<Q", len(data))
     out = bytearray(struct.pack("<I", 0x184D2204))

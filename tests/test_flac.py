@@ -3,8 +3,7 @@ round-trips (the lossless-codec gold standard — sample-identical plus
 STREAMINFO MD5), UTF-8 coded-number units, and HAND-CRAFTED bitstreams
 for every decoder-only path the encoder never emits (LPC, stereo
 decorrelation, wasted bits, rice2, multi-partition residuals, escape
-partitions) — the crafted-frame discipline test_zstd_stdlib.py uses
-for libzstd's predefined tables. CRC/MD5 corruption must raise."""
+partitions). CRC/MD5 corruption must raise."""
 
 import hashlib
 import struct

@@ -21,8 +21,8 @@ from teste_carga_avro_vs_json_spark.operators import multimodal as mm
 from teste_carga_avro_vs_json_spark.operators import pdf_extract as px
 from teste_carga_avro_vs_json_spark.operators import phash as ph
 from teste_carga_avro_vs_json_spark.sources import archive as ar
+from teste_carga_avro_vs_json_spark.sources import compression as C
 from teste_carga_avro_vs_json_spark.sources import warc as W
-from teste_carga_avro_vs_json_spark.sources import zstd_stdlib as Z
 
 # derandomize: the suite is a REGRESSION gate (the driver runs pytest
 # per round — a fresh random find failing the build mid-round is the
@@ -33,6 +33,11 @@ _FUZZ = settings(
     deadline=None,
     derandomize=True,
     suppress_health_check=[HealthCheck.too_slow],
+)
+
+_WIRE_CODECS = ("gzip", "snappy", "lz4", "zstd")
+_WIRE_PAYLOAD = b"".join(
+    b'{"id": %d, "dados": "registro de carga"}' % i for i in range(40)
 )
 
 #: decoder → (callable, accepted exception types)
@@ -54,12 +59,12 @@ _DECODERS = {
     # mutations hit the scan-script validation, EOBRUN arithmetic and
     # refinement bit logic
     "jpeg_prog": (jc.decode_jpeg, (jc.JpegFormatError, NotImplementedError)),
-    # the Kafka-wire / compression fallback path for untrusted bytes —
-    # the r8 ADVICE flagged it missing from this table
-    "zstd": (
-        lambda b: Z.decompress(b, max_size=1 << 24),
-        (Z.ZstdError,),
-    ),
+    # the Kafka-wire codecs for untrusted record-batch bytes: one
+    # ValueError contract through compression.decompress, every codec
+    **{
+        codec: (lambda b, codec=codec: C.decompress(codec, b), (ValueError,))
+        for codec in _WIRE_CODECS
+    },
     # r9: PDF ingest stage joins the table on arrival (hardening rule)
     "pdf": (
         px.extract_pdf,
@@ -169,7 +174,6 @@ def _valid_payloads() -> dict[str, bytes]:
         "aiff": mm.encode_aiff_stdlib(samples, rate=16000),
         "jpeg": jc.encode_jpeg(24, 16, rgb, quality=90),
         "jpeg_prog": jc.encode_jpeg_progressive(24, 16, rgb, quality=90),
-        "zstd": Z.compress(b"zstd fuzz payload " * 40),
         "pdf": px.build_pdf(
             [["linha um dois tres", "quatro cinco"], ["pagina dois"]]
         ),
@@ -215,6 +219,7 @@ def _valid_payloads() -> dict[str, bytes]:
             9, 5,
             bytes(((i * 53) ^ (i >> 2)) & 0xFF for i in range(9 * 5 * 3)),
         ),
+        **{c: C.compress(c, _WIRE_PAYLOAD) for c in _WIRE_CODECS},
     }
 
 

@@ -1,12 +1,16 @@
-"""Soak the wire-protocol Kafka path at bench scale: produce N 1 KB
-Avro messages through ``format("kafka_wire")`` into the loopback
-broker, then read the topic back through the distributed source and
-decode — the reference's full scenario at 100k-message volume, over
-real sockets, with throughput per phase on one JSON line.
+"""Soak the paper's own transport: the cli Kafka apps, end to end.
 
-This is evidence the r6 surface is not a toy: the stdlib client/broker
-sustain bench-scale volume. (The production data path at cluster scale
-remains the JVM connector — SCALE.md.)
+Each cell is one ``cli.run_app`` pair, PRODUTOR_* then CONSUMIDOR_*
+(E2E_PARSE), of N 1 KB messages against the loopback ``StubBroker``
+with the reference's 18 partitions, for AVRO and JSON × the codecs
+``none`` and ``lz4`` (the cli default). One warm lap of small pairs
+runs first (Python-worker spin-up, codegen, the broker's py4j
+connections). A last cell runs one Avro/lz4 pair through a broker that
+requires SASL PLAIN (``security_protocol=SASL_PLAINTEXT``).
+
+Prints one JSON line: per cell the producer and consumer wall times,
+the rows produced, stored by the broker and consumed, and the bytes
+the broker stored.
 
 Usage: python tools/soak_kafka_wire.py [n_msgs]  (default 100_000)
 """
@@ -22,128 +26,91 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+PARTS = 18  # the reference's partition count
+FORMATS = ("AVRO", "JSON")
+CODECS = ("none", "lz4")
+
+
+def _cell(spark, broker, fmt: str, codec: str, n: int, topic: str,
+          **security) -> dict:
+    """One producer app then one consumer app on a fresh ``topic``."""
+    from teste_carga_avro_vs_json_spark.cli import run_app
+    from teste_carga_avro_vs_json_spark.config import EngineConfig
+
+    cfg = EngineConfig(
+        total_mensagens=n,
+        tamanho_mensagem_kb=1,
+        num_particoes=PARTS,
+        bootstrap_servers=f"{broker.addr[0]}:{broker.addr[1]}",
+        compression_type=codec,
+        topico_avro=topic,
+        topico_json=topic,
+        **security,
+    )
+    t0 = time.perf_counter()
+    prod = run_app(f"PRODUTOR_{fmt}", "", cfg, spark)
+    t1 = time.perf_counter()
+    cons = run_app(f"CONSUMIDOR_{fmt}", "", cfg, spark)
+    t2 = time.perf_counter()
+    logs = [broker._log(topic, p) for p in range(PARTS)]
+    return {
+        "produce_s": round(t1 - t0, 2),
+        "produce_msgs_per_s": round(n / (t1 - t0), 1),
+        "consume_s": round(t2 - t1, 2),
+        "consume_msgs_per_s": round(n / (t2 - t1), 1),
+        "rows_produced": prod["total_mensagens"],
+        "rows_stored": sum(log.next_offset for log in logs),
+        "rows_consumed": cons["total_mensagens"],
+        "broker_bytes": sum(len(b) for log in logs for _, b in log.batches),
+    }
+
 
 def main() -> None:
     n_msgs = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    parts = 18  # the reference's partition count
 
-    import pyspark.sql.functions as F
-
-    from teste_carga_avro_vs_json_spark.functions.avro_codec import to_avro
-    from teste_carga_avro_vs_json_spark.operators import serde
     from teste_carga_avro_vs_json_spark.session import get_spark
-    from teste_carga_avro_vs_json_spark.sources import (
-        generator,
-        io_kafka,
-        kafka_wire_source,
-    )
     from teste_carga_avro_vs_json_spark.sources.kafka_wire import StubBroker
 
     spark = get_spark("soak-kafka-wire")
     spark.sparkContext.setLogLevel("ERROR")
-    kafka_wire_source.register(spark)
-
     out: dict = {
         "n_msgs": n_msgs,
+        "kb": 1,
         "cpus": spark.sparkContext.defaultParallelism,
-        "partitions": parts,
+        "partitions": PARTS,
+        "cells": {},
     }
-    with StubBroker(num_partitions=parts) as broker:
-        bootstrap = f"{broker.addr[0]}:{broker.addr[1]}"
-        msgs = generator.mensagens(spark, n_msgs, tamanho_kb=1)
-        wire = io_kafka.to_wire_frame(
-            msgs,
-            to_avro(F.struct("id", "timestamp", "sequencia", "dados", "versao")),
-            num_particoes=parts,
-        )
-        # co-locate each Kafka partition in one task (the JVM sink's
-        # shuffle-to-partition shape): full-size record batches, one
-        # producer session per partition instead of tasks x partitions
-        # small chunks (r7; also lets KIP-98 sequences stay dense)
-        wire = wire.repartition(parts, "partition")
-        # warm lap (same protocol as bench.py): Python worker spin-up +
-        # codegen + the broker's JVM-CRC py4j connections, on a tiny
-        # throwaway topic so the measured topic stays clean
-        (
-            wire.limit(2000).write.format("kafka_wire")
-            .option("bootstrap", bootstrap)
-            .option("topic", "warm")
-            .mode("append")
-            .save()
-        )
-        t0 = time.perf_counter()
-        (
-            wire.write.format("kafka_wire")
-            .option("bootstrap", bootstrap)
-            .option("topic", "soak")
-            .mode("append")
-            .save()
-        )
-        dt = time.perf_counter() - t0
-        out["produce_sec"] = round(dt, 2)
-        out["produce_msgs_per_sec"] = round(n_msgs / dt, 1)
-
-        t0 = time.perf_counter()
-        raw = (
-            spark.read.format("kafka_wire")
-            .option("bootstrap", bootstrap)
-            .option("topic", "soak")
-            .load()
-        )
-        decoded = serde.avro_decode(raw.withColumnRenamed("value", "valor_avro"))
-        agg = decoded.agg(
-            F.count(F.lit(1)).alias("n"), F.max("sequencia").alias("mx")
-        ).first()
-        dt = time.perf_counter() - t0
-        out["consume_decode_sec"] = round(dt, 2)
-        out["consume_msgs_per_sec"] = round(n_msgs / dt, 1)
-        out["rows_consumed"] = agg["n"]
-        out["max_sequencia"] = agg["mx"]
-        out["broker_bytes"] = sum(
-            len(b) for log in broker._logs.values() for _, b in log.batches
-        )
-
-    # ---- authenticated lane (r9): the SAME consume through a
-    # SASL-PLAIN-requiring broker — auth is a per-connection handshake
-    # (one round trip per TopicPartition task socket), so throughput
-    # must be ~the plaintext lane, which this lane evidences.
+    with StubBroker(num_partitions=PARTS) as broker:
+        for fmt in FORMATS:
+            _cell(spark, broker, fmt, "lz4", 2000, f"warm-{fmt.lower()}")
+        for codec in CODECS:
+            for fmt in FORMATS:
+                name = f"{fmt.lower()}_{codec}"
+                out["cells"][name] = _cell(
+                    spark, broker, fmt, codec, n_msgs, f"soak-{name}"
+                )
+    n_auth = max(n_msgs // 5, 2000)
     with StubBroker(
-        num_partitions=parts, sasl_plain={"soak-key": "soak-secret"}
+        num_partitions=PARTS, sasl_plain={"soak-key": "soak-secret"}
     ) as broker:
-        bootstrap = f"{broker.addr[0]}:{broker.addr[1]}"
-        sasl_opts = {
-            "security_protocol": "SASL_PLAINTEXT",
-            "sasl_username": "soak-key",
-            "sasl_password": "soak-secret",
-        }
-        n_auth = max(n_msgs // 5, 2000)
-        wire_auth = io_kafka.to_wire_frame(
-            generator.mensagens(spark, n_auth, tamanho_kb=1),
-            to_avro(F.struct("id", "timestamp", "sequencia", "dados", "versao")),
-            num_particoes=parts,
-        ).repartition(parts, "partition")
-        writer = wire_auth.write.format("kafka_wire").option(
-            "bootstrap", bootstrap
-        ).option("topic", "soak_auth").mode("append")
-        for k, v in sasl_opts.items():
-            writer = writer.option(k, v)
-        t0 = time.perf_counter()
-        writer.save()
-        dt = time.perf_counter() - t0
-        out["sasl_produce_sec"] = round(dt, 2)
-        out["sasl_produce_msgs_per_sec"] = round(n_auth / dt, 1)
-        reader = spark.read.format("kafka_wire").option(
-            "bootstrap", bootstrap
-        ).option("topic", "soak_auth")
-        for k, v in sasl_opts.items():
-            reader = reader.option(k, v)
-        t0 = time.perf_counter()
-        n_read = reader.load().count()
-        dt = time.perf_counter() - t0
-        out["sasl_consume_sec"] = round(dt, 2)
-        out["sasl_rows_consumed"] = n_read
-        out["sasl_n_msgs"] = n_auth
-        out["sasl_exact"] = n_read == n_auth
+        out["cells"]["sasl_avro_lz4"] = _cell(
+            spark, broker, "AVRO", "lz4", n_auth, "soak-sasl",
+            security_protocol="SASL_PLAINTEXT",
+            cluster_api_key="soak-key",
+            cluster_api_secret="soak-secret",
+        )
+    cells = out["cells"]
+    out["exact"] = all(
+        c["rows_produced"] == c["rows_stored"] == c["rows_consumed"]
+        for c in cells.values()
+    )
+    out["lz4_vs_none_produce"] = {
+        fmt.lower(): round(
+            cells[f"{fmt.lower()}_lz4"]["produce_s"]
+            / cells[f"{fmt.lower()}_none"]["produce_s"], 3
+        )
+        for fmt in FORMATS
+    }
     try:
         out["loadavg_1m"] = round(os.getloadavg()[0], 1)
     except OSError:
