@@ -93,7 +93,10 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
             bootstrap=cfg.bootstrap_servers, topic=topic, **cfg.kafka_security()
         )
         if app.startswith("PRODUTOR"):
+            # generated once: the write fills the lazy checkpoint and
+            # the report reads it back
             msgs = generator.mensagens(spark, total, kb)
+            msgs = msgs.localCheckpoint(eager=False)
             struct = F.struct("id", "timestamp", "sequencia", "dados", "versao")
             value = (
                 F.encode(F.to_json(struct), "UTF-8") if is_json else to_avro(struct)
@@ -160,7 +163,9 @@ def run_app(app: str, path: str, cfg: EngineConfig, spark=None) -> dict:
                 )
                 report = _report(decoded, warmup)
     elif app.startswith("PRODUTOR"):
+        # generated once, as in the Kafka producer above
         msgs = generator.mensagens(spark, total, kb)
+        msgs = msgs.localCheckpoint(eager=False)
         if app == "PRODUTOR_JSON":
             io_files.write_json(msgs, path, P, cfg.compression_type)
         else:

@@ -21,8 +21,7 @@ Scale shape — the part that must survive 100 TB:
   deterministic), then a row-local fold rewrites the symbol arrays.
   ``localCheckpoint(eager=False)`` truncates lineage each round (the
   next probe's job materializes it) — same iterative discipline as
-  ``dedup.neardup_clusters``; on a real cluster prefer ``checkpoint``
-  to a DFS dir.
+  ``dedup.neardup_clusters`` (SCALE.md: local checkpoints).
 - **The driver holds only the merge list** (``num_merges`` pairs), and
   per-iteration collect is ONE row (the argmax). Nothing
   corpus-proportional ever reaches the driver.

@@ -46,7 +46,7 @@ surface (north star: LLM-data-pipeline operators).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
@@ -66,7 +66,7 @@ def gated_unique(
     docs: DataFrame, lang: str = "en", min_quality: float = 0.5
 ) -> DataFrame:
     """Steps 1-3 of :func:`corpus_clean` (score once map-side →
-    hash-agg exact dedup → gate above the agg), un-persisted: one row
+    hash-agg exact dedup → gate above the agg), not checkpointed: one row
     per surviving distinct text, ``(doc_id, text, words, quality)``.
     Factored out so the plan shape (hash agg, no window/sort, no
     expensive filter) is directly pinnable in tests."""
@@ -140,13 +140,12 @@ def corpus_clean(
     ``scale=True`` switches near-dup candidate generation to the
     xxhash64 signatures (production path; md5 default keeps the DuckDB
     oracle bit-exact).
+
+    The survivor set feeds BOTH near-dup candidate generation and the
+    final anti-join: a lazy local checkpoint, so the score→dedup→gate
+    subtree runs once (twice without it, measured 2x at sf0.1).
     """
-    # The survivor set feeds BOTH near-dup candidate generation and the
-    # final anti-join; without a persist the whole score→dedup→gate
-    # subtree runs twice (measured 2x at sf0.1). The cache outlives the
-    # call: the session's CacheManager holds it until someone calls
-    # unpersist (or clearCache), whatever happens to the returned plan.
-    uniq = gated_unique(docs, lang, min_quality).persist()
+    uniq = gated_unique(docs, lang, min_quality).localCheckpoint(eager=False)
     clusters = dedup.neardup_clusters(
         uniq.select("doc_id", "text"), threshold=neardup_threshold, scale=scale
     )
@@ -1000,6 +999,17 @@ BLOCK_PATTERNS = [
 ]
 
 
+def _block_hits(text: Column, patterns: list[str] | None = None) -> Column:
+    """The blocklist patterns ``text`` contains, case-insensitively:
+    distinct and sorted, so the first is the smallest. The one
+    predicate behind :func:`blocklist_filter` and the corpus build's
+    blocklist stage (a page is kept iff this array is empty)."""
+    pats = sorted(set(p.lower() for p in (patterns or BLOCK_PATTERNS)))
+    arr = F.array(*[F.lit(p) for p in pats])
+    lt = F.lower(text)
+    return F.filter(arr, lambda p: lt.contains(p))
+
+
 def blocklist_filter(
     docs: DataFrame,
     patterns: list[str] | None = None,
@@ -1025,14 +1035,8 @@ def blocklist_filter(
     py-lane convention; this expression form is exact for the
     moderate lists the published recipes use.
     """
-    pats = sorted(set(p.lower() for p in (patterns or BLOCK_PATTERNS)))
-    arr = F.array(*[F.lit(p) for p in pats])
-    staged = docs.select(
-        "doc_id", F.lower(F.col(text_col)).alias("_lt")
-    )
-    hits = staged.select(
-        "doc_id",
-        F.filter(arr, lambda p: F.col("_lt").contains(p)).alias("hits"),
+    hits = docs.select(
+        "doc_id", _block_hits(F.col(text_col), patterns).alias("hits")
     )
     return hits.select(
         "doc_id",

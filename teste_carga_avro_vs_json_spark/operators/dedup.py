@@ -21,7 +21,7 @@ Everything is built-in expressions (md5/array HOFs) — no UDFs, no
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark.functions.portable import (
@@ -223,9 +223,7 @@ def _banded_jaccard(
       the SMJ sort on the wide array side.
     - Both the shingled ``base`` and the slim ``banded`` frame are
       persisted: the shingle scan AND the signature projection each run
-      once, with every reader hitting the cache (on a cluster-sized
-      corpus swap persist for an explicit checkpoint/table if executor
-      storage is tight).
+      once, with every reader hitting the cache.
     - Pair dedup happens BEFORE the array fetch, so each candidate pair
       is verified exactly once no matter how many bands it collides in —
       and it is FUSED with the ``doc_a`` fetch: aggregating the raw pair
@@ -253,7 +251,9 @@ def _banded_jaccard(
     # twice — at 100 TB that is two extra corpus-sized array shuffles.
     # Explicit numPartitions keeps the cached partitioning a plain
     # hashpartitioning the join requirement can match (AQE won't
-    # renumber a REPARTITION_BY_NUM exchange).
+    # renumber a REPARTITION_BY_NUM exchange). Hence ``persist`` here: a
+    # local checkpoint's scan reports neither partitioning nor hint
+    # (sf0.01 documents: exchanges 2 → 4, two BroadcastHashJoins).
     n_part = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     base = base.repartition(n_part, "doc_id").persist()
     band_keys = ",".join(
@@ -460,11 +460,10 @@ def neardup_clusters(
     never materializes components driver-side. Round 1 is fused into
     the label init (min(self, min neighbour) is one aggregation over
     the symmetric edge list), and the convergence probe is a ``chg``
-    column folded into the checkpointed frame — summing it is a partial
-    agg over already-materialized partitions, not an extra join job.
-    ``localCheckpoint`` truncates lineage each round so Catalyst never
-    sees an exponentially nested plan (on a real cluster prefer
-    ``checkpoint`` to a DFS dir for fault tolerance). Output:
+    column observed on the round's own checkpoint job, not an extra
+    job. ``localCheckpoint`` truncates lineage each round so Catalyst
+    never sees an exponentially nested plan (SCALE.md: local
+    checkpoints). Output:
     (doc_id, cluster_id, is_canonical) for every doc that has at least
     one near-dup partner.
     """
@@ -478,16 +477,15 @@ def neardup_clusters(
         .unionByName(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # Round 1 fused into init: with labels(v) = v, the propagated min is
-    # just min(v, min over neighbours) — one aggregation, no join. The
-    # checkpoint is LAZY: the first convergence probe materializes it as
-    # part of its own job, so init costs no standalone job.
+    # just min(v, min over neighbours) — one aggregation, no join. It
+    # is not checkpointed: round 1 plans it inline (one level deep), so
+    # init costs no job of its own.
     labels = (
         edges.groupBy(F.col("src").alias("doc_id"))
         .agg(F.least(F.first("src"), F.min("dst")).alias("cluster_id"))
-        .localCheckpoint(eager=False)
     )
     rounds = 0
     for _ in range(max_iters - 1):
@@ -506,27 +504,27 @@ def neardup_clusters(
             F.col("doc_id").alias("nid"), "cluster_id", F.lit(True).alias("own")
         )
         old_label = F.min(F.when(F.col("own"), F.col("cluster_id")))
-        # Lazy checkpoint + probe = ONE job per round (the probe's agg
-        # materializes the checkpoint it sums over); the eager variant
-        # paid a materialization job AND a probe job every round.
-        new_labels = (
+        # the convergence probe is an Observation on the eager
+        # checkpoint's own job, not a job of its own
+        changes = Observation()
+        labels = (
             prop.unionByName(mine)
             .groupBy("nid")
             .agg(
                 F.min("cluster_id").alias("cluster_id"),
                 (F.min("cluster_id") < old_label).cast("long").alias("chg"),
             )
-            .select(F.col("nid").alias("doc_id"), "cluster_id", "chg")
-            .localCheckpoint(eager=False)
+            .observe(changes, F.sum("chg").alias("changed"))
+            .select(F.col("nid").alias("doc_id"), "cluster_id")
+            .localCheckpoint()
         )
-        changed = new_labels.agg(F.sum("chg")).first()[0]
-        labels = new_labels.drop("chg")
+        changed = changes.get["changed"]
         if changed == 0:
             break
     if stats is not None:
         stats["rounds"] = rounds
-    # the probes filled the label checkpoints: the caches are done
-    for frame in (edges, *cached):
+    # the rounds filled the edge and label checkpoints: caches are done
+    for frame in cached:
         frame.unpersist()
     return labels.withColumn(
         "is_canonical", F.col("doc_id") == F.col("cluster_id")

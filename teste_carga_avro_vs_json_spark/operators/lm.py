@@ -80,16 +80,19 @@ def train_bigram_lm(
 ) -> tuple[DataFrame, DataFrame, int]:
     """Returns (bigram_counts, context_counts, vocab_size): the
     distributed model. The corpus is scanned ONCE: context counts and
-    the vocabulary both derive from the (persisted, vocab²-bounded)
-    bigram table — ``c1(w1) = Σ_w2 c2(w1, w2)`` and vocab = distinct
-    ``w2`` — exact-long identities, so the numbers equal the direct
-    formulations the DuckDB twin uses. Persisting the TINY model table
-    (never the token-level bigram stream: a corpus-sized cache starves
-    executor memory downstream — measured in the e2e pipeline test)
-    is what keeps repeated model reads free."""
+    the vocabulary both derive from the local-checkpointed,
+    vocab²-bounded bigram table — ``c1(w1) = Σ_w2 c2(w1, w2)`` and
+    vocab = distinct ``w2`` — exact-long identities, so the numbers
+    equal the direct formulations the DuckDB twin uses. Checkpointing
+    the TINY model table (never the token-level bigram stream: a
+    corpus-sized copy starves executor memory downstream — measured in
+    the e2e pipeline test) keeps repeated model reads free; the vocab
+    count fills it."""
     bg = _doc_bigrams(docs, text_col)
     bigrams = (
-        bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2")).persist()
+        bg.groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).alias("c2"))
+        .localCheckpoint(eager=False)
     )
     contexts = bigrams.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = bigrams.select(F.col("w2").alias("w")).distinct().count()
@@ -142,15 +145,15 @@ def perplexity_score(
       over distinct-predecessor counts (``Dt`` = distinct bigrams) so
       unseen words keep nonzero mass; an unseen CONTEXT backs off to
       ``Pc`` alone. Every extra statistic (T, N1+, Dt) is one more
-      aggregation of the SAME persisted vocab²-bounded bigram table —
+      aggregation of the SAME checkpointed vocab²-bounded bigram table —
       no additional corpus scan, and the determinism argument is
       unchanged (exact longs into one fixed per-pair double sequence,
       quantized straight out of ``ln``).
 
     Two corpus scans total: one builds the model (see
-    :func:`train_bigram_lm` — contexts/vocab derive from the persisted
-    tiny bigram table, never a token-level cache), one feeds the
-    scoring probe."""
+    :func:`train_bigram_lm` — contexts/vocab derive from the
+    checkpointed tiny bigram table, never a token-level copy), one
+    feeds the scoring probe."""
     return _perplexity(
         docs, train_bigram_lm(docs, text_col), text_col, keep_nll,
         keep_frac, smoothing, discount,
@@ -166,8 +169,7 @@ def _perplexity(
     smoothing: str = "addone",
     discount: float = 0.75,
 ) -> DataFrame:
-    """:func:`perplexity_score` over a trained ``model``; the caller
-    owns the model's cached bigram table."""
+    """:func:`perplexity_score` over a trained ``model``."""
     bigrams, contexts, vocab = model
     bg = _doc_bigrams(docs, text_col)
     if smoothing == "addone":

@@ -331,6 +331,8 @@ def hamming_neardup(
         banded = banded.join(
             live_keys.hint("shuffle_hash"), ["band_id", "band_val"]
         )
+    # persist, not a local checkpoint: the self-join needs the cached
+    # partitioning and hint (see dedup._banded_jaccard)
     banded = (
         banded.repartition(n_part, "band_id", "band_val")
         .hint("shuffle_hash")

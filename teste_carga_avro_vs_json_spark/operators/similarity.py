@@ -642,61 +642,57 @@ def multi_kmeans(
             f"multi_kmeans requires at least one centroid per space, got k={bad}"
         )
     # Lloyd re-reads the same frame once per iteration (plus the seed
-    # sample): persist it for the duration of training so iterations
-    # 2..n skip the scan+exchange — the standard Spark k-means input
-    # contract (MLlib warns when its input is uncached). Unpersisted on
-    # every exit path: only the training JOBS touch the cache, the
-    # caller's final query plan never references it (r14, guide §5).
+    # sample): a lazy local checkpoint, filled by the sample job, lets
+    # iterations 2..n skip the scan+exchange — the standard Spark
+    # k-means input contract (MLlib warns when its input is uncached),
+    # without a cache entry to release on any exit path.
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
-    ).persist()
-    try:
-        max_k = max(k for k, _s, _l in spaces)
-        sample = (
-            v.filter(F.col("vec").isNotNull())
-            .orderBy("vec_id")
-            .limit(INIT_OVERSAMPLE * max_k)
+    ).localCheckpoint(eager=False)
+    max_k = max(k for k, _s, _l in spaces)
+    sample = (
+        v.filter(F.col("vec").isNotNull())
+        .orderBy("vec_id")
+        .limit(INIT_OVERSAMPLE * max_k)
+        .collect()
+    )
+    dim = len(sample[0].vec) if sample else 0
+    resolved = [
+        (k, start, (dim - start) if length is None else length)
+        for k, start, length in spaces
+    ]
+    all_cents: list[list[tuple[int, list[float]]]] = []
+    for k, start, length in resolved:
+        seen: set[tuple[float, ...]] = set()
+        cents: list[tuple[int, list[float]]] = []
+        for r in sample[: INIT_OVERSAMPLE * k]:
+            key = tuple(r.vec[start : start + length])
+            if key not in seen:
+                seen.add(key)
+                cents.append((len(cents), list(key)))
+                if len(cents) == k:
+                    break
+        all_cents.append(cents)
+    for _ in range(iters):
+        means = (
+            _update_sums_np(v, resolved, all_cents)
+            .groupBy("sp", "cluster", "dim")
+            .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
         )
-        dim = len(sample[0].vec) if sample else 0
-        resolved = [
-            (k, start, (dim - start) if length is None else length)
-            for k, start, length in spaces
-        ]
-        all_cents: list[list[tuple[int, list[float]]]] = []
-        for k, start, length in resolved:
-            seen: set[tuple[float, ...]] = set()
-            cents: list[tuple[int, list[float]]] = []
-            for r in sample[: INIT_OVERSAMPLE * k]:
-                key = tuple(r.vec[start : start + length])
-                if key not in seen:
-                    seen.add(key)
-                    cents.append((len(cents), list(key)))
-                    if len(cents) == k:
-                        break
-            all_cents.append(cents)
-        for _ in range(iters):
-            means = (
-                _update_sums_np(v, resolved, all_cents)
-                .groupBy("sp", "cluster", "dim")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()
-            )
-            by_space: dict[int, dict[int, dict[int, float]]] = {}
-            for r in means:
-                by_space.setdefault(r.sp, {}).setdefault(r.cluster, {})[r.dim] = (
-                    r.s / r.n
-                ) / 1000.0
-            all_cents = [
-                [
-                    (c, [dims[d] for d in sorted(dims)])
-                    for c, dims in sorted(by_space.get(s_idx, {}).items())
-                ]
-                for s_idx in range(len(resolved))
+        by_space: dict[int, dict[int, dict[int, float]]] = {}
+        for r in means:
+            by_space.setdefault(r.sp, {}).setdefault(r.cluster, {})[r.dim] = (
+                r.s / r.n
+            ) / 1000.0
+        all_cents = [
+            [
+                (c, [dims[d] for d in sorted(dims)])
+                for c, dims in sorted(by_space.get(s_idx, {}).items())
             ]
-        return all_cents
-    finally:
-        v.unpersist()
+            for s_idx in range(len(resolved))
+        ]
+    return all_cents
 
 
 def ivf_topk(
@@ -1048,6 +1044,8 @@ def ivf_pq_topk(
     Precondition: ``vec_id`` is unique in ``emb`` (same unchecked
     contract as :func:`ivf_topk`: the candidate join has no pair
     dedup)."""
+    if ksub < 1:  # before the probe job below, not inside multi_kmeans
+        raise ValueError(f"ivf_pq_topk requires ksub >= 1, got {ksub}")
     if n_centroids is None:
         # ONE metadata job for (n, dim) — the count must scan anyway,
         # so the dim probe rides it for free (r14: was a separate

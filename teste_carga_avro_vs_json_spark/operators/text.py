@@ -279,14 +279,20 @@ def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic quality scoring (length / mean-word-length / stopword
     ratio) — the standard cheap pre-filter for LLM corpora. All ratios
     derive from exact int counts, so the doubles are oracle-stable."""
+    return _with_quality(docs.select("doc_id", "text")).drop("text")
+
+
+def _with_quality(docs: DataFrame) -> DataFrame:
+    """``docs`` plus :func:`quality_score`'s columns — the one scoring
+    the operator and the corpus build's quality gate both filter on."""
     en = _MARKERS["en"]
     staged = docs.select(
-        "doc_id",
+        "*",
         F.expr("CAST(length(text) AS BIGINT)").alias("chars"),
         tokens("text").alias("toks"),
     )
     scored = staged.select(
-        "doc_id",
+        *docs.columns,
         "chars",
         F.expr("CAST(size(toks) AS BIGINT)").alias("words"),
         F.expr(
@@ -294,7 +300,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
         ).alias("stopwords"),
     )
     return scored.select(
-        "doc_id",
+        *docs.columns,
         "chars",
         "words",
         *_quality_cols("chars", "words", "stopwords"),

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark.operators import (
@@ -45,20 +45,19 @@ class _Ledger:
     measured on sf0.1, the SAME neardup stage costs 3.4 s behind a
     checkpoint boundary and 51 s behind five nested cached joins
     (Catalyst/AQE re-planning grows ~3-4x per extra join in the
-    lineage of a composite operator; see SCALE.md). On a real cluster
-    prefer ``checkpoint`` to a DFS dir for fault tolerance — same
-    note as the label-propagation loop in dedup.neardup_clusters.
+    lineage of a composite operator; see SCALE.md, which also holds
+    the local-checkpoint rule and its fault-tolerance trade-off).
 
-    The checkpoint is lazy and the row count is the action that fills
-    it — one job per stage, the pattern neardup_clusters uses (an eager
-    checkpoint followed by a count runs two)."""
+    One job per stage: the row count is an ``Observation`` on the
+    eager checkpoint's own job, not a ``count()`` job of its own."""
 
     def __init__(self) -> None:
         self.stats: list[dict] = []
 
     def stage(self, name: str, frame: DataFrame, t0: float) -> DataFrame:
-        frame = frame.localCheckpoint(eager=False)
-        n = frame.count()
+        rows = Observation()
+        frame = frame.observe(rows, F.expr("count(1) AS n")).localCheckpoint()
+        n = rows.get["n"]
         prev_rows = next(
             (s["rows"] for s in reversed(self.stats)
              if s.get("rows") is not None),
@@ -103,35 +102,6 @@ def build_training_corpus(
     packing plan over the surviving cleaned text plus the per-stage
     ledger [{stage, rows, sec}, ...]."""
     led = _Ledger()
-    cur = _clean_stages(
-        docs,
-        test,
-        led,
-        keep_frac=keep_frac,
-        min_quality=min_quality,
-        exact_substr_min_len=exact_substr_min_len,
-        line_filter=line_filter,
-    )
-
-    # 10. Sequence packing (the training-ready plan)
-    t0 = time.perf_counter()
-    packed = corpus.pack_sequences(cur, seq_len=seq_len)
-    packed = led.stage("pack_sequences", packed, t0)
-    return packed, led.stats
-
-
-def _clean_stages(
-    docs: DataFrame,
-    test: DataFrame | None,
-    led: "_Ledger",
-    *,
-    keep_frac: float,
-    min_quality: float,
-    exact_substr_min_len: int,
-    line_filter: bool,
-) -> DataFrame:
-    """Stages 1-9 of the published recipe (everything except packing)
-    for :func:`build_training_corpus`."""
     t0 = time.perf_counter()
     cur = led.stage("input", docs.select("doc_id", "text"), t0)
 
@@ -163,25 +133,22 @@ def _clean_stages(
     else:
         led.skip("c4_line_filter", "line_filter=False")
 
-    # 3. Page-level blocklist (C4 §2.2's content gate)
+    # 3. Page-level blocklist (C4 §2.2's content gate). Row-local, like
+    # the quality floor: both filter the stage input in place.
     t0 = time.perf_counter()
-    keep_ids = corpus.blocklist_filter(cur).where("keep").select("doc_id")
     cur = led.stage(
         "blocklist",
-        cur.join(keep_ids, "doc_id", "left_semi"),
+        cur.where(F.size(corpus._block_hits(F.col("text"))) == 0),
         t0,
     )
 
     # 4. Heuristic quality floor (cheap pre-filter before the LM gate)
     t0 = time.perf_counter()
-    q_ids = (
-        text_ops.quality_score(cur)
-        .where(F.col("quality") >= F.lit(min_quality))
-        .select("doc_id")
-    )
     cur = led.stage(
         "quality",
-        cur.join(q_ids, "doc_id", "left_semi"),
+        text_ops._with_quality(cur)
+        .where(F.col("quality") >= F.lit(min_quality))
+        .select("doc_id", "text"),
         t0,
     )
 
@@ -199,7 +166,6 @@ def _clean_stages(
         cur.join(ppl_ids, "doc_id", "left_semi"),
         t0,
     )
-    model[0].unpersist()  # the stage is checkpointed
 
     # 6. Exact dedup (hash-agg keyed on text; min doc_id survives)
     t0 = time.perf_counter()
@@ -255,4 +221,8 @@ def _clean_stages(
     else:
         led.skip("decontaminate", "no test set supplied")
 
-    return cur
+    # 10. Sequence packing (the training-ready plan)
+    t0 = time.perf_counter()
+    packed = corpus.pack_sequences(cur, seq_len=seq_len)
+    packed = led.stage("pack_sequences", packed, t0)
+    return packed, led.stats

@@ -379,6 +379,26 @@ def zstd_decompress(data: bytes, max_size: int = 1 << 30) -> bytes:
     return bytes(out)
 
 
+# -------------------------------------------------------------- gzip
+def gzip_decompress(data: bytes, max_size: int = 1 << 30) -> bytes:
+    """gzip via zlib, member after member like ``gzip.decompress``;
+    ``max_length`` stops each inflate one byte past the cap, so a
+    deflate bomb raises before its output outgrows the cap."""
+    out = bytearray()
+    try:
+        while data:
+            member = zlib.decompressobj(16 + zlib.MAX_WBITS)
+            out += member.decompress(data, max_size + 1 - len(out))
+            if len(out) > max_size:
+                raise ValueError("gzip decompressed size exceeds cap")
+            if not member.eof:
+                raise ValueError("truncated gzip member")
+            data = member.unused_data.lstrip(b"\0")
+    except zlib.error as e:
+        raise ValueError(f"corrupt gzip payload: {e}") from e
+    return bytes(out)
+
+
 # ------------------------------------------------- Kafka codec registry
 # attributes bits 0-2 of a v2 record batch -> (compress, decompress)
 KAFKA_CODECS: dict[int, str] = {0: "none", 1: "gzip", 2: "snappy", 3: "lz4", 4: "zstd"}
@@ -399,10 +419,7 @@ def compress(codec: str, data: bytes) -> bytes:
 
 def decompress(codec: str, data: bytes) -> bytes:
     if codec == "gzip":
-        try:
-            return gzip.decompress(data)
-        except (OSError, EOFError, zlib.error) as e:
-            raise ValueError(f"corrupt gzip payload: {e}") from e
+        return gzip_decompress(data)
     if codec == "snappy":
         return snappy_xerial_decompress(data)
     if codec == "lz4":

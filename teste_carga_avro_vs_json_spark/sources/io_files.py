@@ -181,8 +181,7 @@ def write_avro_ocf(
 
     manifest = enc.mapInPandas(
         _write, "file string, particao int, n_records long, n_bytes long"
-    ).cache()
-    manifest.count()  # materialize: files hit disk exactly once
+    ).localCheckpoint()  # eager: files hit disk exactly once
     return manifest
 
 

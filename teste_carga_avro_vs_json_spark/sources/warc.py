@@ -383,8 +383,7 @@ def write_warc(
 
     manifest = enc.mapInPandas(
         _write, "file string, n_records long, n_bytes long"
-    ).cache()
-    manifest.count()  # materialize: files hit disk exactly once
+    ).localCheckpoint()  # eager: files hit disk exactly once
     return manifest
 
 

@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 from teste_carga_avro_vs_json_spark.session import get_spark
@@ -12,6 +14,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def jobs_run(spark):
+    """``jobs_run(fn)``: how many jobs the status tracker saw while
+    ``fn()`` ran."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # Two-tier gate (r8 VERDICT order #5): the full suite is ~580 s and
@@ -47,6 +69,7 @@ _SLOW_MODULES = {
     "test_kafka_groups",
     "test_kafka_rebalance",
     "test_bench_lanes",
+    "test_cache_release",
 }
 
 

@@ -8,6 +8,7 @@ private dialect. Reference parity: ConfiguracaoKafka.java:112-118
 
 from __future__ import annotations
 
+import gzip
 import os
 import random
 import struct
@@ -127,6 +128,8 @@ def test_hostile_input_is_valueerror_not_crash():
         C.lz4_frame_decompress(
             C.lz4_frame_compress(b"z" * 100_000), max_size=1000
         )
+    with pytest.raises(ValueError, match="exceeds cap"):
+        C.gzip_decompress(gzip.compress(b"z" * 100_000), max_size=1000)
 
 
 def test_lz4_frame_optional_fields():

@@ -11,7 +11,6 @@ join, refine fetches ids-first via broadcast."""
 import re
 
 import numpy as np
-from pyspark import StorageLevel
 import pyspark.sql.functions as F
 import pytest
 
@@ -343,21 +342,6 @@ def test_null_embedding_adds_nothing_to_kmeans(spark, emb, emb_nulls):
     )
 
 
-@pytest.fixture
-def persisted(spark, monkeypatch):
-    """Every frame persisted during the test (DataFrame.persist spy)."""
-    frames = []
-    cls = type(spark.range(1))  # the concrete (classic) DataFrame class
-    real = cls.persist
-
-    def spy(self, *args, **kwargs):
-        frames.append(self)
-        return real(self, *args, **kwargs)
-
-    monkeypatch.setattr(cls, "persist", spy)
-    return frames
-
-
 @pytest.mark.parametrize(
     "train",
     [
@@ -366,10 +350,10 @@ def persisted(spark, monkeypatch):
     ],
     ids=["ivf_centroids", "multi_kmeans"],
 )
-def test_kmeans_unpersists_training_frame_when_a_job_fails(spark, persisted, train):
-    """The training frame is persisted before the first Lloyd job; a job
-    that then fails must not leave it cached for the rest of the
-    session."""
+def test_kmeans_unpersists_training_frame_when_a_job_fails(spark, train):
+    """A training job that fails leaves nothing in the session's cache
+    for the rest of the session."""
+    spark.catalog.clearCache()
     failing = spark.range(8).select(
         F.col("id").alias("vec_id"),
         F.when(F.col("id") >= 0, F.raise_error(F.lit("boom")))
@@ -378,8 +362,7 @@ def test_kmeans_unpersists_training_frame_when_a_job_fails(spark, persisted, tra
     )
     with pytest.raises(Exception, match="boom"):
         train(failing)
-    assert persisted
-    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 @pytest.mark.parametrize(
@@ -391,14 +374,18 @@ def test_kmeans_unpersists_training_frame_when_a_job_fails(spark, persisted, tra
     ],
     ids=["ivf_centroids", "multi_kmeans", "ivf_pq_topk"],
 )
-def test_kmeans_rejects_empty_space_on_driver(spark, persisted, train):
-    """k < 1 in any space is a driver-side ValueError raised before the
-    training frame is persisted, not an IndexError inside the executor
-    UDF."""
+def test_kmeans_rejects_empty_space_on_driver(spark, jobs_run, train):
+    """k < 1 in any space is a driver-side ValueError raised before any
+    job runs, not an IndexError inside the executor UDF."""
+    spark.catalog.clearCache()
     tiny = spark.createDataFrame(
         [(i, [float(i + j) for j in range(8)]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
-    with pytest.raises(ValueError, match="at least one centroid|>= 1"):
-        train(tiny)
-    assert not persisted
+
+    def train_tiny():
+        with pytest.raises(ValueError, match="at least one centroid|>= 1"):
+            train(tiny)
+
+    assert jobs_run(train_tiny) == 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -106,9 +106,9 @@ def test_packing_plan_is_contiguous(spark, sf_dir):
 
 
 def test_build_releases_its_cached_frames(spark, sf_dir):
-    """The near-dup candidate caches and the bigram model are released
-    once their stages are checkpointed: a build leaves the session's
-    cache as empty as it found it."""
+    """The near-dup candidate caches are released once their stage is
+    checkpointed, and nothing else is cached: a build leaves the
+    session's cache as empty as it found it."""
     spark.catalog.clearCache()
     pipelines.build_training_corpus(
         _docs(spark, sf_dir, 120), None, seq_len=256, line_filter=False

@@ -3,7 +3,9 @@
 Runs every registry query on Spark and its oracle on DuckDB at the
 given sf dir, compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted by
-their stringified tuple). Usage:
+their stringified tuple). The last lines report how many entries the
+queries left in the session's CacheManager, then the failure count.
+Usage:
 
     python tools/check_correctness.py [sf_dir] [query ...]
 """
@@ -120,6 +122,8 @@ def main() -> int:
                         break
         else:
             print(f"ok   {name}: {len(srows)} rows  ({dt:.1f}s)")
+    cached = spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
+    print("cache entries left:", cached)
     print("failures:", failures)
     return 1 if failures else 0
 
