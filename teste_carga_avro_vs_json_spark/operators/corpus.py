@@ -54,12 +54,33 @@ from teste_carga_avro_vs_json_spark.functions.portable import hex32, hex32_sql, 
 from teste_carga_avro_vs_json_spark.operators import dedup
 from teste_carga_avro_vs_json_spark.operators.text import (
     _MARKERS,
-    _marker_count,
+    _lang_pred_sql,
+    _lang_pred_sx,
     _marker_count_sx,
+    _marker_scores_sql,
+    _quality_sum_sql,
+    _quality_sum_sx,
     tokens,
     tokens_sql,
     tokens_sx,
 )
+
+
+def _scored(staged: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` plus the scoring inputs, as exact longs, over
+    ``staged``'s ``chars`` and ``toks`` columns: ``words`` and one
+    ``s_{lang}`` stopword-marker count per language."""
+    return staged.select(
+        *keep,
+        "chars",
+        F.expr("CAST(size(toks) AS BIGINT)").alias("words"),
+        *[
+            F.expr(
+                f"CAST({_marker_count_sx('toks', ws)} AS BIGINT)"
+            ).alias(f"s_{code}")
+            for code, ws in _MARKERS.items()
+        ],
+    )
 
 
 def gated_unique(
@@ -76,18 +97,7 @@ def gated_unique(
         F.expr("CAST(length(text) AS BIGINT)").alias("chars"),
         tokens("text").alias("toks"),
     )
-    scored = staged.select(
-        "doc_id",
-        "text",
-        "chars",
-        F.expr("CAST(size(toks) AS BIGINT)").alias("words"),
-        *[
-            F.expr(
-                f"CAST({_marker_count_sx('toks', ws)} AS BIGINT)"
-            ).alias(f"s_{code}")
-            for code, ws in _MARKERS.items()
-        ],
-    )
+    scored = _scored(staged, "doc_id", "text")
     # Exact dedup as a hash agg keyed on the text ITSELF (semantically
     # the md5(text) grouping the oracle uses, minus the hash collision):
     # text must ride the shuffle anyway for the near-dup stage, and
@@ -106,22 +116,11 @@ def gated_unique(
         F.min("words").alias("words"),
         *[F.min(f"s_{code}").alias(f"s_{code}") for code in _MARKERS],
     )
-    wnz = "greatest(words, 1)"
-    quality = (
-        "(CASE WHEN (words >= 20) AND (words <= 2000) "
-        "THEN 0.5D ELSE 0.0D END"
-        " + CASE WHEN s_en > 0 THEN 0.3D ELSE 0.0D END"
-        f" + CASE WHEN ((chars / {wnz}) >= 3) AND ((chars / {wnz}) <= 12) "
-        "THEN 0.2D ELSE 0.0D END)"
-    )
-    best = "greatest(" + ", ".join(f"s_{code}" for code in _MARKERS) + ")"
-    pred = f"CASE WHEN {best} <= 0 THEN 'und' "
-    for code in sorted(_MARKERS):  # alphabetical tiebreak, same as lang_id
-        pred += f"WHEN s_{code} = {best} THEN '{code}' "
-    pred += "END"
     return (
-        grouped.withColumn("quality", F.expr(quality))
-        .withColumn("lang_pred", F.expr(pred))
+        grouped.withColumn(
+            "quality", F.expr(_quality_sum_sx("chars", "words", "s_en"))
+        )
+        .withColumn("lang_pred", F.expr(_lang_pred_sx()))
         .filter((F.col("quality") >= min_quality) & (F.col("lang_pred") == lang))
         .select("doc_id", "text", "words", "quality")
     )
@@ -176,38 +175,14 @@ def corpus_report(docs: DataFrame) -> DataFrame:
         F.length("text").cast("long").alias("chars"),
         tokens("text").alias("toks"),
     )
-    scored = staged.select(
-        "source",
-        "lang",
-        "fp",
-        "chars",
-        F.size("toks").cast("long").alias("words"),
-        *[
-            _marker_count(F.col("toks"), ws).cast("long").alias(f"s_{code}")
-            for code, ws in _MARKERS.items()
-        ],
-    )
-    words_nz = F.greatest(F.col("words"), F.lit(1))
-    quality = (
-        F.when(
-            (F.col("words") >= 20) & (F.col("words") <= 2000), F.lit(0.5)
-        ).otherwise(F.lit(0.0))
-        + F.when(F.col("s_en") > 0, F.lit(0.3)).otherwise(F.lit(0.0))
-        + F.when(
-            (F.col("chars") / words_nz >= 3) & (F.col("chars") / words_nz <= 12),
-            F.lit(0.2),
-        ).otherwise(F.lit(0.0))
-    )
-    best = F.greatest(*[F.col(f"s_{code}") for code in _MARKERS])
-    pred = F.when(best <= 0, F.lit("und"))
-    for code in sorted(_MARKERS):
-        pred = pred.when(F.col(f"s_{code}") == best, F.lit(code))
+    scored = _scored(staged, "source", "lang", "fp")
+    quality = _quality_sum_sx("chars", "words", "s_en")
     per_doc = scored.select(
         "source",
         "fp",
         "words",
-        F.round(quality * 10).cast("long").alias("q10"),
-        (pred == F.col("lang")).cast("long").alias("lang_ok"),
+        F.expr(f"CAST(round({quality} * 10) AS BIGINT)").alias("q10"),
+        F.expr(f"CAST(({_lang_pred_sx()}) = lang AS BIGINT)").alias("lang_ok"),
     )
     n = F.count(F.lit(1))
     return (
@@ -232,36 +207,20 @@ def corpus_report(docs: DataFrame) -> DataFrame:
 
 def corpus_report_sql(table: str = "documents") -> str:
     toks = tokens_sql("text")
-    score_cols = ",\n                   ".join(
-        f"len(list_filter({toks}, t -> list_contains("
-        + "["
-        + ", ".join(f"'{w}'" for w in ws)
-        + "], lower(t))))::BIGINT AS s_"
-        + code
-        for code, ws in _MARKERS.items()
-    )
-    best = "GREATEST(" + ", ".join(f"s_{c}" for c in _MARKERS) + ")"
-    pred = f"CASE WHEN {best} <= 0 THEN 'und' "
-    for code in sorted(_MARKERS):
-        pred += f"WHEN s_{code} = {best} THEN '{code}' "
-    pred += "END"
+    quality = _quality_sum_sql("chars", "words", "s_en")
     return f"""
         WITH scored AS (
             SELECT doc_id, source, lang, md5(text) AS fp,
                    length(text)::BIGINT AS chars,
                    len({toks})::BIGINT AS words,
-                   {score_cols}
+                   {_marker_scores_sql(toks)}
             FROM {table}
         ),
         per_doc AS (
             SELECT source, fp, words,
-                   ROUND((CASE WHEN words BETWEEN 20 AND 2000
-                               THEN 0.5 ELSE 0.0 END
-                          + CASE WHEN s_en > 0 THEN 0.3 ELSE 0.0 END
-                          + CASE WHEN chars / GREATEST(words, 1)
-                                 BETWEEN 3 AND 12 THEN 0.2 ELSE 0.0 END
-                         ) * 10)::BIGINT AS q10,
-                   CASE WHEN {pred} = lang THEN 1 ELSE 0 END AS lang_ok
+                   ROUND({quality} * 10)::BIGINT AS q10,
+                   CASE WHEN {_lang_pred_sql()} = lang THEN 1 ELSE 0 END
+                       AS lang_ok
             FROM scored
         )
         SELECT source,
@@ -613,19 +572,7 @@ def corpus_clean_sql(
     """DuckDB twin: same gates, same window dedup; the near-dup stage
     embeds the recursive-CTE closure over the deduped survivor set."""
     toks = tokens_sql("text")
-    score_cols = ",\n                   ".join(
-        f"len(list_filter({toks}, t -> list_contains("
-        + "["
-        + ", ".join(f"'{w}'" for w in ws)
-        + "], lower(t))))::BIGINT AS s_"
-        + code
-        for code, ws in _MARKERS.items()
-    )
-    best = "GREATEST(" + ", ".join(f"s_{c}" for c in _MARKERS) + ")"
-    pred = f"CASE WHEN {best} <= 0 THEN 'und' "
-    for code in sorted(_MARKERS):
-        pred += f"WHEN s_{code} = {best} THEN '{code}' "
-    pred += "END"
+    quality = _quality_sum_sql("chars", "words", "s_en")
     closure = dedup.neardup_clusters_sql(
         table="(SELECT doc_id, text FROM uniq)", threshold=neardup_threshold
     )
@@ -634,16 +581,13 @@ def corpus_clean_sql(
             SELECT doc_id, text,
                    length(text)::BIGINT AS chars,
                    len({toks})::BIGINT AS words,
-                   {score_cols}
+                   {_marker_scores_sql(toks)}
             FROM {table}
         ),
         gated AS (
             SELECT doc_id, text, words,
-                   (CASE WHEN words BETWEEN 20 AND 2000 THEN 0.5 ELSE 0.0 END
-                    + CASE WHEN s_en > 0 THEN 0.3 ELSE 0.0 END
-                    + CASE WHEN chars / GREATEST(words, 1) BETWEEN 3 AND 12
-                           THEN 0.2 ELSE 0.0 END)::DOUBLE AS quality,
-                   {pred} AS lang_pred
+                   {quality}::DOUBLE AS quality,
+                   {_lang_pred_sql()} AS lang_pred
             FROM scored
         ),
         kept AS (

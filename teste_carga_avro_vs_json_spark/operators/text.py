@@ -179,14 +179,17 @@ _MARKERS: dict[str, list[str]] = {
 
 
 def _marker_count_sx(toks: str, words: list[str]) -> str:
-    """Spark-SQL twin of :func:`_marker_count` (see tokens_sx note)."""
+    """How many tokens of the ``toks`` array fragment are, lowercased,
+    one of ``words`` — the stopword-evidence count every scorer shares
+    (Spark SQL, see tokens_sx note)."""
     arr = "array(" + ",".join(f"'{w}'" for w in words) + ")"
     return f"size(filter({toks}, t -> array_contains({arr}, lower(t))))"
 
 
-def _marker_count(toks: Column, words: list[str]) -> Column:
-    arr = F.array(*[F.lit(w) for w in words])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
+def _marker_count_sql(toks: str, words: list[str]) -> str:
+    """DuckDB twin of :func:`_marker_count_sx`."""
+    arr = "[" + ", ".join(f"'{w}'" for w in words) + "]"
+    return f"len(list_filter({toks}, t -> list_contains({arr}, lower(t))))"
 
 
 def _marker_score_cols() -> list[Column]:
@@ -198,16 +201,34 @@ def _marker_score_cols() -> list[Column]:
     ]
 
 
+def _marker_scores_sql(toks: str) -> str:
+    """DuckDB twin of :func:`_marker_score_cols` over a token-list
+    fragment: comma-separated ``s_{lang}`` BIGINT select items."""
+    return ", ".join(
+        f"{_marker_count_sql(toks, ws)}::BIGINT AS s_{lang}"
+        for lang, ws in _MARKERS.items()
+    )
+
+
 _BEST_SX = "greatest(" + ", ".join(f"s_{lang}" for lang in _MARKERS) + ")"
+_BEST_SQL = "GREATEST(" + ", ".join(f"s_{lang}" for lang in _MARKERS) + ")"
 
 
-def _lang_pred_sx(best: str = _BEST_SX) -> str:
+def _lang_pred_sx() -> str:
     """Argmax language from the ``s_{lang}`` columns as Spark SQL: 'und'
     on zero evidence, alphabetical tiebreak (first max wins) — fully
     deterministic for the oracle."""
-    case = f"CASE WHEN {best} <= 0 THEN 'und' "
+    case = f"CASE WHEN {_BEST_SX} <= 0 THEN 'und' "
     for lang in sorted(_MARKERS):
-        case += f"WHEN s_{lang} = {best} THEN '{lang}' "
+        case += f"WHEN s_{lang} = {_BEST_SX} THEN '{lang}' "
+    return case + "END"
+
+
+def _lang_pred_sql() -> str:
+    """DuckDB twin of :func:`_lang_pred_sx`."""
+    case = f"CASE WHEN {_BEST_SQL} <= 0 THEN 'und' "
+    for lang in sorted(_MARKERS):
+        case += f"WHEN s_{lang} = {_BEST_SQL} THEN '{lang}' "
     return case + "END"
 
 
@@ -225,53 +246,56 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 
 def lang_id_sql(table: str = "documents") -> str:
-    score_exprs = []
-    for lang, ws in _MARKERS.items():
-        arr = "[" + ", ".join(f"'{w}'" for w in ws) + "]"
-        score_exprs.append(
-            f"len(list_filter({tokens_sql('text')}, t -> list_contains({arr}, lower(t)))) AS s_{lang}"
-        )
-    scores = ",\n               ".join(score_exprs)
-    best = "GREATEST(" + ", ".join(f"s_{lang}" for lang in _MARKERS) + ")"
-    case = "CASE WHEN " + best + " <= 0 THEN 'und' "
-    for lang in sorted(_MARKERS):
-        case += f"WHEN s_{lang} = {best} THEN '{lang}' "
-    case += "END"
     return f"""
         WITH scored AS (
-            SELECT doc_id, lang,
-               {scores}
+            SELECT doc_id, lang, {_marker_scores_sql(tokens_sql("text"))}
             FROM {table}
         )
-        SELECT doc_id, lang AS lang_labeled, {case} AS lang_pred,
-               {best}::INT AS marker_hits
+        SELECT doc_id, lang AS lang_labeled, {_lang_pred_sql()} AS lang_pred,
+               {_BEST_SQL}::INT AS marker_hits
         FROM scored
     """
 
 
 # -------------------------------------------------------- quality score
-def _quality_cols(
-    chars: str, words: str, stopwords: str
-) -> list[Column]:
-    """The quality-score output expressions over exact long counts
-    (shared by quality_score and doc_profile — one definition, zero
-    drift between the standalone and fused formulations). In-range
-    indicator components: docs of 20..2000 words with some stopword
-    evidence score higher. Inputs are Spark-SQL fragments (see
-    tokens_sx note); double literals carry the D suffix so the parser
-    never types them DECIMAL."""
+def _quality_sum_sx(chars: str, words: str, stopwords: str) -> str:
+    """The quality score over exact long counts as Spark SQL: 0.5 for
+    20..2000 words, 0.3 for any stopword evidence, 0.2 for a mean word
+    length of 3..12 chars, summed in that order (the one definition
+    every scorer and gate uses). Double literals carry the D suffix so
+    the parser never types them DECIMAL."""
     wnz = f"greatest({words}, 1)"
-    quality = (
+    return (
         f"(CASE WHEN ({words} >= 20) AND ({words} <= 2000) "
         "THEN 0.5D ELSE 0.0D END"
         f" + CASE WHEN {stopwords} > 0 THEN 0.3D ELSE 0.0D END"
         f" + CASE WHEN (({chars} / {wnz}) >= 3) AND (({chars} / {wnz}) <= 12) "
         "THEN 0.2D ELSE 0.0D END)"
     )
+
+
+def _quality_sum_sql(chars: str, words: str, stopwords: str) -> str:
+    """DuckDB twin of :func:`_quality_sum_sx` (DECIMAL literals: callers
+    cast the sum)."""
+    return (
+        f"(CASE WHEN {words} BETWEEN 20 AND 2000 THEN 0.5 ELSE 0.0 END"
+        f" + CASE WHEN {stopwords} > 0 THEN 0.3 ELSE 0.0 END"
+        f" + CASE WHEN {chars} / GREATEST({words}, 1) BETWEEN 3 AND 12"
+        " THEN 0.2 ELSE 0.0 END)"
+    )
+
+
+def _quality_cols(
+    chars: str, words: str, stopwords: str
+) -> list[Column]:
+    """The quality-score output expressions over exact long counts
+    (shared by quality_score and doc_profile). Inputs are Spark-SQL
+    fragments (see tokens_sx note)."""
+    wnz = f"greatest({words}, 1)"
     return [
         F.expr(f"{chars} / {wnz}").alias("mean_word_len"),
         F.expr(f"{stopwords} / {wnz}").alias("stopword_ratio"),
-        F.expr(quality).alias("quality"),
+        F.expr(_quality_sum_sx(chars, words, stopwords)).alias("quality"),
     ]
 
 
@@ -308,23 +332,19 @@ def _with_quality(docs: DataFrame) -> DataFrame:
 
 
 def quality_score_sql(table: str = "documents") -> str:
-    en = "[" + ", ".join(f"'{w}'" for w in _MARKERS["en"]) + "]"
+    toks = tokens_sql("text")
     return f"""
         WITH scored AS (
             SELECT doc_id,
                    length(text)::BIGINT AS chars,
-                   len({tokens_sql("text")})::BIGINT AS words,
-                   len(list_filter({tokens_sql("text")},
-                       t -> list_contains({en}, lower(t))))::BIGINT AS stopwords
+                   len({toks})::BIGINT AS words,
+                   {_marker_count_sql(toks, _MARKERS["en"])}::BIGINT AS stopwords
             FROM {table}
         )
         SELECT doc_id, chars, words,
                chars / GREATEST(words, 1) AS mean_word_len,
                stopwords / GREATEST(words, 1) AS stopword_ratio,
-               (CASE WHEN words BETWEEN 20 AND 2000 THEN 0.5 ELSE 0.0 END
-                + CASE WHEN stopwords > 0 THEN 0.3 ELSE 0.0 END
-                + CASE WHEN chars / GREATEST(words, 1) BETWEEN 3 AND 12
-                       THEN 0.2 ELSE 0.0 END)::DOUBLE AS quality
+               {_quality_sum_sql("chars", "words", "stopwords")}::DOUBLE AS quality
         FROM scored
     """
 

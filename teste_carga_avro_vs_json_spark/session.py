@@ -57,6 +57,10 @@ _BUILD_CONFS = {
     "spark.driver.memory": "8g",
     # the [Stage N:==>] bars overwrite the result lines the tools print
     "spark.ui.showConsoleProgress": "false",
+    # generated-class cache (static; Spark default 100): one llm_data
+    # round compiles ~320 classes, so at 100 every warm round recompiles
+    # most of them
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

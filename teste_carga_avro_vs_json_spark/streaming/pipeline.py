@@ -186,13 +186,23 @@ def run_bounded(
     for q in spark.streams.active:
         if q.name == query_name:
             q.stop()
-    query = (
-        sdf.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
+    # A stateful query pins its state-store partition count at first
+    # start, and AQE never coalesces it: this always-fresh query runs one
+    # partition per task slot, not the batch session's 32. start() clones
+    # the session conf, so the batch value comes back right after.
+    key = "spark.sql.shuffle.partitions"
+    batch_partitions = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        query = (
+            sdf.writeStream.format("memory")
+            .queryName(query_name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, batch_partitions)
     query.awaitTermination(timeout_s)
     query.stop()
     return spark.table(query_name)

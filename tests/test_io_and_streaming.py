@@ -259,6 +259,59 @@ def test_windowed_metrics_stream_equals_batch(spark, sf_dir):
     assert {tuple(r) for r in stream.collect()} == batch
 
 
+def test_run_bounded_stream_state_partitions_follow_host(spark, sf_dir):
+    """A stateful query pins its state-store partition count at first
+    start and AQE never coalesces it, so run_bounded starts its query
+    with one shuffle partition per task slot; the session keeps its
+    batch value."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from teste_carga_avro_vs_json_spark.streaming import eventos_stream, run_bounded
+    from teste_carga_avro_vs_json_spark.streaming.pipeline import (
+        metricas_stream_janela,
+    )
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            super().__init__()
+            self.seen = []
+
+        def onQueryStarted(self, event):  # noqa: N802
+            pass
+
+        def onQueryProgress(self, event):  # noqa: N802
+            if event.progress.name == "t_state_partitions":
+                self.seen.append(event.progress)
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            pass
+
+    key = "spark.sql.shuffle.partitions"
+    batch_partitions = spark.conf.get(key)
+    listener = Progress()
+    spark.streams.addListener(listener)
+    try:
+        run_bounded(
+            metricas_stream_janela(
+                eventos_stream(spark, sf_dir), janela_s=60, watermark_s=None
+            ),
+            query_name="t_state_partitions",
+        )
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.seen, "no progress event for the query"
+    last = listener.seen[-1]
+    assert last.stateOperators
+    assert {op.numShufflePartitions for op in last.stateOperators} == {
+        spark.sparkContext.defaultParallelism
+    }
+    assert spark.conf.get(key) == batch_partitions
+
+
 def test_stateful_sequence_audit(spark, tmp_path):
     """applyInPandasWithState gap detector: drop known sequences from a
     routed wire dataset; the audit must count exactly those holes."""

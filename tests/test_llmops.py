@@ -1,6 +1,10 @@
 """LLM-pipeline operators: dedup tiers, similarity, text analysis,
 multimodal plumbing."""
 
+import math
+import os
+
+import pytest
 import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark.session import load_table
@@ -853,6 +857,55 @@ def test_doc_profile_matches_components(spark, sf_dir):
             qs[d].stopword_ratio, qs[d].quality,
         )
         assert (r.fp, r.norm_len) == (fp[d].fp, fp[d].norm_len)
+
+
+@pytest.mark.parametrize("op", ["gated_unique", "corpus_report"])
+def test_corpus_scores_match_text_operators(spark, sf_dir, op):
+    """corpus.py's fused scorers take the quality sum, the stopword-marker
+    counts and the language argmax from text.py's builders, so on the
+    sf0.1 documents they agree exactly with ``text.quality_score`` and
+    ``text.lang_id``: per doc for gated_unique's ``quality`` and its
+    ``lang_pred`` gate (every predicted language, and the default
+    gate), per source for corpus_report's ``mean_quality`` and
+    ``lang_purity``."""
+    docs = _docs(spark, os.path.join(os.path.dirname(sf_dir), "sf0.1"))
+    q = {r.doc_id: r.quality for r in text.quality_score(docs).collect()}
+    li = {r.doc_id: r for r in text.lang_id(docs).collect()}
+    rows = docs.select("doc_id", "text", "source").collect()
+    assert q.keys() == li.keys() == {r.doc_id for r in rows}
+    if op == "gated_unique":
+        survivor = {}
+        for r in rows:
+            survivor[r.text] = min(survivor.get(r.text, r.doc_id), r.doc_id)
+        langs = sorted({r.lang_pred for r in li.values()})
+        assert "en" in langs
+        for lang in langs:
+            got = {
+                r.doc_id: r.quality
+                for r in corpus.gated_unique(docs, lang, 0.0).collect()
+            }
+            want = {
+                d: q[d] for d in survivor.values() if li[d].lang_pred == lang
+            }
+            assert got == want, lang
+        kept = {r.doc_id for r in corpus.gated_unique(docs).collect()}
+        assert kept == {
+            d for d in survivor.values()
+            if li[d].lang_pred == "en" and q[d] >= 0.5
+        }
+    else:
+        by_source = {}
+        for r in rows:
+            by_source.setdefault(r.source, []).append(r.doc_id)
+        rep = {r.source: r for r in corpus.corpus_report(docs).collect()}
+        assert rep.keys() == by_source.keys()
+        for src, ids in by_source.items():
+            n = float(len(ids))
+            # round(q * 10) is HALF_UP in Spark, q >= 0
+            q10 = sum(math.floor(q[d] * 10 + 0.5) for d in ids)
+            ok = sum(li[d].lang_pred == li[d].lang_labeled for d in ids)
+            assert rep[src].mean_quality == q10 / (10.0 * n), src
+            assert rep[src].lang_purity == ok / n, src
 
 
 def test_media_pipeline_resize_then_features(spark, sf_dir):

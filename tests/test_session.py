@@ -152,3 +152,10 @@ def test_console_progress_off(spark):
     overwrite the result lines the gate tools print."""
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.ui.showConsoleProgress") == "false"
+
+
+def test_codegen_cache_holds_a_round(spark):
+    """The session builder sizes Spark's static generated-class cache
+    above one llm_data round (~320 classes) so a warm round does not
+    recompile; Spark's default is 100."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1024"
