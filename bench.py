@@ -52,7 +52,6 @@ DIAGNOSTIC = frozenset({
     "bm25_topk",
     "phash_neardup",
     "warc_ingest",
-    "pdf_ingest",
     "url_dedup",
     "ivf_pq_topk",
 })
@@ -286,24 +285,6 @@ def lanes(spark, sf_dir: str, cpus: int) -> dict:
         finally:
             _sh.rmtree(path, ignore_errors=True)
 
-    def w_pdf_ingest():
-        # diagnostic lane (r9, not in headline_total): the PDF ingest
-        # loop — synth deterministic PDFs (Flate content streams) →
-        # extract text agg. Build+parse both Arrow py-lanes, the
-        # dominant cost of a PDF-heavy crawl shard.
-        from teste_carga_avro_vs_json_spark.operators import pdf_extract
-
-        run(
-            pdf_extract.extract_text_pdf(
-                pdf_extract.synth_pdf(docs_df())
-            ).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.length("text")).alias("b"),
-                F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0))
-                .alias("errs"),
-            )
-        )
-
     def w_url_dedup():
         # diagnostic lane (r8-late, not in headline_total): URL
         # canonicalization + dedup — pure JVM regex chain + the
@@ -387,7 +368,6 @@ def lanes(spark, sf_dir: str, cpus: int) -> dict:
         "bm25_topk": w_bm25,
         "phash_neardup": w_phash_neardup,
         "warc_ingest": w_warc_ingest,
-        "pdf_ingest": w_pdf_ingest,
         "url_dedup": w_url_dedup,
         "pii_scrub": w_pii_scrub,
         "intra_doc_dedup": w_intra_doc_dedup,

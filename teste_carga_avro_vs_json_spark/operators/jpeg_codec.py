@@ -550,7 +550,7 @@ def encode_jpeg_progressive(
     — the simplest spec-legal progression. The quantized coefficients
     are IDENTICAL to :func:`encode_jpeg`'s for the same inputs, so
     ``decode_jpeg(progressive twin) == decode_jpeg(baseline)`` exactly
-    — the build-twin pin pattern (build_pdf layouts, synth_bmp). The
+    — the build-twin pin pattern (synth_bmp). The
     successive-approximation decode paths are pinned separately
     against javax.imageio's MODE_DEFAULT progression
     (test_imageio_interop.py)."""

@@ -2115,9 +2115,9 @@ def build_mp3(
 # fax/scientific-archive interchange format that web crawls still
 # carry. Decoder: II and MM byte orders, 8-bit samples, gray (1) and
 # RGB (3), strips via RowsPerStrip, Compression 1 (none) / 5 (the
-# TIFF-variant LZW already pinned for PDF streams against the JDK TIFF
-# writer) / 8 + 32946 (Deflate), Predictor 1/2 (the pdf_extract
-# horizontal-differencing implementation, JVM-pinned). Encoder: II,
+# TIFF-variant LZW, pinned against the JDK TIFF writer) / 8 + 32946
+# (Deflate), Predictor 1/2 (horizontal differencing, JVM-pinned
+# against the JDK TIFF reader). Encoder: II,
 # 8-bit RGB, one strip, none/deflate + optional predictor 2,
 # deterministic bytes. Tiles, planar=2, palettes, sub-byte/16-bit
 # samples and the JPEG-in-TIFF compressions raise (documented
@@ -2125,6 +2125,93 @@ def build_mp3(
 # TIFF plugin (tests/test_imageio_interop.py — the avro-jar net).
 _TIFF_MAGIC_LE = b"II*\x00"
 _TIFF_MAGIC_BE = b"MM\x00*"
+
+
+def _tiff_lzw_decode(data: bytes) -> bytes:
+    """TIFF-variant LZW (TIFF 6.0 §13, EarlyChange): MSB-first code
+    packing, 256 = ClearTable, 257 = EOD, code width grows 9→12 bits
+    one code early. Distinct from the GIF LZW above, which packs
+    LSB-first with data-dependent code offsets — sharing one
+    implementation would entangle two pinned codecs. Output is capped
+    at 64 MiB."""
+    out = bytearray()
+    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
+    prev: bytes | None = None
+    width = 9
+    acc = bits = 0
+    for byte in data:
+        acc = (acc << 8) | byte
+        bits += 8
+        while bits >= width:
+            bits -= width
+            code = (acc >> bits) & ((1 << width) - 1)
+            if code == 256:
+                table = table[:258]
+                width = 9
+                prev = None
+                continue
+            if code == 257:
+                return bytes(out)
+            if prev is None:
+                if code >= len(table):
+                    raise NotImplementedError(
+                        "bad LZW strip: first code out of range"
+                    )
+                entry = table[code]
+            elif code < len(table):
+                entry = table[code]
+                table.append(prev + entry[:1])
+            elif code == len(table):
+                entry = prev + prev[:1]  # KwKwK
+                table.append(entry)
+            else:
+                raise NotImplementedError(
+                    "bad LZW strip: code out of range"
+                )
+            out += entry
+            if len(out) > _MAX_PIXELS:  # 1 << 26 bytes = 64 MiB
+                raise NotImplementedError(
+                    "bad LZW strip: inflate exceeds cap"
+                )
+            prev = entry
+            # width switch (the classic TIFF-LZW off-by-one): the width
+            # grows once the table holds (1<<width)-1 entries
+            # (511/1023/2047) — this exact threshold is pinned against
+            # the JDK TIFF writer's LZW in test_imageio_interop.py, not
+            # chosen from spec memory
+            if len(table) + 1 >= (1 << width) and width < 12:
+                width += 1
+    return bytes(out)  # missing EOD: tolerate
+
+
+def _tiff_unpredict(data: bytes, columns: int, colors: int) -> bytes:
+    """TIFF predictor 2 (TIFF 6.0 §14, horizontal differencing) over
+    8-bit samples: each sample stores the delta from the previous
+    sample of the SAME color component in the row; rows are exactly
+    ``columns * colors`` samples with no per-row filter byte.
+    Convention pinned against the JDK TIFF reader
+    (tests/test_imageio_interop.py)."""
+    rowlen = columns * colors
+    if rowlen <= 0:
+        raise NotImplementedError("bad predictor row length")
+    if len(data) % rowlen:
+        raise NotImplementedError("predicted strip not a whole row count")
+    out = bytearray(data)
+    for start in range(0, len(out), rowlen):
+        for i in range(start + colors, start + rowlen):
+            out[i] = (out[i] + out[i - colors]) & 0xFF
+    return bytes(out)
+
+
+def _tiff_predict(data: bytes, columns: int, colors: int) -> bytes:
+    """Forward horizontal differencing (the encoder twin of
+    :func:`_tiff_unpredict`)."""
+    rowlen = columns * colors
+    out = bytearray(data)
+    for start in range(0, len(data), rowlen):
+        for i in range(start + rowlen - 1, start + colors - 1, -1):
+            out[i] = (data[i] - data[i - colors]) & 0xFF
+    return bytes(out)
 
 
 def _tiff_decode_pixels(
@@ -2137,8 +2224,6 @@ def _tiff_decode_pixels(
     must advance — the decoder-hardening rule."""
     import struct
     import zlib
-
-    from teste_carga_avro_vs_json_spark.operators import pdf_extract as _px
 
     if payload[:4] == _TIFF_MAGIC_LE:
         e = "<"
@@ -2242,21 +2327,13 @@ def _tiff_decode_pixels(
                     f"bad deflate strip: {exc}"
                 ) from exc
         elif comp == 5:
-            try:
-                raw = _px._lzw_decode(raw, early=1)
-            except _px.PdfFormatError as exc:
-                raise NotImplementedError(
-                    f"bad LZW strip: {exc}"
-                ) from exc
+            raw = _tiff_lzw_decode(raw)
         n_rows = min(rows_per_strip, row_budget)
         if len(raw) < n_rows * rowlen:
             raise NotImplementedError("strip shorter than its rows")
         raw = raw[: n_rows * rowlen]
         if predictor == 2:
-            try:
-                raw = _px._tiff_unpredict(raw, width, spp)
-            except _px.PdfFormatError as exc:
-                raise NotImplementedError(str(exc)) from exc
+            raw = _tiff_unpredict(raw, width, spp)
         out += raw
         row_budget -= n_rows
         if row_budget <= 0:
@@ -2316,8 +2393,6 @@ def encode_tiff_stdlib(
     import struct
     import zlib
 
-    from teste_carga_avro_vs_json_spark.operators import pdf_extract as _px
-
     if len(rgb) != width * height * 3:
         raise ValueError("rgb must be width*height*3 bytes")
     if compression not in ("none", "deflate"):
@@ -2327,7 +2402,7 @@ def encode_tiff_stdlib(
     data = bytes(rgb)
     use_pred = predictor == 2 and compression == "deflate"
     if use_pred:
-        data = _px._tiff_predict(data, width, 3)
+        data = _tiff_predict(data, width, 3)
     if compression == "deflate":
         data = zlib.compress(data, 6)
     comp_val = 8 if compression == "deflate" else 1

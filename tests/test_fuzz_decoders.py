@@ -18,7 +18,6 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from teste_carga_avro_vs_json_spark.operators import flac_codec as fc
 from teste_carga_avro_vs_json_spark.operators import jpeg_codec as jc
 from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-from teste_carga_avro_vs_json_spark.operators import pdf_extract as px
 from teste_carga_avro_vs_json_spark.operators import phash as ph
 from teste_carga_avro_vs_json_spark.sources import archive as ar
 from teste_carga_avro_vs_json_spark.sources import compression as C
@@ -65,37 +64,6 @@ _DECODERS = {
         codec: (lambda b, codec=codec: C.decompress(codec, b), (ValueError,))
         for codec in _WIRE_CODECS
     },
-    # r9: PDF ingest stage joins the table on arrival (hardening rule)
-    "pdf": (
-        px.extract_pdf,
-        (px.PdfFormatError, NotImplementedError),
-    ),
-    "pdf15": (
-        px.extract_pdf,
-        (px.PdfFormatError, NotImplementedError),
-    ),
-    # r10: RC4-encrypted PDFs join on arrival — mutations hit the
-    # /Encrypt dict validation, key derivation and /U authentication
-    # (PdfPasswordError IS a PdfFormatError)
-    "pdf_rc4": (
-        px.extract_pdf,
-        (px.PdfFormatError, NotImplementedError),
-    ),
-    # r10-late: AES-encrypted PDFs — mutations hit the /CF crypt-filter
-    # routing, AES payload length/padding validation and the V5
-    # /U //UE //Perms checks. Revisions 4 (AESV2) and 5 (AESV3,
-    # SHA-256) fuzz cheaply; R6 is excluded on purpose: every mutated
-    # salt would pay the ~0.5 s Algorithm 2.B hardened hash, and the
-    # R6 codepath differs from R5 ONLY in that hash (covered by its
-    # own pins in test_pdf_extract.py).
-    "pdf_aesv2": (
-        px.extract_pdf,
-        (px.PdfFormatError, NotImplementedError),
-    ),
-    "pdf_aesv3": (
-        px.extract_pdf,
-        (px.PdfFormatError, NotImplementedError),
-    ),
     # r10-late: AVI/MJPEG container — mutations hit the RIFF walk
     # (chunk bounds/advance), avih dims, handler gate and the wrapped
     # JPEG frame decode
@@ -174,23 +142,6 @@ def _valid_payloads() -> dict[str, bytes]:
         "aiff": mm.encode_aiff_stdlib(samples, rate=16000),
         "jpeg": jc.encode_jpeg(24, 16, rgb, quality=90),
         "jpeg_prog": jc.encode_jpeg_progressive(24, 16, rgb, quality=90),
-        "pdf": px.build_pdf(
-            [["linha um dois tres", "quatro cinco"], ["pagina dois"]]
-        ),
-        # the PDF 1.5 compressed layout: mutations hit the xref-stream
-        # /W rows, predictor bytes and ObjStm header paths
-        "pdf15": px.build_pdf(
-            [["linha um dois tres", "quatro cinco"], ["pagina dois"]],
-            layout="objstm",
-        ),
-        "pdf_rc4": px.build_pdf(
-            [["linha um dois tres", "quatro cinco"], ["pagina dois"]],
-            encrypt={"revision": 3, "user_password": ""},
-        ),
-        "pdf_aesv2": px.build_pdf(
-            [["linha um dois tres", "quatro cinco"], ["pagina dois"]],
-            encrypt={"revision": 4, "user_password": ""},
-        ),
         "zip": ar.build_zip([("a.txt", b"conteudo um"), ("b/c.bin", bytes(range(64)))]),
         "tar": ar.build_tar([("a.txt", b"conteudo um"), ("b/c.bin", bytes(range(64)))], gz=True),
         "mp4": mm.build_mp4_skeleton(
@@ -202,10 +153,6 @@ def _valid_payloads() -> dict[str, bytes]:
             16, 12,
             [bytes(((x + f * 31) % 256) for x in range(16 * 12 * 3))
              for f in range(2)],
-        ),
-        "pdf_aesv3": px.build_pdf(
-            [["linha um dois tres", "quatro cinco"], ["pagina dois"]],
-            encrypt={"revision": 5, "user_password": ""},
         ),
         "ogg": mm.build_ogg(
             codec="opus", duration_s=1.5, tags={"TITLE": "fuzz"}

@@ -391,17 +391,15 @@ def test_aiff_interop_javax_sound(spark):
     assert dec == samples
 
 
-def test_pdf_lzw_decoder_against_jvm_tiff_lzw(spark):
-    """Foreign-LZW pin for operators/pdf_extract._lzw_decode: the JDK
+def test_tiff_lzw_decoder_against_jvm_tiff_lzw(spark):
+    """Foreign-LZW pin for operators/multimodal._tiff_lzw_decode: the JDK
     TIFF writer (javax.imageio, an independent TIFF-variant LZW
-    encoder with early change — the exact dialect ISO 32000 specifies)
-    compresses a grayscale image; we rip the LZW strips out of the
-    TIFF container and our decoder must reproduce the raw row bytes.
-    This closes the 'round-trips only against our own test encoder'
-    caveat for the width-growth region (>512 table entries)."""
+    encoder with early change) compresses a grayscale image; we rip
+    the LZW strips out of the TIFF container and our decoder must
+    reproduce the raw row bytes. This closes the 'round-trips only
+    against our own test encoder' caveat for the width-growth region
+    (>512 table entries)."""
     import struct
-
-    from teste_carga_avro_vs_json_spark.operators import pdf_extract as px
 
     jvm = _jvm(spark)
     w = h = 128
@@ -466,13 +464,13 @@ def test_pdf_lzw_decoder_against_jvm_tiff_lzw(spark):
     offsets, counts = tags[273], tags[279]
     decoded = bytearray()
     for so, sc in zip(offsets, counts):
-        decoded += px._lzw_decode(tiff[so : so + sc])
+        decoded += mm._tiff_lzw_decode(tiff[so : so + sc])
     assert bytes(decoded) == pix
 
 
-def test_pdf_tiff_predictor2_against_jvm_tiff_reader(spark):
-    """Foreign pin for operators/pdf_extract._tiff_predict/_unpredict
-    (ISO 32000 /Predictor 2 = TIFF 6.0 horizontal differencing): a
+def test_tiff_predictor2_against_jvm_tiff_reader(spark):
+    """Foreign pin for operators/multimodal._tiff_predict/_unpredict
+    (TIFF 6.0 Predictor 2, horizontal differencing): a
     classic TIFF whose strip is zlib(_tiff_predict(rows)) with
     Compression=8 (Adobe Deflate) and Predictor=2 must decode to the
     ORIGINAL pixels in javax.imageio — the JVM's independent predictor
@@ -482,12 +480,10 @@ def test_pdf_tiff_predictor2_against_jvm_tiff_reader(spark):
     import struct
     import zlib
 
-    from teste_carga_avro_vs_json_spark.operators import pdf_extract as px
-
     w, h = 64, 48
     pix = bytes(((x * 31 + y * 7) ^ (y >> 2)) & 0xFF for y in range(h)
                 for x in range(w))
-    strip = zlib.compress(px._tiff_predict(pix, columns=w, colors=1))
+    strip = zlib.compress(mm._tiff_predict(pix, columns=w, colors=1))
 
     # classic little-endian TIFF: header + one IFD + strip data
     entries = []  # (tag, type, count, value)
@@ -519,6 +515,87 @@ def test_pdf_tiff_predictor2_against_jvm_tiff_reader(spark):
     img.getRaster().getPixels(0, 0, w, h, arr)
     got = bytes(arr[i] & 0xFF for i in range(w * h))
     assert got == pix
+
+
+def _lzw_encode(data: bytes) -> bytes:
+    """Test-local TIFF-variant LZW encoder (MSB-first, 256=Clear,
+    257=EOD, EarlyChange) — exists only to exercise the decoder's
+    width growth and table handling; the decoder's external golden is
+    the spec's worked example below."""
+    table = {bytes([i]): i for i in range(256)}
+    next_code = 258
+    width = 9
+    out_bits: list[tuple[int, int]] = [(256, 9)]
+    w = b""
+    for ch in data:
+        wc = w + bytes([ch])
+        if wc in table:
+            w = wc
+            continue
+        out_bits.append((table[w], width))
+        table[wc] = next_code
+        next_code += 1
+        # the decoder's table lags one entry behind at read time, so
+        # the encoder widens one assignment later than the decoder's
+        # len(table) threshold (JVM-pinned above)
+        if next_code + 1 > (1 << width) and width < 12:
+            width += 1
+        if next_code >= 4096 - 1:
+            out_bits.append((256, width))
+            table = {bytes([i]): i for i in range(256)}
+            next_code, width = 258, 9
+        w = bytes([ch])
+    if w:
+        out_bits.append((table[w], width))
+    out_bits.append((257, width))
+    acc = bits = 0
+    out = bytearray()
+    for code, wd in out_bits:
+        acc = (acc << wd) | code
+        bits += wd
+        while bits >= 8:
+            bits -= 8
+            out.append((acc >> bits) & 0xFF)
+    if bits:
+        out.append((acc << (8 - bits)) & 0xFF)
+    return bytes(out)
+
+
+def test_lzw_spec_golden():
+    """The ISO 32000 §7.4.4.2 worked example (the same TIFF-variant
+    LZW with EarlyChange) — external golden."""
+    golden = bytes.fromhex("800B6050220C0C8501")
+    assert mm._tiff_lzw_decode(golden) == b"-----A---B"
+
+
+def test_lzw_roundtrip_with_width_growth_and_clear():
+    import random
+
+    rng = random.Random(7)
+    # enough distinct digrams to push the table past 512 and 1024
+    # entries (width 9→10→11) and past a mid-stream Clear
+    data = bytes(rng.randrange(8) for _ in range(60_000))
+    assert mm._tiff_lzw_decode(_lzw_encode(data)) == data
+    # prose-like too
+    text = (b"the quick brown fox jumps over the lazy dog " * 400)
+    assert mm._tiff_lzw_decode(_lzw_encode(text)) == text
+
+
+def test_tiff_predictor2_inverse_and_boundaries():
+    # forward/inverse are exact inverses, multi-component rows too
+    data = bytes((i * 37 + (i >> 3) * 11) & 0xFF for i in range(240))
+    for columns, colors in ((16, 1), (20, 3), (240, 1), (1, 4)):
+        if 240 % (columns * colors):
+            continue
+        fwd = mm._tiff_predict(data, columns, colors)
+        assert mm._tiff_unpredict(fwd, columns, colors) == data
+    # per-component differencing: component streams are independent
+    row = bytes([10, 100, 200, 13, 105, 190])  # 2 px, 3 components
+    fwd = mm._tiff_predict(row, 2, 3)
+    assert fwd == bytes([10, 100, 200, 3, 5, (190 - 200) & 0xFF])
+    # ragged data is a format error, never a silent partial row
+    with pytest.raises(NotImplementedError):
+        mm._tiff_unpredict(b"12345", 4, 1)
 
 
 def _jdk_write_tiff(spark, w, h, pix, compression, gray=True):

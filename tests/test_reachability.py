@@ -28,6 +28,11 @@ may use only defs that a root reaches (plus the fixture builders and
 test doubles they feed it with), so a stress tool cannot keep a
 capability alive that no gate runs.
 
+A ``DIAGNOSTIC`` bench lane is timed outside the headline and checked by
+no gate, so it is a consumer as well. The lanes that are still the only
+root of some package defs are named in ``PENDING_SOLE_ROOT_LANES``; the
+set may only shrink.
+
 The suite-tier check rides along: every ``_SLOW_MODULES`` name in
 ``conftest.py`` must be an existing test module, since a stale name
 silently marks nothing.
@@ -42,6 +47,7 @@ import re
 
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 PKG = ROOT / "teste_carga_avro_vs_json_spark"
+BENCH = ROOT / "bench.py"
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 # tools that are roots: the gates, the plan audits and the paper's own
@@ -138,8 +144,15 @@ ALLOWED: dict[str, tuple[str, ...]] = {
 }
 
 
+# DIAGNOSTIC bench lanes that are still the only root of some package
+# defs: a lane leaves when its defs gain a gate or are deleted with it,
+# and no lane joins
+PENDING_SOLE_ROOT_LANES = ("avro_generic_e2e", "phash_neardup",
+                           "semantic_dedup", "warc_ingest")
+
+
 def _root_files() -> list[pathlib.Path]:
-    files = [ROOT / "__spark_entry__.py", ROOT / "bench.py",
+    files = [ROOT / "__spark_entry__.py", BENCH,
              PKG / "registry.py", PKG / "cli.py", PKG / "__main__.py"]
     files += [ROOT / "tools" / f"{t}.py" for t in ROOT_TOOLS]
     files += sorted((ROOT / "perfbench").glob("*.py"))
@@ -197,9 +210,13 @@ def _from_module(node: ast.ImportFrom, here: str | None) -> str | None:
 def _bindings(path: pathlib.Path) -> dict[str, frozenset[tuple]]:
     """Every import anywhere in a file: local name -> targets, each
     ``("mod", m)`` or ``("def", m, name)``."""
-    here = _module_of(path)
+    return _tree_bindings(_parse(path), _module_of(path))
+
+
+def _tree_bindings(tree: ast.AST,
+                   here: str | None) -> dict[str, frozenset[tuple]]:
     out: dict[str, set[tuple]] = {}
-    for node in ast.walk(_parse(path)):
+    for node in ast.walk(tree):
         if isinstance(node, ast.Import):
             for a in node.names:
                 if a.name != PKG.name and not a.name.startswith(PKG.name + "."):
@@ -261,10 +278,11 @@ def _chain(node: ast.Attribute) -> tuple[str, list[str]] | None:
     return (node.id, attrs[::-1]) if isinstance(node, ast.Name) else None
 
 
-def _refs(node: ast.AST, path: pathlib.Path) -> set[str]:
-    """Package defs that the code under ``node`` in ``path`` names."""
+def _refs(node: ast.AST, path: pathlib.Path, binds=None) -> set[str]:
+    """Package defs that the code under ``node`` in ``path`` names, with
+    names bound by ``binds`` (default: every import in ``path``)."""
     here = _module_of(path)
-    binds = _bindings(path)
+    binds = _bindings(path) if binds is None else binds
     imported = {t[1] for ts in binds.values() for t in ts}
     out: set[str] = set()
     for n in ast.walk(node):
@@ -398,6 +416,55 @@ def test_allowlist_is_current():
                    or k not in tested)
     assert not stale, f"allowlist entries that are gone, reached by a " \
                       f"root, or called by no test: {stale}"
+
+
+def _bench_lanes() -> tuple[frozenset[str], ast.FunctionDef,
+                            dict[str, ast.FunctionDef]]:
+    """bench.py's ``DIAGNOSTIC`` names, its ``lanes()`` def, and the lane
+    table: lane name -> the nested ``w_*`` def that runs it."""
+    tree = _parse(BENCH)
+    diag = next(
+        ast.literal_eval(n.value.args[0]) for n in tree.body
+        if isinstance(n, ast.Assign)
+        and any(getattr(t, "id", None) == "DIAGNOSTIC" for t in n.targets))
+    fn = next(n for n in tree.body
+              if isinstance(n, ast.FunctionDef) and n.name == "lanes")
+    bodies = {n.name: n for n in fn.body if isinstance(n, ast.FunctionDef)
+              and n.name.startswith("w_")}
+    table = next(n.value for n in fn.body if isinstance(n, ast.Return))
+    lanes = {k.value: bodies[v.id]
+             for k, v in zip(table.keys, table.values)
+             if isinstance(v, ast.Name) and v.id in bodies}
+    return frozenset(diag), fn, lanes
+
+
+def test_diagnostic_lanes_root_nothing_but_the_pending_ones():
+    """Cut every ``DIAGNOSTIC`` lane body out of bench.py; what the roots
+    and ``ALLOWED`` then reach is the live set. The rest of bench.py binds
+    names through its own imports only, so a lane's name string does not
+    resolve through a cut body's import. A diagnostic lane whose body
+    reaches defs outside the live set is their only root."""
+    diag, lanes_fn, lanes = _bench_lanes()
+    assert diag <= set(lanes), sorted(diag - set(lanes))
+    cut = {lanes[d] for d in diag}
+    rest = ast.Module(
+        body=[n for n in _parse(BENCH).body if n is not lanes_fn]
+        + [n for n in lanes_fn.body if n not in cut],
+        type_ignores=[])
+    live = reached([f for f in _root_files() if f != BENCH],
+                   set(_allowed()) | _refs(rest, BENCH,
+                                           _tree_bindings(rest, None)))
+    defs = package_defs()
+    sole = {d: sorted(reached([], _refs(lanes[d], BENCH)) - live)
+            for d in sorted(diag)}
+    sole = {d: keys for d, keys in sole.items() if keys}
+    assert set(sole) == set(PENDING_SOLE_ROOT_LANES), (
+        f"diagnostic lanes that are the only root of package defs: "
+        f"{sorted(sole)}, pending: {sorted(PENDING_SOLE_ROOT_LANES)}\n"
+        + "\n".join(
+            f"  {d} ({len(keys)} defs, "
+            f"{sum(defs[k][2] for k in keys)} lines): " + ", ".join(keys)
+            for d, keys in sole.items()))
 
 
 def test_reasons_are_the_five_named_ones():
