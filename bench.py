@@ -50,8 +50,6 @@ DIAGNOSTIC = frozenset({
     "semantic_dedup",
     "exact_substring",
     "bm25_topk",
-    "phash_neardup",
-    "warc_ingest",
     "url_dedup",
     "ivf_pq_topk",
 })
@@ -73,7 +71,7 @@ def _n_msgs(spark, sf_dir: str) -> int:
 
 def lanes(spark, sf_dir: str, cpus: int) -> dict:
     """The lane table: name -> zero-arg callable that runs one lane to
-    completion. ``cpus`` sizes the corpus repartition and WARC shards."""
+    completion. ``cpus`` sizes the corpus and embedding repartitions."""
     import pyspark.sql.functions as F
 
     from teste_carga_avro_vs_json_spark import registry
@@ -235,56 +233,6 @@ def lanes(spark, sf_dir: str, cpus: int) -> dict:
 
         run(retrieval.bm25_topk(docs_df()))
 
-    def w_phash_neardup():
-        # diagnostic lane (r8-late, not in headline_total): perceptual
-        # image near-dup — real BMP synth + dHash UDF + pigeonhole
-        # Hamming band join. Synth is INSIDE the lane on purpose: the
-        # encode+decode py-lane is the dominant 100 TB cost and should
-        # be visible in the trend.
-        from teste_carga_avro_vs_json_spark.operators import (
-            multimodal,
-            phash,
-        )
-
-        run(
-            phash.phash_neardup(
-                multimodal.synth_bmp_media(docs_df()), max_hamming=3
-            )
-        )
-
-    def w_warc_ingest():
-        # diagnostic lane (r8-late, not in headline_total): the full
-        # crawl ingest loop — synth HTML pages → WARC shards on disk
-        # (per-record gzip members) → read back → HTML→text extraction
-        # agg. Write+read+extract all inside the lane: the codec+parse
-        # py-lanes are the dominant 100 TB ingest cost.
-        import shutil as _sh
-        import tempfile as _tf
-
-        from teste_carga_avro_vs_json_spark.operators import html_extract
-        from teste_carga_avro_vs_json_spark.sources import warc
-
-        pages = html_extract.synth_html(docs_df()).select(
-            "doc_id",
-            F.concat(
-                F.lit("https://bench.test/"), F.col("doc_id").cast("string")
-            ).alias("url"),
-            "html",
-        )
-        path = _tf.mkdtemp(prefix="bench_warc_")
-        try:
-            warc.write_warc(pages, path, num_files=cpus)
-            run(
-                html_extract.extract_text(
-                    warc.read_warc_responses(spark, path)
-                ).agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.length("text")).alias("b"),
-                )
-            )
-        finally:
-            _sh.rmtree(path, ignore_errors=True)
-
     def w_url_dedup():
         # diagnostic lane (r8-late, not in headline_total): URL
         # canonicalization + dedup — pure JVM regex chain + the
@@ -366,8 +314,6 @@ def lanes(spark, sf_dir: str, cpus: int) -> dict:
         "semantic_dedup": w_semantic_dedup,
         "exact_substring": w_exact_substring,
         "bm25_topk": w_bm25,
-        "phash_neardup": w_phash_neardup,
-        "warc_ingest": w_warc_ingest,
         "url_dedup": w_url_dedup,
         "pii_scrub": w_pii_scrub,
         "intra_doc_dedup": w_intra_doc_dedup,

@@ -2,8 +2,7 @@
 every crawl pipeline (CommonCrawl/C4/RefinedWeb dedup by canonical URL
 before any content hashing: re-crawls, tracking-param variants and
 http/https mirrors are the cheapest duplicates to kill). The reference
-engine has no crawl operators (SURVEY.md §2.2); extension surface
-completing the ingest chain next to ``sources/warc.py``.
+engine has no crawl operators (SURVEY.md §2.2); extension surface.
 
 Canonicalization contract (applied in BOTH engines, pinned by the
 DuckDB oracle in ``tools/check_retired.py`` — ``q_url_dedup``):

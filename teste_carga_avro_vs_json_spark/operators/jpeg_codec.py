@@ -2,8 +2,8 @@
 half of the compressed-media boundary, closed the same way
 ``flac_codec`` closed audio: a real spec implementation on stdlib
 only, so
-``image_dhash`` runs on genuine JPEGs in this container instead of
-behind the import-gated Pillow path.
+Motion-JPEG frames (``multimodal.decode_avi_mjpeg``) decode in this
+container without Pillow.
 
 JPEG is LOSSY, so the pins are layered rather than bit-exact
 (``tests/test_jpeg.py``):
@@ -550,7 +550,7 @@ def encode_jpeg_progressive(
     — the simplest spec-legal progression. The quantized coefficients
     are IDENTICAL to :func:`encode_jpeg`'s for the same inputs, so
     ``decode_jpeg(progressive twin) == decode_jpeg(baseline)`` exactly
-    — the build-twin pin pattern (synth_bmp). The
+    — a build-twin pin. The
     successive-approximation decode paths are pinned separately
     against javax.imageio's MODE_DEFAULT progression
     (test_imageio_interop.py)."""

@@ -501,44 +501,9 @@ def decode_bmp_stdlib(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, feats
 
 
-def synth_bmp_media(docs: DataFrame, max_dim: int = 24) -> DataFrame:
-    """REAL media table: every payload is a decodable 24-bit BMP whose
-    pixels derive deterministically from md5(text). Dimensions come
-    from the same hex32 metadata scheme as :func:`synth_media`
-    (bounded by ``max_dim`` so the fixture stays small). Payload
-    construction is an Arrow-batched pandas UDF — the bytes are built
-    executor-side and never shuffle."""
-    import hashlib
-
-    @F.pandas_udf("binary")
-    def make_bmp(
-        cols: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        def one(text: str, w: int, h: int) -> bytes:
-            need = w * h * 3
-            seed = hashlib.md5((text or "").encode()).digest()
-            reps = need // len(seed) + 1
-            return encode_bmp_stdlib(w, h, (seed * reps)[:need])
-
-        for texts, ws, hs in cols:
-            yield pd.Series(
-                [one(t, int(w), int(h)) for t, w, h in zip(texts, ws, hs)]
-            )
-
-    w = (hex32(F.concat(F.lit("bw-"), F.col("doc_id"))) % max_dim + 1).cast(
-        "int"
-    )
-    h = (hex32(F.concat(F.lit("bh-"), F.col("doc_id"))) % max_dim + 1).cast(
-        "int"
-    )
-    staged = docs.select("doc_id", "text", w.alias("width"), h.alias("height"))
-    return staged.select(
-        "doc_id",
-        make_bmp("text", "width", "height").alias("payload"),
-        F.lit("bmp").alias("format"),
-        "width",
-        "height",
-    )
+#: canvas cap for header-declared dims (64M px ≈ 200 MB RGB): a corrupt
+#: or hostile header must not OOM an executor before any data is read.
+_MAX_PIXELS = 1 << 26
 
 
 # ------------------------------------------------------ PNG (stdlib-real)
@@ -712,407 +677,6 @@ def decode_png_stdlib(payload: bytes) -> tuple[int, int, list[float]]:
     return width, height, feats
 
 
-def synth_png_media(docs: DataFrame, max_dim: int = 24) -> DataFrame:
-    """REAL compressed media table: every payload is a decodable 8-bit
-    RGB PNG with pixels derived deterministically from md5(text) — the
-    compressed sibling of :func:`synth_bmp_media`, same metadata
-    scheme, same Arrow-batched executor-side construction."""
-    import hashlib
-
-    @F.pandas_udf("binary")
-    def make_png(
-        cols: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        def one(text: str, w: int, h: int) -> bytes:
-            need = w * h * 3
-            seed = hashlib.md5((text or "").encode()).digest()
-            reps = need // len(seed) + 1
-            return encode_png_stdlib(w, h, (seed * reps)[:need])
-
-        for texts, ws, hs in cols:
-            yield pd.Series(
-                [one(t, int(w), int(h)) for t, w, h in zip(texts, ws, hs)]
-            )
-
-    w = (hex32(F.concat(F.lit("pw-"), F.col("doc_id"))) % max_dim + 1).cast(
-        "int"
-    )
-    h = (hex32(F.concat(F.lit("ph-"), F.col("doc_id"))) % max_dim + 1).cast(
-        "int"
-    )
-    staged = docs.select("doc_id", "text", w.alias("width"), h.alias("height"))
-    return staged.select(
-        "doc_id",
-        make_png("text", "width", "height").alias("payload"),
-        F.lit("png").alias("format"),
-        "width",
-        "height",
-    )
-
-
-# --------------------------------------------------------------- GIF
-#
-# Real GIF89a encode/decode on stdlib only — the third REAL image
-# codec (after BMP/PNG) and the first genuinely MULTI-FRAME container:
-# animated GIFs are actual video-ish media in a published interchange
-# format, not the concatenated-BMP stand-in. Grammar per the public
-# GIF89a spec (logical screen descriptor, global/local color tables,
-# graphic control extensions, image descriptors, LZW-compressed index
-# sub-blocks, trailer). The reference engine has no media codecs
-# (SURVEY.md §2.2); extension surface.
-
-
-def _lzw_encode(indices: bytes, min_code_size: int) -> bytes:
-    """GIF-variant LZW (variable 3..12-bit codes, LSB-first packing,
-    CLEAR emitted up front and on dictionary overflow at 4096)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    width = min_code_size + 1
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table: dict[bytes, int] = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear)
-    prefix = b""
-    for byte in indices:
-        cand = prefix + bytes([byte])
-        if cand in table:
-            prefix = cand
-            continue
-        emit(table[prefix])
-        table[cand] = next_code
-        # width grows when the JUST-ASSIGNED code fills the range —
-        # the decoder mirrors this exactly (no TIFF early-change).
-        if next_code == (1 << width) and width < 12:
-            width += 1
-        next_code += 1
-        if next_code > 4096:
-            emit(clear)
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-            width = min_code_size + 1
-        prefix = bytes([byte])
-    if prefix:
-        emit(table[prefix])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _lzw_decode(data: bytes, min_code_size: int) -> bytearray:
-    if not 2 <= min_code_size <= 8:
-        # GIF pixels are palette indices (<= 8 bits), so the root
-        # alphabet never exceeds 256; also the table-size bomb guard —
-        # a corrupt size byte of e.g. 33 would demand a 2^33-entry
-        # root table before any data is read
-        raise NotImplementedError(
-            f"invalid GIF LZW minimum code size {min_code_size}"
-        )
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    width = min_code_size + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    prev: bytes | None = None
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                table = table[: eoi + 1]
-                width = min_code_size + 1
-                prev = None
-                continue
-            if code == eoi:
-                return out
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):  # the KwKwK case
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise NotImplementedError("corrupt LZW stream")
-            out += entry
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-            prev = entry
-    return out
-
-
-def _sub_blocks(data: bytes) -> bytes:
-    """Chop into <=255-byte length-prefixed sub-blocks + terminator."""
-    out = bytearray()
-    for off in range(0, len(data), 255):
-        chunk = data[off : off + 255]
-        out.append(len(chunk))
-        out += chunk
-    out.append(0)
-    return bytes(out)
-
-
-#: GIF interlace pass structure: (row offset, row step) per pass.
-_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def encode_gif_stdlib(
-    width: int,
-    height: int,
-    frames: list[bytes],
-    palette: bytes,
-    *,
-    delay_cs: int = 4,
-    interlace: bool = False,
-) -> bytes:
-    """Animated GIF89a from full-frame palette-index rasters. Each
-    frame is ``width*height`` index bytes; ``palette`` is RGB triples,
-    power-of-two entry count 2..256. Every frame gets a graphic
-    control extension with ``delay_cs`` (centiseconds)."""
-    import struct
-
-    n_colors = len(palette) // 3
-    if n_colors * 3 != len(palette) or n_colors & (n_colors - 1) or not (
-        2 <= n_colors <= 256
-    ):
-        raise NotImplementedError("palette must be 2..256 RGB triples, 2^k")
-    gct_bits = n_colors.bit_length() - 1  # 2^(k+1) entries → field k
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", width, height, 0x80 | (gct_bits - 1), 0, 0)
-    out += palette
-    min_code = max(2, gct_bits)
-    for idx in frames:
-        if len(idx) != width * height:
-            raise NotImplementedError("frame raster size mismatch")
-        # graphic control: disposal=1 (keep), no transparency
-        out += b"\x21\xf9\x04" + struct.pack("<BHB", 0x04, delay_cs, 0) + b"\x00"
-        out += b"\x2c" + struct.pack(
-            "<HHHHB", 0, 0, width, height, 0x40 if interlace else 0
-        )
-        if interlace:
-            reordered = bytearray()
-            for off, step in _INTERLACE_PASSES:
-                for y in range(off, height, step):
-                    reordered += idx[y * width : (y + 1) * width]
-            idx = bytes(reordered)
-        out.append(min_code)
-        out += _sub_blocks(_lzw_encode(idx, min_code))
-    out += b"\x3b"
-    return bytes(out)
-
-
-def decode_gif_stdlib(
-    payload: bytes,
-) -> tuple[int, int, list[bytes]]:
-    """GIF87a/89a → (width, height, [full-canvas RGB bytes per
-    frame]). Real compositing: frames paint their rect onto the
-    persistent canvas; disposal 2 clears the rect to background after
-    the frame is emitted; transparent pixels leave the canvas
-    untouched. Interlaced images and local color tables supported;
-    disposal 3 (restore-previous) raises — documented boundary, rare
-    in crawl data. Malformed input of ANY shape raises
-    ``NotImplementedError`` (the module's format-error convention),
-    never a bare IndexError."""
-    import struct
-
-    try:
-        return _decode_gif_impl(payload)
-    except NotImplementedError:
-        raise
-    except (IndexError, KeyError, OverflowError, struct.error) as e:
-        raise NotImplementedError(f"malformed GIF payload: {e}") from e
-
-
-#: canvas cap for header-declared dims (64M px ≈ 200 MB RGB): a corrupt
-#: or hostile header must not OOM an executor before any data is read.
-_MAX_PIXELS = 1 << 26
-
-
-def _decode_gif_impl(
-    payload: bytes,
-) -> tuple[int, int, list[bytes]]:
-    import struct
-
-    if payload[:4] != b"GIF8" or payload[4:6] not in (b"7a", b"9a"):
-        raise NotImplementedError("not a GIF payload")
-    width, height, packed, bg, _ = struct.unpack_from("<HHBBB", payload, 6)
-    if width * height > _MAX_PIXELS:
-        raise NotImplementedError(
-            f"GIF canvas {width}x{height} exceeds the decode cap"
-        )
-    pos = 13
-    gct = b""
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = payload[pos : pos + 3 * n]
-        pos += 3 * n
-    canvas = bytearray(3 * width * height)
-    if gct:
-        bg_rgb = gct[3 * bg : 3 * bg + 3] or b"\x00\x00\x00"
-        for i in range(width * height):
-            canvas[3 * i : 3 * i + 3] = bg_rgb
-    frames: list[bytes] = []
-    transparent = -1
-    disposal = 0
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            label = payload[pos]
-            pos += 1
-            if label == 0xF9:
-                size = payload[pos]
-                flags = payload[pos + 1]
-                disposal = (flags >> 2) & 0x07
-                transparent = (
-                    payload[pos + 4] if flags & 0x01 else -1
-                )
-                pos += 1 + size
-                if payload[pos] != 0:
-                    raise NotImplementedError("unterminated GCE")
-                pos += 1
-            else:  # skip any other extension's sub-blocks
-                while payload[pos] != 0:
-                    pos += 1 + payload[pos]
-                pos += 1
-            continue
-        if block != 0x2C:
-            raise NotImplementedError(f"unknown GIF block 0x{block:02x}")
-        left, top, fw, fh, fpacked = struct.unpack_from("<HHHHB", payload, pos)
-        pos += 9
-        table = gct
-        if fpacked & 0x80:
-            n = 2 << (fpacked & 0x07)
-            table = payload[pos : pos + 3 * n]
-            pos += 3 * n
-        if not table:
-            raise NotImplementedError("image with no color table")
-        min_code = payload[pos]
-        pos += 1
-        lzw = bytearray()
-        while payload[pos] != 0:
-            ln = payload[pos]
-            lzw += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        if (len(frames) + 1) * 3 * width * height > (1 << 30):
-            # frame-count bomb: full-canvas compositing output is
-            # frames x canvas — cap total decode output at 1 GiB
-            raise NotImplementedError("GIF exceeds the decode cap")
-        idx = _lzw_decode(bytes(lzw), min_code)
-        if len(idx) < fw * fh:
-            raise NotImplementedError("short LZW raster")
-        if fpacked & 0x40:  # interlaced: undo the 4-pass row order
-            deinter = bytearray(fw * fh)
-            src = 0
-            for off, step in _INTERLACE_PASSES:
-                for y in range(off, fh, step):
-                    deinter[y * fw : (y + 1) * fw] = idx[src : src + fw]
-                    src += fw
-            idx = deinter
-        if disposal == 3:
-            raise NotImplementedError("disposal=3 (restore previous)")
-        for y in range(fh):
-            cy = top + y
-            if cy >= height:
-                break
-            for x in range(fw):
-                cx = left + x
-                if cx >= width:
-                    continue
-                c = idx[y * fw + x]
-                if c == transparent:
-                    continue
-                canvas[3 * (cy * width + cx) : 3 * (cy * width + cx) + 3] = (
-                    table[3 * c : 3 * c + 3]
-                )
-        frames.append(bytes(canvas))
-        if disposal == 2 and gct:
-            bg_rgb = gct[3 * bg : 3 * bg + 3]
-            for y in range(fh):
-                cy = top + y
-                if cy >= height:
-                    break
-                for x in range(fw):
-                    cx = left + x
-                    if cx < width:
-                        canvas[
-                            3 * (cy * width + cx) : 3 * (cy * width + cx) + 3
-                        ] = bg_rgb
-        disposal = 0
-        transparent = -1
-    return width, height, frames
-
-
-#: 256-entry grayscale palette: index i → (i, i, i).
-GRAY_PALETTE = bytes(v for i in range(256) for v in (i, i, i))
-
-
-# --------------------------------------------------------------- JPEG
-
-
-def synth_jpeg_media(
-    docs: DataFrame, max_dim: int = 24, quality: int = 95
-) -> DataFrame:
-    """REAL media table: every payload is a genuine baseline JFIF
-    stream whose source pixels derive deterministically from
-    md5(text) — the compressed twin of :func:`synth_bmp_media` (same
-    pixel recipe, so near-dup joins can pair a doc's BMP and JPEG)."""
-    import hashlib
-
-    from .jpeg_codec import encode_jpeg
-
-    @F.pandas_udf("binary")
-    def make_jpeg(
-        cols: Iterator[tuple[pd.Series, pd.Series, pd.Series]],
-    ) -> Iterator[pd.Series]:
-        def one(text: str, w: int, h: int) -> bytes:
-            need = w * h * 3
-            seed = hashlib.md5((text or "").encode()).digest()
-            reps = need // len(seed) + 1
-            return encode_jpeg(w, h, (seed * reps)[:need], quality=quality)
-
-        for texts, ws, hs in cols:
-            yield pd.Series(
-                [one(t, int(w), int(h)) for t, w, h in zip(texts, ws, hs)]
-            )
-
-    w = (hex32(F.concat(F.lit("w-"), F.col("doc_id"))) % max_dim + 8).cast(
-        "int"
-    )
-    h = (hex32(F.concat(F.lit("h-"), F.col("doc_id"))) % max_dim + 8).cast(
-        "int"
-    )
-    staged = docs.select("doc_id", "text", w.alias("width"), h.alias("height"))
-    return staged.select(
-        "doc_id",
-        make_jpeg("text", "width", "height").alias("payload"),
-        F.lit("jpeg").alias("format"),
-        "width",
-        "height",
-    )
-
-
 # --------------------------------------------------------------- AIFF
 
 
@@ -1211,8 +775,7 @@ def decode_aiff_stdlib(payload: bytes) -> tuple[int, int, int, list[int]]:
 
 
 # --------------------------------------------------------- AVI / MJPEG
-# The real-world video-container step up from the concatenated-BMP
-# frame-stream stand-in: AVI is a RIFF form (the WAV walk, different
+# The real-world video container: AVI is a RIFF form (the WAV walk, different
 # fourccs) and Motion-JPEG frames are plain baseline JPEGs — both ends
 # already exist as pinned stdlib codecs, so the container logic is the
 # only new surface. MJPEG-in-AVI remains the interchange shape
@@ -2130,10 +1693,7 @@ _TIFF_MAGIC_BE = b"MM\x00*"
 def _tiff_lzw_decode(data: bytes) -> bytes:
     """TIFF-variant LZW (TIFF 6.0 §13, EarlyChange): MSB-first code
     packing, 256 = ClearTable, 257 = EOD, code width grows 9→12 bits
-    one code early. Distinct from the GIF LZW above, which packs
-    LSB-first with data-dependent code offsets — sharing one
-    implementation would entangle two pinned codecs. Output is capped
-    at 64 MiB."""
+    one code early. Output is capped at 64 MiB."""
     out = bytearray()
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     prev: bytes | None = None

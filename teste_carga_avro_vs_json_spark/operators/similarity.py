@@ -1396,9 +1396,15 @@ def lsh_ann_topk(
     v = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("vec")
     )
+    # Both join sides read ``bucketed``. Catalyst would push q_b's
+    # modulus filter below the bucketing, so every call would bucket
+    # twice: the corpus for one side, the query rows again for the
+    # other (a second Python stage on the vectorized path). The lazy
+    # local checkpoint stops that pushdown: the query's first job
+    # buckets the corpus once and both sides read it.
     bucketed = bucketer(emb, dim, n_planes, n_tables).select(
         "vec_id", "bucket"
-    )
+    ).localCheckpoint(eager=False)
     q_b = bucketed.filter(F.col("vec_id") % query_modulus == 0).select(
         F.col("vec_id").alias("query_id"), F.col("bucket")
     )

@@ -52,17 +52,14 @@ _SLOW_MODULES = {
     "test_avro_generic",
     "test_imageio_interop",
     "test_fuzz_decoders",
-    "test_phash",
     "test_substr_dedup",
     "test_flac",
     "test_jpeg",
-    "test_gif",
     "test_llmops",
     "test_kafka_wire",
     "test_kafka_sasl",
     "test_avro_vec",
     "test_crawl",
-    "test_warc",
     "test_ivfpq",
     "test_kafka_txn",
     "test_kafka_txn_offsets",

@@ -10,17 +10,17 @@ import pyspark.sql.functions as F
 
 from teste_carga_avro_vs_json_spark import pipelines
 from teste_carga_avro_vs_json_spark.operators import corpus, lm, similarity
-from teste_carga_avro_vs_json_spark.sources import generator, io_files, warc
+from teste_carga_avro_vs_json_spark.sources import generator, io_files
 
 
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def _docs(spark, sf_dir, n=120):
+def _docs(spark, sf_dir):
     return (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(n)
+        .limit(120)
         .select("doc_id", "text")
     )
 
@@ -49,15 +49,6 @@ _OPERATORS = {
     ).collect(),
     "write_avro_ocf": lambda spark, tmp_path, sf_dir: io_files.write_avro_ocf(
         generator.mensagens(spark, 40), str(tmp_path / "ocf"), num_particoes=2
-    ).collect(),
-    "write_warc": lambda spark, tmp_path, sf_dir: warc.write_warc(
-        _docs(spark, sf_dir, 20).select(
-            "doc_id",
-            F.concat(F.lit("https://example.com/"), "doc_id").alias("url"),
-            F.concat(F.lit("<p>"), "text", F.lit("</p>")).alias("html"),
-        ),
-        str(tmp_path / "warc"),
-        num_files=2,
     ).collect(),
     "multi_kmeans_failed_lloyd": _failing_lloyd,
 }

@@ -8,9 +8,7 @@ explicitly). Two modes per decoder: pure-random bytes, and single-byte
 mutations of a VALID payload (the realistic corruption class —
 truncated downloads, bit rot)."""
 
-import gzip
 import struct
-import zlib
 
 import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -18,15 +16,13 @@ from hypothesis import HealthCheck, given, settings, strategies as st
 from teste_carga_avro_vs_json_spark.operators import flac_codec as fc
 from teste_carga_avro_vs_json_spark.operators import jpeg_codec as jc
 from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-from teste_carga_avro_vs_json_spark.operators import phash as ph
 from teste_carga_avro_vs_json_spark.sources import archive as ar
 from teste_carga_avro_vs_json_spark.sources import compression as C
-from teste_carga_avro_vs_json_spark.sources import warc as W
 
 # derandomize: the suite is a REGRESSION gate (the driver runs pytest
 # per round — a fresh random find failing the build mid-round is the
 # wrong channel for discovery). Exploration mode = flip this off and
-# raise max_examples; that is how the GIF LZW table bomb was found.
+# raise max_examples.
 _FUZZ = settings(
     max_examples=120,
     deadline=None,
@@ -41,16 +37,8 @@ _WIRE_PAYLOAD = b"".join(
 
 #: decoder → (callable, accepted exception types)
 _DECODERS = {
-    "warc": (lambda b: W.parse_warc(b), (W.WarcFormatError,)),
-    "warc_gzip": (
-        lambda b: list(W.iter_gzip_members(b)),
-        (W.WarcFormatError,),
-    ),
-    "http": (W.parse_http_response, (W.WarcFormatError, ValueError)),
-    "gif": (mm.decode_gif_stdlib, (NotImplementedError,)),
     "bmp": (mm.decode_bmp_stdlib, (NotImplementedError,)),
     "png": (mm.decode_png_stdlib, (NotImplementedError, ValueError)),
-    "bmp_stream": (ph.split_bmp_stream, (NotImplementedError,)),
     "flac": (fc.decode_flac, (fc.FlacFormatError,)),
     "aiff": (mm.decode_aiff_stdlib, (NotImplementedError,)),
     "jpeg": (jc.decode_jpeg, (jc.JpegFormatError, NotImplementedError)),
@@ -122,22 +110,9 @@ def _valid_payloads() -> dict[str, bytes]:
         min(255, 10 + (i % 24) * 3 + (i // 24)) for i in range(24 * 16 * 3)
     )
     samples = [((i * 37) % 2000) - 1000 for i in range(600)]
-    http = W.build_http_response(b"<p>ola</p>")
-    warc_rec = W.build_record(
-        "response", http, target_uri="https://e/x",
-        content_type="application/http; msgtype=response",
-    )
     return {
-        "warc": warc_rec + warc_rec,
-        "warc_gzip": gzip.compress(warc_rec, mtime=0) * 2,
-        "http": http,
-        "gif": mm.encode_gif_stdlib(
-            12, 10, [bytes((i * 7) % 256 for i in range(120))] * 2,
-            mm.GRAY_PALETTE,
-        ),
         "bmp": mm.encode_bmp_stdlib(24, 16, rgb),
         "png": mm.encode_png_stdlib(24, 16, rgb),
-        "bmp_stream": mm.encode_bmp_stdlib(8, 8, rgb[: 8 * 8 * 3]) * 3,
         "flac": fc.encode_flac(samples, block_size=256),
         "aiff": mm.encode_aiff_stdlib(samples, rate=16000),
         "jpeg": jc.encode_jpeg(24, 16, rgb, quality=90),
@@ -222,49 +197,9 @@ def test_truncations_rejected_cleanly(name):
 
 
 def test_dimension_bombs_capped():
-    # GIF header declaring a 65535x65535 canvas: must raise, not OOM
-    bomb = bytearray(b"GIF89a")
-    bomb += struct.pack("<HHBBB", 65535, 65535, 0x80, 0, 0)
-    bomb += bytes(6)  # 2-entry GCT
-    with pytest.raises(NotImplementedError):
-        mm.decode_gif_stdlib(bytes(bomb))
     # JPEG SOF declaring huge dims: must raise before plane allocation
     blob = bytearray(jc.encode_jpeg(8, 8, bytes(8 * 8 * 3)))
     i = blob.index(b"\xff\xc0")
     struct.pack_into(">HH", blob, i + 5, 65535, 65535)
     with pytest.raises(jc.JpegFormatError):
         jc.decode_jpeg(bytes(blob))
-
-
-def test_gzip_bomb_capped():
-    # 1 byte of zeros inflating 1000:1 per layer is fine; the cap only
-    # trips past 1 GiB of inflate for ONE member — emulate with a
-    # small cap override via a crafted highly-compressible member
-    member = gzip.compress(b"\x00" * 100_000, mtime=0)
-    out = list(W.iter_gzip_members(member))
-    assert len(out) == 1 and len(out[0]) == 100_000
-    # the real cap is enforced in _inflate_member; pin the code path
-    # by lowering the module constant temporarily
-    old = W._MAX_MEMBER_BYTES
-    W._MAX_MEMBER_BYTES = 50_000
-    try:
-        with pytest.raises(W.WarcFormatError):
-            list(W.iter_gzip_members(member))
-    finally:
-        W._MAX_MEMBER_BYTES = old
-
-
-def test_warc_negative_lengths_terminate():
-    rec = (
-        b"WARC/1.1\r\nWARC-Type: response\r\nContent-Length: -7\r\n\r\n"
-    )
-    with pytest.raises(W.WarcFormatError):
-        W.parse_warc(rec)
-    recs, bad = W.parse_warc(rec, tolerant=True)
-    assert (recs, bad) == ([], 1)
-    chunked = (
-        b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
-        b"-5\r\nxxxxx\r\n0\r\n\r\n"
-    )
-    with pytest.raises((W.WarcFormatError, ValueError)):
-        W.parse_http_response(chunked)

@@ -1,12 +1,12 @@
 """Cross-implementation image-codec pins against the JVM's
 javax.imageio (the same py4j interop net that pins the Avro stack
-against the real avro-1.12 jar): ImageIO ships independent JPEG, GIF,
-PNG and BMP codecs, so every stdlib codec here gets verified BOTH
+against the real avro-1.12 jar): ImageIO ships independent JPEG, PNG,
+BMP and TIFF codecs, so every stdlib codec here gets verified BOTH
 directions against a foreign implementation —
 
 - our encoder's bytes must decode in ImageIO (bitstream legality),
 - ImageIO-encoded bytes must decode in our decoders (foreign streams:
-  libjpeg-style entropy choices, foreign LZW, foreign PNG filters),
+  libjpeg-style entropy choices, foreign TIFF LZW, foreign PNG filters),
 - pixels must agree exactly for lossless formats and within the
   spec-permitted decoder variance for JPEG.
 
@@ -232,40 +232,6 @@ def test_our_progressive_jpeg_parses_in_imageio(spark):
             assert abs(r - ours[3 * i]) <= 6, kwargs
             assert abs(g - ours[3 * i + 1]) <= 6, kwargs
             assert abs(b - ours[3 * i + 2]) <= 6, kwargs
-
-
-# ----------------------------------------------------------------- GIF
-
-
-def test_our_gif_exact_in_imageio(spark):
-    w, h = 13, 11
-    idx = _noise("g", w * h)
-    blob = mm.encode_gif_stdlib(w, h, [idx], mm.GRAY_PALETTE)
-    jw, jh, jpx = _imageio_decode(spark, blob)
-    assert (jw, jh) == (w, h)
-    # lossless: ImageIO must reproduce our palette pixels EXACTLY
-    assert [p[0] for p in jpx] == list(idx)
-    assert all(r == g == b for r, g, b in jpx)
-    # interlaced variant too
-    blob_i = mm.encode_gif_stdlib(w, h, [idx], mm.GRAY_PALETTE,
-                                  interlace=True)
-    _, _, jpx_i = _imageio_decode(spark, blob_i)
-    assert jpx_i == jpx
-
-
-def test_foreign_gif_decodes_exactly(spark):
-    w, h = 16, 10
-    # grayscale-ish source so ImageIO's palette quantization is exact
-    rgb = bytes(v for i in range(w * h) for v in (_noise("fg", w * h)[i],) * 3)
-    blob = _imageio_encode(spark, "gif", w, h, rgb)
-    gw, gh, frames = mm.decode_gif_stdlib(blob)
-    assert (gw, gh, len(frames)) == (w, h, 1)
-    jw, jh, jpx = _imageio_decode(spark, blob)
-    ours = frames[0]
-    got = [(ours[3 * i], ours[3 * i + 1], ours[3 * i + 2])
-           for i in range(w * h)]
-    # both decoders agree EXACTLY on the foreign stream (lossless)
-    assert got == jpx
 
 
 # ------------------------------------------------------------ PNG / BMP

@@ -4,8 +4,7 @@ O(N^4) textbook double sum (an independent formulation of the
 transform the codec implements separably), the entropy primitives
 (canonical huffman, magnitude/EXTEND) round-trip exactly, full
 round-trips carry tight error bounds (flat tables → pure rounding
-error), and the lossy-but-close property drives the cross-container
-near-dup integration (JPEG vs BMP of the same pixels)."""
+error)."""
 
 import hashlib
 import math
@@ -13,8 +12,6 @@ import math
 import pytest
 
 from teste_carga_avro_vs_json_spark.operators import jpeg_codec as jc
-from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-from teste_carga_avro_vs_json_spark.operators import phash as ph
 
 
 def _noise_rgb(tag: str, w: int, h: int) -> bytes:
@@ -209,45 +206,3 @@ def test_corruption_raises():
     blob = jc.encode_jpeg(16, 16, _noise_rgb("c", 16, 16))
     with pytest.raises((jc.JpegFormatError, Exception)):
         jc.decode_jpeg(blob[: len(blob) // 2])
-
-
-# --------------------------------------------------- Spark integration
-
-
-def test_jpeg_bmp_cross_container_neardup(spark, sf_dir):
-    """A doc's JPEG and BMP share source pixels; lossy coding moves
-    the dHash only a few bits, so the Hamming near-dup join pairs
-    them — the whole point of perceptual (not exact) hashing."""
-    docs = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .limit(10)
-        .select("doc_id", "text")
-    )
-    jpegs = mm.synth_jpeg_media(docs, quality=95).select(
-        "doc_id", "payload", "format"
-    ).persist()
-    rows = jpegs.collect()
-    bmp_rows = []
-    for r in rows:
-        # decode the actual JPEG pixels and re-encode losslessly as BMP
-        w, h, rgb = __import__(
-            "teste_carga_avro_vs_json_spark.operators.jpeg_codec",
-            fromlist=["decode_jpeg"],
-        ).decode_jpeg(bytes(r["payload"]))
-        raw = bytes(int(v + 0.5) for v in rgb)
-        bmp_rows.append(
-            (r["doc_id"] + 100000, mm.encode_bmp_stdlib(w, h, raw), "bmp")
-        )
-    media = jpegs.unionByName(
-        spark.createDataFrame(
-            bmp_rows, "doc_id long, payload binary, format string"
-        )
-    )
-    hashes = {r["doc_id"]: r["dhash"] & ((1 << 64) - 1)
-              for r in ph.image_dhash(media).collect()}
-    for r in rows:
-        a, b = hashes[r["doc_id"]], hashes[r["doc_id"] + 100000]
-        # BMP holds the decoded pixels: only the ±0.5 raster rounding
-        # separates the two containers
-        assert bin(a ^ b).count("1") <= 3
-    jpegs.unpersist()

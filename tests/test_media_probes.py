@@ -1,199 +1,20 @@
-"""Perceptual-hash image near-dup (operators/phash.py): dHash pinned
-by hand-computed goldens (not the impl re-run), the Spark UDF pinned
-against driver-side recompute over the same payload bytes, and the
-pigeonhole Hamming join pinned against a brute-force all-pairs
-popcount — plus the no-silent-caps stats contract on degenerate
-(constant-hash) corpora."""
+"""Container and probe pins for the stdlib media codecs in
+operators/multimodal.py: the AVI/MJPEG container against the JPEG
+codec chain, the MP4/Ogg/MP3 metadata probes against their
+deterministic builders, the Ogg page CRC against its bitwise spec
+definition, and the classic-TIFF decoder and header-only image probe
+on hand-crafted files. Each boundary raises the module's documented
+``NotImplementedError``; the fuzz table covers arbitrary input."""
+
+import struct
+
+import pytest
 
 from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-from teste_carga_avro_vs_json_spark.operators import phash as ph
-
-
-# ------------------------------------------------------------ goldens
-def test_dhash_constant_image_is_zero():
-    rows = [[128] * 16 for _ in range(16)]
-    assert ph.dhash64(16, 16, rows) == 0
-
-
-def test_dhash_left_right_gradient_all_bits():
-    # strictly increasing luminance left->right: every adjacent cell
-    # pair compares left < right -> all 64 bits set -> signed -1
-    rows = [[x * 28 for x in range(9)] for _ in range(8)]
-    assert ph.dhash64(9, 8, rows) == -1
-
-
-def test_dhash_two_pixel_golden():
-    # 2x1 image [0, 255]: grid cells i=0..4 sample pixel 0, i=5..8
-    # pixel 1 -> the only rise is at i=4, in all 8 grid rows
-    h = ph.dhash64(2, 1, [[0, 255]])
-    assert h == sum(1 << (8 * j + 4) for j in range(8))
-
-
-def test_dhash_scale_invariance():
-    # dHash's point: the same pattern at 2x resolution hashes equal
-    small = [[x * 30 for x in range(9)] for _ in range(8)]
-    big = [[(x // 2) * 30 for x in range(18)] for _ in range(16)]
-    assert ph.dhash64(9, 8, small) == ph.dhash64(18, 16, big)
-
-
-# ----------------------------------------------- UDF vs driver recompute
-def _docs(spark, sf_dir, n=48):
-    return (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .orderBy("doc_id")
-        .limit(n)
-    )
-
-
-def test_image_dhash_matches_driver_recompute(spark, sf_dir):
-    for synth in (mm.synth_bmp_media, mm.synth_png_media):
-        media = synth(_docs(spark, sf_dir)).persist()
-        got = {
-            r["doc_id"]: r["dhash"]
-            for r in ph.image_dhash(media).collect()
-        }
-        for r in media.collect():
-            want = ph._payload_dhash(bytes(r["payload"]), r["format"])
-            assert got[r["doc_id"]] == want
-        media.unpersist()
-
-
-# ------------------------------------------------- Hamming join vs brute
-def _brute_pairs(hashes, k):
-    out = set()
-    items = sorted(hashes.items())
-    for i, (da, ha) in enumerate(items):
-        for db, hb in items[i + 1 :]:
-            d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
-            if d <= k:
-                out.add((da, db, d))
-    return out
-
-
-def test_phash_neardup_equals_bruteforce_with_planted_dups(
-    spark, sf_dir, tmp_path
-):
-    docs = _docs(spark, sf_dir, 40)
-    media = mm.synth_bmp_media(docs)
-    # plant near-duplicates: re-encode 8 images with ONE channel of
-    # one pixel nudged by +1 — a perceptual near-dup, not a byte dup
-    rows = media.orderBy("doc_id").limit(8).collect()
-    planted = []
-    for r in rows:
-        w, h, lum = ph._bmp_lum_rows(bytes(r["payload"]))
-        raw = bytearray(r["payload"])
-        import struct
-
-        off = struct.unpack_from("<I", raw, 10)[0]
-        raw[off] = min(255, raw[off] + 1)
-        planted.append(
-            (r["doc_id"] + 100000, bytes(raw), "bmp", w, h)
-        )
-    extra = spark.createDataFrame(
-        planted, "doc_id long, payload binary, format string, width int, height int"
-    )
-    corpus = media.unionByName(extra).persist()
-
-    hashes = {
-        r["doc_id"]: r["dhash"] & ((1 << 64) - 1)
-        for r in ph.image_dhash(corpus).collect()
-    }
-    for k in (0, 2, 3):
-        want = _brute_pairs(hashes, k)
-        got = {
-            (r["doc_a"], r["doc_b"], r["hamming"])
-            for r in ph.phash_neardup(
-                corpus, max_hamming=k, max_band_df=None
-            ).collect()
-        }
-        assert got == want
-    # the planted copies actually register as near-dups at k=3
-    got3 = _brute_pairs(hashes, 3)
-    planted_found = {
-        (a, b) for a, b, _ in got3 if b - a == 100000
-    }
-    assert len(planted_found) >= 6  # most single-pixel nudges stay close
-    corpus.unpersist()
-
-
-def test_phash_neardup_png_path(spark, sf_dir):
-    media = mm.synth_png_media(_docs(spark, sf_dir, 24)).persist()
-    hashes = {
-        r["doc_id"]: r["dhash"] & ((1 << 64) - 1)
-        for r in ph.image_dhash(media).collect()
-    }
-    got = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in ph.phash_neardup(
-            media, max_hamming=3, max_band_df=None
-        ).collect()
-    }
-    assert got == _brute_pairs(hashes, 3)
-    media.unpersist()
-
-
-def test_phash_neardup_cap_reports_drops(spark):
-    # constant-color images all hash to 0 -> every band key is
-    # over-dense at max_band_df=4 -> all rows dropped, stats say so
-    rgb = bytes([7, 7, 7]) * 36
-    payload = mm.encode_bmp_stdlib(6, 6, rgb)
-    media = spark.createDataFrame(
-        [(i, payload, "bmp", 6, 6) for i in range(12)],
-        "doc_id long, payload binary, format string, width int, height int",
-    )
-    stats = {}
-    out = ph.phash_neardup(
-        media, max_hamming=3, max_band_df=4, stats=stats
-    )
-    assert out.count() == 0
-    assert stats["band_keys_stop"] == 4  # one per band
-    assert stats["band_rows_dropped"] == 48  # 12 docs x 4 bands
-    # and without the cap the same corpus yields all 66 pairs at d=0
-    full = ph.phash_neardup(media, max_hamming=0, max_band_df=None)
-    assert full.count() == 66
-
-
-def test_phash_neardup_plan_shape(spark, sf_dir):
-    """Scale pins mirroring the LSH band join (dedup.py): candidates
-    form ONLY via the band-keyed equality self-join (no cartesian /
-    BNL), the tail joins are ShuffledHashJoin (post-explode size
-    estimates are untrustworthy — same mis-broadcast guard), no
-    expensive expression leaks below a barrier into a Filter, and the
-    two aliased sides of the self-join resolve to ONE executed banded
-    Exchange (ReusedExchange)."""
-    from teste_carga_avro_vs_json_spark.plans import (
-        audit,
-        compact_plan,
-        expensive_filter_nodes,
-    )
-
-    media = mm.synth_bmp_media(_docs(spark, sf_dir, 32))
-    out = ph.phash_neardup(media, max_hamming=3, max_band_df=1000)
-    plan = compact_plan(out)
-    aud = audit(out)
-    assert aud.cartesian == 0 and aud.bnl_joins == 0
-    assert "CartesianProduct" not in plan and "NestedLoop" not in plan
-    assert "ShuffledHashJoin" in plan
-    assert "BroadcastHashJoin" not in plan
-    assert expensive_filter_nodes(out) == []
-    out.collect()
-    executed = out._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in executed
-
-
-# ---------------------------------------------------------- video twin
-def test_split_bmp_stream_roundtrip(spark, sf_dir):
-    media = ph.synth_bmp_video(_docs(spark, sf_dir, 10), n_frames=5)
-    for r in media.collect():
-        frames = ph.split_bmp_stream(bytes(r["payload"]))
-        assert len(frames) == 5
-        dims = {ph._bmp_lum_rows(f)[:2] for f in frames}
-        assert len(dims) == 1  # frames share geometry
-    # malformed stream raises, not garbage
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        ph.split_bmp_stream(b"XX123456")
+from teste_carga_avro_vs_json_spark.operators.jpeg_codec import (
+    decode_jpeg,
+    encode_jpeg,
+)
 
 
 # ----------------------------------------------------------- AVI/MJPEG
@@ -213,12 +34,6 @@ def test_avi_mjpeg_roundtrip_is_the_jpeg_chain():
     """decode(encode_avi_mjpeg(frames)) must equal the pinned JPEG
     codec chain frame-for-frame (the container adds nothing lossy),
     and the bytes are deterministic."""
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-    from teste_carga_avro_vs_json_spark.operators.jpeg_codec import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
     w, h = 24, 16
     frames = _grad_frames(w, h, 3)
     avi = mm.encode_avi_mjpeg(w, h, frames, fps=5)
@@ -230,15 +45,9 @@ def test_avi_mjpeg_roundtrip_is_the_jpeg_chain():
 
 
 def test_avi_boundaries_raise():
-    import struct
-
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-
     w, h = 16, 16
     avi = mm.encode_avi_mjpeg(w, h, _grad_frames(w, h, 2))
     # non-MJPG handler
-    import pytest
-
     with pytest.raises(NotImplementedError, match="handler"):
         mm.decode_avi_mjpeg(avi.replace(b"vids" + b"MJPG", b"vids" + b"H264"))
     # truncation mid-movi
@@ -259,8 +68,6 @@ def test_avi_boundaries_raise():
 
 # ------------------------------------------------------- MP4 probe
 def test_mp4_probe_roundtrips_skeleton():
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-
     tracks = [
         {"handler": "vide", "codec": "avc1", "width": 1920,
          "height": 1080, "n_samples": 250, "duration_s": 10.0},
@@ -278,10 +85,6 @@ def test_mp4_probe_roundtrips_skeleton():
         "soun", "mp4a", 430)
     # 64-bit duration path: version-1 boxes come from real muxers; our
     # builder is v0, so pin the v1 parse on a crafted mvhd
-    import struct
-
-    import pytest
-
     with pytest.raises(NotImplementedError):
         mm.probe_mp4(b"\x00\x00\x00\x08free")
     with pytest.raises(NotImplementedError):
@@ -324,8 +127,6 @@ def test_ogg_vorbis_probe_roundtrips_builder():
 
 
 def test_ogg_probe_verifies_page_crc_and_bounds():
-    import pytest
-
     blob = bytearray(mm.build_ogg(codec="opus"))
     # flip one payload byte on the last page: CRC must catch it
     blob[-1] ^= 0x01
@@ -374,8 +175,6 @@ def test_mp3_probe_roundtrips_builder():
 
 
 def test_mp3_probe_boundaries_raise():
-    import pytest
-
     with pytest.raises(NotImplementedError, match="Layer III"):
         mm.probe_mp3(b"\xff\xfd\x90\x00" + b"\x00" * 400)  # Layer II
     with pytest.raises(NotImplementedError, match="free-format"):
@@ -388,25 +187,10 @@ def test_mp3_probe_boundaries_raise():
 
 
 # ---------------------------------------------------------------- TIFF
-def test_tiff_codec_endianness_strips_and_dhash_parity():
+def test_tiff_codec_endianness_and_strips():
     """Classic-TIFF subset: MM (big-endian) and multi-strip crafted
-    files decode exactly; image_dhash('tiff') equals the BMP hash of
-    the same pixels; boundary shapes raise loudly."""
-    import struct
-    import zlib
-
-    import pytest
-
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-    from teste_carga_avro_vs_json_spark.operators import phash as ph
-
+    files decode exactly; boundary shapes raise loudly."""
     w, h = 16, 12
-    rgb = bytes(((x * 29 + 3) ^ (x >> 4)) & 0xFF for x in range(w * h * 3))
-
-    # dhash parity with BMP on identical pixels
-    tif = mm.encode_tiff_stdlib(w, h, rgb)
-    bmp = mm.encode_bmp_stdlib(w, h, rgb)
-    assert ph._payload_dhash(tif, "tiff") == ph._payload_dhash(bmp, "bmp")
 
     # hand-crafted BIG-ENDIAN, gray, TWO strips (rows 0..7 / 8..11)
     gray = bytes(((x * 11) ^ (x >> 2)) & 0xFF for x in range(w * h))
@@ -457,12 +241,6 @@ def test_probe_image_tiff_rejects_multi_count_dims():
     reading it inline would return the offset as the dimension. The
     probe must raise, never report wrong dims (r11, decoder-hardening
     rule)."""
-    import struct
-
-    import pytest
-
-    from teste_carga_avro_vs_json_spark.operators import multimodal as mm
-
     hdr = struct.pack("<2sHI", b"II", 42, 8)
     ifd = struct.pack("<H", 2)
     # ImageWidth count=2 (out-of-line), ImageLength count=1 inline

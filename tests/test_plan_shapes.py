@@ -507,6 +507,37 @@ def test_lsh_ann_dedup_carries_ids_only(spark, sf_dir):
     )
 
 
+def test_lsh_ann_buckets_the_corpus_once(spark, sf_dir, monkeypatch):
+    """Both join sides of the vectorized LSH ANN read one bucketed
+    frame: a pushed-down query filter must not make the bucketing UDF
+    run again over the query rows. A counting Arrow UDF chained into
+    the bucketer's input sees exactly the rows the bucketing UDF
+    evaluates; it must see each corpus vector once."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @arrow_udf("array<double>")
+    def counted(v: pa.Array) -> pa.Array:
+        seen.add(len(v))
+        return v
+
+    bucket_np = similarity.lsh_bucket_np
+
+    def counting_bucketer(emb, *args):
+        return bucket_np(
+            emb.select("vec_id", counted(F.col("embedding").cast(
+                "array<double>")).alias("embedding")),
+            *args,
+        )
+
+    monkeypatch.setattr(similarity, "lsh_bucket_np", counting_bucketer)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    assert similarity.lsh_ann_topk(emb, vectorized=True).count() > 0
+    assert seen.value == emb.count()
+
+
 def test_gopher_rules_is_shuffle_free(spark, sf_dir):
     """r11 window promotion pin: the Gopher document-shape gate is a
     zero-shuffle integer-rule projection — no Exchange, no Python, no

@@ -77,7 +77,6 @@ ALLOWED: dict[str, tuple[str, ...]] = {
         "operators.multimodal:probe_mp3",
         "operators.multimodal:probe_mp4",
         "operators.multimodal:probe_ogg",
-        "operators.phash:split_bmp_stream",
         "sources.archive:ArchiveFormatError",
         "sources.archive:iter_tar_members",
         "sources.archive:iter_zip_members",
@@ -91,18 +90,14 @@ ALLOWED: dict[str, tuple[str, ...]] = {
         "operators.jpeg_codec:dct2d",
         "operators.jpeg_codec:encode_jpeg",
         "operators.jpeg_codec:encode_jpeg_progressive",
-        "operators.multimodal:GRAY_PALETTE",
         "operators.multimodal:build_mp3",
         "operators.multimodal:build_mp4_skeleton",
         "operators.multimodal:build_ogg",
         "operators.multimodal:encode_aiff_stdlib",
         "operators.multimodal:encode_avi_mjpeg",
-        "operators.multimodal:encode_gif_stdlib",
+        "operators.multimodal:encode_bmp_stdlib",
         "operators.multimodal:encode_png_stdlib",
         "operators.multimodal:encode_tiff_stdlib",
-        "operators.multimodal:synth_jpeg_media",
-        "operators.multimodal:synth_png_media",
-        "operators.phash:synth_bmp_video",
         "operators.similarity:pq_codebooks",
         "sources.archive:build_tar",
         "sources.archive:build_zip",
@@ -147,8 +142,7 @@ ALLOWED: dict[str, tuple[str, ...]] = {
 # DIAGNOSTIC bench lanes that are still the only root of some package
 # defs: a lane leaves when its defs gain a gate or are deleted with it,
 # and no lane joins
-PENDING_SOLE_ROOT_LANES = ("avro_generic_e2e", "phash_neardup",
-                           "semantic_dedup", "warc_ingest")
+PENDING_SOLE_ROOT_LANES = ("avro_generic_e2e", "semantic_dedup")
 
 
 def _root_files() -> list[pathlib.Path]:

@@ -352,44 +352,6 @@ def main() -> None:
     out["bm25_rows"] = bm.count()
     out["bm25_sec"] = round(time.perf_counter() - t0, 2)
 
-    # ---- perceptual image near-dup at Nx images (r8-late) ----------
-    # Each base image (one real decodable BMP per sf-doc) appears
-    # `replicas` times under distinct doc_ids — the re-crawled-asset
-    # scenario. Decode+hash cost is linear in image count (the UDF
-    # lane); the band join sees per-family key df == replicas, so
-    # fan-out is bounded and the exact-dup pair count is KNOWN:
-    # every family contributes C(replicas, 2) hamming-0 pairs.
-    from teste_carga_avro_vs_json_spark.operators import multimodal, phash
-
-    media_base = multimodal.synth_bmp_media(docs).persist()
-    n_imgs_base = media_base.count()
-    media_n = (
-        media_base.crossJoin(
-            spark.range(replicas).select(F.col("id").alias("r"))
-        )
-        .select(
-            (F.col("doc_id") * replicas + F.col("r")).alias("doc_id"),
-            "payload",
-            "format",
-        )
-        .repartition(cpus)
-        .persist()
-    )
-    out["phash_images_nx"] = media_n.count()
-    ph_stats: dict = {}
-    t0 = time.perf_counter()
-    pairs_img = phash.phash_neardup(
-        media_n, max_hamming=3, max_band_df=1000, stats=ph_stats
-    )
-    n_pairs_img = pairs_img.count()
-    out["phash_neardup_sec"] = round(time.perf_counter() - t0, 2)
-    out["phash_pairs"] = n_pairs_img
-    out["phash_band_keys_stop"] = ph_stats.get("band_keys_stop")
-    expected = n_imgs_base * replicas * (replicas - 1) // 2
-    out["phash_pairs_ge_exact_dup_families"] = bool(n_pairs_img >= expected)
-    media_n.unpersist()
-    media_base.unpersist()
-
     # ---- Kneser-Ney perplexity at Nx docs (r8-late) ----------------
     # Same two-scan shape as the add-one lane plus three extra aggs of
     # the vocab^2-bounded bigram table — wall should track the add-one
